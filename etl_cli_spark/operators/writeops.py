@@ -37,6 +37,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..dsl import compile_query
+from ..fanout import coalesce_by_bytes
 from ..spec import TargetSpec
 
 _TS_COL = "_etl_ts"
@@ -1432,105 +1433,6 @@ _MAX_TOUCHED_VALUES = 4096
 _BROADCAST_SRC_ROWS = 2_000_000
 
 
-def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
-    """Read a size conf ('64MB', '128m', '1g', plain bytes) as bytes."""
-    import re as _re
-
-    try:
-        v = str(spark.conf.get(key))
-    except Exception:
-        return default
-    m = _re.match(r"^\s*(\d+)\s*([kmgt]?)i?b?\s*$", v.lower())
-    if not m:
-        return default
-    mult = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-    return int(m.group(1)) * mult[m.group(2)]
-
-
-def _sized_rewrite(
-    df: DataFrame, table: "ParquetTable", src: DataFrame | None = None
-) -> DataFrame:
-    """Coalesce a full-table MERGE rewrite to sensibly-sized output
-    files (guide §6 output sizing).
-
-    A plain-layout update/upsert/delete rewrite inherits the TARGET
-    SCAN's partitioning — the broadcast-structured MERGE never shuffles
-    the target — so a table currently made of many tiny files is
-    rewritten as the same many tiny files and the layout
-    self-perpetuates: every later scan pays a task and a footer per
-    file, file-listing crosses the parallel-listing threshold (a
-    driver-visible listing job per read), and every commit's footer
-    stats pass grows (measured round-15: the changefeed downstream
-    reached 64 files of ~30 KB and one drain ran 30 jobs, several of
-    64-96 tasks, against a 15k-row table).
-
-    Scale-adaptive by construction: the target partition count is the
-    rewrite's estimated byte size — the table's CURRENT on-disk bytes
-    plus the (persisted, materialized, so cache-stat-accurate) MERGE
-    source's bytes — over the session's AQE advisory partition size.
-    ``coalesce`` to at least the frame's own partition count is a
-    no-op, so at production scale, where scan splits are already
-    maxPartitionBytes-sized, the arithmetic disables this by itself —
-    never a tuning knob; and ``coalesce`` is a narrow merge of input
-    partitions, so no shuffle is added to the rewrite."""
-    try:
-        if table._is_manifest():
-            latest = table._latest_manifest()
-            if latest is None:
-                return df
-            paths = [os.path.join(table.path, f) for f in latest[1]["files"]]
-        else:
-            paths = [
-                os.path.join(root, fn)
-                for root, _dirs, fns in os.walk(table.path)
-                for fn in fns
-                if not fn.startswith(("_", "."))
-            ]
-        total = sum(os.path.getsize(p) for p in paths)
-    except OSError:  # pragma: no cover - racing vacuum/external delete
-        return df
-    if src is not None:
-        try:
-            # in-memory columnar size of the materialized cache — an
-            # over-estimate of its parquet bytes (safe direction: more
-            # output partitions, never too few)
-            total += int(
-                src._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:  # pragma: no cover - stats API drift
-            pass
-    advisory = _conf_bytes(
-        df.sparkSession, "spark.sql.adaptive.advisoryPartitionSizeInBytes", 64 << 20
-    )
-    n_target = max(1, -(-total // max(1, advisory)))
-    return df.coalesce(int(min(n_target, 1 << 30)))
-
-
-def _sized_seed(df: DataFrame) -> DataFrame:
-    """Output sizing for a MERGE's first write into an empty/missing
-    target — the seed layout every later rewrite inherits (see
-    :func:`_sized_rewrite`). ``df`` here is the op's PERSISTED and
-    already-counted source, so Catalyst's optimized-plan stats read the
-    materialized cache size — an in-memory (uncompressed, columnar)
-    figure, i.e. a conservative over-estimate of the parquet bytes.
-    ``coalesce`` to more partitions than the frame has is a no-op, so
-    large seeds pass through untouched."""
-    try:
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # pragma: no cover - stats API drift
-        return df
-    advisory = _conf_bytes(
-        df.sparkSession, "spark.sql.adaptive.advisoryPartitionSizeInBytes", 64 << 20
-    )
-    # Catalyst's BigInt default for unknown stats is astronomically
-    # large — the ceil-divide then exceeds any partition count and the
-    # coalesce no-ops, which is the safe direction.
-    n_target = max(1, -(-size // max(1, advisory)))
-    return df.coalesce(int(min(n_target, 1 << 30)))
-
-
 def _touched_values(src: DataFrame, col: str) -> list | None:
     """Distinct partition values in the source, or None if the scoped
     path must be declined: too many values (the collect is partition
@@ -1682,13 +1584,16 @@ def apply_write_op(src: DataFrame, table: ParquetTable, spec: TargetSpec) -> Dat
             table.append(
                 src
                 if table._target_layout() or table._target_value_layout()
-                else _sized_seed(src)
+                else coalesce_by_bytes(src, src)
             )
             src.unpersist()
             return table.read()
         # update/delete against a missing target is a no-op
         return src.limit(0)
 
+    # rewrite sizing takes the plain read's plan bytes: the scope column
+    # below widens the projection and Catalyst scales its estimate up
+    tgt_read = tgt
     # evaluate the --tq scope on the target BEFORE the join so its column
     # references never collide with same-named source columns
     tgt = tgt.withColumn("__etl_scope", _scope(spec))
@@ -1777,6 +1682,6 @@ def apply_write_op(src: DataFrame, table: ParquetTable, spec: TargetSpec) -> Dat
     else:
         # plain-layout full rewrite: size the output files (the bucketed
         # and value-partitioned writers repartition by layout already)
-        table.overwrite(_sized_rewrite(new_state, table, src=src))
+        table.overwrite(coalesce_by_bytes(new_state, tgt_read, src))
     src.unpersist()
     return table.read()

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from etl_cli_spark.dsl import coerce_value, compile_query, split_key
 
@@ -96,6 +97,35 @@ def test_flatten_roundtrip(spark):
     assert back.select("s.b.c").collect()[0][0] == 3
 
 
+def _jobs_submitted(spark, fn):
+    """(fn(), number of Spark jobs fn submitted), counted under a fresh
+    job group."""
+    import uuid
+
+    sc, group = spark.sparkContext, uuid.uuid4().hex
+    sc.setJobGroup(group, "job count probe")
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# single-split (under-fanned) inputs the gate must recognise as scan-rooted;
+# a newline inside a string literal once split the plan's rendered line and
+# silently turned the gate off
+_UNDER_FANNED = {
+    "read": lambda d: d,
+    "newline_literal": lambda d: d.select(
+        F.concat(F.col("text"), F.lit("a\nb")).alias("text")
+    ),
+    "filter": lambda d: d.filter(F.col("doc_id") % 2 == 0),
+    "union": lambda d: d.filter(F.col("doc_id") % 2 == 0).union(
+        d.filter(F.col("doc_id") % 2 == 1)
+    ),
+}
+
+
 class TestComputeFanOut:
     """Round-14 scale-adaptive fan-out (fanout.fan_out_for_compute): an
     under-fanned source (single-row-group parquet) must redistribute to
@@ -104,10 +134,12 @@ class TestComputeFanOut:
     engine.read path must stay untouched (a global read-side fan-out
     measurably taxed light shuffle-bound queries for nothing)."""
 
-    def test_under_fanned_input_redistributes(self, spark, engine):
+    @pytest.mark.parametrize("shape", sorted(_UNDER_FANNED))
+    def test_under_fanned_input_redistributes(self, spark, engine, shape):
         from etl_cli_spark.fanout import fan_out_for_compute
 
-        df = engine.read("orders")  # one single-row-group file -> 1 split
+        # documents is one single-row-group file -> 1 split
+        df = _UNDER_FANNED[shape](engine.read("documents"))
         assert df.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
         assert (
             fan_out_for_compute(df).rdd.getNumPartitions()
@@ -122,6 +154,25 @@ class TestComputeFanOut:
         )
         assert fan_out_for_compute(df) is df
 
+    @pytest.mark.parametrize("shape", ["aggregate", "join"])
+    def test_shuffle_rooted_input_is_never_probed(self, spark, engine, shape):
+        # with AQE on, an .rdd probe of a plan holding an exchange submits
+        # the upstream shuffle jobs at operator-construction time: the gate
+        # must decline such plans before probing, so the lazy API stays lazy
+        from etl_cli_spark.fanout import fan_out_for_compute
+
+        orders = engine.read("orders")
+        if shape == "aggregate":
+            df = orders.groupBy("o_custkey").count()
+        else:
+            cust = engine.read("customer")
+            df = orders.join(cust, orders.o_custkey == cust.c_custkey)
+        out, jobs = _jobs_submitted(spark, lambda: fan_out_for_compute(df))
+        assert out is df
+        assert jobs == 0
+        # the counter does see the probe the gate avoids
+        assert _jobs_submitted(spark, lambda: df.rdd.getNumPartitions())[1] > 0
+
     def test_cpu_heavy_operator_fans_out(self, spark, engine):
         from etl_cli_spark.operators.text import gopher_quality
 
@@ -131,12 +182,38 @@ class TestComputeFanOut:
             == spark.sparkContext.defaultParallelism
         )
 
+    def test_repetition_pass_fans_out_over_newline_text(self, spark, engine):
+        # a newline literal in the input's plan once turned the gate off
+        # and ran gopher_repetition's gram pass as one task
+        from etl_cli_spark.fanout import plan_nodes
+        from etl_cli_spark.operators.text import gopher_repetition
+
+        docs = engine.read("documents").withColumn(
+            "text", F.concat(F.col("text"), F.lit("\nrepeat me\n"))
+        )
+        assert docs.rdd.getNumPartitions() == 1
+        plan = gopher_repetition(docs)._jdf.queryExecution().optimizedPlan()
+        # the per-row pass (the gram explode) reads a round-robin
+        # repartition to the session parallelism
+        gen = [n for n in plan_nodes(plan) if n.nodeName() == "Generate"]
+        assert gen
+        for g in gen:
+            fans = [
+                n.numPartitions()
+                for n in plan_nodes(g)
+                if n.nodeName() == "Repartition" and n.shuffle()
+            ]
+            assert fans == [spark.sparkContext.defaultParallelism]
+
     def test_generic_read_keeps_scan_partitioning(self, spark, engine):
         # light queries must not pay a fan-out exchange at the read
+        from etl_cli_spark.fanout import plan_nodes
+
         plan = (
             engine.read("orders", ["o_orderstatus=F"])
             ._jdf.queryExecution()
             .optimizedPlan()
-            .toString()
         )
-        assert "Repartition" not in plan
+        assert not [
+            n for n in plan_nodes(plan) if n.nodeName().startswith("Repartition")
+        ]
