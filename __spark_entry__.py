@@ -4721,18 +4721,19 @@ def _q_catalog_ops(spark, sf):
     oracle recomputes the full transcript (names, counts, survivors)
     from the same input tables instead of replaying a literal."""
     from etl_cli_spark.catalog import drop_ds, drop_ns, ls_ns
+    from etl_cli_spark.share import scope, shared
 
     eng, tmp = _tmp_engine(spark, sf, "orders", "region", prefix="etl_cat_")
     names = sorted(
         r[0] for r in _sf_rows(sf, "region", "DISTINCT lower(r_name)")
     )
-    # one persisted pass over orders feeds all the partition writes
-    o = eng.read("orders").persist()
-    for i, name in enumerate(names):
-        o.filter(F.col("o_orderkey") % len(names) == i).write.parquet(
-            f"{tmp}/cat/{name}.parquet"
-        )
-    o.unpersist()
+    # one shared pass over orders feeds all the partition writes
+    with scope():
+        o = shared(eng.read("orders"))
+        for i, name in enumerate(names):
+            o.filter(F.col("o_orderkey") % len(names) == i).write.parquet(
+                f"{tmp}/cat/{name}.parquet"
+            )
 
     def listing(step):
         # every step RE-READS each survivor and re-counts it: the

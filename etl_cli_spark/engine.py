@@ -26,6 +26,7 @@ from .dsl import compile_query
 from .functions.registry import apply_chain
 from .operators.merger import merge
 from .operators.writeops import ParquetTable, apply_write_op
+from .share import scope
 from .sources.registry import read_dataset, write_dataset
 from .spec import JobSpec, make_spec
 from .uri import DatasetURI, expand_wildcard, parse_ds, resolve_path, template_target
@@ -350,8 +351,9 @@ class Engine:
 
         def work():
             try:
-                res = self._run(spec, merge_rules_fn, observe_rows=True)
-                rows_out = res.df.count()
+                with scope():
+                    res = self._run(spec, merge_rules_fn, observe_rows=True)
+                    rows_out = res.df.count()
                 obs = res.metrics.pop("_rows_in_obs", None)
                 self.job_log.record(
                     JobRecord(
@@ -392,6 +394,9 @@ class Engine:
           counts), not a recompute of the job plan. For lazy results
           (no target / dry-run) one ``count()`` is the job's single
           execution, which also resolves the observation.
+
+        The job owns what it shares: a scope around the build and the
+        count releases it before the record lands.
         """
         import time
 
@@ -399,8 +404,9 @@ class Engine:
 
         uid, t0 = new_uid(), time.time()
         try:
-            res = self._run(spec, merge_rules_fn, observe_rows=True)
-            rows_out = res.df.count()
+            with scope():
+                res = self._run(spec, merge_rules_fn, observe_rows=True)
+                rows_out = res.df.count()
             obs = res.metrics.pop("_rows_in_obs", None)
             rows_in = observed_value(obs, "rows_in")
         except Exception as e:
@@ -454,7 +460,18 @@ class Engine:
     ) -> JobResult:
         """Everything after the source scan: transformers -> merger ->
         target write. Factored out so run_contid can replay the stages
-        over each convergence-loop batch."""
+        over each convergence-loop batch. A job that writes its target
+        runs its own action, so it releases what its stages shared;
+        targetless and dry-run jobs return lazy frames whose caller owns
+        the shares."""
+        if spec.target is None or spec.target.dry_run:
+            return self._stages(df, spec, src_ds, merge_rules_fn, obs)
+        with scope():
+            return self._stages(df, spec, src_ds, merge_rules_fn, obs)
+
+    def _stages(
+        self, df: DataFrame, spec: JobSpec, src_ds: DatasetURI, merge_rules_fn, obs,
+    ) -> JobResult:
         if spec.source.transformers:
             df = apply_chain(df, spec.source.transformers)
 

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..share import scope, shared
 from .rank import _gram_bucket
 from .text import tokens
 
@@ -88,15 +89,11 @@ def train_linear_classifier(
     than the intercept's O(1) gradient — sharing one rate makes the
     intercept oscillate (diverge) long before features move.
     """
-    from pyspark import StorageLevel
-
     spark = docs.sparkSession
-    feats = hashed_features(docs, text_col, id_col, m_buckets).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
     base = docs.select(F.col(id_col), label.cast("double").alias("y"))
     n_docs = base.count()
-    try:
+    with scope():
+        feats = shared(hashed_features(docs, text_col, id_col, m_buckets))
         w: dict[int, float] = {
             int(r.bucket): 0.0
             for r in feats.select("bucket").distinct().collect()  # ≤ m_buckets rows
@@ -111,44 +108,41 @@ def train_linear_classifier(
                 .groupBy(id_col)
                 .agg(F.sum(F.col("x") * F.col("w")).alias("s"))
             )
-            resid = (
-                base.join(s, id_col, "left")
-                .select(
-                    id_col,
-                    F.round(F.coalesce(F.col("s"), F.lit(0.0)) + F.lit(b0), 6).alias("mg"),
-                    "y",
-                )
-                .select(
-                    id_col,
-                    F.round(_surrogate_p(F.col("mg")) - F.col("y"), 9).alias("resid"),
-                )
-            )
             # one action per iteration: feature gradients UNION the
             # intercept gradient as sentinel bucket -1 (same arithmetic
             # as two separate aggregates, half the Spark jobs); resid is
-            # persisted so the two branches share one computation
-            resid = resid.persist()
-            grads = (
-                feats.join(resid, id_col)
-                .groupBy("bucket")
-                .agg(F.round(F.sum(F.col("x") * F.col("resid")) / n_docs, 9).alias("g"))
-                .unionAll(
-                    resid.agg(F.round(F.sum("resid") / n_docs, 9).alias("g"))
-                    .select(F.lit(-1).alias("bucket"), "g")
+            # shared so the two branches share one computation
+            with scope():
+                resid = shared(
+                    base.join(s, id_col, "left")
+                    .select(
+                        id_col,
+                        F.round(F.coalesce(F.col("s"), F.lit(0.0)) + F.lit(b0), 6).alias("mg"),
+                        "y",
+                    )
+                    .select(
+                        id_col,
+                        F.round(_surrogate_p(F.col("mg")) - F.col("y"), 9).alias("resid"),
+                    )
                 )
-                .collect()  # ≤ m_buckets + 1 rows — the model, not the corpus
-            )
-            resid.unpersist()
+                grads = (
+                    feats.join(resid, id_col)
+                    .groupBy("bucket")
+                    .agg(F.round(F.sum(F.col("x") * F.col("resid")) / n_docs, 9).alias("g"))
+                    .unionAll(
+                        resid.agg(F.round(F.sum("resid") / n_docs, 9).alias("g"))
+                        .select(F.lit(-1).alias("bucket"), "g")
+                    )
+                    .collect()  # ≤ m_buckets + 1 rows — the model, not the corpus
+                )
             for r in grads:
                 if r.bucket == -1:
                     b0 = round(b0 - lr_intercept * float(r.g or 0.0), 9)
                 else:
                     w[int(r.bucket)] = round(w[int(r.bucket)] - lr * float(r.g), 9)
-        return spark.createDataFrame(
-            [(-1, b0)] + sorted(w.items()), "bucket int, w double"
-        )
-    finally:
-        feats.unpersist()
+    return spark.createDataFrame(
+        [(-1, b0)] + sorted(w.items()), "bucket int, w double"
+    )
 
 
 def score_with_classifier(

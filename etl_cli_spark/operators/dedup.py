@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..fanout import fan_out_for_compute
+from ..share import scope, shared
 from pyspark.sql.window import Window
 
 from .text import fingerprint, let, tokens
@@ -233,7 +234,6 @@ def _pairs_from_base(
     base: DataFrame,
     threshold: float,
     max_bucket_size: int | None = None,
-    cache: bool = False,
 ) -> DataFrame:
     """Candidate pairs + exact-Jaccard verify over a (id, hs, bh) base.
 
@@ -268,14 +268,10 @@ def _pairs_from_base(
             .filter(F.col("__sz") > max_bucket_size)
             .select("band", "bucket", "__hub")
         )
-        tagged = buckets.join(F.broadcast(hot), on=["band", "bucket"], how="left")
-        if cache:
-            # tagged feeds four branches (self-join x2, star, and the
-            # hub list chain); without a persist each branch re-runs
-            # the explode + broadcast probe over the whole corpus
-            from pyspark import StorageLevel
-
-            tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
+        # tagged feeds four branches (self-join x2, star, and the hub
+        # list chain); unshared, each branch re-runs the explode +
+        # broadcast probe over the whole corpus
+        tagged = shared(buckets.join(F.broadcast(hot), on=["band", "bucket"], how="left"))
         cold = tagged.filter(F.col("__hub").isNull()).drop("__hub")
         clique = (
             cold.join(
@@ -291,7 +287,7 @@ def _pairs_from_base(
             .select(F.col("__hub").alias("a_id"), F.col("id").alias("b_id"))
         )
         cand = clique.unionByName(star).dropDuplicates(["a_id", "b_id"])
-        # derive from tagged (persisted) rather than hot, which would
+        # derive from tagged (shared) rather than hot, which would
         # re-run the bucket-size aggregate over the corpus
         hub_ids = (
             tagged.filter(F.col("__hub").isNotNull())
@@ -351,7 +347,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 64,
     bands: int = 16,
     threshold: float = 0.7,
-    cache: bool = True,
     impl: str = "auto",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
@@ -359,7 +354,7 @@ def minhash_lsh_pairs(
 
     Plan shape (the part that matters at scale):
       1. one narrow pass computes shingles + signature + band hashes,
-         persisted (``cache=True``) — the self-join and the two
+         shared — the self-join and the two
          array-rejoin branches would otherwise recompute it 4x;
       2. ``explode`` bands -> shuffle on (band_idx, band_hash) — this is
          the ONLY wide exchange over the corpus;
@@ -382,12 +377,8 @@ def minhash_lsh_pairs(
     tests/test_skew.py); the cap is for ADVERSARIAL buckets where the
     pair COUNT itself is the bomb.
     """
-    base = _minhash_base(df, id_col, text_col, n_shingle, num_hashes, bands, impl)
-    if cache:
-        from pyspark import StorageLevel
-
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
-    return _pairs_from_base(base, threshold, max_bucket_size=max_bucket_size, cache=cache)
+    base = shared(_minhash_base(df, id_col, text_col, n_shingle, num_hashes, bands, impl))
+    return _pairs_from_base(base, threshold, max_bucket_size=max_bucket_size)
 
 
 def minhash_dedup(
@@ -469,7 +460,6 @@ def simhash_pairs(
     text_col: str = "text",
     max_distance: int = 3,
     chunks: int = 4,
-    cache: bool = True,
     token_hash=None,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
@@ -491,7 +481,6 @@ def simhash_pairs(
         base,
         max_distance=max_distance,
         chunks=chunks,
-        cache=cache,
         max_bucket_size=max_bucket_size,
     )
 
@@ -531,7 +520,6 @@ def fingerprint_pairs(
     base: DataFrame,
     max_distance: int = 3,
     chunks: int = 4,
-    cache: bool = True,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Pigeonhole-banded Hamming pair join over ANY 64-bit fingerprint
@@ -575,10 +563,7 @@ def fingerprint_pairs(
     Default ``None`` keeps the exact all-pairs-within-distance
     semantics the oracles replay.
     """
-    if cache:
-        from pyspark import StorageLevel
-
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    base = shared(base)
     star0 = None
     if max_bucket_size is not None and max_bucket_size >= 1:
         # layer 1: collapse identical-fingerprint classes > cap. One
@@ -663,7 +648,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.5,
-    cache: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard >= threshold via shared-shingle candidate join.
 
@@ -672,14 +656,12 @@ def ngram_jaccard_pairs(
     common shingles explode the index, prefer minhash_lsh_pairs; this
     exact variant is the oracle-checkable baseline.
     """
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(shingles(F.col(text_col), n), lambda s: F.xxhash64(s)).alias("hs"),
+    base = shared(
+        df.select(
+            F.col(id_col).alias("id"),
+            F.transform(shingles(F.col(text_col), n), lambda s: F.xxhash64(s)).alias("hs"),
+        )
     )
-    if cache:
-        from pyspark import StorageLevel
-
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
     # inverted index carries only (id, shingle-hash). Since shingle sets are
     # distinct, counting join hits per pair IS |a ∩ b| — no array compare,
     # no array shuffle: jaccard = c / (|a| + |b| - c) with a tiny size join.
@@ -732,54 +714,51 @@ def connected_components(
     pass without a fixpoint the result is WRONG (clusters split), so
     ``strict=True`` raises instead of silently returning it.
     """
-    from pyspark import StorageLevel
-
-    edges = (
-        pairs.select(F.col(a_col).alias("s"), F.col(b_col).alias("d"))
-        .unionByName(pairs.select(F.col(b_col).alias("s"), F.col(a_col).alias("d")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    labels = (
-        edges.select(F.col("s").alias("node"))
-        .distinct()
-        .withColumn("lbl", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    converged = False
-    for _ in range(max_iter):
-        nbr_min = (
-            edges.join(labels, edges["d"] == labels["node"])
-            .groupBy(F.col("s").alias("node2"))
-            .agg(F.min("lbl").alias("nbr_lbl"))
+    with scope():
+        edges = shared(
+            pairs.select(F.col(a_col).alias("s"), F.col(b_col).alias("d"))
+            .unionByName(pairs.select(F.col(b_col).alias("s"), F.col(a_col).alias("d")))
+            .distinct()
         )
-        cand = (
-            labels.join(nbr_min, labels["node"] == nbr_min["node2"], "left")
-            .select(
-                "node",
-                F.least(F.col("lbl"), F.coalesce("nbr_lbl", F.col("lbl"))).alias("lbl"),
+        labels = (
+            edges.select(F.col("s").alias("node"))
+            .distinct()
+            .withColumn("lbl", F.col("node"))
+            .localCheckpoint(eager=True)
+        )
+        converged = False
+        for _ in range(max_iter):
+            nbr_min = (
+                edges.join(labels, edges["d"] == labels["node"])
+                .groupBy(F.col("s").alias("node2"))
+                .agg(F.min("lbl").alias("nbr_lbl"))
             )
-            .localCheckpoint(eager=True)
-        )
-        # pointer jump: lbl <- label(lbl). Labels are node ids, so the
-        # self-join always finds the row; labels only decrease.
-        jump_src = cand.select(F.col("node").alias("jn"), F.col("lbl").alias("jl"))
-        new_labels = (
-            cand.join(jump_src, cand["lbl"] == jump_src["jn"], "left")
-            .select("node", F.coalesce("jl", F.col("lbl")).alias("lbl"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.lbl") != F.col("o.lbl"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist()
+            cand = (
+                labels.join(nbr_min, labels["node"] == nbr_min["node2"], "left")
+                .select(
+                    "node",
+                    F.least(F.col("lbl"), F.coalesce("nbr_lbl", F.col("lbl"))).alias("lbl"),
+                )
+                .localCheckpoint(eager=True)
+            )
+            # pointer jump: lbl <- label(lbl). Labels are node ids, so the
+            # self-join always finds the row; labels only decrease.
+            jump_src = cand.select(F.col("node").alias("jn"), F.col("lbl").alias("jl"))
+            new_labels = (
+                cand.join(jump_src, cand["lbl"] == jump_src["jn"], "left")
+                .select("node", F.coalesce("jl", F.col("lbl")).alias("lbl"))
+                .localCheckpoint(eager=True)
+            )
+            changed = (
+                new_labels.alias("n")
+                .join(labels.alias("o"), "node")
+                .filter(F.col("n.lbl") != F.col("o.lbl"))
+                .count()
+            )
+            labels = new_labels
+            if changed == 0:
+                converged = True
+                break
     if not converged and strict:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds — "
@@ -932,7 +911,7 @@ def _base_from_meta(df: DataFrame, meta: dict) -> DataFrame:
 
 
 def _write_index_rows(base: DataFrame, path: str, n_parts: int, mode: str) -> None:
-    """Bucket + signature rows from a (persisted) base -> the index
+    """Bucket + signature rows from a (shared) base -> the index
     layout; shared by full build and incremental append."""
     import os
 
@@ -963,14 +942,9 @@ def build_dedup_index(
     on layout). One corpus pass; the bucket write's only exchange is the
     repartition on ``__bb`` (narrow (id, band, bucket) rows)."""
     impl = _resolve_impl(impl)
-    base = _minhash_base(df, id_col, text_col, n_shingle, num_hashes, bands, impl)
-    from pyspark import StorageLevel
-
-    base = base.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    with scope():
+        base = shared(_minhash_base(df, id_col, text_col, n_shingle, num_hashes, bands, impl))
         _write_index_rows(base, path, n_parts, mode="overwrite")
-    finally:
-        base.unpersist()
     _write_dedup_meta(
         path, id_col=id_col, text_col=text_col, n_shingle=n_shingle,
         num_hashes=num_hashes, bands=bands, n_parts=n_parts, impl=impl,
@@ -1091,10 +1065,7 @@ def fuzzy_join_indexed(
     matching dedup_against_index's replay semantics)."""
     spark = df.sparkSession
     meta = _read_dedup_meta(path)
-    base = _base_from_meta(df, meta)
-    from pyspark import StorageLevel
-
-    base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    base = shared(_base_from_meta(df, meta))
     return _index_cross_pairs(spark, base, path, meta, threshold).select(
         F.col("new_id").alias("left_id"),
         F.col("old_id").alias("right_id"),
@@ -1110,7 +1081,7 @@ def dedup_against_index(
     itself — exactly :func:`minhash_dedup`'s greedy policy evaluated
     incrementally.
 
-    Plan shape: the batch signs itself (one narrow pass, persisted for
+    Plan shape: the batch signs itself (one narrow pass, shared for
     the duration of this call — the loser-id set is narrow and
     checkpoints eagerly, so the cache releases before returning), the
     index read partition-prunes to the __bb dirs the batch's buckets
@@ -1128,10 +1099,8 @@ def dedup_against_index(
     """
     spark = df.sparkSession
     meta = _read_dedup_meta(path)
-    from pyspark import StorageLevel
-
-    base = _base_from_meta(df, meta).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    with scope():
+        base = shared(_base_from_meta(df, meta))
         cross_dups = _cross_index_losers(spark, base, path, meta, threshold)
         # in-batch duplicates: same greedy min-id policy as minhash_dedup
         in_batch = _pairs_from_base(base, threshold).select(
@@ -1142,11 +1111,9 @@ def dedup_against_index(
             .distinct()
             .withColumnRenamed("id", meta["id_col"])
             # narrow (ids only): materialize so the returned plan doesn't
-            # depend on the persisted base after we release it
+            # depend on the shared base after the scope releases it
             .localCheckpoint(eager=True)
         )
-    finally:
-        base.unpersist()
     return df.join(losers, on=meta["id_col"], how="left_anti")
 
 
@@ -1160,13 +1127,8 @@ def append_dedup_signatures(df: DataFrame, path: str) -> None:
     and the replay self-exclusion in :func:`dedup_against_index` keeps
     the survivor set identical), never indexed-but-lost."""
     meta = _read_dedup_meta(path)
-    from pyspark import StorageLevel
-
-    base = _base_from_meta(df, meta).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        _write_index_rows(base, path, meta["n_parts"], mode="append")
-    finally:
-        base.unpersist()
+    with scope():
+        _write_index_rows(shared(_base_from_meta(df, meta)), path, meta["n_parts"], mode="append")
 
 
 def append_to_dedup_index(
@@ -1207,7 +1169,6 @@ def minhash_fuzzy_join(
     bands: int = 16,
     threshold: float = 0.7,
     impl: str = "auto",
-    cache: bool = True,
 ) -> DataFrame:
     """Similarity join BETWEEN two corpora: (left_id, right_id, jaccard)
     for every cross pair with exact shingle-Jaccard >= threshold among
@@ -1229,17 +1190,12 @@ def minhash_fuzzy_join(
     # at sf0.1 and still regressed at 8 cores. Each side's signature
     # pass is half a corpus; the band-bucket equi-join that follows
     # repartitions everything anyway.
-    base_l = _minhash_base(
-        left, left_id, left_text, n_shingle, num_hashes, bands, impl, fan_out=False
+    base_l = shared(
+        _minhash_base(left, left_id, left_text, n_shingle, num_hashes, bands, impl, fan_out=False)
     )
-    base_r = _minhash_base(
-        right, right_id, right_text, n_shingle, num_hashes, bands, impl, fan_out=False
+    base_r = shared(
+        _minhash_base(right, right_id, right_text, n_shingle, num_hashes, bands, impl, fan_out=False)
     )
-    if cache:
-        from pyspark import StorageLevel
-
-        base_l = base_l.persist(StorageLevel.MEMORY_AND_DISK)
-        base_r = base_r.persist(StorageLevel.MEMORY_AND_DISK)
     bl = base_l.select("id", F.posexplode("bh").alias("band", "bucket"))
     br = base_r.select(
         F.col("id").alias("r_id"), F.posexplode("bh").alias("band", "bucket")

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..share import scope, shared
+
 
 def pagerank(
     edges: DataFrame,
@@ -61,51 +63,50 @@ def pagerank(
     )
     n_nodes = nodes.count()
     deg = edges.groupBy(src.alias("node")).agg(F.count(F.lit(1)).alias("deg"))
-    # out-degree is static: attach once, reuse every round
-    base = nodes.join(deg, "node", "left").persist()
-    ranks = base.select(
-        "node", "deg", F.round(F.lit(1.0 / n_nodes), 9).alias("rank")
-    )
-    e = edges.select(src.alias("node"), dst.alias("__dst"))
-    for it in range(iters):
-        dangling = (
-            ranks.filter(F.col("deg").isNull())
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("m"))
-            .first()
-            .m
+    with scope():
+        # out-degree is static: attach once, reuse every round
+        base = shared(nodes.join(deg, "node", "left"))
+        ranks = base.select(
+            "node", "deg", F.round(F.lit(1.0 / n_nodes), 9).alias("rank")
         )
-        contribs = (
-            e.join(ranks.filter(F.col("deg").isNotNull()), "node")
-            .select(F.col("__dst").alias("node"), (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("__in"))
-        )
-        new_rank = F.round(
-            F.lit((1.0 - damping) / n_nodes)
-            + F.lit(damping)
-            * (F.coalesce(F.col("__in"), F.lit(0.0)) + F.lit(dangling / n_nodes)),
-            9,
-        )
-        prev = ranks
-        ranks = (
-            base.join(contribs, "node", "left")
-            .select("node", "deg", new_rank.alias("rank"))
-        )
-        if tol is not None:
-            # materialize this round once (the delta join would otherwise
-            # recompute it), measure movement, stop when mass settled
-            ranks = ranks.localCheckpoint(eager=True)
-            delta = (
-                ranks.select("node", F.col("rank").alias("__r1"))
-                .join(prev.select("node", F.col("rank").alias("__r0")), "node")
-                .agg(F.sum(F.abs(F.col("__r1") - F.col("__r0"))).alias("d"))
+        e = edges.select(src.alias("node"), dst.alias("__dst"))
+        for it in range(iters):
+            dangling = (
+                ranks.filter(F.col("deg").isNull())
+                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("m"))
                 .first()
-                .d
+                .m
             )
-            if delta is not None and delta < tol:
-                break
-        elif (it + 1) % checkpoint_every == 0 and it + 1 < iters:
-            ranks = ranks.localCheckpoint()
-    out = ranks.select("node", "rank")
-    base.unpersist()
-    return out
+            contribs = (
+                e.join(ranks.filter(F.col("deg").isNotNull()), "node")
+                .select(F.col("__dst").alias("node"), (F.col("rank") / F.col("deg")).alias("c"))
+                .groupBy("node")
+                .agg(F.sum("c").alias("__in"))
+            )
+            new_rank = F.round(
+                F.lit((1.0 - damping) / n_nodes)
+                + F.lit(damping)
+                * (F.coalesce(F.col("__in"), F.lit(0.0)) + F.lit(dangling / n_nodes)),
+                9,
+            )
+            prev = ranks
+            ranks = (
+                base.join(contribs, "node", "left")
+                .select("node", "deg", new_rank.alias("rank"))
+            )
+            if tol is not None:
+                # materialize this round once (the delta join would otherwise
+                # recompute it), measure movement, stop when mass settled
+                ranks = ranks.localCheckpoint(eager=True)
+                delta = (
+                    ranks.select("node", F.col("rank").alias("__r1"))
+                    .join(prev.select("node", F.col("rank").alias("__r0")), "node")
+                    .agg(F.sum(F.abs(F.col("__r1") - F.col("__r0"))).alias("d"))
+                    .first()
+                    .d
+                )
+                if delta is not None and delta < tol:
+                    break
+            elif (it + 1) % checkpoint_every == 0 and it + 1 < iters:
+                ranks = ranks.localCheckpoint()
+    return ranks.select("node", "rank")

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..fanout import fan_out_for_compute
+from ..share import scope, shared
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -1597,11 +1598,11 @@ def dedup_against_media_index(
     only: video dedup is pair-level by matched-frame count — use
     :func:`video_neardup_indexed` and apply a policy to its pairs.
 
-    Plan shape: the batch fingerprints itself once (persisted for this
+    Plan shape: the batch fingerprints itself once (shared for this
     call), the cross probe partition-prunes the index read, the
     in-batch pass is ``fingerprint_pairs`` over the same base, and the
     loser-id set is narrow and checkpointed eagerly so the returned
-    plan doesn't depend on the persisted base after release. Work
+    plan doesn't depend on the shared base after release. Work
     scales with the batch and its hit set, never the corpus."""
     spark = df.sparkSession
     meta = _read_media_index_meta(path)
@@ -1610,12 +1611,10 @@ def dedup_against_media_index(
             "dedup_against_media_index: video dedup is pair-level "
             "(matched-frame count) — use video_neardup_indexed"
         )
-    from pyspark import StorageLevel
-
     from .dedup import fingerprint_pairs
 
-    base = _media_fingerprint_base(df, meta).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    with scope():
+        base = shared(_media_fingerprint_base(df, meta))
         cross = (
             _media_index_cross_pairs(
                 spark, base, path, meta, max_distance, max_bucket_size
@@ -1628,7 +1627,6 @@ def dedup_against_media_index(
                 base,
                 max_distance=max_distance,
                 chunks=meta["chunks"],
-                cache=False,
                 max_bucket_size=max_bucket_size,
             )
             .select(F.col("b_id").alias("id"))
@@ -1640,8 +1638,6 @@ def dedup_against_media_index(
             .withColumnRenamed("id", meta["id_col"])
             .localCheckpoint(eager=True)
         )
-    finally:
-        base.unpersist()
     return df.join(losers, on=meta["id_col"], how="left_anti")
 
 
@@ -1724,8 +1720,6 @@ def image_text_pairs(
     (not just identical) come from composing ``image_neardup`` +
     ``dedup.connected_components`` upstream and substituting that
     cluster id for the phash here."""
-    from pyspark import StorageLevel
-
     from .text import html_images
 
     refs = docs.select(
@@ -1734,7 +1728,14 @@ def image_text_pairs(
     ).select(
         "__doc", F.col("__r.src").alias("__src"), F.col("__r.alt").alias("__alt")
     )
-    hashed = (
+    # evaluated ONCE: `hashed` feeds both the rep election and the
+    # rep-attach join below, and unshared each branch re-runs the
+    # mapInPandas DECODE of every payload — the single most expensive
+    # step in the pipeline, paid twice (round-14 plan audit: two
+    # ArrowEval decode nodes). The shared table is (id, url, 8-byte
+    # hash) — metadata-sized next to the payload bytes it replaces
+    # (guide §8: fingerprint once, decide on small rows).
+    hashed = shared(
         phash_images(media, payload_col=payload_col)
         .filter(F.col("phash").isNotNull())
         .select(
@@ -1742,18 +1743,6 @@ def image_text_pairs(
             F.col(url_col).alias("__url"),
             "phash",
         )
-        # evaluated ONCE: `hashed` feeds both the rep election and the
-        # rep-attach join below, and without a shared materialization
-        # each branch re-runs the mapInPandas DECODE of every payload —
-        # the single most expensive step in the pipeline, paid twice
-        # (round-14 plan audit: two ArrowEval decode nodes). The cached
-        # table is (id, url, 8-byte hash) — metadata-sized next to the
-        # payload bytes it replaces (guide §8: fingerprint once, decide
-        # on small rows). Round-15: persist(MEMORY_AND_DISK) instead of
-        # the round-14 eager localCheckpoint — lineage survives executor
-        # loss (recompute instead of query death at cluster scale,
-        # guide §5) and construction stays lazy.
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     reps = hashed.groupBy("phash").agg(
         F.min("__mid").alias("__rep"),

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..fanout import fan_out_for_compute
+from ..share import shared
 
 from .text import token_count
 
@@ -513,7 +514,6 @@ def repeated_spans(
     min_docs: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    cache: bool = True,
 ) -> DataFrame:
     """(id, start, gh) of every word n-gram window whose gram appears in
     >= ``min_docs`` DISTINCT documents — the candidate set for
@@ -523,18 +523,14 @@ def repeated_spans(
     RefinedWeb strips them rather than dropping whole documents).
 
     Plan shape: one corpus scan explodes positioned n-gram hashes (the
-    ``decontaminate`` shape plus a position column), PERSISTED — the
+    ``decontaminate`` shape plus a position column), SHARED — the
     distinct-doc count and the window semi-join would otherwise each
     re-run the tokenize+explode (the minhash_lsh_pairs base-persist
     precedent); a hash groupBy with map-side combine counts distinct
     docs; a semi-join keeps the repeated windows. Only (id, pos,
     64-bit hash) rows ever shuffle — never text — and the
     repeated-gram table is Zipf-small (AQE broadcasts it)."""
-    wins = _span_windows(docs, n, id_col, text_col)
-    if cache:
-        from pyspark import StorageLevel
-
-        wins = wins.persist(StorageLevel.MEMORY_AND_DISK)
+    wins = shared(_span_windows(docs, n, id_col, text_col))
     bad = (
         wins.groupBy("gh")
         .agg(F.count_distinct(F.col(id_col)).alias("n_docs"))
@@ -550,7 +546,6 @@ def strip_repeated_spans(
     min_docs: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    cache: bool = True,
 ) -> DataFrame:
     """Remove cross-document repeated spans from each document's token
     stream: every token covered by ANY repeated n-gram window (union of
@@ -568,10 +563,7 @@ def strip_repeated_spans(
     expressions — the per-token coverage test is an ``exists`` over the
     doc's own span-start array (spans per doc are few; the quadratic
     term is span_count x tokens per document, not corpus-sized)."""
-    spans = repeated_spans(
-        docs, n=n, min_docs=min_docs, id_col=id_col, text_col=text_col,
-        cache=cache,
-    )
+    spans = repeated_spans(docs, n=n, min_docs=min_docs, id_col=id_col, text_col=text_col)
     return _strip_spans(docs, spans, n, id_col, text_col)
 
 
@@ -947,11 +939,7 @@ def strip_against_span_index(
     with open(os.path.join(path, "_span_meta.json")) as f:
         meta = json.load(f)
     n, id_col, text_col = meta["n"], meta["id_col"], meta["text_col"]
-    from pyspark import StorageLevel
-
-    wins = _span_windows(docs, n, id_col, text_col).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    wins = shared(_span_windows(docs, n, id_col, text_col))
     batch_counts = wins.groupBy("gh").agg(
         F.count_distinct(F.col(id_col)).alias("__bn")
     )

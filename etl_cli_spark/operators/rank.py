@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..fanout import fan_out_for_compute
+from ..share import scope, shared
 
 from .text import tokens
 
@@ -232,20 +233,10 @@ def perplexity_buckets(
     1..n_buckets (1 = most fluent) and tier = head/middle/tail when
     ``n_buckets == 3`` (else the bucket number as a string).
 
-    The scored ``(id, lang, nll6)`` table is evaluated ONCE before
-    fanning out to its two consumers (the tier-threshold aggregate and
-    the final doc→bucket join): both branches otherwise re-evaluate the
-    ENTIRE scoring pipeline — tokenize + (id, term, tf) aggregate for
-    the corpus AND the model — doubling every exchange under it
-    (round-14 plan audit: 23 Exchange nodes, the whole NLL subtree
-    twice). Round-15: the share point is ``persist(MEMORY_AND_DISK)``
-    rather than the round-14 eager ``localCheckpoint`` — persist keeps
-    lineage (an executor loss recomputes the narrow (id, lang, double)
-    partition instead of killing the query, the guide §5 posture) and
-    stays LAZY (declaring the query no longer runs the scoring
-    pipeline at construction time). The cached table lives until the
-    session drops it (LRU / clearCache) — narrow by construction."""
-    from pyspark import StorageLevel
+    The scored ``(id, lang, nll6)`` table feeds two consumers (the
+    tier-threshold aggregate and the final doc→bucket join) inside one
+    query, so Catalyst's exchange reuse evaluates its shuffles once
+    (``ReusedExchange`` in the final plan); nothing is cached."""
     from pyspark.sql import Window
 
     nll = unigram_logprob(
@@ -253,7 +244,7 @@ def perplexity_buckets(
     )
     base = docs.select(id_col, lang_col).join(nll, id_col).select(
         id_col, lang_col, F.round("nll", 6).alias("nll")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     by_val = base.groupBy(lang_col, "nll").agg(F.count(F.lit(1)).alias("c"))
     w = Window.partitionBy(lang_col).orderBy("nll")
     cum = by_val.select(
@@ -473,7 +464,7 @@ def score_documents(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """All three scores — (id, tfidf, bm25, nll) — from ONE (id, term,
-    tf) pass: the term-frequency frame is computed once, persisted, and
+    tf) pass: the term-frequency frame is computed once and
     shared by the scorers, so the corpus is tokenized and shuffled once
     instead of per score (3x fewer document scans; the per-score math is
     identical to calling the scorers individually).
@@ -482,17 +473,14 @@ def score_documents(
     inner join keeps exactly those (nll exists for all docs — use
     :func:`unigram_logprob` directly for a full-corpus quality pass).
 
-    The shared terms frame is persisted for the duration of this call
-    and unpersisted before returning: the result is materialized into a
-    ``localCheckpoint`` (hit-set-sized — one row per matching doc, four
-    columns — so the checkpoint is bounded however large the corpus),
-    which lets the corpus-sized cache be released instead of living for
-    the session (cache leak fixed per round-3 review).
+    The terms frame is shared for the duration of this call: the
+    result is materialized into a ``localCheckpoint`` (hit-set-sized —
+    one row per matching doc, four columns — so the checkpoint is
+    bounded however large the corpus) before the scope releases the
+    corpus-sized cache.
     """
-    from pyspark import StorageLevel
-
-    terms = _doc_terms(docs, text_col, id_col).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    with scope():
+        terms = shared(_doc_terms(docs, text_col, id_col))
         tf = tfidf_score(docs, query_terms, text_col, id_col, terms=terms).select(
             id_col, F.col("score").alias("tfidf")
         )
@@ -502,8 +490,6 @@ def score_documents(
         lm = unigram_logprob(docs, text_col, id_col, terms=terms)
         out = tf.join(bm, id_col).join(lm, id_col)
         return out.localCheckpoint(eager=True)
-    finally:
-        terms.unpersist()
 
 
 # -- DSIR importance resampling (round-4) ------------------------------------
@@ -568,27 +554,24 @@ def importance_weights(
     hashing trick exists precisely so model size is corpus-independent);
     the scoring join touches only each doc's own buckets. No UDFs.
     """
-    from pyspark import StorageLevel
-
     # the raw-corpus gram pass feeds BOTH the q-model and the scoring
-    # join: persist it so the corpus tokenizes once, not per branch;
-    # scored is narrow (id, weight), so it checkpoints eagerly and the
-    # persisted frame is released before returning (no cache leak)
-    raw_grams = _doc_gram_buckets(raw, text_col, id_col, n, m_buckets)
-    joined = None
-    if eager:
-        raw_grams = raw_grams.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    # join: share it so the corpus tokenizes once, not per branch;
+    # scored is narrow (id, weight), so it checkpoints eagerly before
+    # the scope releases the shares
+    with scope():
+        raw_grams = _doc_gram_buckets(raw, text_col, id_col, n, m_buckets)
+        if eager:
+            raw_grams = shared(raw_grams)
         tgt_grams = _doc_gram_buckets(target, text_col, id_col, n, m_buckets)
         raw_model = raw_grams.groupBy("bucket").agg(F.sum("c").alias("qc"))
         tgt_model = tgt_grams.groupBy("bucket").agg(F.sum("c").alias("pc"))
         # both totals come out of the joined model frame in ONE driver
         # job (not one collect per model): the frame is m buckets —
-        # corpus-independent and small — so persisting it costs nothing
+        # corpus-independent and small — so sharing it costs nothing
         # and the target corpus tokenizes once instead of twice
         joined = raw_model.join(tgt_model, "bucket", "full")
         if eager:
-            joined = joined.persist(StorageLevel.MEMORY_AND_DISK)
+            joined = shared(joined)
         tots = joined.agg(
             F.sum("qc").alias("q"), F.sum("pc").alias("p")
         ).collect()[0]
@@ -607,15 +590,10 @@ def importance_weights(
             .agg(F.round(F.sum(F.col("c") * F.col("llr")), 6).alias("log_weight"))
         )
         if eager:
-            # narrow (id, weight): materialize so the cache below can be
-            # released; eager=False keeps the full lazy plan (used by
+            # narrow (id, weight): materialize so the scope can release
+            # the shares; eager=False keeps the full lazy plan (used by
             # plan-quality tests to assert the model join broadcasts)
             scored = scored.localCheckpoint(eager=True)
-    finally:
-        if eager:
-            raw_grams.unpersist()
-            if joined is not None:
-                joined.unpersist()
     # docs with no n-grams (too short) get weight 0 — neutral
     return raw.join(scored, id_col, "left").withColumn(
         "log_weight", F.coalesce("log_weight", F.lit(0.0))

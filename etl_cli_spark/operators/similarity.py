@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..share import scope, shared
 from .text import let
 
 
@@ -202,9 +203,9 @@ def embedding_neardup_pairs(
     planes = _hyperplanes(dim, n_planes, seed)
     width = n_planes // bands
     mask = (1 << width) - 1
-    # persist (id, unit-norm vector, signature): the bucket join moves only
+    # share (id, unit-norm vector, signature): the bucket join moves only
     # (id, band, bucket); pre-normalized vectors make the verify a pure dot
-    base = (
+    base = shared(
         df.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v"))
         .withColumn("__n", norm(F.col("v")))
         .select(
@@ -213,9 +214,6 @@ def embedding_neardup_pairs(
             lsh_signature(F.col("v"), planes).alias("__sig"),
         )
     )
-    from pyspark import StorageLevel
-
-    base = base.persist(StorageLevel.MEMORY_AND_DISK)
     buckets = base.select(
         "id",
         F.explode(
@@ -430,113 +428,87 @@ def kmeans_refine(
     # the training loop reads the SAME (id, vec) projection iters+1
     # times (init + each Lloyd pass would re-scan the source otherwise
     # — iterative training is the textbook persist case, guide §5);
-    # persisting BEFORE the init collect lets that first job fill the
-    # cache. Released before returning, and the RETURNED final
-    # assignment reads the original ``df`` so no cached plan escapes.
-    from pyspark import StorageLevel
-
-    train = df.select(id_col, vec_col)
-    if iters > 0:
-        train = train.persist(StorageLevel.MEMORY_AND_DISK)
-    # try/finally (round-15 ADVICE): an exception anywhere in the init
-    # collect or the Lloyd loop (an _assign_cells failure, a collect
-    # error) must not leak the MEMORY_AND_DISK cached relation for the
-    # session lifetime — every exit path releases it exactly once.
-    try:
-        return _kmeans_refine_loop(
-            df, train, n_centroids, iters, id_col, vec_col, mean_strategy
-        )
-    finally:
+    # sharing BEFORE the init collect lets that first job fill the
+    # cache. The scope releases it on every exit path, and the RETURNED
+    # final assignment reads the original ``df`` so no cached plan escapes.
+    with scope():
+        train = df.select(id_col, vec_col)
         if iters > 0:
-            train.unpersist()
-
-
-def _kmeans_refine_loop(
-    df: DataFrame,
-    train: DataFrame,
-    n_centroids: int,
-    iters: int,
-    id_col: str,
-    vec_col: str,
-    mean_strategy: str,
-) -> tuple[DataFrame, list[list[float]]]:
-    """The Lloyd iteration body of :func:`kmeans_refine` — split out so
-    the caller can own the persisted ``train``'s lifecycle with one
-    try/finally instead of per-exit-path unpersists."""
-    init_rows = train.orderBy(id_col).limit(n_centroids).collect()
-    if not init_rows:
-        raise ValueError("kmeans_refine: empty input")
-    if mean_strategy not in ("auto", "wide", "long", "exact"):
-        raise ValueError(f"kmeans_refine: unknown mean_strategy {mean_strategy!r}")
-    cent: list[list[float]] = [[float(x) for x in r[1]] for r in init_rows]
-    dim = len(cent[0])
-    # 96 ≈ spark.sql.codegen.maxFields (100) minus the grouping key's
-    # slots: past it the wide agg drops out of whole-stage codegen
-    wide = mean_strategy == "wide" or (mean_strategy == "auto" and dim <= 96)
-    exact = mean_strategy == "exact"
-    for _ in range(iters):
-        assigned = _assign_cells(train, cent, vec_col, exact=exact)
-        new = [list(c) for c in cent]
-        if wide:
-            # one row per cell, dim avg columns: partial aggregation
-            # combines map-side, so the exchange carries <= n_centroids
-            # rows per task
-            mean_row = assigned.groupBy("__cell").agg(
-                *[
-                    F.avg(F.element_at(F.col(vec_col), d + 1).cast("double")).alias(str(d))
-                    for d in range(dim)
-                ]
-            ).collect()
-            for r in mean_row:
-                new[r["__cell"]] = [r[str(d)] for d in range(dim)]
-        else:
-            # long format: explode (cell, pos, val) then a narrow 2-key
-            # aggregate — no wide codegen, map-side combine bounds the
-            # exchange at K × dim rows per task. The driver transfer is
-            # K × dim scalars either way, but here it's K*dim ROWS, so
-            # fetch via Arrow (columnar, no per-Row objects) and fill
-            # vectorized — the same float64 bits collect() would carry
-            long = assigned.select(
-                "__cell",
-                F.col(id_col).alias("__oid"),
-                F.posexplode(F.col(vec_col)).alias("__pos", "__val"),
-            )
-            if mean_strategy == "exact":
-                # fixed-order (by id) Neumaier fold: order-independent
-                # of partitioning, bit-replayable cross-engine; the
-                # sort_array makes collect_list's nondeterministic
-                # build order irrelevant (ids are the sort key)
-                mean_col = _neumaier_mean(
-                    F.sort_array(
-                        F.collect_list(
-                            F.struct(
-                                F.col("__oid").alias("i"),
-                                F.col("__val").cast("double").alias("v"),
+            train = shared(train)
+        init_rows = train.orderBy(id_col).limit(n_centroids).collect()
+        if not init_rows:
+            raise ValueError("kmeans_refine: empty input")
+        if mean_strategy not in ("auto", "wide", "long", "exact"):
+            raise ValueError(f"kmeans_refine: unknown mean_strategy {mean_strategy!r}")
+        cent: list[list[float]] = [[float(x) for x in r[1]] for r in init_rows]
+        dim = len(cent[0])
+        # 96 ≈ spark.sql.codegen.maxFields (100) minus the grouping key's
+        # slots: past it the wide agg drops out of whole-stage codegen
+        wide = mean_strategy == "wide" or (mean_strategy == "auto" and dim <= 96)
+        exact = mean_strategy == "exact"
+        for _ in range(iters):
+            assigned = _assign_cells(train, cent, vec_col, exact=exact)
+            new = [list(c) for c in cent]
+            if wide:
+                # one row per cell, dim avg columns: partial aggregation
+                # combines map-side, so the exchange carries <= n_centroids
+                # rows per task
+                mean_row = assigned.groupBy("__cell").agg(
+                    *[
+                        F.avg(F.element_at(F.col(vec_col), d + 1).cast("double")).alias(str(d))
+                        for d in range(dim)
+                    ]
+                ).collect()
+                for r in mean_row:
+                    new[r["__cell"]] = [r[str(d)] for d in range(dim)]
+            else:
+                # long format: explode (cell, pos, val) then a narrow 2-key
+                # aggregate — no wide codegen, map-side combine bounds the
+                # exchange at K × dim rows per task. The driver transfer is
+                # K × dim scalars either way, but here it's K*dim ROWS, so
+                # fetch via Arrow (columnar, no per-Row objects) and fill
+                # vectorized — the same float64 bits collect() would carry
+                long = assigned.select(
+                    "__cell",
+                    F.col(id_col).alias("__oid"),
+                    F.posexplode(F.col(vec_col)).alias("__pos", "__val"),
+                )
+                if mean_strategy == "exact":
+                    # fixed-order (by id) Neumaier fold: order-independent
+                    # of partitioning, bit-replayable cross-engine; the
+                    # sort_array makes collect_list's nondeterministic
+                    # build order irrelevant (ids are the sort key)
+                    mean_col = _neumaier_mean(
+                        F.sort_array(
+                            F.collect_list(
+                                F.struct(
+                                    F.col("__oid").alias("i"),
+                                    F.col("__val").cast("double").alias("v"),
+                                )
                             )
                         )
                     )
+                else:
+                    mean_col = F.avg(F.col("__val").cast("double"))
+                mpdf = (
+                    long.groupBy("__cell", "__pos")
+                    .agg(mean_col.alias("__avg"))
+                    .toPandas()
                 )
-            else:
-                mean_col = F.avg(F.col("__val").cast("double"))
-            mpdf = (
-                long.groupBy("__cell", "__pos")
-                .agg(mean_col.alias("__avg"))
-                .toPandas()
-            )
-            import numpy as np
+                import numpy as np
 
-            arr = np.asarray(new, dtype=np.float64)
-            arr[mpdf["__cell"].to_numpy(), mpdf["__pos"].to_numpy()] = mpdf[
-                "__avg"
-            ].to_numpy()
-            new = arr.tolist()
-        if exact:
-            # shared floor-based quantizer (see _quantize): one rule,
-            # both engines — never two round() implementations
-            cent = [[_quantize(float(v), 1e9) for v in c] for c in new]
-        else:
-            cent = [[round(float(v), 9) for v in c] for c in new]
-    return _assign_cells(df, cent, vec_col, exact=exact), cent
+                arr = np.asarray(new, dtype=np.float64)
+                arr[mpdf["__cell"].to_numpy(), mpdf["__pos"].to_numpy()] = mpdf[
+                    "__avg"
+                ].to_numpy()
+                new = arr.tolist()
+            if exact:
+                # shared floor-based quantizer (see _quantize): one rule,
+                # both engines — never two round() implementations
+                cent = [[_quantize(float(v), 1e9) for v in c] for c in new]
+            else:
+                cent = [[round(float(v), 9) for v in c] for c in new]
+        return _assign_cells(df, cent, vec_col, exact=exact), cent
 
 
 def _assign_cells(
@@ -973,8 +945,6 @@ def semantic_dedup(
     (32768 rows x dim 768 x 8 B ~ 200 MB; size it to the executor
     task budget for wider embeddings).
     """
-    from pyspark import StorageLevel
-
     if pair_strategy not in ("auto", "column", "arrow"):
         raise ValueError(f"semantic_dedup: unknown pair_strategy {pair_strategy!r}")
 
@@ -995,27 +965,6 @@ def semantic_dedup(
             df, id_col=id_col, vec_col=vec_col,
             n_centroids=n_clusters, sample_size=sample_size,
         )
-    # normalize ONCE and persist (cell, id, unit vector): the self-join's
-    # two branches would otherwise each re-run the Arrow assign pass, and
-    # per-pair cosine would recompute both norms — unit vectors make the
-    # verify a pure dot (same round-6 protocol embedding_neardup uses).
-    # transform() divides by the norm column directly (r7) — the old
-    # zip_with/array_repeat(dim) form needed a first() action just to
-    # learn the dimension
-    base = (
-        with_cells.select(
-            F.col("__cell"),
-            F.col(id_col).alias("__id"),
-            _as_double(F.col(vec_col)).alias("__v"),
-        )
-        .withColumn("__n", norm(F.col("__v")))
-        .select(
-            "__cell",
-            "__id",
-            F.transform("__v", lambda x: x / F.col("__n")).alias("__u"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
     def _column_pairs(frame: DataFrame) -> DataFrame:
         a = frame.select("__cell", F.col("__id").alias("__a_id"), F.col("__u").alias("__a_u"))
         b = frame.select("__cell", F.col("__id").alias("__b_id"), F.col("__u").alias("__b_u"))
@@ -1029,17 +978,35 @@ def semantic_dedup(
         )
 
     margin = float(threshold) - 1e-6
-    aux: list[DataFrame] = []  # released once drops has materialized
-    try:
+    with scope():  # released once drops has materialized
+        # normalize ONCE and share (cell, id, unit vector): the self-join's
+        # two branches would otherwise each re-run the Arrow assign pass, and
+        # per-pair cosine would recompute both norms — unit vectors make the
+        # verify a pure dot (same round-6 protocol embedding_neardup uses).
+        # transform() divides by the norm column directly (r7) — the old
+        # zip_with/array_repeat(dim) form needed a first() action just to
+        # learn the dimension
+        base = shared(
+            with_cells.select(
+                F.col("__cell"),
+                F.col(id_col).alias("__id"),
+                _as_double(F.col(vec_col)).alias("__v"),
+            )
+            .withColumn("__n", norm(F.col("__v")))
+            .select(
+                "__cell",
+                "__id",
+                F.transform("__v", lambda x: x / F.col("__n")).alias("__u"),
+            )
+        )
         if pair_strategy == "arrow":
             cand = _cell_pair_candidates(base, margin).drop("__is_cell")
         elif pair_strategy == "column":
             cand = _column_pairs(base)
         else:  # auto: arrow kernel, mega-cells streamed through column
-            raw = _cell_pair_candidates(
-                base, margin, big_cell_rows=max_arrow_cell_rows
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            aux.append(raw)
+            raw = shared(
+                _cell_pair_candidates(base, margin, big_cell_rows=max_arrow_cell_rows)
+            )
             # sentinel rows (``__is_cell`` true, cell id in the dot
             # slot — a dedicated flag, so a genuine pair row whose
             # b-side id is null can never be mistaken for one) mark the
@@ -1064,13 +1031,9 @@ def semantic_dedup(
             .select(F.col("__b_id").alias(id_col))
             .distinct()
             # narrow (ids only): materialize so the returned plan doesn't
-            # depend on the persisted frame after we release it
+            # depend on the shared frames after the scope releases them
             .localCheckpoint(eager=True)
         )
-    finally:
-        base.unpersist()
-        for f in aux:
-            f.unpersist()
     return with_cells.join(drops, on=id_col, how="left_anti")
 
 
@@ -1107,8 +1070,6 @@ def semantic_cross_dedup(
     approximation the paper accepts; size ``n_clusters`` to the corpus
     as usual. Returns the surviving ``left`` rows (original columns).
     """
-    from pyspark import StorageLevel
-
     indexed, cent = ivf_index(
         index, id_col=id_col, vec_col=vec_col,
         n_centroids=n_clusters, sample_size=sample_size,
@@ -1128,10 +1089,10 @@ def semantic_cross_dedup(
             )
         )
 
-    right_u = _unit(indexed, "__r_id").persist(StorageLevel.MEMORY_AND_DISK)
     left_cells = _assign_cells(left.select(id_col, vec_col), cent, vec_col)
     left_u = _unit(left_cells, "__l_id")
-    try:
+    with scope():
+        right_u = shared(_unit(indexed, "__r_id"))
         drops = (
             left_u.join(right_u, on="__cell")
             .filter(
@@ -1142,8 +1103,6 @@ def semantic_cross_dedup(
             .distinct()
             .localCheckpoint(eager=True)
         )
-    finally:
-        right_u.unpersist()
     return left.join(drops, on=id_col, how="left_anti")
 
 

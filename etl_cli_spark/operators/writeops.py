@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from ..dsl import compile_query
 from ..fanout import coalesce_by_bytes
+from ..share import scope, shared
 from ..spec import TargetSpec
 
 _TS_COL = "_etl_ts"
@@ -907,15 +908,15 @@ class ParquetTable:
             to_version = latest[0]
         man_old = self._manifest_at(from_version)
         man_new = self._manifest_at(to_version)
-        shared = set(man_old["files"]) & set(man_new["files"])
+        both = set(man_old["files"]) & set(man_new["files"])
         schema = self._merge_schema_json(
             man_old.get("schema"), man_new.get("schema")
         )
         old = self._read_manifest_files(
-            [f for f in man_old["files"] if f not in shared], schema
+            [f for f in man_old["files"] if f not in both], schema
         )
         new = self._read_manifest_files(
-            [f for f in man_new["files"] if f not in shared], schema
+            [f for f in man_new["files"] if f not in both], schema
         )
         if old is None or new is None:
             raise FileNotFoundError(
@@ -1456,7 +1457,16 @@ def apply_write_op(src: DataFrame, table: ParquetTable, spec: TargetSpec) -> Dat
     """Apply the write op; returns the new target state DataFrame.
 
     ``src`` is the pipeline output (already merged/transformed/projected).
+    A dry run returns the lazy new state, so its caller owns the shared
+    source; a write releases it before returning the fresh target read.
     """
+    if spec.dry_run:
+        return _write_op(src, table, spec)
+    with scope():
+        return _write_op(src, table, spec)
+
+
+def _write_op(src: DataFrame, table: ParquetTable, spec: TargetSpec) -> DataFrame:
     if spec.fields:
         src = src.select(*spec.fields)
     if spec.drop:
@@ -1494,10 +1504,8 @@ def apply_write_op(src: DataFrame, table: ParquetTable, spec: TargetSpec) -> Dat
         if tgt is None:
             new_rows = src
         else:
-            # persist: the anti-join and the append both evaluate src
-            from pyspark import StorageLevel
-
-            src = src.persist(StorageLevel.MEMORY_AND_DISK)
+            # shared: the anti-join and the append both evaluate src
+            src = shared(src)
             if src.count() <= _BROADCAST_SRC_ROWS:
                 # broadcast-structured: hit keys from a semi join that
                 # streams the target (no target-side Exchange), then a
@@ -1512,10 +1520,8 @@ def apply_write_op(src: DataFrame, table: ParquetTable, spec: TargetSpec) -> Dat
                     tgt.select(*keys).dropDuplicates(keys), on=keys, how="left_anti"
                 )
         if spec.dry_run:
-            return new_rows  # plan still references src; caller owns its lifetime
+            return new_rows
         table.append(new_rows)
-        if tgt is not None:
-            src.unpersist()
         return table.read()
 
     if not spec.pk:
@@ -1523,12 +1529,10 @@ def apply_write_op(src: DataFrame, table: ParquetTable, spec: TargetSpec) -> Dat
     pk = list(spec.pk)
     src = src.dropDuplicates(pk)  # engine-enforced pk dedupe (etl.py:230-235)
     # the update family evaluates src up to 3x (touched-bucket scan, matched
-    # join, new-keys anti-join) — persist the deduped source once instead of
-    # recomputing its whole upstream pipeline per use. MEMORY_AND_DISK: the
-    # source of a MERGE is the changed-rows set, small relative to target.
-    from pyspark import StorageLevel
-
-    src = src.persist(StorageLevel.MEMORY_AND_DISK)
+    # join, new-keys anti-join) — share the deduped source once instead of
+    # recomputing its whole upstream pipeline per use (the source of a
+    # MERGE is the changed-rows set, small relative to target)
+    src = shared(src)
     # broadcast-structured MERGE (round-4 judge item #3): when the
     # changed-rows set is small — the normal MERGE shape — every join
     # against the target is structured so the TARGET side never
@@ -1536,7 +1540,7 @@ def apply_write_op(src: DataFrame, table: ParquetTable, spec: TargetSpec) -> Dat
     # new-keys anti-join runs source-vs-hit-keys (both source-sized,
     # broadcast) instead of source-vs-target-keys (which hash-shuffled
     # the pruned target). The count is a cheap job on the already-
-    # persisted source; above the threshold the classic shuffle plan is
+    # shared source; above the threshold the classic shuffle plan is
     # the right one and nothing changes.
     n_src = src.count()
     small_src = n_src <= _BROADCAST_SRC_ROWS
@@ -1586,7 +1590,6 @@ def apply_write_op(src: DataFrame, table: ParquetTable, spec: TargetSpec) -> Dat
                 if table._target_layout() or table._target_value_layout()
                 else coalesce_by_bytes(src, src)
             )
-            src.unpersist()
             return table.read()
         # update/delete against a missing target is a no-op
         return src.limit(0)
@@ -1600,8 +1603,8 @@ def apply_write_op(src: DataFrame, table: ParquetTable, spec: TargetSpec) -> Dat
     t, s = tgt.alias(_T), src.alias(_S)
     in_scope = F.col(f"{_T}.__etl_scope")
     cond = _pk_cond(spec.pk)
-    shared = [c for c in tgt.columns if c in src.columns and c not in pk]
-    set_cols = list(spec.overwrite_fields) if spec.overwrite_fields else shared
+    common = [c for c in tgt.columns if c in src.columns and c not in pk]
+    set_cols = list(spec.overwrite_fields) if spec.overwrite_fields else common
     if spec.skip_timestamp:
         set_cols = [c for c in set_cols if c != _TS_COL]
 
@@ -1672,7 +1675,7 @@ def apply_write_op(src: DataFrame, table: ParquetTable, spec: TargetSpec) -> Dat
 
     new_state = new_state.drop("__etl_scope")
     if spec.dry_run:
-        return new_state  # plan still references src; caller owns its lifetime
+        return new_state
     if scoped:
         if touched:
             table.overwrite_buckets(new_state, touched)
@@ -1683,5 +1686,4 @@ def apply_write_op(src: DataFrame, table: ParquetTable, spec: TargetSpec) -> Dat
         # plain-layout full rewrite: size the output files (the bucketed
         # and value-partitioned writers repartition by layout already)
         table.overwrite(coalesce_by_bytes(new_state, tgt_read, src))
-    src.unpersist()
     return table.read()

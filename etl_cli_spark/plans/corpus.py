@@ -21,7 +21,7 @@ script:
 Every stage maps onto an already-verified operator; no stage triggers a
 job by itself (lazy composition), so Catalyst optimizes ACROSS stages —
 filters sink below joins, projections prune scans — exactly what a
-hand-written script of sequential `.cache()` steps would prevent.
+hand-written script of sequential cached steps would prevent.
 Unknown stage names raise with the known list (config typos fail fast,
 not silently skip)."""
 

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.writeops import ParquetTable
+from ..share import scope, shared
 
 
 @dataclass
@@ -54,26 +55,24 @@ def incremental_loop(
     prev_remaining = -1
     passes = processed = 0
     for _ in range(max_passes):
-        df = source()
-        seen = bm.read()
-        todo = df if seen is None else df.join(seen, on=id_cols, how="left_anti")
-        if batch_limit:
-            todo = todo.limit(batch_limit)
-        todo = todo.cache()
-        n = todo.count()
-        if n == 0:
-            todo.unpersist()
-            return LoopStats(passes, processed, converged=True)
-        if n == prev_remaining and batch_limit is None:
-            # two consecutive passes with identical remainder -> stall
-            todo.unpersist()
-            return LoopStats(passes, processed, converged=True)
-        process(todo)
-        bm.append(todo.select(*id_cols).distinct())
+        with scope():
+            df = source()
+            seen = bm.read()
+            todo = df if seen is None else df.join(seen, on=id_cols, how="left_anti")
+            if batch_limit:
+                todo = todo.limit(batch_limit)
+            todo = shared(todo)
+            n = todo.count()
+            if n == 0:
+                return LoopStats(passes, processed, converged=True)
+            if n == prev_remaining and batch_limit is None:
+                # two consecutive passes with identical remainder -> stall
+                return LoopStats(passes, processed, converged=True)
+            process(todo)
+            bm.append(todo.select(*id_cols).distinct())
         processed += n
         passes += 1
         prev_remaining = n
-        todo.unpersist()
     return LoopStats(passes, processed, converged=False)
 
 
@@ -248,16 +247,17 @@ def changefeed_merge(
             ).withColumn("commit_version", F.lit(int(a)))
         else:
             changes = upstream.snapshot_changes(a - 1, b, pk=pk)
-        # cache the CHANGE SET, not post/gone separately: post and gone
+        # share the CHANGE SET, not post/gone separately: post and gone
         # are both narrow filters of the same diff, and caching each one
         # executed the whole file-pruned diff plan TWICE per run (once
-        # per count). One cache materializes the diff once; the counts,
+        # per count). One share materializes the diff once; the counts,
         # the upsert, and the delete are all cheap scans of it.
         # ``transform`` re-evaluates over the cache at apply time — the
         # documented contract (stateless row-wise, pk-preserving)
-        # already implies determinism.
-        changes = changes.cache()
-        try:
+        # already implies determinism. The scope releases it on every
+        # exit, an exception from transform or a write included.
+        with scope():
+            changes = shared(changes)
             post = changes.filter(
                 F.col("change_type").isin("insert", "update_postimage")
             ).drop("change_type", "commit_version")
@@ -311,12 +311,6 @@ def changefeed_merge(
                 # next drain doesn't rediff it
                 downstream.stream_commit_meta(stream_id, b)
                 downstream._commit(lambda prev, ps: (list(prev), ps))
-        finally:
-            # unpersist on EVERY exit: an exception from transform, the
-            # counts, or apply_write_op must not leak the cached change
-            # set (for 'init' runs, the whole initial snapshot) for the
-            # rest of the session
-            changes.unpersist()
         applied += b - a + 1
         watermark = b
     return ChangeFeedStats(applied, ups, dels, watermark)
