@@ -64,43 +64,6 @@ def _catalog_fingerprint(root: str, depth: int = 3) -> tuple[tuple[str, int], ..
     return tuple(fp)
 
 
-def _bucket_point_prune(df: DataFrame, path: str, query) -> DataFrame:
-    """Point-lookup pruning on a pk-hash bucketed table: when the DSL
-    query pins EVERY bucket column with a plain equality, pre-filter on
-    the precomputed bucket id — partition pruning then reads 1/n_buckets
-    of the files. A 100 TB table answers `pk=X` from one bucket."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    meta_p = os.path.join(path, "_etl_bucket_meta.json")
-    if not query or not os.path.exists(meta_p):
-        return df
-    try:
-        with open(meta_p) as f:
-            m = json.load(f)
-    except (OSError, ValueError):
-        return df
-    if m.get("kind", "bucket") != "bucket":
-        return df
-    cols, n = m["cols"], int(m["n"])
-    eq: dict[str, Any] = {}
-    items = query.items() if hasattr(query, "items") else (
-        (i.partition("=")[0], i.partition("=")[2])
-        for i in query
-        if isinstance(i, str) and "=" in i
-    )
-    for k, v in items:
-        # plain equality only: no __op suffix, not a _control key
-        if k and not k.startswith("_") and "__" not in k:
-            eq[k] = v
-    if not all(c in eq for c in cols):
-        return df
-    lits = [F.lit(eq[c]).cast(df.schema[c].dataType) for c in cols]
-    bucket = F.pmod(F.xxhash64(*lits), F.lit(n)).cast("int")
-    return df.filter(F.col("__etl_bucket") == bucket)
-
-
 @dataclass
 class JobResult:
     """What a job produced; ``df`` is the final state / preview."""
@@ -174,44 +137,23 @@ class Engine:
     def read(self, uri: str, query: Sequence[str] | None = None, **options: Any) -> DataFrame:
         """Read a dataset and apply an optional DSL query.
 
-        Bucketed targets get two extra courtesies: a point lookup that
-        pins every bucket column with plain equality is bucket-pruned
-        (1/n_buckets of the files read instead of all of them), and the
-        internal ``__etl_bucket`` partition column never leaks into the
-        result."""
+        A directory that ``ParquetTable`` manages (manifest log or layout
+        file) is read through :meth:`ParquetTable.read_where`: only the
+        committed snapshot, manifest stats file skipping, a point lookup
+        on a bucketed table pinned to its key's bucket, and no internal
+        partition column in the result."""
         ds = parse_ds(uri)
         q = compile_query(query)
-        if (
-            ds.backend == "parquet"
-            and query
-            and not options
-            and q.url is None
-            and q.predicates
-        ):
-            import os as _os
-
+        if ds.backend == "parquet" and not options and q.url is None:
             path = resolve_path(ds, self.root)
-            if _os.path.isdir(_os.path.join(path, "_log")):
-                t = ParquetTable(self.spark, path)
-                # manifest stats file skipping applies the same compiled
-                # query after pruning the file list with the footer
-                # min/max each commit recorded — free for every DSL
-                # query. Hash-BUCKETED tables skip this route: their
-                # per-file key ranges span the whole domain (hash
-                # scatter), so the dedicated bucket point-prune below
-                # is the effective access path there.
-                if t.layout is None:
-                    out = t.read_where(query)
-                    if out is None:
-                        raise FileNotFoundError(
-                            f"{path}: manifest log present but no committed version"
-                        )
-                    return out
+            if ParquetTable.manages(path):
+                out = ParquetTable(self.spark, path).read_where(query)
+                if out is None:
+                    raise FileNotFoundError(
+                        f"{path}: manifest log present but no committed version"
+                    )
+                return out
         df = read_dataset(self.spark, ds, self.root, options=options, url=q.url)
-        if ds.backend == "parquet" and "__etl_bucket" in df.columns:
-            df = _bucket_point_prune(df, resolve_path(ds, self.root), query)
-            out = q.apply(df)
-            return out.drop("__etl_bucket") if "__etl_bucket" in out.columns else out
         # NOTE (round-14): an under-fanned scan (single-row-group file)
         # is redistributed INSIDE the CPU-heavy operators
         # (etl_cli_spark.fanout.fan_out_for_compute), not here — a

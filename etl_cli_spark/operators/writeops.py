@@ -11,14 +11,18 @@ rewrite. The new target state is computed as one Catalyst plan
 (join/anti-join/union of target x source), written to a staging
 directory, then swapped in.
 
-Scale path — pk-hash bucketing: a table created with ``bucket_by=pk``
-is laid out as hive-style partitions on ``__etl_bucket =
-pmod(xxhash64(pk), n_buckets)``. Because every row an update-family op
-can touch (matched AND newly-inserted) carries a source pk, the op only
-needs the buckets of the source pks: the target read partition-prunes
-to those buckets and the rewrite swaps only those bucket directories.
-A 1-row upsert against a 100 TB table reads and rewrites 1/n_buckets of
-it, not the whole table; untouched bucket files are never opened. Size
+Scale path — one partition layout (:class:`Layout`). A table is
+unpartitioned or hive-partitioned on directory columns. A value layout
+partitions on real columns (e.g. a date). A pk-hash bucket layout
+(``bucket_by=pk``) is the same thing on a derived column:
+``__etl_bucket = pmod(xxhash64(pk), n_buckets)`` is computed from the
+row on every write and hidden on every read. When the layout has one
+directory level and every layout key column is an op key column present
+in the source, a row's partition is a function of its key, so every row
+the op can match or add lies in the source rows' partitions: the target
+read prunes to those partitions and the rewrite replaces only their
+directories. A 1-row upsert against a 100 TB table reads and rewrites
+1/n_buckets of it; untouched partition files are never opened. Size
 ``n_buckets`` so one bucket ~ a comfortable rewrite unit at the target
 scale (32 is a local-test default; think thousands at 100 TB). On a
 real deployment the same planner drives ``MERGE INTO`` on
@@ -32,6 +36,8 @@ import time
 import os
 import shutil
 import uuid
+from dataclasses import dataclass
+from urllib.parse import unquote
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -99,10 +105,63 @@ def _multiset_diff(old: DataFrame, new: DataFrame) -> tuple[DataFrame, DataFrame
     return side(c_nc, c_oc), side(c_oc, c_nc)
 
 
-def bucket_expr(cols: tuple[str, ...] | list[str], n_buckets: int) -> Column:
-    """Deterministic pk-hash bucket id — same value for the same key on
-    any cluster size, so source keys locate their target buckets."""
-    return F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(n_buckets)).cast("int")
+def bucket_expr(cols, n_buckets: int) -> Column:
+    """Deterministic pk-hash bucket id of ``cols`` (names or Columns) —
+    same value for the same key on any cluster size, so source keys
+    locate their target buckets."""
+    return F.pmod(F.xxhash64(*cols), F.lit(n_buckets)).cast("int")
+
+
+@dataclass(frozen=True)
+class Layout:
+    """How a table's rows map to hive partition directories.
+
+    A value layout (``n`` None) partitions on its ``keys`` columns
+    themselves. A bucket layout partitions on the derived directory
+    column ``__etl_bucket``, computed from the row as
+    ``bucket_expr(keys, n)``. Recorded in ``_etl_bucket_meta.json``
+    (``cols``, plus ``n`` for buckets or ``kind: values``)."""
+
+    keys: tuple[str, ...]
+    n: int | None = None
+
+    @property
+    def dirs(self) -> tuple[str, ...]:
+        """The directory columns, outermost first."""
+        return (_BUCKET,) if self.n else self.keys
+
+    def with_dirs(self, df: DataFrame) -> DataFrame:
+        """``df`` with its directory values: a bucket layout adds the
+        derived column, a value layout already has its columns."""
+        missing = [c for c in self.keys if c not in df.columns]
+        if missing:
+            raise ValueError(f"partitioned write needs columns {missing} in the frame")
+        return df.withColumn(_BUCKET, bucket_expr(self.keys, self.n)) if self.n else df
+
+    def partition_of(self, rel: str) -> str | None:
+        """The directory value a hive directory (or a file path under
+        one) holds, as the text Spark wrote before URL-escaping it:
+        ``s=a%3Ab/part-0.parquet`` -> ``a:b``. None outside the
+        (outermost) directory column."""
+        head = rel.split(os.sep, 1)[0]
+        prefix = f"{self.dirs[0]}="
+        return unquote(head[len(prefix):]) if head.startswith(prefix) else None
+
+    def meta(self) -> dict:
+        if self.n:
+            return {"cols": list(self.keys), "n": self.n}
+        return {"cols": list(self.keys), "kind": "values"}
+
+    @staticmethod
+    def from_meta(m: dict | None) -> Layout | None:
+        """The layout a layout file records; a missing ``kind`` means
+        buckets, ``kind: plain`` an unpartitioned table."""
+        kind = None if m is None else m.get("kind", "bucket")
+        if kind == "bucket":
+            return Layout(tuple(m["cols"]), int(m["n"]))
+        if kind == "values":
+            return Layout(tuple(m["cols"]))
+        return None
 
 
 class ParquetTable:
@@ -112,9 +171,12 @@ class ParquetTable:
     (``batch_size``, base.py:269; 100k for s3, etl.py:133) into Spark's
     file-sizing knob.
 
-    ``bucket_by`` + ``n_buckets`` opt into the hive-partitioned pk-hash
-    layout; an existing table's layout (recorded in a sidecar) always
-    wins over the constructor arguments.
+    ``bucket_by`` + ``n_buckets`` (pk-hash buckets) or ``partition_by``
+    (value partitions) choose the table's :class:`Layout`; an existing
+    table's layout file always wins over the constructor arguments.
+    Every read of the table's data goes through :meth:`_scan`, the one
+    place that hides the derived bucket column, so no other module reads
+    a table this class manages (:meth:`manages`) on its own.
 
     ``manifest=True`` opts into the transaction-log commit protocol:
     every write lands its files under transaction-unique names (never
@@ -170,9 +232,11 @@ class ParquetTable:
         # shape), so commit size is O(changed files), not O(table files)
         self._checkpoint_interval = max(1, int(checkpoint_interval))
         self.max_records_per_file = max_records_per_file
-        self._bucket_by = tuple(bucket_by) if bucket_by else None
-        self._n_buckets = n_buckets
-        self._partition_by = tuple(partition_by) if partition_by else None
+        self._layout = (
+            Layout(tuple(bucket_by), n_buckets) if bucket_by
+            else Layout(tuple(partition_by)) if partition_by
+            else None
+        )
         # clustering: rows sorted on these columns within every written
         # file, so parquet column min/max stats become selective and
         # point/range scans skip whole files (data skipping) — the poor
@@ -440,17 +504,7 @@ class ParquetTable:
         # exactly what the protocol exists to prevent
         self._backend.ensure(self._log_dir())
         staged = f"{self.path}.__staged_{uuid.uuid4().hex[:8]}"
-        layout = self._target_layout()
-        vcols = self._target_value_layout()
-        if layout:
-            self._write_bucketed(df, staged, layout, mode="overwrite")
-            self._write_meta(*layout)
-        elif vcols:
-            self._write_value_partitioned(df, staged, vcols, mode="overwrite")
-            self._write_value_meta(vcols)
-        else:
-            self._writer(self._clustered(df)).mode("overwrite").parquet(staged)
-            self._write_plain_meta()
+        self._write(df, staged, "overwrite", meta_dir=self.path)
         has_data = any(
             not fn.startswith(("_", "."))
             for _r, _d, fns in os.walk(staged)
@@ -519,26 +573,6 @@ class ParquetTable:
                 )
         return StructType(out).json()
 
-    def _read_manifest_files(
-        self, files: list[str], schema_json: str | None
-    ) -> DataFrame | None:
-        from pyspark.sql.types import StructType
-
-        if not files:
-            if schema_json is None:
-                return None
-            return self.spark.createDataFrame(
-                [], StructType.fromJson(json.loads(schema_json))
-            )
-        paths = [os.path.join(self.path, f) for f in files]
-        reader = self.spark.read.option("basePath", self.path)
-        if schema_json is not None:
-            # the committed schema is authoritative: files written before
-            # a column was added read it as null (schema evolution),
-            # instead of the reader inferring from one arbitrary footer
-            reader = reader.schema(StructType.fromJson(json.loads(schema_json)))
-        return reader.parquet(*paths)
-
     # -- layout ---------------------------------------------------------
     def _meta(self) -> dict | None:
         meta = os.path.join(self.path, _META)
@@ -548,34 +582,12 @@ class ParquetTable:
         return None
 
     @property
-    def layout(self) -> tuple[tuple[str, ...], int] | None:
-        """(bucket_cols, n_buckets) of the ON-DISK table, or None."""
-        m = self._meta()
-        if m is not None and m.get("kind", "bucket") == "bucket":
-            return tuple(m["cols"]), int(m["n"])
-        return None
-
-    @property
-    def value_layout(self) -> tuple[str, ...] | None:
-        """Value-partition columns (hive layout on real columns, e.g. a
-        date) of the ON-DISK table, or None."""
-        m = self._meta()
-        if m is not None and m.get("kind") == "values":
-            return tuple(m["cols"])
-        return None
-
-    def _target_layout(self) -> tuple[tuple[str, ...], int] | None:
-        """Bucket layout new writes should use: existing layout, else config."""
+    def layout(self) -> Layout | None:
+        """The table's partition layout (None = unpartitioned): an
+        existing table's layout file, else the constructor's."""
         if self.exists():
-            return self.layout
-        if self._bucket_by:
-            return (self._bucket_by, self._n_buckets)
-        return None
-
-    def _target_value_layout(self) -> tuple[str, ...] | None:
-        if self.exists():
-            return self.value_layout
-        return self._partition_by
+            return Layout.from_meta(self._meta())
+        return self._layout
 
     def _dump_meta(self, m: dict, base: str | None = None) -> None:
         """Atomic sidecar write (tmp + rename): a concurrent reader sees
@@ -587,38 +599,22 @@ class ParquetTable:
             json.dump(m, f)
         os.replace(tmp, os.path.join(base, _META))
 
-    def _write_meta(self, cols: tuple[str, ...], n: int, base: str | None = None) -> None:
-        m: dict = {"cols": list(cols), "n": n}
-        if self._effective_sort():
-            m["sort"] = list(self._effective_sort())
-        if self._is_manifest():
-            m["manifest"] = True
-        self._dump_meta(m, base)
-
-    def _write_value_meta(self, cols: tuple[str, ...], base: str | None = None) -> None:
-        m: dict = {"cols": list(cols), "kind": "values"}
-        if self._effective_sort():
-            m["sort"] = list(self._effective_sort())
-        if self._is_manifest():
-            m["manifest"] = True
-        self._dump_meta(m, base)
-
-    def _write_plain_meta(self, base: str | None = None) -> None:
-        """Unpartitioned table: persist the clustering columns (sort or
-        z-order) so later rewrites by a plain ``ParquetTable(path)``
-        keep the layout."""
-        m: dict = {"kind": "plain"}
+    def _write_meta(self, layout: Layout | None, base: str | None = None) -> None:
+        """Record the layout file: the partition layout, or for an
+        unpartitioned table its clustering (sort or z-order) so later
+        rewrites by a plain ``ParquetTable(path)`` keep the layout."""
+        m: dict = layout.meta() if layout else {"kind": "plain"}
         sort = self._effective_sort()
         if sort:
             m["sort"] = list(sort)
-        zm = self._zorder_meta()
+        zm = None if layout else self._zorder_meta()
         if zm:
             cols, bits, ranges = zm
             m.update(zorder=list(cols), zbits=bits,
                      zranges={c: list(v) for c, v in ranges.items()})
         if self._is_manifest():
             m["manifest"] = True
-        if len(m) > 1:
+        if layout or len(m) > 1:
             self._dump_meta(m, base)
 
     def _zorder_meta(self) -> tuple[list[str], int, dict] | None:
@@ -670,35 +666,22 @@ class ParquetTable:
             w = w.option("maxRecordsPerFile", self.max_records_per_file)
         return w
 
-    def _with_bucket(self, df: DataFrame, layout) -> DataFrame:
-        cols, n = layout
-        missing = [c for c in cols if c not in df.columns]
-        if missing:
-            raise ValueError(f"bucketed write needs columns {missing} in the frame")
-        return df.withColumn(_BUCKET, bucket_expr(cols, n))
-
-    def _write_bucketed(self, df: DataFrame, path: str, layout, mode: str) -> None:
-        cols, n = layout
-        b = self._with_bucket(df, layout)
-        # co-locate each bucket before the partitioned write: without it
-        # every task emits a file per bucket it holds (tasks x buckets
-        # small files); with it ~1 file per bucket, further split by
-        # maxRecordsPerFile when set
-        b = self._clustered(b.repartition(n, F.col(_BUCKET)), lead=(_BUCKET,))
-        self._writer(b).mode(mode).partitionBy(_BUCKET).parquet(path)
-        self._write_meta(cols, n, base=path)
-
-    def _write_value_partitioned(
-        self, df: DataFrame, path: str, cols: tuple[str, ...], mode: str
-    ) -> None:
-        missing = [c for c in cols if c not in df.columns]
-        if missing:
-            raise ValueError(f"value-partitioned write needs columns {missing}")
-        # hash-cluster on the partition cols: each value lands in one task
-        # -> ~1 file per partition dir instead of tasks x values
-        out = self._clustered(df.repartition(*[F.col(c) for c in cols]), lead=cols)
-        self._writer(out).mode(mode).partitionBy(*cols).parquet(path)
-        self._write_value_meta(cols, base=path)
+    def _write(self, df: DataFrame, path: str, mode: str, meta_dir: str | None = None) -> None:
+        """Write ``df`` under ``path`` in the table's layout, then record
+        the layout file in ``meta_dir`` (default ``path``). A partitioned
+        write first co-locates each directory value in one task: ~1 file
+        per partition dir (further split by maxRecordsPerFile when set)
+        instead of tasks x dirs small files."""
+        layout = self.layout
+        if layout is None:
+            self._writer(self._clustered(df)).mode(mode).parquet(path)
+        else:
+            dirs = [F.col(c) for c in layout.dirs]
+            df = layout.with_dirs(df)
+            df = df.repartition(layout.n, *dirs) if layout.n else df.repartition(*dirs)
+            out = self._clustered(df, lead=layout.dirs)
+            self._writer(out).mode(mode).partitionBy(*layout.dirs).parquet(path)
+        self._write_meta(layout, base=meta_dir or path)
 
     # -- basic io -------------------------------------------------------
     def exists(self) -> bool:
@@ -708,17 +691,68 @@ class ParquetTable:
             return self._latest_manifest() is not None
         return os.path.exists(self.path)
 
-    def read(self) -> DataFrame | None:
-        if self._is_manifest():
+    @staticmethod
+    def manages(path: str) -> bool:
+        """Whether ``path`` holds a table this class wrote with a manifest
+        log or a layout file. Read such a table only through this class:
+        a raw directory scan would see uncommitted or stale files and the
+        derived bucket column."""
+        return os.path.isdir(os.path.join(path, _LOG)) or os.path.exists(
+            os.path.join(path, _META)
+        )
+
+    def _scan(
+        self, files: list[str] | None, schema_json: str | None = None, where=None
+    ) -> DataFrame | None:
+        """Every read of the table's data: the manifest ``files`` under
+        the committed ``schema_json`` (None = the whole legacy
+        directory), filtered by ``where(df)`` while the directory column
+        is still there — a partition filter — and then without the
+        derived bucket column."""
+        from pyspark.sql.types import StructType
+
+        if files is None:
+            df = self.spark.read.parquet(self.path)
+        elif files:
+            reader = self.spark.read.option("basePath", self.path)
+            if schema_json is not None:
+                # the committed schema is authoritative: files written
+                # before a column was added read it as null (schema
+                # evolution), instead of the reader inferring from one
+                # arbitrary footer
+                reader = reader.schema(StructType.fromJson(json.loads(schema_json)))
+            df = reader.parquet(*[os.path.join(self.path, f) for f in files])
+        elif schema_json is not None:
+            df = self.spark.createDataFrame([], StructType.fromJson(json.loads(schema_json)))
+        else:
+            return None
+        cond = where(df) if where is not None else None
+        if cond is not None:
+            df = df.filter(cond)
+        return df.drop(_BUCKET) if _BUCKET in df.columns else df
+
+    def _read(self, keep=None, where=None, version: int | None = None) -> DataFrame | None:
+        """The table's snapshot (the newest, or manifest ``version``),
+        or None when there is none. Manifest mode reads only the
+        committed files ``keep(file, stats)`` accepts; ``where`` is
+        :meth:`_scan`'s."""
+        if version is None and not self._is_manifest():
+            return self._scan(None, where=where) if os.path.exists(self.path) else None
+        if version is not None:
+            doc = self._manifest_at(version)
+        else:
             latest = self._latest_manifest()
             if latest is None:
                 return None
-            df = self._read_manifest_files(latest[1]["files"], latest[1].get("schema"))
-            return df.drop(_BUCKET) if df is not None and _BUCKET in df.columns else df
-        if not self.exists():
-            return None
-        df = self.spark.read.parquet(self.path)
-        return df.drop(_BUCKET) if _BUCKET in df.columns else df
+            doc = latest[1]
+        files = doc["files"]
+        if keep is not None:
+            stats = doc.get("stats", {})
+            files = [f for f in files if keep(f, stats.get(f, {}))]
+        return self._scan(files, doc.get("schema"), where)
+
+    def read(self) -> DataFrame | None:
+        return self._read()
 
     # -- stats-based file skipping ----------------------------------------
     _SKIP_OPS = ("eq", "gt", "gte", "lt", "lte", "in")
@@ -771,31 +805,29 @@ class ParquetTable:
         sorted or naturally-clustered column into a scan of the few
         files whose ranges intersect — Delta/Iceberg data skipping,
         driven by the same manifest the commit protocol already writes.
-        Non-manifest tables fall back to a plain filtered read.
         ``version`` composes skipping with time travel: the stats of
         THAT retained snapshot prune its file list (every manifest —
-        full, delta, or sidecar — carries its stats)."""
+        full, delta, or sidecar — carries its stats).
+
+        On a bucketed table, in both commit modes, a query that sets
+        every bucket column with a plain equality is pinned to the one
+        bucket those values hash to (a partition filter on the bucket
+        directory): a 100 TB table answers ``pk=X`` from 1/n_buckets of
+        its files. The pin needs the query value's type to be the
+        column's (a string for a string column, an integer for an
+        integral one), so the equality cannot match keys of other
+        buckets through a cast."""
+        from pyspark.sql.types import IntegralType, StringType
+
         from ..dsl import coerce_value, split_key
 
         q = compile_query(query)
-
-        def apply_rows(df):
-            return q.apply(df) if df is not None else None
-
-        if not self._is_manifest():
-            return apply_rows(self.read())
-        if version is not None:
-            doc = self._manifest_at(version)
-        else:
-            latest = self._latest_manifest()
-            if latest is None:
-                return None
-            doc = latest[1]
-        stats = doc.get("stats", {})
         conjuncts: list[tuple[str, str, object]] = []
-        items = query.items() if hasattr(query, "items") else [
-            tuple(s.split("=", 1)) for s in ([query] if isinstance(query, str) else query)
-        ]
+        items = (
+            [] if query is None
+            else query.items() if hasattr(query, "items")
+            else [tuple(s.split("=", 1)) for s in ([query] if isinstance(query, str) else query)]
+        )
         for k, v in items:
             if k.startswith("_"):
                 continue
@@ -807,18 +839,30 @@ class ParquetTable:
             else:
                 vv = coerce_value(v)
             conjuncts.append((path, op, vv))
-        files = [
-            f
-            for f in doc["files"]
-            if all(
-                self._file_may_match(stats.get(f, {}), p, op, v)
-                for p, op, v in conjuncts
-            )
-        ]
-        df = self._read_manifest_files(files, doc.get("schema"))
-        if df is not None and _BUCKET in df.columns:
-            df = df.drop(_BUCKET)
-        return apply_rows(df)
+
+        def keep(f, stats):
+            return all(self._file_may_match(stats, p, op, v) for p, op, v in conjuncts)
+
+        eq = {p: v for p, op, v in conjuncts if op == "eq"}
+
+        def pin(df):
+            layout = Layout.from_meta(self._meta()) if eq else None
+            if layout is None or not layout.n or any(c not in eq for c in layout.keys):
+                return None
+            lits = []
+            for c in layout.keys:
+                v, dt = eq[c], df.schema[c].dataType
+                if not (
+                    isinstance(dt, StringType) and isinstance(v, str)
+                    or isinstance(dt, IntegralType) and isinstance(v, int)
+                    and not isinstance(v, bool)
+                ):
+                    return None
+                lits.append(F.lit(v).cast(dt))
+            return F.col(_BUCKET) == bucket_expr(lits, layout.n)
+
+        df = self._read(keep if conjuncts else None, pin, version)
+        return q.apply(df) if df is not None else None
 
     # -- time travel -----------------------------------------------------
     def versions(self) -> list[int]:
@@ -868,9 +912,7 @@ class ParquetTable:
         retained version reads back exactly — the same contract as Delta
         ``VERSION AS OF`` / Iceberg snapshot reads. Raises if the
         version was never committed or has been vacuumed away."""
-        man = self._manifest_at(version)
-        df = self._read_manifest_files(man["files"], man.get("schema"))
-        return df.drop(_BUCKET) if df is not None and _BUCKET in df.columns else df
+        return self._read(version=version)
 
     def snapshot_changes(
         self,
@@ -912,21 +954,13 @@ class ParquetTable:
         schema = self._merge_schema_json(
             man_old.get("schema"), man_new.get("schema")
         )
-        old = self._read_manifest_files(
-            [f for f in man_old["files"] if f not in both], schema
-        )
-        new = self._read_manifest_files(
-            [f for f in man_new["files"] if f not in both], schema
-        )
+        old = self._scan([f for f in man_old["files"] if f not in both], schema)
+        new = self._scan([f for f in man_new["files"] if f not in both], schema)
         if old is None or new is None:
             raise FileNotFoundError(
                 f"no committed data in versions {from_version}..{to_version} "
                 f"of {self.path}"
             )
-        if _BUCKET in old.columns:
-            old = old.drop(_BUCKET)
-        if _BUCKET in new.columns:
-            new = new.drop(_BUCKET)
         added, removed = _multiset_diff(old, new)
         if not pk:
             out = added.withColumn("change_type", F.lit("insert")).unionByName(
@@ -953,51 +987,21 @@ class ParquetTable:
             .withColumn("commit_version", F.lit(int(to_version)))
         )
 
-    def read_buckets(self, buckets: list[int]) -> DataFrame:
-        """Partition-pruned read: only the named bucket directories are
-        scanned (the filter sits on the hive partition column; in
-        manifest mode the file list itself is pruned to those bucket
-        dirs before Spark ever builds a file index)."""
-        if self._is_manifest():
-            latest = self._latest_manifest()
-            keep = {f"{_BUCKET}={int(b)}" for b in buckets}
-            files = [] if latest is None else [
-                f for f in latest[1]["files"] if f.split(os.sep)[0] in keep
-            ]
-            schema = None if latest is None else latest[1].get("schema")
-            df = self._read_manifest_files(files, schema)
-            if df is None:
-                raise FileNotFoundError(self.path)
-            return df.filter(
-                F.col(_BUCKET).isin([int(b) for b in buckets])
-            ).drop(_BUCKET)
-        df = self.spark.read.parquet(self.path)
-        return df.filter(F.col(_BUCKET).isin([int(b) for b in buckets])).drop(_BUCKET)
-
-    def read_value_partitions(self, col: str, values: list) -> DataFrame:
-        """Partition-pruned read of a value-partitioned table. Manifest
-        mode prunes the file list when every value maps unambiguously to
-        a hive dir name (same guard as the scoped-write path); the
-        partition filter stays on regardless, so results are identical
-        either way."""
-        if self._is_manifest():
-            latest = self._latest_manifest()
-            if latest is None:
-                raise FileNotFoundError(self.path)
-            files, schema = latest[1]["files"], latest[1].get("schema")
-            if all(
-                v is not None
-                and not isinstance(v, bool)
-                and isinstance(v, (str, int))
-                and not any(ch in str(v) for ch in ("/", "%", "="))
-                for v in values
-            ):
-                keep = {f"{col}={v}" for v in values}
-                files = [f for f in files if f.split(os.sep)[0] in keep]
-            df = self._read_manifest_files(files, schema)
-            return df.filter(F.col(col).isin(values))
-        df = self.spark.read.parquet(self.path)
-        return df.filter(F.col(col).isin(values))
+    def read_partitions(self, values: list) -> DataFrame:
+        """Partition-pruned read of a table with one directory level:
+        only the directories holding ``values`` (as :func:`_touched`
+        returns them) are scanned. The filter sits on the directory
+        column, so Spark prunes partitions; manifest mode also prunes
+        the file list before Spark builds a file index."""
+        layout = self.layout
+        held = {str(v) for v in values}
+        df = self._read(
+            lambda f, _stats: layout.partition_of(f) in held,
+            lambda df: F.col(layout.dirs[0]).isin(list(values)),
+        )
+        if df is None:
+            raise FileNotFoundError(self.path)
+        return df
 
     def _touch(self) -> None:
         """Bump the dataset dir mtime so catalog fingerprints (engine.sql
@@ -1022,15 +1026,7 @@ class ParquetTable:
             )
             self._touch()
             return
-        layout = self._target_layout()
-        vcols = self._target_value_layout()
-        if layout:
-            self._write_bucketed(df, self.path, layout, mode="append")
-        elif vcols:
-            self._write_value_partitioned(df, self.path, vcols, mode="append")
-        else:
-            self._writer(self._clustered(df)).mode("append").parquet(self.path)
-            self._write_plain_meta()
+        self._write(df, self.path, "append")
         self._touch()
 
     def overwrite(self, df: DataFrame) -> None:
@@ -1045,15 +1041,7 @@ class ParquetTable:
             self._touch()
             return
         staged = f"{self.path}.__staged_{uuid.uuid4().hex[:8]}"
-        layout = self._target_layout()
-        vcols = self._target_value_layout()
-        if layout:
-            self._write_bucketed(df, staged, layout, mode="overwrite")
-        elif vcols:
-            self._write_value_partitioned(df, staged, vcols, mode="overwrite")
-        else:
-            self._writer(self._clustered(df)).mode("overwrite").parquet(staged)
-            self._write_plain_meta(base=staged)
+        self._write(df, staged, "overwrite")
         backup = f"{self.path}.__old_{uuid.uuid4().hex[:8]}"
         if os.path.exists(self.path):
             os.rename(self.path, backup)
@@ -1062,28 +1050,30 @@ class ParquetTable:
             shutil.rmtree(backup)
         self._touch()
 
-    def overwrite_buckets(self, df: DataFrame, buckets: list[int]) -> None:
-        """Replace ONLY the named bucket directories with ``df``'s state.
+    def overwrite_partitions(self, df: DataFrame, values: list) -> None:
+        """Replace ONLY the directories holding ``values`` (as
+        :func:`_touched` returns them) with ``df``'s state.
 
-        ``df`` must be the complete new state of those buckets (it may
-        lack a bucket entirely — that bucket becomes empty, e.g. after a
-        delete). Untouched bucket directories are not opened, written,
-        or moved — their files stay byte-identical. The swap is
-        per-bucket directory renames; a real deployment gets cross-
-        partition atomicity from the table format (Delta/Iceberg commit).
-        """
+        ``df`` must be the complete new state of those partitions (it
+        may lack one entirely — that partition becomes empty, e.g. after
+        a delete) and its plan may read the live table: it is staged
+        first. Untouched directories are never opened, written or moved —
+        their files stay byte-identical. Manifest mode commits the
+        partition-scoped file swap atomically; legacy mode renames
+        directories, so cross-partition atomicity on a real deployment
+        comes from the table format (Delta/Iceberg commit)."""
         layout = self.layout
-        if layout is None:
-            raise ValueError("overwrite_buckets requires an on-disk bucketed table")
+        if layout is None or len(layout.dirs) != 1:
+            raise ValueError("overwrite_partitions needs a table partitioned on one directory level")
+        held = {str(v) for v in values}
         if self._is_manifest():
             files, schema = self._stage_write(df)
-            drop = {f"{_BUCKET}={int(b)}" for b in buckets}
-            # replace the touched buckets' files, keep everything else
-            # from whatever snapshot the commit lands on — bucket-
+            # replace the touched partitions' files, keep everything else
+            # from whatever snapshot the commit lands on — partition-
             # disjoint concurrent rewrites compose instead of clobbering
             self._commit(
                 lambda prev, ps: (
-                    [f for f in prev if f.split(os.sep)[0] not in drop] + files,
+                    [f for f in prev if layout.partition_of(f) not in held] + files,
                     # untouched partitions keep their old files: merge
                     self._merge_schema_json(ps, schema),
                 )
@@ -1092,72 +1082,17 @@ class ParquetTable:
             return
         uid = uuid.uuid4().hex[:8]
         staged = f"{self.path}.__staged_{uid}"
-        self._write_bucketed(df, staged, layout, mode="overwrite")
+        self._write(df, staged, "overwrite")
         backup = f"{self.path}.__old_{uid}"
         os.makedirs(backup, exist_ok=True)
-        moved: list[str] = []
-        try:
-            for b in buckets:
-                dname = f"{_BUCKET}={int(b)}"
-                old = os.path.join(self.path, dname)
-                new = os.path.join(staged, dname)
-                if os.path.exists(old):
-                    os.rename(old, os.path.join(backup, dname))
-                    moved.append(dname)
-                if os.path.exists(new):
-                    os.rename(new, old)
-        except BaseException:
-            self._restore_swap(backup, moved)
-            raise
-        # only after the whole swap succeeded is it safe to discard state
-        shutil.rmtree(backup, ignore_errors=True)
-        shutil.rmtree(staged, ignore_errors=True)
-        self._touch()
-
-    def overwrite_value_partitions(self, df: DataFrame, col: str, values: list) -> None:
-        """Replace ONLY the partitions of ``values`` with ``df``'s state.
-
-        ``df`` must be the complete new state of those partitions (a
-        value it lacks entirely becomes empty — e.g. a delete drained
-        it). Same staged-swap shape as ``overwrite_buckets``: the new
-        state is staged (its plan may read the live table), then only
-        the touched partition directories are swapped; everything else
-        is never opened. Cross-partition atomicity comes from the table
-        format (Delta/Iceberg commit) on a real deployment.
-        """
-        from urllib.parse import unquote
-
-        vcols = self.value_layout
-        if vcols is None:
-            raise ValueError("overwrite_value_partitions needs a value-partitioned table")
-        if self._is_manifest():
-            files, schema = self._stage_write(df)
-            drop = {f"{col}={v}" for v in values}
-            self._commit(
-                lambda prev, ps: (
-                    [f for f in prev if f.split(os.sep)[0] not in drop] + files,
-                    # untouched partitions keep their old files: merge
-                    self._merge_schema_json(ps, schema),
-                )
-            )
-            self._touch()
-            return
-        uid = uuid.uuid4().hex[:8]
-        staged = f"{self.path}.__staged_{uid}"
-        self._write_value_partitioned(df, staged, vcols, mode="overwrite")
-        backup = f"{self.path}.__old_{uid}"
-        os.makedirs(backup, exist_ok=True)
-        touched = {str(v) for v in values}
-        prefix = f"{col}="
         moved: list[str] = []
         try:
             for entry in list(os.listdir(self.path)):
-                # hive dir name -> value string (Spark URL-escapes specials)
-                if entry.startswith(prefix) and unquote(entry[len(prefix):]) in touched:
+                if layout.partition_of(entry) in held:
                     os.rename(os.path.join(self.path, entry), os.path.join(backup, entry))
                     moved.append(entry)
             for entry in list(os.listdir(staged)):
-                if entry.startswith(prefix):
+                if layout.partition_of(entry) in held:
                     os.rename(os.path.join(staged, entry), os.path.join(self.path, entry))
         except BaseException:
             self._restore_swap(backup, moved)
@@ -1223,11 +1158,7 @@ class ParquetTable:
             return []
         crowded_set = set(crowded)
         victims = [f for d in crowded for f in by_dir[d]]
-        df = self._read_manifest_files(victims, schema)
-        if _BUCKET in df.columns:
-            # the hive partition column materializes on a file-list read;
-            # the bucketed writer recomputes it from the pk
-            df = df.drop(_BUCKET)
+        df = self._scan(victims, schema)
         # rewrite through the normal layout writers: rows land back in
         # the same partition dirs (their partition values are unchanged),
         # one file per partition unless maxRecordsPerFile splits it
@@ -1275,7 +1206,7 @@ class ParquetTable:
         """
         from .zorder import compute_ranges, zorder_frame
 
-        if self.layout is not None or self.value_layout is not None:
+        if self.layout is not None:
             raise ValueError(
                 "zorder() supports plain tables; bucket/value-partitioned "
                 "tables cluster within partitions via sort_by"
@@ -1416,15 +1347,6 @@ def _pk_cond(pk: tuple[str, ...]) -> Column:
     return cond
 
 
-def _touched_buckets(src: DataFrame, layout) -> list[int]:
-    """Bucket ids of the source pks — the only partitions the op may
-    touch. Driver-side list bounded by n_buckets (partition metadata,
-    not data)."""
-    cols, n = layout
-    rows = src.select(bucket_expr(cols, n).alias(_BUCKET)).distinct().collect()
-    return sorted({r[_BUCKET] for r in rows})
-
-
 _MAX_TOUCHED_VALUES = 4096
 
 # MERGE sources at or under this many rows broadcast: the target side of
@@ -1434,23 +1356,45 @@ _MAX_TOUCHED_VALUES = 4096
 _BROADCAST_SRC_ROWS = 2_000_000
 
 
-def _touched_values(src: DataFrame, col: str) -> list | None:
-    """Distinct partition values in the source, or None if the scoped
-    path must be declined: too many values (the collect is partition
-    metadata, so it stays bounded), nulls (no prunable directory), or
-    values whose hive-dir encoding is ambiguous to match."""
-    rows = src.select(col).distinct().limit(_MAX_TOUCHED_VALUES + 1).collect()
-    vals = [r[0] for r in rows]
-    if len(vals) > _MAX_TOUCHED_VALUES:
+def _touched(src: DataFrame, table: ParquetTable, keys) -> list | None:
+    """Directory values of the source rows — the only partitions the op
+    may touch — or None when the op must read and rewrite the whole
+    table.
+
+    Scoped only when the layout has one directory level and every layout
+    key column is an op key column (``keys``) present in the source: a
+    row's partition is then a function of its key, so every target row
+    the op can match or add lies in a source row's partition. A bucket
+    layout has at most n values and never declines. A value layout
+    declines above ``_MAX_TOUCHED_VALUES`` values (the collect is
+    partition metadata, so it stays bounded) and on a value whose
+    directory text is not ``str(value)``: null and the empty string
+    (both written as the null partition), bool (``col=true``) and
+    non-str/int types."""
+    layout = table.layout
+    if (
+        layout is None
+        or len(layout.dirs) != 1
+        or not all(c in keys and c in src.columns for c in layout.keys)
+    ):
         return None
-    for v in vals:
-        # bool is excluded explicitly: isinstance(True, int) holds but the
-        # hive dir is 'col=true' while str(True) is 'True' — unmatchable
-        if v is None or isinstance(v, bool) or not isinstance(v, (str, int)):
-            return None
-        if any(ch in str(v) for ch in ("/", "%", "=")):
-            return None
-    return vals
+    vals = layout.with_dirs(src).select(layout.dirs[0]).distinct()
+    if layout.n:
+        return sorted(r[0] for r in vals.collect())
+    out = [r[0] for r in vals.limit(_MAX_TOUCHED_VALUES + 1).collect()]
+    if len(out) > _MAX_TOUCHED_VALUES or not all(
+        isinstance(v, (str, int)) and not isinstance(v, bool) and v != "" for v in out
+    ):
+        return None
+    return out
+
+
+def _target(src: DataFrame, table: ParquetTable, keys) -> tuple[list | None, DataFrame | None]:
+    """(touched partitions or None, target read): the read is pruned
+    to the touched partitions when the op is scoped (:func:`_touched`),
+    the whole table otherwise, None when the table does not exist."""
+    touched = _touched(src, table, keys) if table.exists() else None
+    return touched, table.read() if touched is None else table.read_partitions(touched)
 
 
 def apply_write_op(src: DataFrame, table: ParquetTable, spec: TargetSpec) -> DataFrame:
@@ -1484,23 +1428,9 @@ def _write_op(src: DataFrame, table: ParquetTable, spec: TargetSpec) -> DataFram
         keys = list(spec.skip_by or spec.pk)
         if not keys:
             raise ValueError("insert requires skip_by or pk")
-        layout = table.layout if table.exists() else None
-        vlayout = table.value_layout if table.exists() else None
-        if layout is not None and tuple(layout[0]) == tuple(keys):
-            # the anti-join only needs target keys from the buckets the
-            # source keys hash to — partition-pruned key scan
-            tgt = table.read_buckets(_touched_buckets(src, layout))
-        elif (
-            vlayout is not None
-            and len(vlayout) == 1
-            and vlayout[0] in keys
-            and vlayout[0] in src.columns
-            and (vals := _touched_values(src, vlayout[0])) is not None
-        ):
-            # same-key rows can only live in the source values' partitions
-            tgt = table.read_value_partitions(vlayout[0], vals)
-        else:
-            tgt = table.read()
+        # same-key rows can only live in the source keys' partitions:
+        # the anti-join's key scan reads only those
+        _, tgt = _target(src, table, keys)
         if tgt is None:
             new_rows = src
         else:
@@ -1545,51 +1475,16 @@ def _write_op(src: DataFrame, table: ParquetTable, spec: TargetSpec) -> DataFram
     n_src = src.count()
     small_src = n_src <= _BROADCAST_SRC_ROWS
 
-    # partition-scoped paths: when the table is bucketed exactly by this
-    # pk — or value-partitioned on a column CONTAINED in the pk (the row
-    # can then never change partition) — restrict BOTH the target read
-    # and the rewrite to the partitions holding source pks; everything
-    # else is provably untouchable
-    layout = table.layout if table.exists() else None
-    scoped = layout is not None and tuple(layout[0]) == tuple(spec.pk)
-    vlayout = table.value_layout if table.exists() else None
-    vscoped = (
-        not scoped
-        and vlayout is not None
-        and len(vlayout) == 1
-        and vlayout[0] in spec.pk
-        and vlayout[0] in src.columns
-    )
-    touched: list[int] = []
-    touched_vals: list | None = None
-    if scoped:
-        touched = _touched_buckets(src, layout)
-        tgt = table.read_buckets(touched) if touched else table.read().limit(0)
-    elif vscoped:
-        touched_vals = _touched_values(src, vlayout[0])
-        if touched_vals is None:
-            vscoped = False
-            tgt = table.read()
-        else:
-            tgt = (
-                table.read_value_partitions(vlayout[0], touched_vals)
-                if touched_vals
-                else table.read().limit(0)
-            )
-    else:
-        tgt = table.read()
-
+    # restrict BOTH the target read and the rewrite to the partitions
+    # holding source pks; everything else is provably untouchable
+    touched, tgt = _target(src, table, pk)
     if tgt is None:
         if op in ("upsert", "index"):
             if spec.dry_run:
                 return src
             # seed write: size the files the whole rewrite lineage will
             # inherit (plain layout only — the layout writers repartition)
-            table.append(
-                src
-                if table._target_layout() or table._target_value_layout()
-                else coalesce_by_bytes(src, src)
-            )
+            table.append(src if table.layout else coalesce_by_bytes(src, src))
             return table.read()
         # update/delete against a missing target is a no-op
         return src.limit(0)
@@ -1676,14 +1571,10 @@ def _write_op(src: DataFrame, table: ParquetTable, spec: TargetSpec) -> DataFram
     new_state = new_state.drop("__etl_scope")
     if spec.dry_run:
         return new_state
-    if scoped:
-        if touched:
-            table.overwrite_buckets(new_state, touched)
-    elif vscoped:
-        if touched_vals:
-            table.overwrite_value_partitions(new_state, vlayout[0], touched_vals)
-    else:
-        # plain-layout full rewrite: size the output files (the bucketed
-        # and value-partitioned writers repartition by layout already)
+    if touched is None:
+        # full rewrite: size the output files (a partitioned write
+        # repartitions by its layout, so only a plain one is shaped here)
         table.overwrite(coalesce_by_bytes(new_state, tgt_read, src))
+    elif touched:
+        table.overwrite_partitions(new_state, touched)
     return table.read()

@@ -122,21 +122,14 @@ def read_parquet(spark: SparkSession, path: str, options: dict[str, Any] | None 
     microsecond timestamps in the plan — same truncation DuckDB applies,
     so oracle comparisons line up.
     """
-    import os
+    from ..operators.writeops import ParquetTable
 
-    if os.path.isdir(os.path.join(path, "_log")):
-        # manifest-committed table (writeops.ParquetTable manifest mode):
-        # a raw directory scan would see uncommitted/stale files — the
-        # read MUST resolve the latest committed snapshot
-        from ..operators.writeops import ParquetTable
-
-        t = ParquetTable(spark, path)
-        latest = t._latest_manifest()
-        if latest is None:
+    if ParquetTable.manages(path):
+        # a table ParquetTable wrote: only it knows which files are
+        # committed and which columns are its own
+        df = ParquetTable(spark, path).read()
+        if df is None:
             raise FileNotFoundError(f"{path}: manifest log present but no committed version")
-        # keep the __etl_bucket partition column: the engine's bucketed
-        # point-prune path (engine.read) uses and then drops it
-        df = t._read_manifest_files(latest[1]["files"], latest[1].get("schema"))
         return df
     ns_cols = _ns_timestamp_cols(path)
     if ns_cols:

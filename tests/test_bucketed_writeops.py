@@ -5,32 +5,26 @@ byte-identical on disk."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
 from etl_cli_spark.operators.writeops import (
     _BUCKET,
+    Layout,
     ParquetTable,
+    _touched,
     apply_write_op,
-    bucket_expr,
 )
 from etl_cli_spark.spec import TargetSpec
-
-
-def _orders(spark, sf_engine):
-    return sf_engine.read("orders")
-
-
-def _snapshot(path):
-    """{relpath: bytes} of every data file under the table dir."""
-    snap = {}
-    for root, _, files in os.walk(path):
-        for f in files:
-            p = os.path.join(root, f)
-            with open(p, "rb") as fh:
-                snap[os.path.relpath(p, path)] = fh.read()
-    return snap
+from partition_checks import (
+    assert_delete_scoped,
+    assert_failed_swap_rolls_back,
+    assert_insert_appends,
+    assert_pruned_read,
+    assert_upsert_scoped,
+)
 
 
 @pytest.fixture()
@@ -45,7 +39,7 @@ def bucketed_orders(spark, engine, tmp_path):
 
 def test_layout_written_and_read_roundtrip(spark, engine, bucketed_orders):
     t = bucketed_orders
-    assert t.layout == (("o_orderkey",), 8)
+    assert t.layout == Layout(("o_orderkey",), 8)
     dirs = [d for d in os.listdir(t.path) if d.startswith(f"{_BUCKET}=")]
     assert len(dirs) == 8
     # read() hides the physical bucket column and preserves the data
@@ -55,51 +49,19 @@ def test_layout_written_and_read_roundtrip(spark, engine, bucketed_orders):
 
 
 def test_upsert_touches_only_source_buckets(spark, engine, bucketed_orders):
-    t = bucketed_orders
     orders = engine.read("orders")
     one = orders.filter("o_orderkey = 7").withColumn("o_orderstatus", F.lit("Z"))
     assert one.count() == 1
-
-    before = _snapshot(t.path)
-    touched_bucket = one.select(
-        bucket_expr(("o_orderkey",), 8).alias("b")
-    ).first().b
-
-    out = apply_write_op(one, t, TargetSpec(ds="t", op="upsert", pk=("o_orderkey",)))
+    # ONLY the bucket holding o_orderkey=7 is rewritten
+    out = assert_upsert_scoped(bucketed_orders, one, ("o_orderkey",))
     assert out.filter("o_orderkey = 7").first().o_orderstatus == "Z"
     assert out.count() == orders.count()
 
-    after = _snapshot(t.path)
-    changed_dirs = {
-        os.path.dirname(p)
-        for p in (set(before) ^ set(after))
-        | {p for p in before if p in after and before[p] != after[p]}
-        if os.path.dirname(p).startswith(f"{_BUCKET}=")
-    }
-    # ONLY the bucket holding o_orderkey=7 was rewritten
-    assert changed_dirs == {f"{_BUCKET}={touched_bucket}"}
-    untouched = [p for p in before if not p.startswith(f"{_BUCKET}={touched_bucket}")
-                 and os.path.dirname(p).startswith(f"{_BUCKET}=")]
-    assert untouched and all(before[p] == after[p] for p in untouched)
-
 
 def test_delete_scoped_and_correct(spark, engine, bucketed_orders):
-    t = bucketed_orders
-    orders = engine.read("orders")
-    victims = orders.filter("o_orderkey < 40").select("o_orderkey")
-    nv = victims.count()
-    before = _snapshot(t.path)
-    out = apply_write_op(victims, t, TargetSpec(ds="t", op="delete", pk=("o_orderkey",)))
-    assert out.count() == orders.count() - nv
+    victims = engine.read("orders").filter("o_orderkey < 40").select("o_orderkey")
+    out = assert_delete_scoped(bucketed_orders, victims, ("o_orderkey",))
     assert out.filter("o_orderkey < 40").count() == 0
-    after = _snapshot(t.path)
-    victim_buckets = {
-        f"{_BUCKET}={r.b}"
-        for r in victims.select(bucket_expr(("o_orderkey",), 8).alias("b")).distinct().collect()
-    }
-    same = [p for p in before if os.path.dirname(p) not in victim_buckets
-            and os.path.dirname(p).startswith(f"{_BUCKET}=")]
-    assert all(before[p] == after[p] for p in same)
 
 
 def test_bucketed_matches_unbucketed(spark, engine, tmp_path):
@@ -144,36 +106,19 @@ def test_pk_mismatch_falls_back_to_full_rewrite(spark, engine, tmp_path):
     out = apply_write_op(one, t, TargetSpec(ds="t", op="upsert", pk=("o_orderkey",)))
     assert out.filter("o_orderkey = 3").first().o_orderstatus == "Q"
     assert out.count() == orders.count()
-    assert t.layout == (("o_custkey",), 4)  # layout preserved by the rewrite
+    assert t.layout == Layout(("o_custkey",), 4)  # layout preserved by the rewrite
 
 
 def test_insert_appends_without_rewriting(spark, engine, bucketed_orders):
-    t = bucketed_orders
-    orders = engine.read("orders")
-    dup = orders.filter("o_orderkey < 20")
+    dup = engine.read("orders").filter("o_orderkey < 20")
     fresh = dup.withColumn("o_orderkey", F.col("o_orderkey") + F.lit(800000))
-    before = _snapshot(t.path)
-    out = apply_write_op(
-        dup.unionByName(fresh), t, TargetSpec(ds="t", op="insert", pk=("o_orderkey",))
-    )
-    assert out.count() == orders.count() + fresh.count()
-    after = _snapshot(t.path)
     # pure append: every pre-existing file is still there, byte-identical
-    assert all(p in after and after[p] == before[p]
-               for p in before if os.path.dirname(p).startswith(f"{_BUCKET}="))
+    assert_insert_appends(bucketed_orders, dup, fresh, ("o_orderkey",))
 
 
 def test_read_buckets_partition_prunes(spark, bucketed_orders):
-    t = bucketed_orders
-    plan = t.read_buckets([1, 2])._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "PartitionFilters" in plan and _BUCKET in plan
     # the pruned read must not enumerate all 8 buckets
-    import re
-
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "1,2" in m.group(1).replace(" ", "")
+    assert_pruned_read(spark, bucketed_orders, [1, 2])
 
 
 def test_engine_buckets_pk_targets_by_default(spark, tmp_engine):
@@ -219,46 +164,22 @@ def test_failed_swap_rolls_back_and_preserves_data(spark, engine, bucketed_order
     """A mid-swap rename failure must leave the live table intact: backed-up
     bucket dirs are restored, nothing is deleted (ADVICE r2: the old finally
     block rmtree'd backup+staged even on failure, losing the moved buckets)."""
-    import os as _os
-
-    t = bucketed_orders
-    before = t.read().orderBy("o_orderkey").collect()
     src = engine.read("orders").filter("o_orderkey < 40").withColumn(
         "o_orderstatus", F.lit("Z")
     )
-
-    real_rename = _os.rename
-    calls = {"n": 0}
-
-    def flaky_rename(a, b):
-        # let the first backup move succeed, then blow up mid-swap
-        if f"{_BUCKET}=" in os.path.basename(a) or f"{_BUCKET}=" in os.path.basename(b):
-            calls["n"] += 1
-            if calls["n"] == 3:
-                raise OSError("injected swap failure")
-        return real_rename(a, b)
-
-    monkeypatch.setattr("etl_cli_spark.operators.writeops.os.rename", flaky_rename)
-    with pytest.raises(OSError, match="injected"):
-        apply_write_op(src, t, TargetSpec(ds="t", op="update", pk=("o_orderkey",)))
-    monkeypatch.undo()
-
-    after = t.read().orderBy("o_orderkey").collect()
-    assert after == before
+    assert_failed_swap_rolls_back(bucketed_orders, src, ("o_orderkey",), monkeypatch)
 
 
 def test_bool_partition_value_falls_back_to_full_rewrite(spark, engine, tmp_path):
     """Boolean partition columns hive-encode as col=true/false, which
     str(True) can't match — the scoped path must decline (return None)
     and the op must still produce the right table via full rewrite."""
-    from etl_cli_spark.operators.writeops import _touched_values
-
     orders = engine.read("orders").withColumn("flag", F.col("o_orderkey") % 2 == 0)
     t = ParquetTable(spark, str(tmp_path / "orders_flag.parquet"), partition_by=("flag",))
     t.append(orders)
 
     src = orders.filter("o_orderkey < 30").withColumn("o_orderpriority", F.lit("X"))
-    assert _touched_values(src, "flag") is None
+    assert _touched(src, t, ("o_orderkey", "flag")) is None
 
     out = apply_write_op(src, t, TargetSpec(ds="t", op="upsert", pk=("o_orderkey", "flag")))
     got = {r.o_orderkey: r.o_orderpriority for r in out.collect()}
@@ -351,3 +272,136 @@ def test_insert_small_source_broadcast_shape(spark, engine, tmp_path):
     assert sorted(r.o_orderkey for r in got.select("o_orderkey").collect()) == sorted(
         r.o_orderkey + 5_000_000 for r in dups.select("o_orderkey").collect()
     )
+
+
+@pytest.mark.parametrize("manifest", [False, True], ids=["legacy", "manifest"])
+def test_bucket_column_never_leaks(spark, tmp_engine, manifest):
+    """``__etl_bucket`` is internal to a bucketed target on every read
+    path: a job reading the target as its source, an m2s merger on it,
+    and an ``op=create`` copy of it (whose files must not carry it)."""
+    import pyarrow.parquet as pq
+
+    eng = tmp_engine
+    spark.createDataFrame(
+        [(i, i * 1.5) for i in range(100)], "k BIGINT, v DOUBLE"
+    ).write.parquet(f"{eng.root}/src.parquet")
+    eng.etl("src", target="out/t", op="upsert", pk="k", n_buckets=4, manifest=manifest)
+
+    assert eng.etl("out/t").df.columns == ["k", "v"]
+    merged = eng.etl("src", merger="out/t", mkeys="k:k", mmd="m2s").df
+    assert _BUCKET not in merged.columns
+    assert merged.count() == 100
+    eng.etl("out/t", target="out/copy", op="create")
+    copy = f"{eng.root}/out/copy.parquet"
+    files = [
+        os.path.join(r, f) for r, _, fs in os.walk(copy) for f in fs if f.endswith(".parquet")
+    ]
+    assert files
+    assert all(_BUCKET not in pq.read_schema(f).names for f in files)
+    assert eng.read("out/copy").count() == 100
+
+
+def test_bucket_touched_set_never_declines(spark, tmp_path):
+    """A bucket layout has at most n directory values, so its touched
+    set is never capped (a value layout declines above 4096 values):
+    50k keys over 8192 buckets still take the scoped path. Computed
+    without writing the table."""
+    t = ParquetTable(
+        spark, str(tmp_path / "wide.parquet"), bucket_by=("id",), n_buckets=8192
+    )
+    touched = _touched(spark.range(50_000), t, ("id",))
+    assert touched is not None and 4096 < len(touched) <= 8192
+    assert touched == sorted(set(touched))
+    assert not os.path.exists(t.path)
+
+
+def test_bucket_on_pk_subset_takes_scoped_path(spark, engine, tmp_path):
+    """A table bucketed on a proper subset of the pk is scoped too: rows
+    with one pk share the subset's hash, so an upsert rewrites only the
+    source rows' buckets (the others stay byte-identical) and gives the
+    same rows as a flat table."""
+    orders = engine.read("orders")
+    pk = ("o_custkey", "o_orderkey")
+    changed = orders.filter("o_custkey < 5").withColumn(
+        "o_totalprice", F.col("o_totalprice") + F.lit(1.0)
+    )
+    new = changed.limit(3).withColumn("o_orderkey", F.col("o_orderkey") + F.lit(900000))
+    src = changed.unionByName(new)
+    flat = ParquetTable(spark, str(tmp_path / "flat.parquet"))
+    flat.append(orders)
+    want = apply_write_op(src, flat, TargetSpec(ds="t", op="upsert", pk=pk))
+    t = ParquetTable(
+        spark, str(tmp_path / "sub.parquet"), bucket_by=("o_custkey",), n_buckets=8
+    )
+    t.append(orders)
+    out = assert_upsert_scoped(t, src, pk)
+    assert sorted(map(tuple, out.select(*orders.columns).collect())) == sorted(
+        map(tuple, want.select(*orders.columns).collect())
+    )
+
+
+_LAYOUT_FILES = {
+    "bucket": ({"bucket_by": ("o_orderkey",), "n_buckets": 4},
+               {"cols": ["o_orderkey"], "n": 4}),
+    "bucket_sorted": ({"bucket_by": ("o_orderkey",), "n_buckets": 4, "sort_by": ("o_totalprice",)},
+                      {"cols": ["o_orderkey"], "n": 4, "sort": ["o_totalprice"]}),
+    "values": ({"partition_by": ("o_orderstatus",)},
+               {"cols": ["o_orderstatus"], "kind": "values"}),
+    "values_sorted": ({"partition_by": ("o_orderstatus",), "sort_by": ("o_totalprice",)},
+                      {"cols": ["o_orderstatus"], "kind": "values", "sort": ["o_totalprice"]}),
+    "plain_sorted": ({"sort_by": ("o_totalprice",)}, {"kind": "plain", "sort": ["o_totalprice"]}),
+}
+
+
+@pytest.mark.parametrize("manifest", [False, True], ids=["legacy", "manifest"])
+@pytest.mark.parametrize("layout", sorted(_LAYOUT_FILES))
+def test_layout_file_keys_unchanged(spark, engine, tmp_path, layout, manifest):
+    """The layout file keeps its JSON keys and key order for every
+    layout, so tables written by older versions open unchanged (a
+    bucket file has no ``kind``), and a fresh handle reads the layout
+    back from it."""
+    import json
+
+    kw, want = _LAYOUT_FILES[layout]
+    t = ParquetTable(spark, str(tmp_path / "lf.parquet"), manifest=manifest, **kw)
+    t.append(engine.read("orders"))
+    t.append(engine.read("orders").limit(5))
+    with open(os.path.join(t.path, "_etl_bucket_meta.json")) as f:
+        meta = json.load(f)
+    want = {**want, **({"manifest": True} if manifest else {})}
+    assert list(meta.items()) == list(want.items())
+    assert ParquetTable(spark, t.path).layout == t._layout
+
+
+@pytest.mark.parametrize("manifest", [False, True], ids=["legacy", "manifest"])
+def test_read_where_pins_point_lookup(spark, engine, tmp_path, manifest):
+    """``read_where`` pins a query that sets every bucket column with a
+    plain equality to that key's bucket, in both commit modes; a value
+    of another type than the column is not pinned (its equality matches
+    through a cast, across buckets)."""
+    from etl_cli_spark.dsl import compile_query
+
+    t = ParquetTable(
+        spark, str(tmp_path / "pin.parquet"),
+        bucket_by=("o_orderkey",), n_buckets=8, manifest=manifest,
+    )
+    t.append(engine.read("orders"))
+    point = t.read_where(["o_orderkey=42"])
+    assert _BUCKET not in point.columns
+    assert [r.o_orderkey for r in point.collect()] == [42]
+    plan = point._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    assert _BUCKET in re.search(r"PartitionFilters: \[([^\]]*)\]", plan).group(1)
+
+    codes = ParquetTable(
+        spark, str(tmp_path / "codes.parquet"),
+        bucket_by=("code",), n_buckets=8, manifest=manifest,
+    )
+    codes.append(spark.createDataFrame(
+        [(f"{i:03d}", i) for i in range(40)] + [(str(i), i) for i in range(40)],
+        "code string, i int",
+    ))
+    for q in (["code=007"], ["code=abc"], ["code=7"]):
+        want = codes.read().filter(compile_query(q).predicate)
+        assert sorted(codes.read_where(q).collect()) == sorted(want.collect()), q

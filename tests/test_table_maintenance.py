@@ -8,7 +8,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from etl_cli_spark.operators.writeops import ParquetTable
+from etl_cli_spark.operators.writeops import Layout, ParquetTable
 
 
 def _parquet_minmax(path: str, column: str) -> list[tuple]:
@@ -109,7 +109,7 @@ def test_compact_merges_small_files(spark, engine, tmp_path):
     t.compact()
     assert n_files() <= 4  # ~1 file per bucket
     assert t.read().count() == before_rows == orders.count()
-    assert t.layout == (("o_orderkey",), 4)  # layout preserved
+    assert t.layout == Layout(("o_orderkey",), 4)  # layout preserved
 
 
 def test_vacuum_removes_leftovers(spark, engine, tmp_path):

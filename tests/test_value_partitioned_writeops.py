@@ -13,18 +13,15 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from etl_cli_spark.operators.writeops import ParquetTable, apply_write_op
+from etl_cli_spark.operators.writeops import Layout, ParquetTable, _touched, apply_write_op
 from etl_cli_spark.spec import TargetSpec
-
-
-def _snapshot(path):
-    snap = {}
-    for root, _, files in os.walk(path):
-        for f in files:
-            p = os.path.join(root, f)
-            with open(p, "rb") as fh:
-                snap[os.path.relpath(p, path)] = fh.read()
-    return snap
+from partition_checks import (
+    assert_delete_scoped,
+    assert_failed_swap_rolls_back,
+    assert_insert_appends,
+    assert_pruned_read,
+    assert_upsert_scoped,
+)
 
 
 @pytest.fixture()
@@ -42,26 +39,21 @@ PK = ("o_orderkey", "o_orderstatus")
 
 
 def test_value_layout_roundtrip(part_orders, engine):
-    assert part_orders.value_layout == ("o_orderstatus",)
-    assert part_orders.layout is None
+    assert part_orders.layout == Layout(("o_orderstatus",))
+    assert part_orders.layout.dirs == ("o_orderstatus",)
     assert part_orders.read().count() == engine.read("orders").count()
 
 
 def test_upsert_touches_only_source_partitions(spark, engine, part_orders):
     orders = engine.read("orders")
-    before = _snapshot(part_orders.path)
     src = (
         orders.filter("o_orderstatus = 'F' AND o_orderkey < 200")
         .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1.0))
     )
-    n_src = src.count()
-    assert n_src > 0
-    out = apply_write_op(src, part_orders, TargetSpec(ds="t", op="upsert", pk=PK))
-    assert out.count() == orders.count()  # pure update, no new pks
-    after = _snapshot(part_orders.path)
+    assert src.count() > 0
     # every file OUTSIDE o_orderstatus=F is byte-identical
-    untouched = {k for k in before if "o_orderstatus=F" not in k and k.endswith(".parquet")}
-    assert untouched and all(before[k] == after[k] for k in untouched)
+    out = assert_upsert_scoped(part_orders, src, PK)
+    assert out.count() == orders.count()  # pure update, no new pks
     # and the F partition was really rewritten with the new values
     got = part_orders.read().filter("o_orderstatus='F' AND o_orderkey < 200")
     base = orders.filter("o_orderstatus='F' AND o_orderkey < 200")
@@ -72,12 +64,9 @@ def test_upsert_touches_only_source_partitions(spark, engine, part_orders):
 
 def test_delete_can_empty_a_partition(spark, engine, part_orders):
     src = engine.read("orders").filter("o_orderstatus = 'P'")
-    n_p = src.count()
-    assert n_p > 0
-    apply_write_op(src, part_orders, TargetSpec(ds="t", op="delete", pk=PK))
-    left = part_orders.read()
+    assert src.count() > 0
+    left = assert_delete_scoped(part_orders, src, PK)
     assert left.filter("o_orderstatus = 'P'").count() == 0
-    assert left.count() == engine.read("orders").count() - n_p
     # the drained partition directory is gone, not a stale leftover
     assert not any(
         e.startswith("o_orderstatus=P") for e in os.listdir(part_orders.path)
@@ -85,15 +74,19 @@ def test_delete_can_empty_a_partition(spark, engine, part_orders):
 
 
 def test_insert_prunes_and_appends(spark, engine, part_orders):
-    orders = engine.read("orders")
-    dup = orders.filter("o_orderkey < 50")
+    dup = engine.read("orders").filter("o_orderkey < 50")
     new = dup.withColumn("o_orderkey", F.col("o_orderkey") + F.lit(10_000_000))
-    out = apply_write_op(
-        dup.unionByName(new),
-        part_orders,
-        TargetSpec(ds="t", op="insert", pk=PK),
+    assert_insert_appends(part_orders, dup, new, PK)
+
+
+def test_failed_swap_rolls_back_and_preserves_data(spark, engine, part_orders, monkeypatch):
+    """The value-partition swap rolls back like the bucket swap: the
+    update touches all three status partitions, the third directory
+    rename fails, and the live table reads exactly as before."""
+    src = engine.read("orders").filter("o_orderkey < 40").withColumn(
+        "o_orderpriority", F.lit("Z")
     )
-    assert out.count() == orders.count() + new.count()
+    assert_failed_swap_rolls_back(part_orders, src, PK, monkeypatch)
 
 
 def test_partition_col_not_in_pk_falls_back(spark, engine, tmp_path):
@@ -127,28 +120,51 @@ def test_bucket_and_partition_mutually_exclusive(spark, tmp_path):
 def test_scoped_read_partition_prunes(spark, part_orders):
     """The pruned target read must show PartitionFilters on the partition
     column — file groups outside the touched values are never opened."""
-    df = part_orders.read_value_partitions("o_orderstatus", ["F"])
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "PartitionFilters" in plan and "o_orderstatus" in plan
+    assert_pruned_read(spark, part_orders, ["F"])
 
 
-def test_touched_values_guards(spark, engine):
-    from etl_cli_spark.operators.writeops import _touched_values
-
+def test_touched_values_guards(spark, engine, tmp_path):
     orders = engine.read("orders")
-    assert set(_touched_values(orders, "o_orderstatus")) == {"F", "O", "P"}
+    t = ParquetTable(spark, str(tmp_path / "g.parquet"), partition_by=("s",))
+    by_status = orders.withColumn("s", F.col("o_orderstatus"))
+    assert set(_touched(by_status, t, ("o_orderkey", "s"))) == {"F", "O", "P"}
     # nulls -> decline the scoped path
-    from pyspark.sql import functions as F
-
     with_null = orders.withColumn(
         "s", F.when(F.col("o_orderkey") == 1, None).otherwise(F.col("o_orderstatus"))
     )
-    assert _touched_values(with_null, "s") is None
-    # hive-dir-ambiguous encodings -> decline
-    weird = spark.createDataFrame([("a=b",), ("ok",)], "s string")
-    assert _touched_values(weird, "s") is None
+    assert _touched(with_null, t, ("s",)) is None
+    # the empty string is written as the null partition -> decline
+    empty = spark.createDataFrame([("",), ("ok",)], "s string")
+    assert _touched(empty, t, ("s",)) is None
+    # characters Spark escapes in a directory name are matched unescaped
+    weird = spark.createDataFrame([("a=b",), ("x/y",), ("p%q",), ("ok",)], "s string")
+    assert sorted(_touched(weird, t, ("s",))) == ["a=b", "ok", "p%q", "x/y"]
     # cardinality cap -> decline
     wide = spark.range(5000).select(F.col("id").alias("s"))
-    assert _touched_values(wide, "s") is None
+    assert _touched(wide, t, ("s",)) is None
+    # a partition column outside the op keys -> not scoped
+    assert _touched(by_status, t, ("o_orderkey",)) is None
+
+
+@pytest.mark.parametrize("manifest", [False, True], ids=["legacy", "manifest"])
+@pytest.mark.parametrize(
+    "value, dirname", [("a:b", "s=a%3Ab"), ("x=y/z%", "s=x%3Dy%2Fz%25")],
+    ids=["colon", "eq_slash_pct"],
+)
+def test_upsert_escaped_partition_value(spark, tmp_path, manifest, value, dirname):
+    """Spark URL-escapes special characters in hive directory names
+    (``s=a:b`` lands in ``s=a%3Ab``). The scoped upsert must read and
+    replace that directory in both commit modes; matching it by the raw
+    value left its rows out of the target read and kept its old files,
+    so every upserted key there held its old and its new row."""
+    rows = [(k, "ok" if k % 2 == 0 else value, f"v{k}") for k in range(10)]
+    schema = "k long, s string, v string"
+    t = ParquetTable(
+        spark, str(tmp_path / "esc.parquet"), partition_by=("s",), manifest=manifest
+    )
+    t.append(spark.createDataFrame(rows, schema))
+    assert dirname in os.listdir(t.path)
+    src = spark.createDataFrame([(k, s, "new") for k, s, _v in rows[:4]], schema)
+    out = apply_write_op(src, t, TargetSpec(ds="t", op="upsert", pk=("k", "s")))
+    got = sorted((r.k, r.s, r.v) for r in out.collect())
+    assert got == sorted((k, s, "new" if k < 4 else v) for k, s, v in rows)
