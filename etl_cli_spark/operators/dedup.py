@@ -27,6 +27,7 @@ from ..share import scope, shared
 from pyspark.sql.window import Window
 
 from .text import fingerprint, let, tokens
+from .writeops import open_index
 
 
 # --------------------------------------------------------------------------
@@ -850,15 +851,18 @@ def minhash_dedup_canonical(
 # function of the text, so sign once, persist, and each new drop only
 # signs ITSELF and joins against the persisted buckets.
 #
-# Layout under <path>/:
-#   buckets/  (id, band, bucket) hive-partitioned by __bb =
-#             pmod(xxhash64(band, bucket), n_parts) — a probe computes
-#             its own buckets' __bb values (driver list bounded by
-#             n_parts) and partition-prunes the read to those dirs
+# Layout under <path>/ — two manifest tables (writeops.open_index):
 #   sigs/     (id, hs) shingle-hash arrays for the exact-Jaccard verify
 #             (joined only for candidate ids, never scanned whole)
-#   _dedup_index_meta.json  the signature parameters — append MUST
-#             reuse them bit-for-bit or append==rebuild breaks
+#   buckets/  (id, band, bucket) value-partitioned on __bb =
+#             pmod(xxhash64(band, bucket), n_parts) — a probe computes
+#             its own buckets' __bb values (driver list bounded by
+#             n_parts) and partition-prunes the read to those dirs. Its
+#             commits carry the signature parameters: append MUST
+#             reuse them bit-for-bit or append==rebuild breaks.
+# Every write commits sigs before buckets: a probe reaches sigs only
+# through buckets, so a failure between the two commits leaves the
+# answer of the index before the write.
 #
 # The index stores EVERY signed document, dropped duplicates included:
 # the greedy policy ("drop a doc that pairs with any smaller-id doc")
@@ -867,8 +871,6 @@ def minhash_dedup_canonical(
 # append==rebuild would be false. Ids must be crawl-monotone (appended
 # batches carry larger ids than everything indexed), which is what an
 # incremental crawl naturally produces.
-
-_DEDUP_META = "_dedup_index_meta.json"
 
 
 def _resolve_impl(impl: str) -> str:
@@ -885,21 +887,8 @@ def _resolve_impl(impl: str) -> str:
         return "expr"
 
 
-def _write_dedup_meta(path: str, **params) -> None:
-    import json
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, _DEDUP_META), "w") as f:
-        json.dump(params, f)
-
-
-def _read_dedup_meta(path: str) -> dict:
-    import json
-    import os
-
-    with open(os.path.join(path, _DEDUP_META)) as f:
-        return json.load(f)
+# (sub-directory, directory columns) of the index's tables, in commit order
+_TABLES = [("sigs", ()), ("buckets", ("__bb",))]
 
 
 def _base_from_meta(df: DataFrame, meta: dict) -> DataFrame:
@@ -910,21 +899,12 @@ def _base_from_meta(df: DataFrame, meta: dict) -> DataFrame:
     )
 
 
-def _write_index_rows(base: DataFrame, path: str, n_parts: int, mode: str) -> None:
-    """Bucket + signature rows from a (shared) base -> the index
-    layout; shared by full build and incremental append."""
-    import os
-
-    buckets = base.select("id", F.posexplode("bh").alias("band", "bucket")).withColumn(
-        "__bb", F.pmod(F.xxhash64("band", "bucket"), F.lit(n_parts))
+def _bucket_rows(base: DataFrame, n_parts: int) -> DataFrame:
+    """(id, band, bucket, __bb) rows of a signature base — what the
+    writer stores and the probe looks up."""
+    return base.select("id", F.posexplode("bh").alias("band", "bucket")).withColumn(
+        "__bb", F.pmod(F.xxhash64("band", "bucket"), F.lit(n_parts)).cast("int")
     )
-    (
-        buckets.repartition(n_parts, F.col("__bb"))
-        .write.mode(mode)
-        .partitionBy("__bb")
-        .parquet(os.path.join(path, "buckets"))
-    )
-    base.select("id", "hs").write.mode(mode).parquet(os.path.join(path, "sigs"))
 
 
 def build_dedup_index(
@@ -941,14 +921,16 @@ def build_dedup_index(
     """Sign the corpus once and persist the LSH index (see module notes
     on layout). One corpus pass; the bucket write's only exchange is the
     repartition on ``__bb`` (narrow (id, band, bucket) rows)."""
-    impl = _resolve_impl(impl)
-    with scope():
-        base = shared(_minhash_base(df, id_col, text_col, n_shingle, num_hashes, bands, impl))
-        _write_index_rows(base, path, n_parts, mode="overwrite")
-    _write_dedup_meta(
-        path, id_col=id_col, text_col=text_col, n_shingle=n_shingle,
-        num_hashes=num_hashes, bands=bands, n_parts=n_parts, impl=impl,
+    meta = dict(
+        id_col=id_col, text_col=text_col, n_shingle=n_shingle,
+        num_hashes=num_hashes, bands=bands, n_parts=n_parts,
+        impl=_resolve_impl(impl),
     )
+    sigs, buckets = open_index(df.sparkSession, path, "dedup", _TABLES)
+    with scope():
+        base = shared(_base_from_meta(df, meta))
+        sigs.overwrite(base.select("id", "hs"))
+        buckets.overwrite(_bucket_rows(base, n_parts), params=meta)
 
 
 def create_dedup_index(
@@ -962,38 +944,22 @@ def create_dedup_index(
     n_parts: int = 64,
     impl: str = "auto",
 ) -> None:
-    """Bootstrap an EMPTY index (meta only): the incremental-crawl entry
-    point when there is no initial corpus — the first
-    :func:`append_to_dedup_index` call populates it. Parameters freeze
-    here; every later append reuses them bit-for-bit."""
-    _write_dedup_meta(
-        path, id_col=id_col, text_col=text_col, n_shingle=n_shingle,
-        num_hashes=num_hashes, bands=bands, n_parts=n_parts,
-        impl=_resolve_impl(impl),
+    """Bootstrap an EMPTY index: the incremental-crawl entry point when
+    there is no initial corpus — the first :func:`append_to_dedup_index`
+    call populates it. Parameters freeze here; every later append
+    reuses them bit-for-bit."""
+    empty = spark.createDataFrame([], f"`{id_col}` long, `{text_col}` string")
+    build_dedup_index(
+        empty, path, id_col, text_col, n_shingle, num_hashes, bands, n_parts, impl
     )
-
-
-def _index_populated(path: str) -> bool:
-    import os
-
-    b = os.path.join(path, "buckets")
-    if not os.path.isdir(b):
-        return False
-    # hive partition dirs are named __bb=N — they ARE data (a bare
-    # startswith('_') check would skip them and silently disable the
-    # cross-batch dedup); only committer sidecars like _SUCCESS aren't
-    return any("=" in e or not e.startswith(("_", ".")) for e in os.listdir(b))
-
-
-def _index_cross_pairs(spark, base, path, meta, threshold):
+def _index_cross_pairs(base, sigs, buckets, snap, threshold):
     """(new_id, old_id, jaccard) pairs between a probe batch's signature
-    base and the persisted index — the partition-pruned probe shared by
-    :func:`dedup_against_index` (which only keeps loser ids) and
-    :func:`fuzzy_join_indexed` (which returns the pairs)."""
-    import os
-
-    if not _index_populated(path):
-        # freshly created (or still-empty) index: no cross candidates
+    base and the index whose buckets table is at snapshot ``snap`` —
+    the partition-pruned probe shared by :func:`dedup_against_index`
+    (which only keeps loser ids) and :func:`fuzzy_join_indexed` (which
+    returns the pairs)."""
+    if not snap.files:
+        # an index with no committed files: no cross candidates
         return (
             base.select("id").limit(0)
             .select(
@@ -1002,17 +968,12 @@ def _index_cross_pairs(spark, base, path, meta, threshold):
                 F.lit(0.0).alias("jaccard"),
             )
         )
-    new_buckets = base.select(
-        "id", F.posexplode("bh").alias("band", "bucket")
-    ).withColumn(
-        "__bb", F.pmod(F.xxhash64("band", "bucket"), F.lit(meta["n_parts"]))
-    )
+    new_buckets = _bucket_rows(base, snap.params["n_parts"])
     # driver-side partition list: bounded by n_parts, metadata not data
     bbs = sorted(r[0] for r in new_buckets.select("__bb").distinct().collect())
     batch_ids = base.select("id")
     idx = (
-        spark.read.parquet(os.path.join(path, "buckets"))
-        .filter(F.col("__bb").isin(bbs))
+        buckets.read_partitions(bbs, version=snap.version)
         .select(F.col("id").alias("old_id"), "band", "bucket")
         # replay self-exclusion (see dedup_against_index docstring)
         .join(batch_ids.withColumnRenamed("id", "old_id"), "old_id", "left_anti")
@@ -1022,31 +983,18 @@ def _index_cross_pairs(spark, base, path, meta, threshold):
         .select(F.col("id").alias("new_id"), "old_id")
         .dropDuplicates(["new_id", "old_id"])
     )
-    sigs = spark.read.parquet(os.path.join(path, "sigs"))
     return (
         cross_cand.join(
             base.select(F.col("id").alias("new_id"), F.col("hs").alias("new_hs")),
             "new_id",
         )
         .join(
-            sigs.select(F.col("id").alias("old_id"), F.col("hs").alias("old_hs")),
+            sigs.read().select(F.col("id").alias("old_id"), F.col("hs").alias("old_hs")),
             "old_id",
         )
         .withColumn("jaccard", jaccard(F.col("new_hs"), F.col("old_hs")))
         .filter(F.col("jaccard") >= threshold)
         .select("new_id", "old_id", F.round("jaccard", 6).alias("jaccard"))
-    )
-
-
-def _cross_index_losers(spark, base, path, meta, threshold):
-    """Batch ids that near-dup an already-indexed doc: the
-    partition-pruned probe at the heart of :func:`dedup_against_index`,
-    kept separate so its plan (PartitionFilters on ``__bb``) stays
-    inspectable before the caller checkpoints the loser set away."""
-    return (
-        _index_cross_pairs(spark, base, path, meta, threshold)
-        .select(F.col("new_id").alias("id"))
-        .distinct()
     )
 
 
@@ -1063,10 +1011,10 @@ def fuzzy_join_indexed(
     exact Jaccard verifies candidates only. Batch ids present in the
     index are excluded from the right side (self-pair suppression,
     matching dedup_against_index's replay semantics)."""
-    spark = df.sparkSession
-    meta = _read_dedup_meta(path)
-    base = shared(_base_from_meta(df, meta))
-    return _index_cross_pairs(spark, base, path, meta, threshold).select(
+    sigs, buckets = open_index(df.sparkSession, path, "dedup", _TABLES)
+    snap = buckets.snapshot()
+    base = shared(_base_from_meta(df, snap.params))
+    return _index_cross_pairs(base, sigs, buckets, snap, threshold).select(
         F.col("new_id").alias("left_id"),
         F.col("old_id").alias("right_id"),
         "jaccard",
@@ -1097,11 +1045,16 @@ def dedup_against_index(
     and the exclusion makes the replayed batch keep exactly its
     original survivor set instead of self-dedup-ing to empty.
     """
-    spark = df.sparkSession
-    meta = _read_dedup_meta(path)
+    sigs, buckets = open_index(df.sparkSession, path, "dedup", _TABLES)
+    snap = buckets.snapshot()
+    meta = snap.params
     with scope():
         base = shared(_base_from_meta(df, meta))
-        cross_dups = _cross_index_losers(spark, base, path, meta, threshold)
+        cross_dups = (
+            _index_cross_pairs(base, sigs, buckets, snap, threshold)
+            .select(F.col("new_id").alias("id"))
+            .distinct()
+        )
         # in-batch duplicates: same greedy min-id policy as minhash_dedup
         in_batch = _pairs_from_base(base, threshold).select(
             F.col("b_id").alias("id")
@@ -1117,7 +1070,9 @@ def dedup_against_index(
     return df.join(losers, on=meta["id_col"], how="left_anti")
 
 
-def append_dedup_signatures(df: DataFrame, path: str) -> None:
+def append_dedup_signatures(
+    df: DataFrame, path: str, batch: tuple[str, int] | None = None
+) -> None:
     """Append the batch's signatures to the index WITHOUT deduping —
     the second half of :func:`append_to_dedup_index`, exposed so a
     streaming sink can order its writes crash-safely: dedup first,
@@ -1125,10 +1080,23 @@ def append_dedup_signatures(df: DataFrame, path: str) -> None:
     With that ordering a crash between the two leaves the batch
     unindexed but delivered (replay re-delivers it — at-least-once,
     and the replay self-exclusion in :func:`dedup_against_index` keeps
-    the survivor set identical), never indexed-but-lost."""
-    meta = _read_dedup_meta(path)
+    the survivor set identical), never indexed-but-lost.
+
+    ``batch`` = ``(stream_id, batch_id)`` makes the append exactly-once
+    (``ParquetTable.write_batch``): a replayed batch whose signatures
+    already committed adds no second copy of them."""
+    sigs, buckets = open_index(df.sparkSession, path, "dedup", _TABLES)
+    meta = buckets.snapshot().params
     with scope():
-        _write_index_rows(shared(_base_from_meta(df, meta)), path, meta["n_parts"], mode="append")
+        base = shared(_base_from_meta(df, meta))
+        for table, rows in (
+            (sigs, base.select("id", "hs")),
+            (buckets, _bucket_rows(base, meta["n_parts"])),
+        ):
+            if batch is None:
+                table.append(rows)
+            else:
+                table.write_batch(*batch, lambda: table.append(rows))
 
 
 def append_to_dedup_index(
@@ -1140,13 +1108,13 @@ def append_to_dedup_index(
     surviving rows.
 
     Append == rebuild: band hashes are a pure deterministic function of
-    (text, meta parameters), so the appended bucket/sig rows are
+    (text, frozen parameters), so the appended bucket/sig rows are
     bit-identical to a fresh :func:`build_dedup_index` over the union —
     unit- and oracle-asserted. (The dedup and the signature append each
-    sign the batch from the frozen meta — one narrow pass each, caches
-    released on return; callers needing crash-safe ordering between
-    output and index writes compose :func:`dedup_against_index` +
-    :func:`append_dedup_signatures` directly.)
+    sign the batch from the frozen parameters — one narrow pass each,
+    caches released on return; callers needing crash-safe ordering
+    between output and index writes compose :func:`dedup_against_index`
+    + :func:`append_dedup_signatures` directly.)
     """
     kept = dedup_against_index(df, path, threshold=threshold)
     append_dedup_signatures(df, path)

@@ -37,6 +37,8 @@ from ..fanout import fan_out_for_compute
 from ..share import scope, shared
 from pyspark.sql import types as T
 
+from .writeops import open_index
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -1351,20 +1353,21 @@ def video_neardup(
 # hashes only ITSELF and probes the touched band partitions.
 #
 # Layout under <path>/:
-#   bands/  (id, sh, chunk, piece) hive-partitioned by __bb =
+#   bands/  a manifest table (writeops.open_index) of (id, sh, chunk,
+#           piece) value-partitioned on __bb =
 #           pmod(xxhash64(chunk, piece), n_parts) — a probe computes
 #           its own pieces' __bb values (driver list bounded by
 #           n_parts) and partition-prunes the read to those dirs.
 #           Unlike the text index there is NO separate sigs/ store:
 #           the fingerprint is 8 bytes and rides inline with its band
-#           row, so the Hamming verify needs no second join.
-#   _media_index_meta.json  frozen parameters — append MUST reuse
+#           row, so the Hamming verify needs no second join. Its
+#           commits carry the frozen parameters — append MUST reuse
 #           them bit-for-bit or append==rebuild breaks.
 #
 # Ids must be crawl-monotone (appended batches carry larger ids than
 # everything indexed) — the contract the text index already documents.
 
-_MEDIA_IDX_META = "_media_index_meta.json"
+_MEDIA_TABLES = [("bands", ("__bb",))]
 
 
 def _media_fingerprint_base(df: DataFrame, meta: dict) -> DataFrame:
@@ -1405,25 +1408,8 @@ def _media_index_pieces(base: DataFrame, chunks: int, n_parts: int) -> DataFrame
     from .dedup import banded_pieces
 
     return banded_pieces(base, chunks).withColumn(
-        "__bb", F.pmod(F.xxhash64("chunk", "piece"), F.lit(n_parts))
+        "__bb", F.pmod(F.xxhash64("chunk", "piece"), F.lit(n_parts)).cast("int")
     )
-
-
-def _write_media_index_meta(path: str, **params) -> None:
-    import json
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, _MEDIA_IDX_META), "w") as f:
-        json.dump(params, f)
-
-
-def _read_media_index_meta(path: str) -> dict:
-    import json
-    import os
-
-    with open(os.path.join(path, _MEDIA_IDX_META)) as f:
-        return json.load(f)
 
 
 def build_media_index(
@@ -1453,34 +1439,19 @@ def build_media_index(
         id_col=id_col, payload_col=payload_col, kind=kind,
         chunks=chunks, n_parts=n_parts, every_ms=every_ms,
     )
-    import os
-
     base = _media_fingerprint_base(df, meta)
-    (
-        _media_index_pieces(base, chunks, n_parts)
-        .repartition(n_parts, F.col("__bb"))
-        .write.mode("overwrite")
-        .partitionBy("__bb")
-        .parquet(os.path.join(path, "bands"))
-    )
-    _write_media_index_meta(path, **meta)
+    [bands] = open_index(df.sparkSession, path, "media", _MEDIA_TABLES)
+    bands.overwrite(_media_index_pieces(base, chunks, n_parts), params=meta)
 
 
 def append_media_fingerprints(df: DataFrame, path: str) -> None:
     """Append a new crawl drop's fingerprints under the index's FROZEN
     parameters (append == rebuild, the text-index invariant). The batch
     hashes only itself — the historical corpus is untouched."""
-    import os
-
-    meta = _read_media_index_meta(path)
+    [bands] = open_index(df.sparkSession, path, "media", _MEDIA_TABLES)
+    meta = bands.snapshot().params
     base = _media_fingerprint_base(df, meta)
-    (
-        _media_index_pieces(base, meta["chunks"], meta["n_parts"])
-        .repartition(meta["n_parts"], F.col("__bb"))
-        .write.mode("append")
-        .partitionBy("__bb")
-        .parquet(os.path.join(path, "bands"))
-    )
+    bands.append(_media_index_pieces(base, meta["chunks"], meta["n_parts"]))
 
 
 def media_neardup_indexed(
@@ -1513,8 +1484,8 @@ def media_neardup_indexed(
     ``fingerprint_pairs`` documents — hub candidates still face the
     exact verify; the trade is recall against the blanked-out class,
     which distance-0 collapses dominate in practice)."""
-    spark = df.sparkSession
-    meta = _read_media_index_meta(path)
+    [bands] = open_index(df.sparkSession, path, "media", _MEDIA_TABLES)
+    snap = bands.snapshot()
     # eager localCheckpoint, NOT persist: the narrow (id, 8-byte hash)
     # base materializes once (decode runs a single time, before the
     # __bb driver collect) and its blocks release via the
@@ -1522,22 +1493,17 @@ def media_neardup_indexed(
     # here pinned one cache entry per probe call for the session
     # lifetime (round-14 review finding; a crawl session probes many
     # drops).
-    base = _media_fingerprint_base(df, meta).localCheckpoint(eager=True)
-    return _media_index_cross_pairs(
-        spark, base, path, meta, max_distance, max_bucket_size
-    )
+    base = _media_fingerprint_base(df, snap.params).localCheckpoint(eager=True)
+    return _media_index_cross_pairs(base, bands, snap, max_distance, max_bucket_size)
 
 
-def _media_index_cross_pairs(
-    spark, base, path, meta, max_distance, max_bucket_size
-):
+def _media_index_cross_pairs(base, bands, snap, max_distance, max_bucket_size):
     """(new_id, old_id, distance) between a (persisted) fingerprint
-    base and the banded index — the partition-pruned probe shared by
-    :func:`media_neardup_indexed` (returns the pairs) and
-    :func:`dedup_against_media_index` (keeps only loser ids)."""
-    import os
-
-    chunks = meta["chunks"]
+    base and the index whose bands table is at snapshot ``snap`` — the
+    partition-pruned probe shared by :func:`media_neardup_indexed`
+    (returns the pairs) and :func:`dedup_against_media_index` (keeps
+    only loser ids)."""
+    chunks = snap.params["chunks"]
     if max_distance > chunks - 1:
         raise ValueError(
             f"media index probe: pigeonhole recall needs "
@@ -1545,12 +1511,11 @@ def _media_index_cross_pairs(
         )
     from .dedup import hamming64
 
-    probe = _media_index_pieces(base, chunks, meta["n_parts"])
+    probe = _media_index_pieces(base, chunks, snap.params["n_parts"])
     # driver-side partition list: bounded by n_parts, metadata not data
     bbs = sorted(r[0] for r in probe.select("__bb").distinct().collect())
     idx = (
-        spark.read.parquet(os.path.join(path, "bands"))
-        .filter(F.col("__bb").isin(bbs))
+        bands.read_partitions(bbs, version=snap.version)
         .select(
             F.col("id").alias("old_id"), F.col("sh").alias("old_sh"),
             "chunk", "piece",
@@ -1604,8 +1569,9 @@ def dedup_against_media_index(
     loser-id set is narrow and checkpointed eagerly so the returned
     plan doesn't depend on the shared base after release. Work
     scales with the batch and its hit set, never the corpus."""
-    spark = df.sparkSession
-    meta = _read_media_index_meta(path)
+    [bands] = open_index(df.sparkSession, path, "media", _MEDIA_TABLES)
+    snap = bands.snapshot()
+    meta = snap.params
     if meta["kind"] == "video":
         raise ValueError(
             "dedup_against_media_index: video dedup is pair-level "
@@ -1616,9 +1582,7 @@ def dedup_against_media_index(
     with scope():
         base = shared(_media_fingerprint_base(df, meta))
         cross = (
-            _media_index_cross_pairs(
-                spark, base, path, meta, max_distance, max_bucket_size
-            )
+            _media_index_cross_pairs(base, bands, snap, max_distance, max_bucket_size)
             .select(F.col("new_id").alias("id"))
             .distinct()
         )
@@ -1658,7 +1622,8 @@ def video_neardup_indexed(
     ``max_distance`` Hamming bits in the same historical video.
     Returns ``(new_id, old_id, n_matched)`` with new_id the batch
     video and old_id the indexed one."""
-    meta = _read_media_index_meta(path)
+    [bands] = open_index(df.sparkSession, path, "media", _MEDIA_TABLES)
+    meta = bands.snapshot().params
     if meta["kind"] != "video":
         raise ValueError(
             f"video_neardup_indexed needs a video-kind index, "

@@ -24,6 +24,7 @@ from pyspark.sql.window import Window
 
 from ..share import scope, shared
 from .text import let
+from .writeops import open_index
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -610,20 +611,34 @@ def ivf_topk(
 # — fine for ad-hoc use, wrong at 100 TB where every query must NOT rescan
 # the corpus. The persisted variants split build from probe:
 #
-# - build_*: one corpus pass, written as a hive-partitioned parquet index
-#   (IVF: partitioned by __cell; LSH: by (__band, __bucket)).
-# - *_topk_indexed: the probe reads ONLY the matching partitions
-#   (PartitionFilters at the scan — verified by unit test), runs exact
-#   re-ranking on those candidates, and never collects corpus data to the
-#   driver; the only driver-side input is the sidecar metadata file
-#   (centroids / plane seed), which is index metadata, not data.
+# - build_*: one corpus pass, written as a manifest table
+#   (writeops.open_index) value-partitioned on a derived column (IVF and
+#   IVF-PQ: __cell; LSH: (__band, __bucket)), the frozen parameters
+#   (centroids / codebooks / plane seed) riding its commit.
+# - *_topk_indexed: the probe computes its partitions on the driver from
+#   the parameters and reads ONLY their committed files (PartitionFilters
+#   at the scan — verified by unit test) under the committed schema, so
+#   building the probe runs no Spark job; it runs exact re-ranking on
+#   those candidates and never collects corpus data to the driver.
 #
 # Trade-off noted: the LSH index stores the vector once per band
 # (replication = bands, default 4) so probes re-rank without joining back
 # to the corpus — the standard inverted-index trade.
 
-_IVF_META = "_ivf_meta.json"
-_ANN_META = "_ann_meta.json"
+# (sub-directory, directory columns) of each index's one table
+_CELL_TABLES = [("vectors", ("__cell",))]
+_ANN_TABLES = [("buckets", ("__band", "__bucket"))]
+
+
+def _nearest_cells(centroids, query_vec, n_probe: int) -> list[int]:
+    """The ``n_probe`` cells nearest the query: pure driver arithmetic
+    over n_centroids floats (rounded-distance + lowest-cid tie-break,
+    the oracle-replay protocol)."""
+    dists = [
+        (round(sum((c - q) ** 2 for c, q in zip(cent, query_vec)), 6), i)
+        for i, cent in enumerate(centroids)
+    ]
+    return [i for _, i in sorted(dists)[:n_probe]]
 
 
 def build_ivf_index(
@@ -635,28 +650,19 @@ def build_ivf_index(
     sample_size: int = 2048,
     seed: int = 42,
 ) -> list[list[float]]:
-    """Build + persist an IVF index: vectors parquet-partitioned by
-    ``__cell``, centroids in a sidecar. Returns the centroids.
+    """Build + persist an IVF index: vectors partitioned by ``__cell``,
+    the centroids riding the same commit. Returns the centroids.
 
     The driver-side k-means sample collect happens HERE (build time,
     bounded by sample_size) — never on the query path.
     """
-    import json
-    import os
-
     indexed, cent = ivf_index(df, id_col, vec_col, n_centroids, sample_size, seed)
-    (
-        indexed.repartition(n_centroids, F.col("__cell"))
-        .write.mode("overwrite")
-        .partitionBy("__cell")
-        .parquet(os.path.join(path, "vectors"))
+    [vectors] = open_index(df.sparkSession, path, "ivf", _CELL_TABLES)
+    vectors.overwrite(
+        indexed,
+        params={"centroids": cent, "id_col": id_col, "vec_col": vec_col,
+                "n_centroids": n_centroids, "seed": seed},
     )
-    with open(os.path.join(path, _IVF_META), "w") as f:
-        json.dump(
-            {"centroids": cent, "id_col": id_col, "vec_col": vec_col,
-             "n_centroids": n_centroids, "seed": seed},
-            f,
-        )
     return cent
 
 
@@ -669,22 +675,12 @@ def ivf_topk_indexed(
 ) -> DataFrame:
     """Probe a persisted IVF index: read only the ``n_probe`` cells
     nearest the query (partition-pruned scan), exact-score, top-k."""
-    import json
-    import os
-
-    with open(os.path.join(path, _IVF_META)) as f:
-        meta = json.load(f)
+    [vectors] = open_index(spark, path, "ivf", _CELL_TABLES)
+    snap = vectors.snapshot()
+    meta = snap.params
     id_col, vec_col = meta["id_col"], meta["vec_col"]
-    # nearest cells: pure driver arithmetic over n_centroids floats
-    # (rounded-distance + lowest-cid tie-break, the oracle-replay protocol)
-    dists = [
-        (round(sum((c - q) ** 2 for c, q in zip(cent, query_vec)), 6), i)
-        for i, cent in enumerate(meta["centroids"])
-    ]
-    probes = [i for _, i in sorted(dists)[:n_probe]]
-    cand = spark.read.parquet(os.path.join(path, "vectors")).filter(
-        F.col("__cell").isin(probes)
-    )
+    probes = _nearest_cells(meta["centroids"], query_vec, n_probe)
+    cand = vectors.read_partitions(probes, version=snap.version)
     return (
         cand.select(
             F.col(id_col),
@@ -721,7 +717,10 @@ def _ann_exploded(
                 )
             ).alias("p"),
         )
-        .select(id_col, vec_col, F.col("p.band").alias("__band"), F.col("p.bucket").alias("__bucket"))
+        .select(
+            id_col, vec_col, F.col("p.band").alias("__band"),
+            F.col("p.bucket").cast("int").alias("__bucket"),
+        )
     )
 
 
@@ -729,25 +728,16 @@ def append_to_ivf_index(df: DataFrame, path: str) -> None:
     """Incrementally add vectors to a persisted IVF index — no k-means
     rerun, no rewrite of existing cells.
 
-    New vectors are assigned to the EXISTING centroids (read from the
-    sidecar) and appended to their cell partitions; untouched cell files
-    are never opened. Probes see old + new vectors immediately. Centroid
-    drift is the documented rebuild trigger: if the appended distribution
+    New vectors are assigned to the EXISTING (frozen) centroids and
+    appended to their cell partitions; untouched cell files are never
+    opened. Probes see old + new vectors immediately. Centroid drift is
+    the documented rebuild trigger: if the appended distribution
     diverges from what k-means saw, recall decays and a periodic
     ``build_ivf_index`` refresh re-balances the cells.
     """
-    import json
-    import os
-
-    with open(os.path.join(path, _IVF_META)) as f:
-        meta = json.load(f)
-    assigned = _assign_cells(df, meta["centroids"], meta["vec_col"])
-    (
-        assigned.repartition(meta["n_centroids"], F.col("__cell"))
-        .write.mode("append")
-        .partitionBy("__cell")
-        .parquet(os.path.join(path, "vectors"))
-    )
+    [vectors] = open_index(df.sparkSession, path, "ivf", _CELL_TABLES)
+    meta = vectors.snapshot().params
+    vectors.append(_assign_cells(df, meta["centroids"], meta["vec_col"]))
 
 
 def append_to_ann_index(df: DataFrame, path: str) -> None:
@@ -757,19 +747,10 @@ def append_to_ann_index(df: DataFrame, path: str) -> None:
     appended rows are bit-identical to what a full rebuild would produce
     — an appended index IS the rebuilt index, no drift caveat.
     """
-    import json
-    import os
-
-    with open(os.path.join(path, _ANN_META)) as f:
-        meta = json.load(f)
+    [buckets] = open_index(df.sparkSession, path, "ann", _ANN_TABLES)
+    meta = buckets.snapshot().params
     planes = _hyperplanes(meta["dim"], meta["n_planes"], meta["seed"])
-    exploded = _ann_exploded(df, planes, meta["bands"], meta["id_col"], meta["vec_col"])
-    (
-        exploded.repartition(meta["bands"], F.col("__band"), F.col("__bucket"))
-        .write.mode("append")
-        .partitionBy("__band", "__bucket")
-        .parquet(os.path.join(path, "buckets"))
-    )
+    buckets.append(_ann_exploded(df, planes, meta["bands"], meta["id_col"], meta["vec_col"]))
 
 
 def build_ann_index(
@@ -784,24 +765,14 @@ def build_ann_index(
     """Build + persist a banded hyperplane-LSH index: one corpus pass
     computes the packed signature, explodes it into (band, bucket) rows,
     and writes parquet partitioned by ``(__band, __bucket)``."""
-    import json
-    import os
-
     dim = len(df.select(vec_col).first()[0])
     planes = _hyperplanes(dim, n_planes, seed)
-    exploded = _ann_exploded(df, planes, bands, id_col, vec_col)
-    (
-        exploded.repartition(bands, F.col("__band"), F.col("__bucket"))
-        .write.mode("overwrite")
-        .partitionBy("__band", "__bucket")
-        .parquet(os.path.join(path, "buckets"))
+    [buckets] = open_index(df.sparkSession, path, "ann", _ANN_TABLES)
+    buckets.overwrite(
+        _ann_exploded(df, planes, bands, id_col, vec_col),
+        params={"id_col": id_col, "vec_col": vec_col, "n_planes": n_planes,
+                "bands": bands, "seed": seed, "dim": dim},
     )
-    with open(os.path.join(path, _ANN_META), "w") as f:
-        json.dump(
-            {"id_col": id_col, "vec_col": vec_col, "n_planes": n_planes,
-             "bands": bands, "seed": seed, "dim": dim},
-            f,
-        )
 
 
 def ann_topk_indexed(
@@ -813,11 +784,9 @@ def ann_topk_indexed(
     """Probe a persisted LSH index: regenerate the (seeded, deterministic)
     planes driver-side, hash the query, and read ONLY the ``bands``
     matching (band, bucket) partitions; exact-score those candidates."""
-    import json
-    import os
-
-    with open(os.path.join(path, _ANN_META)) as f:
-        meta = json.load(f)
+    [buckets] = open_index(spark, path, "ann", _ANN_TABLES)
+    snap = buckets.snapshot()
+    meta = snap.params
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     planes = _hyperplanes(meta["dim"], meta["n_planes"], meta["seed"])
     width = meta["n_planes"] // meta["bands"]
@@ -826,14 +795,9 @@ def ann_topk_indexed(
     for i, p in enumerate(planes):
         if sum(a * b for a, b in zip(p, query_vec)) >= 0:
             qsig |= 1 << i
-    pred = None
-    for b in range(meta["bands"]):
-        qband = (qsig >> (b * width)) & mask
-        term = (F.col("__band") == b) & (F.col("__bucket") == qband)
-        pred = term if pred is None else (pred | term)
+    hit = [(b, (qsig >> (b * width)) & mask) for b in range(meta["bands"])]
     cand = (
-        spark.read.parquet(os.path.join(path, "buckets"))
-        .filter(pred)
+        buckets.read_partitions(hit, version=snap.version)
         .dropDuplicates([id_col])  # a vector can match the query in >1 band
     )
     return (
@@ -1447,9 +1411,6 @@ def pq_topk_rescored(
     )
 
 
-_IVFPQ_META = "_ivfpq_meta.json"
-
-
 def build_ivfpq_index(
     df: DataFrame,
     path: str,
@@ -1463,8 +1424,8 @@ def build_ivfpq_index(
     residual: bool = True,
 ) -> None:
     """Persist an IVF-PQ index (the canonical production ANN layout —
-    FAISS's IVFPQ): vectors + their PQ codes parquet-partitioned by
-    coarse cell, coarse centroids and codebooks in a sidecar. A probe
+    FAISS's IVFPQ): vectors + their PQ codes partitioned by coarse
+    cell, coarse centroids and codebooks riding the same commit. A probe
     then (1) partition-prunes to n_probe cells, (2) shortlists in the
     compressed domain (ADC over m small codes), (3) exact-rescores only
     the shortlist rows — three successively tinier data volumes, which
@@ -1485,11 +1446,8 @@ def build_ivfpq_index(
     ADC recall at cheap operating points rises (measured in
     ANN_EVAL.md: ivfpq(4,100) 0.765 -> >=0.9 recall@10 on the eval
     corpus). ``residual=False`` keeps the round-5 one-global-codebook
-    layout; probes read the flag from the sidecar, so both index
-    generations stay probeable."""
-    import json
-    import os
-
+    layout; probes read the flag from the frozen parameters, so both
+    index generations stay probeable."""
     indexed, cent = ivf_index(df, id_col, vec_col, n_centroids, sample_size)
     if residual:
         books = pq_train(
@@ -1507,58 +1465,13 @@ def build_ivfpq_index(
             sample_size=sample_size, iters=pq_iters,
         )
         encoded = pq_encode(indexed, books, vec_col=vec_col, out_col="pq_code")
-    (
-        encoded.repartition(n_centroids, F.col("__cell"))
-        .write.mode("overwrite")
-        .partitionBy("__cell")
-        .parquet(os.path.join(path, "vectors"))
+    [vectors] = open_index(df.sparkSession, path, "ivfpq", _CELL_TABLES)
+    vectors.overwrite(
+        encoded,
+        params={"centroids": cent, "codebooks": books, "id_col": id_col,
+                "vec_col": vec_col, "n_centroids": n_centroids, "m": m,
+                "nbits": nbits, "residual": residual},
     )
-    # parquet-footer count of what probes will see: feeds the probe's
-    # scale-aware default shortlist (~1% of the corpus, round 9). Footer
-    # metadata, not a Spark count() job — the count job was measurable
-    # against the whole build (same lesson as r7's semantic_dedup
-    # cluster sizing).
-    n_vec = _parquet_dir_num_rows(os.path.join(path, "vectors"))
-    if n_vec is None:  # non-local FS or unreadable footers: one job
-        n_vec = df.sparkSession.read.parquet(
-            os.path.join(path, "vectors")
-        ).count()
-    with open(os.path.join(path, _IVFPQ_META), "w") as f:
-        json.dump(
-            {"centroids": cent, "codebooks": books, "id_col": id_col,
-             "vec_col": vec_col, "n_centroids": n_centroids, "m": m,
-             "nbits": nbits, "residual": residual, "n_vectors": n_vec},
-            f,
-        )
-
-
-def _parquet_dir_num_rows(path: str) -> int | None:
-    """Total rows under a (possibly hive-partitioned) parquet dir from
-    FOOTER metadata — a driver-side pyarrow read, no Spark job. Returns
-    None when NO parquet file was seen (e.g. a non-local path os.walk
-    can't traverse) or when any footer can't be read, so the caller's
-    count-job fallback actually runs — returning 0 here would persist
-    n_vectors=0 and silently floor the scale-aware shortlist at its
-    100-row minimum (r9 advice). pyarrow raises its own exception types
-    (ArrowInvalid for corrupt footers), not just OSError, so the except
-    is broad."""
-    import os
-
-    try:
-        import pyarrow.parquet as pq
-    except ImportError:  # pragma: no cover - pyarrow ships with pyspark
-        return None
-    total = 0
-    seen = False
-    try:
-        for root, _dirs, files in os.walk(path):
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    total += pq.read_metadata(os.path.join(root, fn)).num_rows
-                    seen = True
-    except Exception:
-        return None
-    return total if seen else None
 
 
 def _residual_adc_shortlist(
@@ -1628,12 +1541,12 @@ def _resolve_ivfpq_defaults(
     vectors recalls 0.95 at nbits=8 on both tiers. So
     ``n_probe=None`` -> max(1, n_centroids // 4) and
     ``shortlist=None`` -> max(100, 1% of the indexed vector count)
-    (the ``n_vectors`` sidecar stat; legacy sidecars without it fall
-    back to 100). Explicit values always win."""
+    (``n_vectors``, the committed snapshot's footer row count; unknown
+    falls back to 100). Explicit values always win."""
     if n_probe is None:
         n_probe = max(1, int(meta.get("n_centroids", 4)) // 4)
     if shortlist is None:
-        shortlist = max(100, int(0.01 * meta.get("n_vectors", 0)))
+        shortlist = max(100, int(0.01 * (meta.get("n_vectors") or 0)))
     return int(n_probe), int(shortlist)
 
 
@@ -1651,21 +1564,13 @@ def ivfpq_topk_indexed(
     lookups — per-cell LUTs when the index is residual-encoded),
     exact-cosine rescore of the shortlist rows only. ``n_probe`` /
     ``shortlist`` default scale-aware (see _resolve_ivfpq_defaults)."""
-    import json
-    import os
-
-    with open(os.path.join(path, _IVFPQ_META)) as f:
-        meta = json.load(f)
+    [vectors] = open_index(spark, path, "ivfpq", _CELL_TABLES)
+    snap = vectors.snapshot()
+    meta = dict(snap.params, n_vectors=snap.rows)
     n_probe, shortlist = _resolve_ivfpq_defaults(meta, n_probe, shortlist)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
-    dists = [
-        (round(sum((c - q) ** 2 for c, q in zip(cent, query_vec)), 6), i)
-        for i, cent in enumerate(meta["centroids"])
-    ]
-    probes = [i for _, i in sorted(dists)[:n_probe]]
-    cand = spark.read.parquet(os.path.join(path, "vectors")).filter(
-        F.col("__cell").isin(probes)
-    )
+    probes = _nearest_cells(meta["centroids"], query_vec, n_probe)
+    cand = vectors.read_partitions(probes, version=snap.version)
     if meta.get("residual"):
         short = _residual_adc_shortlist(
             cand, meta, query_vec, probes, shortlist, id_col
@@ -1695,7 +1600,7 @@ def append_to_ivfpq_index(df: DataFrame, path: str) -> None:
     k-means rerun, no codebook retrain, no rewrite of existing cells.
 
     New vectors are assigned to the EXISTING coarse centroids and
-    encoded with the EXISTING codebooks (both from the sidecar), then
+    encoded with the EXISTING codebooks (both frozen), then
     appended to their cell partitions; untouched cell files are never
     opened, and probes see old + new vectors immediately. Because cell
     assignment and PQ encoding are pure functions of (frozen artifacts,
@@ -1703,34 +1608,13 @@ def append_to_ivfpq_index(df: DataFrame, path: str) -> None:
     same vectors at build time would have produced. Centroid/codebook
     drift is the documented rebuild trigger, same as the IVF index.
     """
-    import json
-    import os
-
-    with open(os.path.join(path, _IVFPQ_META)) as f:
-        meta = json.load(f)
+    [vectors] = open_index(df.sparkSession, path, "ivfpq", _CELL_TABLES)
+    meta = vectors.snapshot().params
     assigned = _assign_cells(df, meta["centroids"], meta["vec_col"])
-    encoded = pq_encode(
-        assigned, meta["codebooks"], vec_col=meta["vec_col"], out_col="pq_code",
-        centroids=meta["centroids"] if meta.get("residual") else None,
-        cell_col="__cell",
+    vectors.append(
+        pq_encode(
+            assigned, meta["codebooks"], vec_col=meta["vec_col"], out_col="pq_code",
+            centroids=meta["centroids"] if meta.get("residual") else None,
+            cell_col="__cell",
+        )
     )
-    (
-        encoded.repartition(meta["n_centroids"], F.col("__cell"))
-        .write.mode("append")
-        .partitionBy("__cell")
-        .parquet(os.path.join(path, "vectors"))
-    )
-    # keep the probe's scale-aware default shortlist honest: refresh
-    # the vector-count stat from the written footers (atomic replace;
-    # a stale count only under-sizes a DEFAULT shortlist, never an
-    # explicit one)
-    n_vec = _parquet_dir_num_rows(os.path.join(path, "vectors"))
-    meta["n_vectors"] = (
-        n_vec
-        if n_vec is not None
-        else df.sparkSession.read.parquet(os.path.join(path, "vectors")).count()
-    )
-    tmp = os.path.join(path, _IVFPQ_META + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, _IVFPQ_META))

@@ -37,6 +37,7 @@ import os
 import shutil
 import uuid
 from dataclasses import dataclass
+from typing import Callable, NamedTuple
 from urllib.parse import unquote
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -138,14 +139,22 @@ class Layout:
             raise ValueError(f"partitioned write needs columns {missing} in the frame")
         return df.withColumn(_BUCKET, bucket_expr(self.keys, self.n)) if self.n else df
 
+    def partition_values(self, rel: str) -> tuple[str | None, ...]:
+        """The values a hive directory (or a file under one) holds, per
+        directory column, as Spark wrote them before URL-escaping:
+        ``s=a%3Ab/part-0.parquet`` -> ``("a:b",)``; None for a level the
+        path lacks."""
+        parts = rel.split(os.sep)
+        out = []
+        for i, c in enumerate(self.dirs):
+            head, prefix = (parts[i] if i < len(parts) else ""), f"{c}="
+            out.append(unquote(head[len(prefix):]) if head.startswith(prefix) else None)
+        return tuple(out)
+
     def partition_of(self, rel: str) -> str | None:
-        """The directory value a hive directory (or a file path under
-        one) holds, as the text Spark wrote before URL-escaping it:
-        ``s=a%3Ab/part-0.parquet`` -> ``a:b``. None outside the
-        (outermost) directory column."""
-        head = rel.split(os.sep, 1)[0]
-        prefix = f"{self.dirs[0]}="
-        return unquote(head[len(prefix):]) if head.startswith(prefix) else None
+        """The outermost directory value of ``rel``
+        (:meth:`partition_values`)."""
+        return self.partition_values(rel)[0]
 
     def meta(self) -> dict:
         if self.n:
@@ -162,6 +171,17 @@ class Layout:
         if kind == "values":
             return Layout(tuple(m["cols"]))
         return None
+
+
+class Snapshot(NamedTuple):
+    """A manifest table's newest commit: its frozen parameters (None if
+    no commit set any), data file count, and total rows (None when a
+    file's footer count was not recorded)."""
+
+    version: int
+    params: dict | None
+    files: int
+    rows: int | None
 
 
 class ParquetTable:
@@ -395,11 +415,13 @@ class ParquetTable:
                         else [min(prev[0], mn), max(prev[1], mx)]
                     )
             keep = {k: v for k, v in cols.items() if v is not None}
-            if keep:
-                out[rel] = dict(sorted(keep.items())[: self._MAX_STATS_COLUMNS])
+            out[rel] = dict(sorted(keep.items())[: self._MAX_STATS_COLUMNS])
+            # no column starts with "_" here, so the row count never
+            # shadows a column's range
+            out[rel]["_rows"] = md.num_rows
         return out
 
-    def _commit(self, make, data_change: bool = True) -> int:
+    def _commit(self, make, data_change: bool = True, params: dict | None = None) -> int:
         """Commit the next manifest version. ``make(prev_files,
         prev_schema) -> (files, schema_json)`` computes the new complete
         file set FROM the snapshot being replaced, and is re-invoked on
@@ -418,7 +440,10 @@ class ParquetTable:
         add/remove delta against the previous snapshot, so a commit on
         a million-file table writes O(changed files) of log, and a
         reader replays at most interval-1 deltas from the nearest
-        checkpoint (Delta's log + checkpoint compaction shape)."""
+        checkpoint (Delta's log + checkpoint compaction shape).
+
+        ``params`` become the frozen parameters (:meth:`snapshot`) in the
+        same put-if-absent as the files; later commits carry them on."""
         self._backend.ensure(self._log_dir())
         while True:
             latest = self._latest_manifest()
@@ -457,6 +482,12 @@ class ParquetTable:
                 streams[sid] = int(bid)
             if streams:
                 doc["streams"] = streams
+            # frozen parameters: this commit's, else the tip's carried on
+            kept = params
+            if kept is None and latest is not None:
+                kept = latest[1].get("params")
+            if kept is not None:
+                doc["params"] = kept
             # put-if-absent: atomic; fails iff a concurrent writer took
             # this version first — then rebase onto the new tip
             if not self._backend.try_commit(
@@ -490,6 +521,45 @@ class ParquetTable:
             return None
         v = latest[1].get("streams", {}).get(str(stream_id))
         return None if v is None else int(v)
+
+    def write_batch(self, stream_id: str, batch_id: int, write: Callable[[], object]) -> bool:
+        """Run ``write`` (one committing write: an :meth:`append`, an
+        :func:`apply_write_op`) once as batch ``batch_id`` of
+        ``stream_id``: the id rides the write's commit, a replay of the
+        committed batch is skipped, and a lower id (a reset checkpoint)
+        raises. Returns whether ``write`` ran."""
+        last = self.last_stream_batch(stream_id)
+        if last is not None and batch_id < last:
+            raise RuntimeError(
+                f"stream {stream_id!r}: batch {batch_id} is below the "
+                f"committed watermark {last} of {self.path} — the stream's "
+                "checkpoint was reset. Use a new checkpoint (a fresh "
+                "stream id) or a fresh table."
+            )
+        if last is not None and batch_id == last:
+            return False
+        self.stream_commit_meta(stream_id, batch_id)
+        try:
+            write()
+        finally:
+            # a write that raised or committed nothing must not leave the
+            # watermark armed for a later unrelated commit
+            self.stream_commit_abort()
+        return True
+
+    def snapshot(self) -> Snapshot:
+        """The newest committed :class:`Snapshot`. Raises before the
+        first commit, and always for a legacy table."""
+        latest = self._latest_manifest()
+        if latest is None:
+            raise FileNotFoundError(f"no committed version of {self.path}")
+        ver, doc = latest
+        stats = doc.get("stats", {})
+        rows = [stats.get(f, {}).get("_rows") for f in doc["files"]]
+        return Snapshot(
+            ver, doc.get("params"), len(rows),
+            None if None in rows else sum(rows),
+        )
 
     def _stage_write(self, df: DataFrame) -> tuple[list[str], str | None]:
         """Write ``df`` through the normal layout writers into a staging
@@ -552,25 +622,38 @@ class ParquetTable:
         added by later writes join the table schema (older files read
         them as null); same-name columns must keep their type — a type
         flip raises instead of silently corrupting (Delta's mergeSchema
-        contract)."""
+        contract). Types that differ only in nested nullability (a
+        frame's ``array<bigint>``, a footer's) merge to the nullable one."""
         if prev is None or new is None or prev == new:
             return new or prev
-        from pyspark.sql.types import StructType
+        from pyspark.sql.types import StructField, StructType, _parse_datatype_json_value
+
+        def nullable(j):
+            if isinstance(j, dict):
+                return {
+                    k: True if k in ("containsNull", "valueContainsNull", "nullable")
+                    else nullable(v)
+                    for k, v in j.items()
+                }
+            return [nullable(v) for v in j] if isinstance(j, list) else j
 
         pf = StructType.fromJson(json.loads(prev))
         nf = StructType.fromJson(json.loads(new))
-        by_name = {f.name: f for f in pf.fields}
+        by_name = {f.name: i for i, f in enumerate(pf.fields)}
         out = list(pf.fields)
         for f in nf.fields:
-            old = by_name.get(f.name)
-            if old is None:
+            i = by_name.get(f.name)
+            if i is None:
                 out.append(f)
-            elif old.dataType != f.dataType:
-                raise ValueError(
-                    f"schema drift changes column {f.name!r} type "
-                    f"{old.dataType.simpleString()} -> {f.dataType.simpleString()}; "
-                    "rewrite the table (overwrite) to change types"
-                )
+            elif out[i].dataType != f.dataType:
+                loose = nullable(out[i].dataType.jsonValue())
+                if loose != nullable(f.dataType.jsonValue()):
+                    raise ValueError(
+                        f"schema drift changes column {f.name!r} type "
+                        f"{out[i].dataType.simpleString()} -> {f.dataType.simpleString()}; "
+                        "rewrite the table (overwrite) to change types"
+                    )
+                out[i] = StructField(f.name, _parse_datatype_json_value(loose), True, out[i].metadata)
         return StructType(out).json()
 
     # -- layout ---------------------------------------------------------
@@ -987,18 +1070,30 @@ class ParquetTable:
             .withColumn("commit_version", F.lit(int(to_version)))
         )
 
-    def read_partitions(self, values: list) -> DataFrame:
-        """Partition-pruned read of a table with one directory level:
-        only the directories holding ``values`` (as :func:`_touched`
-        returns them) are scanned. The filter sits on the directory
-        column, so Spark prunes partitions; manifest mode also prunes
-        the file list before Spark builds a file index."""
+    def read_partitions(self, values: list, version: int | None = None) -> DataFrame:
+        """Partition-pruned read: only the directories holding
+        ``values`` (as :func:`_touched` returns them; a tuple of one
+        value per directory level when the layout has several) are
+        scanned. The filter sits on the directory columns, so Spark
+        prunes partitions; manifest mode also prunes the file list
+        before Spark builds a file index. ``version`` reads that
+        manifest snapshot."""
         layout = self.layout
-        held = {str(v) for v in values}
-        df = self._read(
-            lambda f, _stats: layout.partition_of(f) in held,
-            lambda df: F.col(layout.dirs[0]).isin(list(values)),
-        )
+        keys = [tuple(v) if len(layout.dirs) > 1 else (v,) for v in values]
+        held = {tuple(str(x) for x in k) for k in keys}
+
+        def where(df):
+            if len(layout.dirs) == 1:
+                return F.col(layout.dirs[0]).isin(list(values))
+            cond = F.lit(False)
+            for k in keys:
+                term = F.lit(True)
+                for c, x in zip(layout.dirs, k):
+                    term = term & (F.col(c) == x)
+                cond = cond | term
+            return cond
+
+        df = self._read(lambda f, _stats: layout.partition_values(f) in held, where, version)
         if df is None:
             raise FileNotFoundError(self.path)
         return df
@@ -1029,17 +1124,20 @@ class ParquetTable:
         self._write(df, self.path, "append")
         self._touch()
 
-    def overwrite(self, df: DataFrame) -> None:
+    def overwrite(self, df: DataFrame, params: dict | None = None) -> None:
         """Full-state replace via stage + atomic swap (safe
         self-reference). Manifest mode: the new state's files land
         invisibly, then one manifest commit points the table at them —
         readers see the old snapshot until the commit, then the new one;
-        never a mix."""
+        never a mix. ``params`` (manifest mode only) become the table's
+        frozen parameters in that same commit (:meth:`snapshot`)."""
         if self._is_manifest():
             files, schema = self._stage_write(df)
-            self._commit(lambda prev, ps: (files, schema or ps))
+            self._commit(lambda prev, ps: (files, schema or ps), params=params)
             self._touch()
             return
+        if params is not None:
+            raise ValueError("frozen parameters need a manifest table")
         staged = f"{self.path}.__staged_{uuid.uuid4().hex[:8]}"
         self._write(df, staged, "overwrite")
         backup = f"{self.path}.__old_{uuid.uuid4().hex[:8]}"
@@ -1049,6 +1147,52 @@ class ParquetTable:
         if os.path.exists(backup):
             shutil.rmtree(backup)
         self._touch()
+
+    def adopt(self, params: dict | None = None) -> None:
+        """Commit the data files a directory written without a manifest
+        holds as manifest version 0, with ``params`` as its frozen
+        parameters. Nothing is rewritten; an interrupted adoption leaves
+        no committed version, so running it again completes it."""
+        self._backend.ensure(self._log_dir())
+        self._write_meta(self.layout)
+        files = list(self._data_files())
+        schema = self.spark.read.parquet(self.path).schema.json() if files else None
+        self._commit(lambda prev, ps: (sorted(files), schema), params=params)
+
+    def _data_files(self):
+        """Every data file under the directory, committed or not, as a
+        path relative to it."""
+        for root, dirs, fns in os.walk(self.path):
+            # hive directories of derived columns start with "_" too
+            dirs[:] = [d for d in dirs if not d.startswith(("_", ".")) or "=" in d]
+            for fn in fns:
+                if not fn.startswith(("_", ".")):
+                    yield os.path.relpath(os.path.join(root, fn), self.path)
+
+    def _column_types(self) -> dict:
+        """Spark type of each column the table's data files store: the
+        committed schema in manifest mode, else one data file's footer
+        (a driver-side read, no Spark job), which holds no hive
+        directory column. Empty when there is neither."""
+        from pyspark.sql.pandas.types import from_arrow_type
+        from pyspark.sql.types import StructType
+
+        latest = self._latest_manifest() if self._is_manifest() else None
+        if latest is not None:
+            schema = latest[1].get("schema")
+            fields = StructType.fromJson(json.loads(schema)).fields if schema else []
+            return {f.name: f.dataType for f in fields}
+        import pyarrow.parquet as pq
+
+        for rel in self._data_files():
+            try:
+                return {
+                    f.name: from_arrow_type(f.type)
+                    for f in pq.read_schema(os.path.join(self.path, rel))
+                }
+            except Exception:
+                return {}
+        return {}
 
     def overwrite_partitions(self, df: DataFrame, values: list) -> None:
         """Replace ONLY the directories holding ``values`` (as
@@ -1333,6 +1477,42 @@ class ParquetTable:
             shutil.rmtree(self.path)
 
 
+# the parameter file each persisted-index kind kept beside its data
+# before the parameters rode the manifest commit
+_INDEX_SIDECARS = {
+    "dedup": "_dedup_index_meta.json",
+    "media": "_media_index_meta.json",
+    "ivf": "_ivf_meta.json",
+    "ann": "_ann_meta.json",
+    "ivfpq": "_ivfpq_meta.json",
+}
+
+
+def open_index(spark: SparkSession, path: str, kind: str, parts) -> list[ParquetTable]:
+    """The manifest tables of the ``kind`` index at ``path``, one per
+    ``(sub-directory, directory columns)`` of ``parts``, in commit
+    order: the last holds the frozen parameters and a probe starts from
+    it, so a probe never sees a commit the others lack.
+
+    An index written with a parameter sidecar and no manifest is
+    adopted first (each table's files become version 0, the last with
+    the sidecar's values as parameters) and the sidecar goes. A crash
+    midway leaves the last table uncommitted; the next open adopts again."""
+    tables = [
+        ParquetTable(spark, os.path.join(path, sub), partition_by=tuple(dirs) or None, manifest=True)
+        for sub, dirs in parts
+    ]
+    sidecar = os.path.join(path, _INDEX_SIDECARS[kind])
+    if os.path.exists(sidecar) and not tables[-1].versions():
+        with open(sidecar) as f:
+            params = json.load(f)
+        for t in tables:
+            if not t.versions():
+                t.adopt(params if t is tables[-1] else None)
+        os.remove(sidecar)
+    return tables
+
+
 def _scope(spec: TargetSpec) -> Column:
     """--tq: predicate restricting which target rows the op touches."""
     q = compile_query(spec.query)
@@ -1370,7 +1550,11 @@ def _touched(src: DataFrame, table: ParquetTable, keys) -> list | None:
     partition metadata, so it stays bounded) and on a value whose
     directory text is not ``str(value)``: null and the empty string
     (both written as the null partition), bool (``col=true``) and
-    non-str/int types."""
+    non-str/int types.
+
+    Source keys are cast to the target's key types first: the target
+    hashed its rows under its own types, and an ``int`` key hashes to
+    another bucket than the same ``bigint``."""
     layout = table.layout
     if (
         layout is None
@@ -1378,6 +1562,8 @@ def _touched(src: DataFrame, table: ParquetTable, keys) -> list | None:
         or not all(c in keys and c in src.columns for c in layout.keys)
     ):
         return None
+    types = table._column_types()
+    src = src.select(*[F.col(c).cast(types[c]).alias(c) if c in types else F.col(c) for c in layout.keys])
     vals = layout.with_dirs(src).select(layout.dirs[0]).distinct()
     if layout.n:
         return sorted(r[0] for r in vals.collect())

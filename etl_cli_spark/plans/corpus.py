@@ -367,11 +367,13 @@ def run_corpus_pipeline_streaming(
     batch's append commits with the ``(stream_id, batch_id)`` watermark
     riding the same atomic put-if-absent (the ``streaming_merge``
     recipe), so a replayed batch sees ``last_stream_batch == batch_id``
-    and skips the output append — duplicate output rows are impossible,
-    while index appends still run on replay (span: idempotent
-    overwrite; dedup signatures: self-excluded duplicates, harmless).
-    The default keeps the plain-parquet append (at-least-once output)
-    for sinks that want rename-swap tables.
+    and skips the output append — duplicate output rows are impossible.
+    The index appends are exactly-once in both modes: the span index
+    overwrites the batch's own delta, and the dedup signature append
+    carries the batch id in its manifest commits, so a replayed batch
+    adds no second copy of its signatures. The default keeps the
+    plain-parquet append (at-least-once output) for sinks that want
+    rename-swap tables.
 
     Scope of the guarantee — the Delta ``txnAppId`` caveat applies:
     batch ids are meaningful only within ONE checkpoint lineage, so the
@@ -433,39 +435,16 @@ def run_corpus_pipeline_streaming(
     ).hexdigest()[:12]
     span_stream_id = f"corpus_span_{ckpt_tag}"
     out_stream_id = f"corpus_out_{ckpt_tag}"
+    dedup_stream_id = f"corpus_dedup_{ckpt_tag}"
 
     def commit_output(kept: DataFrame, batch_id: int) -> None:
-        """Append the batch's survivors. exactly_once: the batch
-        watermark rides the append's atomic manifest commit, and a
-        replayed batch (already visible in a committed manifest) skips
-        — the streaming_merge idempotent-sink recipe."""
-        if not exactly_once:
+        """Append the batch's survivors; exactly_once: as batch
+        ``batch_id`` of the output stream (an empty batch still commits,
+        so the stream advances)."""
+        if exactly_once:
+            out.write_batch(out_stream_id, batch_id, lambda: out.append(kept))
+        else:
             out.append(kept)
-            return
-        last = out.last_stream_batch(out_stream_id)
-        if last is not None and batch_id < last:
-            # impossible within one checkpoint lineage (ids are
-            # monotonic; a crash replay re-delivers the SAME id): the
-            # checkpoint was deleted and recreated at the same path.
-            # Skipping would silently drop data a prior lineage never
-            # saw — refuse loudly instead.
-            raise RuntimeError(
-                f"stream {out_stream_id!r}: batch {batch_id} is below the "
-                f"committed watermark {last} — the checkpoint at "
-                f"{checkpoint!r} was reset. Use a NEW checkpoint dir "
-                "(fresh stream id) or a fresh output table."
-            )
-        if last is not None and batch_id == last:
-            return  # crash replay of the committed batch — idempotent skip
-        out.stream_commit_meta(out_stream_id, batch_id)
-        try:
-            out.append(kept)
-        finally:
-            # defensive: append() always commits (an empty batch commits
-            # an empty version carrying the watermark — desirable, the
-            # stream still advances), but if it ever RAISES instead, the
-            # armed watermark must not ride a later unrelated commit
-            out.stream_commit_abort()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         raw_df = batch_df  # pre-strip: what the index must sign
@@ -486,7 +465,9 @@ def run_corpus_pipeline_streaming(
             # batch to empty.
             kept = dedup_against_index(df, dedup_index_path, threshold=threshold)
             commit_output(kept, batch_id)
-            append_dedup_signatures(df, dedup_index_path)
+            append_dedup_signatures(
+                df, dedup_index_path, batch=(dedup_stream_id, batch_id)
+            )
         else:
             commit_output(df, batch_id)
         if span_index_path is not None:

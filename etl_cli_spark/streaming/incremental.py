@@ -335,11 +335,12 @@ def streaming_merge(
     - Structured Streaming's checkpoint makes each input file part of
       exactly one micro-batch (at-least-once delivery of batches);
     - the manifest commit atomically records ``(stream_id, batch_id)``
-      alongside the data files (``stream_commit_meta``), so when a
-      crash lands between the sink commit and the checkpoint commit,
-      the re-delivered batch sees ``last_stream_batch >= batch_id`` and
+      alongside the data files (``ParquetTable.write_batch``), so when
+      a crash lands between the sink commit and the checkpoint commit,
+      the re-delivered batch sees ``last_stream_batch == batch_id`` and
       skips — an idempotent sink. Data visibility and the watermark are
-      one put-if-absent, never out of sync.
+      one put-if-absent, never out of sync. A batch id below the
+      watermark means the checkpoint was reset and raises.
 
     ``spec`` is the TargetSpec for every batch (op=upsert/update/
     delete..., pk=...). Requires ``table`` to be manifest-mode (the
@@ -353,16 +354,7 @@ def streaming_merge(
         raise ValueError("streaming_merge requires a manifest-mode ParquetTable")
 
     def apply_batch(df: DataFrame, batch_id: int) -> None:
-        last = table.last_stream_batch(stream_id)
-        if last is not None and batch_id <= last:
-            return  # replayed batch — already visible in a committed manifest
-        table.stream_commit_meta(stream_id, batch_id)
-        try:
-            apply_write_op(df, table, spec)
-        finally:
-            # a no-commit batch (empty delta) must not leave the armed
-            # watermark to ride a later unrelated commit
-            table.stream_commit_abort()
+        table.write_batch(stream_id, batch_id, lambda: apply_write_op(df, table, spec))
 
     stream = spark.readStream.schema(schema).parquet(path)
     q = (

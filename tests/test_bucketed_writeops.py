@@ -405,3 +405,21 @@ def test_read_where_pins_point_lookup(spark, engine, tmp_path, manifest):
     for q in (["code=007"], ["code=abc"], ["code=7"]):
         want = codes.read().filter(compile_query(q).predicate)
         assert sorted(codes.read_where(q).collect()) == sorted(want.collect()), q
+
+
+@pytest.mark.parametrize("manifest", [False, True], ids=["legacy", "manifest"])
+def test_upsert_hashes_source_keys_under_target_types(spark, tmp_path, manifest):
+    """An ``int`` source key upserted into a ``bigint``-keyed bucketed
+    target must touch the buckets the target hashed those keys into:
+    ``xxhash64`` of an int and of the same bigint differ, so hashing
+    under the source's type rewrote the wrong buckets (updates lost in
+    legacy mode, keys kept twice in manifest mode)."""
+    t = ParquetTable(
+        spark, str(tmp_path / "t.parquet"), bucket_by=("k",), n_buckets=8, manifest=manifest
+    )
+    t.append(spark.createDataFrame([(i, "old") for i in range(40)], "k bigint, v string"))
+    src = spark.createDataFrame([(i, "new") for i in (3, 11, 19, 27, 35)], "k int, v string")
+    apply_write_op(src, t, TargetSpec(ds="t", op="upsert", pk=("k",)))
+    got = {r.k: r.v for r in t.read().collect()}
+    assert t.read().count() == 40
+    assert {k for k, v in got.items() if v == "new"} == {3, 11, 19, 27, 35}

@@ -127,6 +127,46 @@ def test_streaming_pipeline_two_drops_equal_batch(spark, engine, tmp_path):
     assert again == inc_ids
 
 
+def test_streaming_replay_does_not_duplicate_dedup_index(spark, engine, tmp_path, monkeypatch):
+    """A batch killed after its signature append, before the streaming
+    checkpoint commit, is replayed: the replay must not append its
+    signatures a second time, or the index holds every row twice and
+    ``fuzzy_join_indexed`` returns each pair twice."""
+    import etl_cli_spark.operators.dedup as dd
+    from etl_cli_spark.operators.dedup import create_dedup_index, fuzzy_join_indexed
+    from etl_cli_spark.operators.writeops import ParquetTable
+    from etl_cli_spark.plans.corpus import run_corpus_pipeline_streaming
+
+    docs = engine.read("documents")
+    src, out = str(tmp_path / "src"), str(tmp_path / "out.parquet")
+    ckpt, idx = str(tmp_path / "ckpt"), str(tmp_path / "idx")
+    create_dedup_index(spark, idx)
+    docs.filter("doc_id % 2 = 0").write.parquet(src)
+
+    def counts():
+        return {s: ParquetTable(spark, f"{idx}/{s}").read().count() for s in ("sigs", "buckets")}
+
+    real = dd.append_dedup_signatures
+
+    def crash_after(*a, **kw):
+        real(*a, **kw)
+        raise RuntimeError("injected crash after the index append")
+
+    monkeypatch.setattr(dd, "append_dedup_signatures", crash_after)
+    with pytest.raises(Exception, match="injected crash"):
+        run_corpus_pipeline_streaming(
+            spark, src, docs.schema, [], out, ckpt, dedup_index_path=idx, threshold=0.8
+        )
+    once = counts()
+    monkeypatch.setattr(dd, "append_dedup_signatures", real)
+    run_corpus_pipeline_streaming(
+        spark, src, docs.schema, [], out, ckpt, dedup_index_path=idx, threshold=0.8
+    )
+    assert counts() == once
+    pairs = fuzzy_join_indexed(docs.filter("doc_id % 2 = 1"), idx, threshold=0.8)
+    assert pairs.count() == pairs.select("left_id", "right_id").distinct().count() > 0
+
+
 def test_streaming_pipeline_stateless_stages_only(spark, tmp_path):
     """Without a dedup index the runner is a pure per-drop map: rows in
     the output are exactly the union of per-drop stage outputs."""

@@ -213,7 +213,9 @@ def crawl_docs(engine):
 
 
 def _idx_rows(spark, path, sub):
-    df = spark.read.parquet(f"{path}/{sub}")
+    from etl_cli_spark.operators.writeops import ParquetTable
+
+    df = ParquetTable(spark, f"{path}/{sub}").read()
     if sub == "buckets":
         return sorted(map(tuple, df.select("id", "band", "bucket").collect()))
     return sorted((r.id, tuple(r.hs)) for r in df.collect())
@@ -261,23 +263,15 @@ def test_dedup_index_probe_is_partition_pruned(spark, crawl_docs, tmp_path):
     """The index read inside dedup_against_index must carry a
     PartitionFilters entry on __bb — the probe touches the batch's
     bucket dirs, never the whole index."""
-    from etl_cli_spark.operators.dedup import build_dedup_index, dedup_against_index
-
-    from etl_cli_spark.operators.dedup import (
-        _base_from_meta,
-        _cross_index_losers,
-        _read_dedup_meta,
-    )
+    from etl_cli_spark.operators.dedup import build_dedup_index, fuzzy_join_indexed
 
     d = crawl_docs
     path = str(tmp_path / "pidx")
     build_dedup_index(d.filter("doc_id % 2 = 0"), path)
     # dedup_against_index eagerly checkpoints the loser-id set (cache
     # release), which erases the probe's plan from the returned frame —
-    # assert on the probe frame itself, the exact plan production runs
-    meta = _read_dedup_meta(path)
-    base = _base_from_meta(d.filter("doc_id % 97 = 0"), meta)
-    probe = _cross_index_losers(d.sparkSession, base, path, meta, 0.8)
+    # assert on fuzzy_join_indexed, the same probe left lazy
+    probe = fuzzy_join_indexed(d.filter("doc_id % 97 = 0"), path, threshold=0.8)
     plan = probe._jdf.queryExecution().executedPlan().toString()
     # several scans appear (documents has no partitions); the index
     # bucket scan must be the one carrying a non-empty __bb filter

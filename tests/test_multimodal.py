@@ -1430,8 +1430,10 @@ def test_media_index_append_equals_rebuild(spark, tmp_path):
     build_media_index(
         corpus.unionByName(batch), path2, chunks=8, n_parts=16
     )
+    from etl_cli_spark.operators.writeops import ParquetTable
+
     rows = lambda p: sorted(
-        map(tuple, spark.read.parquet(p + "/bands")
+        map(tuple, ParquetTable(spark, p + "/bands").read()
             .select("id", "sh", "chunk", "piece", "__bb").collect())
     )
     assert rows(path) == rows(path2)
@@ -1615,8 +1617,10 @@ def test_video_index_append_equals_rebuild_and_kind_guard(spark, tmp_path):
     build_media_index(
         corpus.unionByName(batch), path2, kind="video", chunks=8, n_parts=16
     )
+    from etl_cli_spark.operators.writeops import ParquetTable
+
     rows = lambda p: sorted(
-        map(tuple, spark.read.parquet(p + "/bands")
+        map(tuple, ParquetTable(spark, p + "/bands").read()
             .select("id", "sh", "chunk", "piece", "__bb").collect())
     )
     assert rows(path) == rows(path2)

@@ -187,8 +187,10 @@ def test_append_to_ann_index_equals_rebuild(spark, emb, tmp_path):
     append_to_ann_index(half_b, inc)
     build_ann_index(emb, full, n_planes=16, bands=4, seed=42)
 
-    n_inc = spark.read.parquet(f"{inc}/buckets").count()
-    assert n_inc == spark.read.parquet(f"{full}/buckets").count()
+    from etl_cli_spark.operators.writeops import ParquetTable
+
+    n_inc = ParquetTable(spark, f"{inc}/buckets").read().count()
+    assert n_inc == ParquetTable(spark, f"{full}/buckets").read().count()
     qvec = [float(x) for x in emb.filter("vec_id = 1").first().embedding]
     got_inc = [r.vec_id for r in ann_topk_indexed(spark, inc, qvec, k=10).collect()]
     got_full = [r.vec_id for r in ann_topk_indexed(spark, full, qvec, k=10).collect()]
@@ -211,7 +213,9 @@ def test_append_to_ivf_index(spark, emb, tmp_path):
     build_ivf_index(half_a, path, n_centroids=8, seed=7)
     append_to_ivf_index(half_b, path)
 
-    vecs = spark.read.parquet(f"{path}/vectors")
+    from etl_cli_spark.operators.writeops import ParquetTable
+
+    vecs = ParquetTable(spark, f"{path}/vectors").read()
     assert vecs.count() == emb.count()
     assert vecs.select("vec_id").distinct().count() == emb.count()
     # querying an appended vector's own embedding must surface it
@@ -400,8 +404,6 @@ def test_append_to_ivfpq_index(spark, emb, tmp_path):
     """Appended vectors land in the correct cells with codes
     bit-identical to encoding under the frozen artifacts, and probes
     see them immediately."""
-    import json
-
     from etl_cli_spark.operators.similarity import (
         _assign_cells,
         append_to_ivfpq_index,
@@ -409,16 +411,17 @@ def test_append_to_ivfpq_index(spark, emb, tmp_path):
         ivfpq_topk_indexed,
         pq_encode,
     )
+    from etl_cli_spark.operators.writeops import ParquetTable
 
     half_a = emb.filter("vec_id % 2 = 0")
     half_b = emb.filter("vec_id % 2 = 1")
     path = str(tmp_path / "ivfpq_inc")
     build_ivfpq_index(half_a, path, n_centroids=8, m=8, nbits=4)
     append_to_ivfpq_index(half_b, path)
-    idx = spark.read.parquet(f"{path}/vectors")
+    vectors = ParquetTable(spark, f"{path}/vectors")
+    idx = vectors.read()
     assert idx.count() == emb.count()
-    with open(f"{path}/_ivfpq_meta.json") as f:
-        meta = json.load(f)
+    meta = vectors.snapshot().params
     # frozen-artifact bit-identity for the appended rows (residual
     # indexes encode v - centroid[cell] — same artifacts, same codes)
     direct = pq_encode(
@@ -544,18 +547,16 @@ def test_ivfpq_default_operating_point_pins(spark, emb, tmp_path):
     nbits=8 residual codes plus the n_vectors stat, and probe defaults
     resolve to n_probe=n_centroids/4, shortlist=max(100, 1% of
     n_vectors) — explicit values always win."""
-    import json
-    import os
-
     from etl_cli_spark.operators.similarity import (
-        _IVFPQ_META,
         _resolve_ivfpq_defaults,
         build_ivfpq_index,
     )
+    from etl_cli_spark.operators.writeops import ParquetTable
 
     path = str(tmp_path / "idx")
     build_ivfpq_index(emb, path, n_centroids=8)
-    meta = json.load(open(os.path.join(path, _IVFPQ_META)))
+    snap = ParquetTable(spark, f"{path}/vectors").snapshot()
+    meta = dict(snap.params, n_vectors=snap.rows)
     assert meta["nbits"] == 8 and meta["residual"] is True
     assert meta["n_vectors"] == emb.count()
     assert _resolve_ivfpq_defaults(meta, None, None) == (2, 100)
@@ -607,32 +608,27 @@ def test_ivfpq_probe_plan_partition_prunes(spark, emb, tmp_path):
     assert "BroadcastNestedLoopJoin" in plan  # the 1-row LUT frame
 
 
-def test_parquet_dir_num_rows_fallback_contract(tmp_path):
-    """r9 advice: the footer counter must return None (not 0) when no
-    parquet file exists, and None on corrupt footers (pyarrow raises
-    ArrowInvalid, not OSError) — so the caller's count-job fallback
-    runs instead of persisting n_vectors=0 and flooring the
-    scale-aware shortlist."""
-    from etl_cli_spark.operators.similarity import _parquet_dir_num_rows
-
-    # empty / nonexistent dir -> None
-    assert _parquet_dir_num_rows(str(tmp_path / "nope")) is None
-    (tmp_path / "empty").mkdir()
-    assert _parquet_dir_num_rows(str(tmp_path / "empty")) is None
-
-    # real footers -> summed rows (hive-partitioned layout)
+def test_ivfpq_n_vectors_counts_committed_files_only(spark, emb, tmp_path):
+    """The probe's ``n_vectors`` is the committed snapshot's footer row
+    count: an append raises it, and a parquet file no commit lists (an
+    interrupted write) does not count."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    d = tmp_path / "vectors" / "p=1"
-    d.mkdir(parents=True)
-    pq.write_table(pa.table({"x": [1, 2, 3]}), str(d / "a.parquet"))
-    pq.write_table(pa.table({"x": [4]}), str(d / "b.parquet"))
-    assert _parquet_dir_num_rows(str(tmp_path / "vectors")) == 4
+    from etl_cli_spark.operators.similarity import (
+        append_to_ivfpq_index,
+        build_ivfpq_index,
+    )
+    from etl_cli_spark.operators.writeops import ParquetTable
 
-    # corrupt footer -> None (caller falls back), never an exception
-    (d / "c.parquet").write_bytes(b"not a parquet file")
-    assert _parquet_dir_num_rows(str(tmp_path / "vectors")) is None
+    path = str(tmp_path / "idx")
+    build_ivfpq_index(emb.filter("vec_id % 2 = 0"), path, n_centroids=8, m=8, nbits=4)
+    vectors = ParquetTable(spark, f"{path}/vectors")
+    assert vectors.snapshot().rows == emb.filter("vec_id % 2 = 0").count()
+    append_to_ivfpq_index(emb.filter("vec_id % 2 = 1"), path)
+    assert vectors.snapshot().rows == emb.count()
+    pq.write_table(pa.table({"vec_id": [1, 2, 3]}), f"{path}/vectors/__cell=0/stray.parquet")
+    assert vectors.snapshot().rows == emb.count()
 
 
 def test_kmeans_refine_matches_driver_protocol_bitwise(spark):

@@ -296,6 +296,63 @@ def test_streaming_merge_replayed_batch_skipped(spark, engine, tmp_path):
     assert all(abs(got[k] - (v + 5.0)) < 1e-9 for k, v in base.items())
 
 
+def test_streaming_merge_checkpoint_reset_raises(spark, tmp_path):
+    """A checkpoint deleted and recreated at the same path restarts
+    batch ids at 0, below the table's watermark: the drain must raise,
+    not skip the re-delivered batch — that batch carries a drop the
+    table never saw, and skipping it left the table unchanged."""
+    import shutil
+
+    import pytest as _pt
+
+    from etl_cli_spark.operators.writeops import ParquetTable
+    from etl_cli_spark.spec import TargetSpec
+    from etl_cli_spark.streaming.incremental import streaming_merge
+
+    schema = "id long, v string"
+    t = ParquetTable(spark, str(tmp_path / "t.parquet"), manifest=True)
+    drops, ckpt = str(tmp_path / "cdc"), str(tmp_path / "ckpt")
+    spec = TargetSpec(ds="t", op="upsert", pk=("id",))
+    for rows in ([(1, "a"), (2, "b")], [(3, "c")]):
+        spark.createDataFrame(rows, schema).write.mode("append").parquet(drops)
+        streaming_merge(spark, drops, spark.read.parquet(drops).schema, t, spec, ckpt)
+    assert t.last_stream_batch("default") == 1
+    before = sorted(map(tuple, t.read().collect()))
+
+    shutil.rmtree(ckpt)
+    spark.createDataFrame([(4, "d"), (1, "a2")], schema).write.mode("append").parquet(drops)
+    with _pt.raises(Exception, match="checkpoint was reset"):
+        streaming_merge(spark, drops, spark.read.parquet(drops).schema, t, spec, ckpt)
+    assert sorted(map(tuple, t.read().collect())) == before
+    assert t.last_stream_batch("default") == 1
+
+
+def test_write_batch_skips_replay_and_refuses_reset(spark, tmp_path):
+    """The one exactly-once write: a new batch id writes and records
+    the watermark in the same commit, the committed id is a no-op, a
+    lower id raises, and a write that raises leaves nothing armed."""
+    import pytest as _pt
+
+    from etl_cli_spark.operators.writeops import ParquetTable
+
+    t = ParquetTable(spark, str(tmp_path / "t.parquet"), manifest=True)
+    rows = spark.createDataFrame([(1, "a")], "id long, v string")
+    assert t.write_batch("s", 0, lambda: t.append(rows))
+    assert t.write_batch("s", 1, lambda: t.append(rows))
+    assert not t.write_batch("s", 1, lambda: t.append(rows))
+    assert t.read().count() == 2 and t.last_stream_batch("s") == 1
+    with _pt.raises(RuntimeError, match="checkpoint was reset"):
+        t.write_batch("s", 0, lambda: t.append(rows))
+
+    def boom():
+        raise OSError("injected")
+
+    with _pt.raises(OSError):
+        t.write_batch("s", 2, boom)
+    t.append(rows)
+    assert t.last_stream_batch("s") == 1
+
+
 def test_stream_commit_meta_guards(spark, engine, tmp_path):
     from etl_cli_spark.operators.writeops import ParquetTable
 
