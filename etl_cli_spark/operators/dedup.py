@@ -858,11 +858,14 @@ def minhash_dedup_canonical(
 #             pmod(xxhash64(band, bucket), n_parts) — a probe computes
 #             its own buckets' __bb values (driver list bounded by
 #             n_parts) and partition-prunes the read to those dirs. Its
-#             commits carry the signature parameters: append MUST
-#             reuse them bit-for-bit or append==rebuild breaks.
-# Every write commits sigs before buckets: a probe reaches sigs only
-# through buckets, so a failure between the two commits leaves the
-# answer of the index before the write.
+#             commits carry the signature parameters (append MUST
+#             reuse them bit-for-bit or append==rebuild breaks) and the
+#             sigs version they pair with.
+# Every write (build or append) commits sigs before buckets, and a
+# probe reads sigs at the version the buckets commit names: a failure
+# between the two commits leaves the answer of the index before the
+# write, parameters included. A rebuild keeps the replaced version's
+# files until ``vacuum`` runs on both tables.
 #
 # The index stores EVERY signed document, dropped duplicates included:
 # the greedy policy ("drop a doc that pairs with any smaller-id doc")
@@ -907,6 +910,12 @@ def _bucket_rows(base: DataFrame, n_parts: int) -> DataFrame:
     )
 
 
+# the buckets commit's parameters: ``meta`` plus the sigs version its
+# probes read
+def _paired(meta: dict, sigs) -> dict:
+    return dict(meta, versions={"sigs": sigs.snapshot().version})
+
+
 def build_dedup_index(
     df: DataFrame,
     path: str,
@@ -930,7 +939,7 @@ def build_dedup_index(
     with scope():
         base = shared(_base_from_meta(df, meta))
         sigs.overwrite(base.select("id", "hs"))
-        buckets.overwrite(_bucket_rows(base, n_parts), params=meta)
+        buckets.overwrite(_bucket_rows(base, n_parts), params=_paired(meta, sigs))
 
 
 def create_dedup_index(
@@ -952,6 +961,8 @@ def create_dedup_index(
     build_dedup_index(
         empty, path, id_col, text_col, n_shingle, num_hashes, bands, n_parts, impl
     )
+
+
 def _index_cross_pairs(base, sigs, buckets, snap, threshold):
     """(new_id, old_id, jaccard) pairs between a probe batch's signature
     base and the index whose buckets table is at snapshot ``snap`` —
@@ -989,7 +1000,8 @@ def _index_cross_pairs(base, sigs, buckets, snap, threshold):
             "new_id",
         )
         .join(
-            sigs.read().select(F.col("id").alias("old_id"), F.col("hs").alias("old_hs")),
+            sigs.read_version(snap.params["versions"]["sigs"])
+            .select(F.col("id").alias("old_id"), F.col("hs").alias("old_hs")),
             "old_id",
         )
         .withColumn("jaccard", jaccard(F.col("new_hs"), F.col("old_hs")))
@@ -1089,14 +1101,16 @@ def append_dedup_signatures(
     meta = buckets.snapshot().params
     with scope():
         base = shared(_base_from_meta(df, meta))
-        for table, rows in (
-            (sigs, base.select("id", "hs")),
-            (buckets, _bucket_rows(base, meta["n_parts"])),
+        for table, write in (
+            (sigs, lambda: sigs.append(base.select("id", "hs"))),
+            (buckets, lambda: buckets.append(
+                _bucket_rows(base, meta["n_parts"]), params=_paired(meta, sigs)
+            )),
         ):
             if batch is None:
-                table.append(rows)
+                write()
             else:
-                table.write_batch(*batch, lambda: table.append(rows))
+                table.write_batch(*batch, write)
 
 
 def append_to_dedup_index(

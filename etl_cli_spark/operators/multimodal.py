@@ -1362,7 +1362,8 @@ def video_neardup(
 #           the fingerprint is 8 bytes and rides inline with its band
 #           row, so the Hamming verify needs no second join. Its
 #           commits carry the frozen parameters — append MUST reuse
-#           them bit-for-bit or append==rebuild breaks.
+#           them bit-for-bit or append==rebuild breaks. A rebuild keeps
+#           the replaced version's files until ``vacuum`` runs on it.
 #
 # Ids must be crawl-monotone (appended batches carry larger ids than
 # everything indexed) — the contract the text index already documents.

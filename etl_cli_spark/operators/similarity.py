@@ -614,7 +614,9 @@ def ivf_topk(
 # - build_*: one corpus pass, written as a manifest table
 #   (writeops.open_index) value-partitioned on a derived column (IVF and
 #   IVF-PQ: __cell; LSH: (__band, __bucket)), the frozen parameters
-#   (centroids / codebooks / plane seed) riding its commit.
+#   (centroids / codebooks / plane seed) riding its commit. A rebuild
+#   is a new manifest version: the replaced version's files stay on
+#   disk until ``vacuum`` runs on <path>/vectors (LSH: <path>/buckets).
 # - *_topk_indexed: the probe computes its partitions on the driver from
 #   the parameters and reads ONLY their committed files (PartitionFilters
 #   at the scan — verified by unit test) under the committed schema, so

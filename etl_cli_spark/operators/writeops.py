@@ -151,11 +151,6 @@ class Layout:
             out.append(unquote(head[len(prefix):]) if head.startswith(prefix) else None)
         return tuple(out)
 
-    def partition_of(self, rel: str) -> str | None:
-        """The outermost directory value of ``rel``
-        (:meth:`partition_values`)."""
-        return self.partition_values(rel)[0]
-
     def meta(self) -> dict:
         if self.n:
             return {"cols": list(self.keys), "n": self.n}
@@ -759,9 +754,11 @@ class ParquetTable:
         if layout is None:
             self._writer(self._clustered(df)).mode(mode).parquet(path)
         else:
-            dirs = [F.col(c) for c in layout.dirs]
-            df = layout.with_dirs(df)
-            df = df.repartition(layout.n, *dirs) if layout.n else df.repartition(*dirs)
+            # a fixed task count: a directory value lands in one task
+            # whatever the count, and adaptive execution would coalesce
+            # a small write into one task writing every directory in turn
+            n = layout.n or int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+            df = layout.with_dirs(df).repartition(n, *[F.col(c) for c in layout.dirs])
             out = self._clustered(df, lead=layout.dirs)
             self._writer(out).mode(mode).partitionBy(*layout.dirs).parquet(path)
         self._write_meta(layout, base=meta_dir or path)
@@ -1107,7 +1104,8 @@ class ParquetTable:
         except OSError:
             pass
 
-    def append(self, df: DataFrame) -> None:
+    def append(self, df: DataFrame, params: dict | None = None) -> None:
+        """Add ``df``'s rows; ``params`` as in :meth:`overwrite`."""
         if self._is_manifest():
             files, schema = self._stage_write(df)
             # rebase-safe under concurrency: an append only ADDS its own
@@ -1117,10 +1115,13 @@ class ParquetTable:
                 lambda prev, ps: (
                     list(prev) + files,
                     self._merge_schema_json(ps, schema),
-                )
+                ),
+                params=params,
             )
             self._touch()
             return
+        if params is not None:
+            raise ValueError("frozen parameters need a manifest table")
         self._write(df, self.path, "append")
         self._touch()
 
@@ -1217,7 +1218,7 @@ class ParquetTable:
             # disjoint concurrent rewrites compose instead of clobbering
             self._commit(
                 lambda prev, ps: (
-                    [f for f in prev if layout.partition_of(f) not in held] + files,
+                    [f for f in prev if layout.partition_values(f)[0] not in held] + files,
                     # untouched partitions keep their old files: merge
                     self._merge_schema_json(ps, schema),
                 )
@@ -1232,11 +1233,11 @@ class ParquetTable:
         moved: list[str] = []
         try:
             for entry in list(os.listdir(self.path)):
-                if layout.partition_of(entry) in held:
+                if layout.partition_values(entry)[0] in held:
                     os.rename(os.path.join(self.path, entry), os.path.join(backup, entry))
                     moved.append(entry)
             for entry in list(os.listdir(staged)):
-                if layout.partition_of(entry) in held:
+                if layout.partition_values(entry)[0] in held:
                     os.rename(os.path.join(staged, entry), os.path.join(self.path, entry))
         except BaseException:
             self._restore_swap(backup, moved)
@@ -1491,8 +1492,8 @@ _INDEX_SIDECARS = {
 def open_index(spark: SparkSession, path: str, kind: str, parts) -> list[ParquetTable]:
     """The manifest tables of the ``kind`` index at ``path``, one per
     ``(sub-directory, directory columns)`` of ``parts``, in commit
-    order: the last holds the frozen parameters and a probe starts from
-    it, so a probe never sees a commit the others lack.
+    order. The last holds the frozen parameters, which name the version
+    of each other table (``versions``) a probe reads.
 
     An index written with a parameter sidecar and no manifest is
     adopted first (each table's files become version 0, the last with
@@ -1506,9 +1507,12 @@ def open_index(spark: SparkSession, path: str, kind: str, parts) -> list[Parquet
     if os.path.exists(sidecar) and not tables[-1].versions():
         with open(sidecar) as f:
             params = json.load(f)
-        for t in tables:
+        for t in tables[:-1]:
             if not t.versions():
-                t.adopt(params if t is tables[-1] else None)
+                t.adopt()
+        if len(parts) > 1:
+            params = dict(params, versions={sub: 0 for sub, _dirs in parts[:-1]})
+        tables[-1].adopt(params)
         os.remove(sidecar)
     return tables
 

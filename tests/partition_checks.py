@@ -36,7 +36,7 @@ def partition_files(t, snap) -> dict[str, str]:
     """{relpath: directory value} of the data files in partition dirs."""
     out = {}
     for p in snap:
-        v = t.layout.partition_of(p)
+        v = t.layout.partition_values(p)[0]
         if v is not None and p.endswith(".parquet"):
             out[p] = v
     return out
@@ -69,7 +69,7 @@ def assert_upsert_scoped(t, src, pk):
     out = apply_write_op(src, t, TargetSpec(ds="t", op="upsert", pk=pk))
     after = snapshot(t.path)
     changed = {
-        t.layout.partition_of(p)
+        t.layout.partition_values(p)[0]
         for p in (set(before) ^ set(after))
         | {p for p in before if p in after and before[p] != after[p]}
     } - {None}

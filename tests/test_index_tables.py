@@ -202,16 +202,48 @@ def test_failed_dedup_append_between_commits_keeps_answer(spark, engine, tmp_pat
 
     real = ParquetTable.append
 
-    def fail_on_buckets(self, df):
+    def fail_on_buckets(self, df, **kw):
         if self.path.endswith("buckets"):
             raise OSError("injected failure between the commits")
-        return real(self, df)
+        return real(self, df, **kw)
 
     monkeypatch.setattr(ParquetTable, "append", fail_on_buckets)
     with pytest.raises(OSError, match="between the commits"):
         append_dedup_signatures(d.filter("doc_id % 4 = 2"), path)
     monkeypatch.setattr(ParquetTable, "append", real)
     assert ParquetTable(spark, f"{path}/sigs").versions() == [0, 1]
+    assert probe() == before
+
+
+def test_failed_dedup_rebuild_between_commits_keeps_answer(spark, engine, tmp_path, monkeypatch):
+    """A rebuild over another corpus with other parameters whose
+    buckets commit fails after its sigs commit landed leaves the probe
+    answer of the old index: a probe reads sigs at the version the
+    buckets commit names."""
+    from etl_cli_spark.operators.dedup import build_dedup_index, fuzzy_join_indexed
+
+    d = engine.read("documents")
+    path = str(tmp_path / "idx")
+    build_dedup_index(d.filter("doc_id % 4 = 0"), path)
+    buckets = ParquetTable(spark, f"{path}/buckets")
+    params = buckets.snapshot().params
+    probe = lambda: _rows(fuzzy_join_indexed(d.filter("doc_id % 2 = 1"), path, threshold=0.5))
+    before = probe()
+    assert before, "fixture probe should find something"
+
+    real = ParquetTable.overwrite
+
+    def fail_on_buckets(self, df, **kw):
+        if self.path.endswith("buckets"):
+            raise OSError("injected failure between the commits")
+        return real(self, df, **kw)
+
+    monkeypatch.setattr(ParquetTable, "overwrite", fail_on_buckets)
+    with pytest.raises(OSError, match="between the commits"):
+        build_dedup_index(d.filter("doc_id % 4 = 2"), path, n_shingle=5)
+    monkeypatch.undo()
+    assert ParquetTable(spark, f"{path}/sigs").versions() == [0, 1]
+    assert buckets.snapshot().params == params
     assert probe() == before
 
 

@@ -643,7 +643,7 @@ def test_first_write_crash_stays_invisible(spark, orders, tmp_path, backend):
 
     real_commit = t._commit
 
-    def dying_commit(make):
+    def dying_commit(make, **kw):
         raise RuntimeError("simulated crash before commit")
 
     t._commit = dying_commit
