@@ -2183,10 +2183,10 @@ def _q_strip_spans_indexed(spark, sf):
 
 def _q_strip_spans_compacted(spark, sf):
     """Span-index COMPACTION certified by oracle (round 9): the even
-    half is signed as a base build plus two per-batch stream deltas,
-    the index is compacted (deltas folded into one summed base behind
-    the write-ahead marker, lineage marks committed WITH the fold), and
-    the odd half probes the folded base. The oracle is the identical
+    half is signed as a base build plus two per-batch stream appends,
+    the index is compacted (one summed count per gram committed in
+    place of the files it read, stream watermarks riding the commit),
+    and the odd half probes the folded index. The oracle is the identical
     UNION replay strip_spans_indexed uses — a hash match proves the
     fold preserved every per-gram distinct-doc count exactly (probe
     results are invariant under compaction)."""

@@ -30,6 +30,7 @@ from ..fanout import fan_out_for_compute
 from ..share import shared
 
 from .text import token_count
+from .writeops import open_index
 
 # md5-prefix -> uint32: the portable deterministic hash. Spark's
 # conv(hex,16,10) and DuckDB's CAST('0x'||hex AS BIGINT) agree exactly.
@@ -630,6 +631,21 @@ def _span_windows(docs: DataFrame, n: int, id_col: str, text_col: str) -> DataFr
     ).select(id_col, "start", F.xxhash64("g").alias("gh"))
 
 
+# The span index is one unpartitioned manifest table (writeops.open_index)
+# of (gh, n_docs) rows at <path>: per-gram distinct-document counts,
+# summed per gram by a probe. Its commits carry the window parameters
+# (n, id_col, text_col); a streamed append commits its (stream, batch)
+# id with its rows (ParquetTable.write_batch). A rebuild keeps the
+# replaced version's files until compaction or ``vacuum`` runs.
+_SPAN_TABLES = [("", ())]
+
+
+def _span_counts(docs: DataFrame, n: int, id_col: str, text_col: str) -> DataFrame:
+    """(gh, n_docs): each window gram's distinct-document count."""
+    wins = _span_windows(docs, n, id_col, text_col)
+    return wins.groupBy("gh").agg(F.count_distinct(F.col(id_col)).alias("n_docs"))
+
+
 def build_span_index(
     docs: DataFrame,
     path: str,
@@ -643,55 +659,15 @@ def build_span_index(
     once, then each new batch probes counts instead of re-scanning
     every prior crawl.
 
-    Layout: parquet of (gh, n_docs) delta files plus a meta sidecar
-    pinning ``n``. The index is APPEND-ONLY — probes sum deltas per
-    gram — so updating it never rewrites history. Contract: batches
-    must have DISJOINT document ids (the crawl-batch invariant);
-    distinct-doc counts then add exactly."""
-    import json
-    import os
-
-    wins = _span_windows(docs, n, id_col, text_col)
-    counts = wins.groupBy("gh").agg(
-        F.count_distinct(F.col(id_col)).alias("n_docs")
+    The index is APPEND-ONLY — probes sum counts per gram — so updating
+    it never rewrites history. Contract: batches must have DISJOINT
+    document ids (the crawl-batch invariant); distinct-doc counts then
+    add exactly."""
+    [table] = open_index(docs.sparkSession, path, "span", _SPAN_TABLES)
+    table.overwrite(
+        _span_counts(docs, n, id_col, text_col),
+        params={"n": n, "id_col": id_col, "text_col": text_col},
     )
-    counts.write.mode("overwrite").parquet(path)
-    with open(os.path.join(path, "_span_meta.json"), "w") as f:
-        json.dump({"n": n, "id_col": id_col, "text_col": text_col}, f)
-
-
-def _check_span_stream_id(stream_id: str) -> str:
-    """Stream ids become path components that are later matched against
-    ``F.input_file_name()`` output, which is URI-ENCODED — a space, %,
-    or non-ASCII character in the id would make the replayed-batch
-    self-exclusion silently miss its own delta and over-strip. Restrict
-    to the charset that round-trips identically."""
-    import re
-
-    if not re.fullmatch(r"[A-Za-z0-9_-]+", stream_id or ""):
-        raise ValueError(
-            f"span-index stream_id {stream_id!r} must match "
-            "[A-Za-z0-9_-]+ (it becomes a path component compared "
-            "against URI-encoded input_file_name output)"
-        )
-    return stream_id
-
-
-def _span_delta_name(stream_id: str, batch_id: int) -> str:
-    return f"delta_{_check_span_stream_id(stream_id)}_{int(batch_id):020d}"
-
-
-def _span_history(spark, path: str, exclude: str | None = None) -> DataFrame:
-    """All delta rows of the index — flat append files at the root plus
-    batch-scoped subdirectories (recursiveFileLookup; `_`/`.`-prefixed
-    sidecars are hidden from Spark's lister as usual). ``exclude``
-    drops one batch directory from history — a REPLAYED batch whose
-    own delta already landed must not see itself, or it would strip
-    more aggressively than the original run."""
-    hist = spark.read.option("recursiveFileLookup", "true").parquet(path)
-    if exclude is not None:
-        hist = hist.filter(~F.input_file_name().contains(f"/{exclude}/"))
-    return hist
 
 
 def append_to_span_index(
@@ -700,210 +676,38 @@ def append_to_span_index(
     batch_id: int | None = None,
     stream_id: str = "stream",
 ) -> None:
-    """Add a (disjoint) batch's gram counts to the index as delta
-    files — no rewrite, no read of prior deltas.
+    """Add a (disjoint) batch's gram counts to the index — no rewrite,
+    no read of prior counts.
 
-    Exactly-once (round 8): with ``batch_id``, the delta lands in a
-    deterministic per-batch subdirectory written with mode=overwrite —
-    a crashed-and-replayed micro-batch OVERWRITES its own delta instead
-    of appending a second copy, so replay can never double-count a
-    drop's grams (the same idempotence-by-batch-id contract as
-    ``streaming.incremental.streaming_merge``). Batch ids are only
-    meaningful within one checkpoint lineage: a ``batch_id`` BELOW the
-    stream's largest existing delta raises (a deleted-and-recreated
-    checkpoint would otherwise re-sign history next to the old deltas
-    and double every count). Without ``batch_id`` (manual/batch
-    callers) the classic root-level append is kept."""
-    import json
-    import os
-
-    with open(os.path.join(path, "_span_meta.json")) as f:
-        meta = json.load(f)
-    wins = _span_windows(docs, meta["n"], meta["id_col"], meta["text_col"])
-    counts = wins.groupBy("gh").agg(
-        F.count_distinct(F.col(meta["id_col"])).alias("n_docs")
-    )
+    Exactly-once: with ``batch_id`` the append is batch ``batch_id`` of
+    ``stream_id`` (``ParquetTable.write_batch``): a crashed-and-replayed
+    micro-batch whose append committed is skipped, so replay can never
+    double-count a drop's grams, and a ``batch_id`` below the stream's
+    committed one raises (a deleted-and-recreated checkpoint would
+    otherwise re-sign history and double every count). Without
+    ``batch_id`` (manual/batch callers) it is a plain append."""
+    [table] = open_index(docs.sparkSession, path, "span", _SPAN_TABLES)
+    p = table.snapshot().params
+    counts = _span_counts(docs, p["n"], p["id_col"], p["text_col"])
     if batch_id is None:
-        counts.write.mode("append").parquet(path)
-        return
-    _guard_span_batch(path, stream_id, batch_id)
-    counts.write.mode("overwrite").parquet(
-        os.path.join(path, _span_delta_name(stream_id, batch_id))
-    )
-
-
-def _span_live_max(path: str, stream_id: str) -> int | None:
-    """Largest batch id among LIVE (un-compacted) delta directories."""
-    import os
-
-    hi = None
-    prefix = f"delta_{stream_id}_"
-    for d in os.listdir(path):
-        if d.startswith(prefix) and d[len(prefix):].isdigit():
-            b = int(d[len(prefix):])
-            hi = b if hi is None else max(hi, b)
-    return hi
-
-
-def _span_compacted_mark(path: str, stream_id: str) -> int | None:
-    """Largest batch id FOLDED into the base by compaction (the
-    ``_span_watermarks.json`` sidecar). A folded batch's delta can
-    neither be overwritten (replay) nor excluded (strip) any more, so
-    callers must refuse ids at or below this mark."""
-    import json
-    import os
-
-    wm = os.path.join(path, "_span_watermarks.json")
-    if not os.path.exists(wm):
-        return None
-    with open(wm) as f:
-        v = json.load(f).get(str(stream_id))
-    return None if v is None else int(v)
-
-
-def _guard_span_batch(path: str, stream_id: str, batch_id: int) -> None:
-    """Refuse batch ids the index can no longer handle idempotently:
-    at-or-below the compacted mark (the delta was folded into the base
-    — a replay would double-count and a strip would self-sight) or
-    below the live max (checkpoint reset)."""
-    _check_span_stream_id(stream_id)
-    _recover_span_compaction(path)
-    cm = _span_compacted_mark(path, stream_id)
-    if cm is not None and int(batch_id) <= cm:
-        raise RuntimeError(
-            f"span index {path!r}, stream {stream_id!r}: batch "
-            f"{batch_id} was already folded into the compacted base "
-            f"(mark {cm}). A replayed-after-compaction batch cannot be "
-            "applied idempotently — compact only between FULLY "
-            "committed stream invocations, and rebuild the index to "
-            "recover from this state."
-        )
-    lm = _span_live_max(path, stream_id)
-    if lm is not None and int(batch_id) < lm:
-        raise RuntimeError(
-            f"span index {path!r}, stream {stream_id!r}: batch "
-            f"{batch_id} is below the largest indexed batch "
-            f"{lm} — the stream's checkpoint was reset. "
-            "Re-signing history would double-count grams; use a new "
-            "checkpoint dir (fresh stream id) or rebuild the index."
-        )
-
-
-_SPAN_COMPACT_MARKER = "_span_compact_pending.json"
-
-
-def _recover_span_compaction(path: str) -> None:
-    """Finish a compaction that crashed mid-swap. The marker (written
-    AFTER the summed base exists, BEFORE any visible file changes) is
-    the commit point and records the exact moves + deletions, so replay
-    is idempotent: move any base files still in the hidden tmp dir,
-    delete any listed old files still present, drop the marker."""
-    import json
-    import os
-    import shutil
-
-    marker = os.path.join(path, _SPAN_COMPACT_MARKER)
-    if not os.path.exists(marker):
-        return
-    with open(marker) as f:
-        plan = json.load(f)
-    tmp = os.path.join(path, plan["tmp"])
-    for src, dst in plan["moves"]:
-        s = os.path.join(tmp, src)
-        if os.path.exists(s):
-            os.replace(s, os.path.join(path, dst))
-    for rel in plan["to_delete"]:
-        p = os.path.join(path, rel)
-        if os.path.isdir(p):
-            shutil.rmtree(p, ignore_errors=True)
-        elif os.path.exists(p):
-            os.remove(p)
-    if "marks" in plan:  # lineage marks commit WITH the fold (round 9)
-        wm = os.path.join(path, "_span_watermarks.json")
-        with open(wm + ".tmp", "w") as f:
-            json.dump(plan["marks"], f)
-        os.replace(wm + ".tmp", wm)
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.remove(marker)
+        table.append(counts)
+    else:
+        table.write_batch(stream_id, batch_id, lambda: table.append(counts))
 
 
 def compact_span_index(spark, path: str) -> None:
-    """Fold the index's delta files (root appends + per-batch stream
-    directories) into ONE base delta of summed per-gram counts — probe
-    cost stays proportional to DISTINCT grams instead of growing with
-    the number of drops ever appended. Stream lineage survives: each
-    stream's high-water batch id lands in ``_span_watermarks.json``,
-    and appends/strips refuse ids at or below it (a folded delta can't
-    be replayed or excluded any more — see ``_guard_span_batch``).
-
-    Crash-safe via a write-ahead marker: the summed base is written to
-    a hidden tmp dir, then the marker (recording the exact moves and
-    deletions) commits the swap; a crash at ANY point either leaves the
-    old state fully intact (marker absent — hidden tmp is invisible to
-    readers) or is finished idempotently by the next strip/append/
-    compact (``_recover_span_compaction``). OFFLINE maintenance (the
-    ``vacuum`` contract): run it between stream invocations, not
-    concurrently with probes or appends."""
-    import json
-    import os
-    import shutil
-    import uuid
-
-    _recover_span_compaction(path)
-    wm_path = os.path.join(path, "_span_watermarks.json")
-    marks: dict[str, int] = {}
-    if os.path.exists(wm_path):
-        with open(wm_path) as f:
-            marks = {k: int(v) for k, v in json.load(f).items()}
-    delta_dirs = []
-    old_parts = []
-    for d in os.listdir(path):
-        p = os.path.join(path, d)
-        if d.startswith("delta_") and "_" in d[6:] and os.path.isdir(p):
-            stream, _, bid = d[6:].rpartition("_")
-            if bid.isdigit():
-                delta_dirs.append(d)
-                marks[stream] = max(marks.get(stream, -1), int(bid))
-        elif d.endswith(".parquet") and os.path.isfile(p):
-            old_parts.append(d)
-    if not delta_dirs and not old_parts:
-        return  # empty index (meta sidecar only): nothing to fold
-    # fold EXACTLY the files captured in the listing above — never
-    # re-scan the directory. A delta landing between the listing and
-    # the history read (a concurrent append slipping into compaction's
-    # window) would otherwise be summed into the base but missing from
-    # to_delete: folded AND still live, double-counting every one of
-    # its grams forever (round-10 interleaving test). Reading the
-    # listed set keeps the race benign — a late delta is neither
-    # folded nor deleted, just stays live for the next compaction.
-    srcs = [os.path.join(path, d) for d in old_parts + delta_dirs]
-    base = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(*srcs)
-        .groupBy("gh")
-        .agg(F.sum("n_docs").alias("n_docs"))
-    )
-    tmp_name = ".compact_tmp"
-    tmp = os.path.join(path, tmp_name)
-    base.write.mode("overwrite").parquet(tmp)
-    nonce = uuid.uuid4().hex[:8]
-    moves = [
-        (fn, f"base-{nonce}-{i:05d}.parquet")
-        for i, fn in enumerate(sorted(os.listdir(tmp)))
-        if fn.endswith(".parquet")
-    ]
-    # lineage rides the same commit: marks travel INSIDE the marker plan
-    # and are applied by _recover_span_compaction at the commit point.
-    # Writing them any earlier opens a crash window where still-live
-    # batch ids are recorded as folded, and a legitimate replay of the
-    # tip batch (allowed by the live-max check) is falsely refused.
-    plan = {"tmp": tmp_name, "moves": moves,
-            "to_delete": old_parts + delta_dirs, "marks": marks}
-    marker = os.path.join(path, _SPAN_COMPACT_MARKER)
-    with open(marker + ".tmp", "w") as f:
-        json.dump(plan, f)
-    os.replace(marker + ".tmp", marker)  # commit point
-    _recover_span_compaction(path)  # finish the recorded swap
+    """Fold the index into one summed count per gram — probe cost stays
+    proportional to DISTINCT grams instead of growing with the number
+    of drops ever appended — committed in place of exactly the files
+    it read (``ParquetTable.rewrite``: an append racing it survives),
+    then drop every older version (``vacuum``). Stream watermarks ride
+    the commit, so a replay of a folded batch is still skipped, but a
+    replayed strip of it can no longer read the index without it and
+    raises. OFFLINE maintenance (the ``vacuum`` contract): run it
+    between stream invocations, not concurrently with probes."""
+    [table] = open_index(spark, path, "span", _SPAN_TABLES)
+    table.rewrite(lambda rows: rows.groupBy("gh").agg(F.sum("n_docs").alias("n_docs")))
+    table.vacuum(retain_versions=1)
 
 
 def strip_against_span_index(
@@ -920,36 +724,22 @@ def strip_against_span_index(
     history (equality pinned by unit test). Appending the batch
     afterwards is the caller's choice (``append_to_span_index``).
 
-    ``exclude_batch=(stream_id, batch_id)``: exclude that batch's own
-    delta from history — a replayed micro-batch whose append already
-    landed would otherwise see ITSELF in history and strip more
-    aggressively than the original run (round-8 exactly-once fix).
-    Refuses a batch id at or below the stream's compacted mark: the
-    folded delta can no longer be excluded, so the replay would
-    self-sight no matter what — failing HERE (before the output
-    commits) beats committing wrongly-stripped text."""
-    import json
-    import os
-
-    spark = docs.sparkSession
-    if exclude_batch is not None:
-        _guard_span_batch(path, exclude_batch[0], exclude_batch[1])
-    else:
-        _recover_span_compaction(path)
-    with open(os.path.join(path, "_span_meta.json")) as f:
-        meta = json.load(f)
-    n, id_col, text_col = meta["n"], meta["id_col"], meta["text_col"]
+    ``exclude_batch=(stream_id, batch_id)``: read the newest version
+    that does not yet hold that batch — a replayed micro-batch whose
+    append already landed would otherwise see ITSELF in history and
+    strip more aggressively than the original run. If compaction
+    vacuumed that version, this raises (before any output commits)."""
+    [table] = open_index(docs.sparkSession, path, "span", _SPAN_TABLES)
+    snap = table.snapshot(None if exclude_batch is None else table.version_before(*exclude_batch))
+    n, id_col, text_col = snap.params["n"], snap.params["id_col"], snap.params["text_col"]
     wins = shared(_span_windows(docs, n, id_col, text_col))
     batch_counts = wins.groupBy("gh").agg(
         F.count_distinct(F.col(id_col)).alias("__bn")
     )
-    exclude = (
-        _span_delta_name(*exclude_batch) if exclude_batch is not None else None
-    )
     hist = (
-        _span_history(spark, path, exclude)
+        table.read_version(snap.version)
         .groupBy("gh")
-        .agg(F.sum("n_docs").alias("__hn"))  # delta files sum per gram
+        .agg(F.sum("n_docs").alias("__hn"))
     )
     bad = (
         batch_counts.join(hist, "gh", "left")

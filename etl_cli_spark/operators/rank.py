@@ -27,6 +27,7 @@ from ..fanout import fan_out_for_compute
 from ..share import scope, shared
 
 from .text import tokens
+from .writeops import open_index
 
 
 def _doc_terms(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -319,6 +320,36 @@ def bm25_score(
     )
 
 
+# The BM25 index is one manifest table (writeops.open_index) of postings
+# (term, id, tf, dl) at <path>, value-partitioned on __tb =
+# pmod(xxhash64(term), n_buckets) and sorted on term within files. Its
+# commits carry (n_buckets, n_docs, sum_dl, id_col), so a probe reads
+# the corpus statistics and the postings of one snapshot, and an append
+# commits its postings and the updated statistics together. A rebuild
+# keeps the replaced version's files until ``vacuum`` runs on <path>.
+_TEXT_TABLES = [("", ("__tb",))]
+
+
+def _term_bucket(n_buckets: int) -> Column:
+    return F.pmod(F.xxhash64("term"), F.lit(n_buckets))
+
+
+def _postings(docs: DataFrame, text_col: str, id_col: str, n_buckets: int):
+    """(postings, n_docs, sum_dl) of ``docs``. sum_dl, not avgdl: dl
+    values are integer-valued doubles, so the sum is EXACT in any order
+    — incremental appends update it and stay bit-identical to a rebuild
+    (avgdl derives as sum_dl / n_docs)."""
+    dlen = docs.select(
+        F.col(id_col), F.size(tokens(text_col)).cast("double").alias("dl")
+    )
+    postings = (
+        _doc_terms(docs, text_col, id_col).join(dlen, id_col)
+        .withColumn("__tb", _term_bucket(n_buckets))
+    )
+    agg = dlen.agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")).first()
+    return postings, agg.n, float(agg.s or 0.0)
+
+
 def build_text_index(
     docs: DataFrame,
     path: str,
@@ -326,40 +357,22 @@ def build_text_index(
     id_col: str = "doc_id",
     n_buckets: int = 64,
 ) -> None:
-    """Persist an inverted index for BM25 search: postings
-    (term, doc_id, tf, dl) hive-partitioned by ``__tb =
-    pmod(xxhash64(term), n_buckets)``, plus a one-row ``_stats`` sidecar
-    (n_docs, avgdl, n_buckets).
+    """Persist an inverted index for BM25 search (see the layout note
+    above).
 
     The text twin of the persisted ANN/IVF indexes: one corpus pass at
     build time; a query then reads ONLY the partitions holding its
     terms' buckets — a handful of directories, not the corpus. Document
     length is denormalized onto each posting so scoring needs no
-    doc-side join. Rebuild on append (corpus stats shift); the
-    re-partitioned write clusters each bucket into ~1 file.
+    doc-side join. The partitioned write clusters each bucket into ~1
+    file.
     """
-    terms = _doc_terms(docs, text_col, id_col)
-    dlen = docs.select(
-        F.col(id_col), F.size(tokens(text_col)).cast("double").alias("dl")
+    postings, n_docs, sum_dl = _postings(docs, text_col, id_col, n_buckets)
+    [table] = open_index(docs.sparkSession, path, "bm25", _TEXT_TABLES, sort_by=("term",))
+    table.overwrite(
+        postings,
+        params={"n_buckets": n_buckets, "n_docs": n_docs, "sum_dl": sum_dl, "id_col": id_col},
     )
-    postings = (
-        terms.join(dlen, id_col)
-        .withColumn("__tb", F.pmod(F.xxhash64("term"), F.lit(n_buckets)))
-    )
-    (
-        postings.repartition(n_buckets, F.col("__tb"))
-        .sortWithinPartitions("term", id_col)
-        .write.mode("overwrite")
-        .partitionBy("__tb")
-        .parquet(path)
-    )
-    # sum_dl not avgdl: dl values are integer-valued doubles, so the sum
-    # is EXACT in any order — incremental appends can update it and stay
-    # bit-identical to a rebuild (avgdl derives as sum_dl / n_docs)
-    stats = dlen.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
-    ).withColumn("n_buckets", F.lit(n_buckets))
-    stats.coalesce(1).write.mode("overwrite").parquet(f"{path}/_stats")
 
 
 def append_to_text_index(
@@ -369,39 +382,26 @@ def append_to_text_index(
     id_col: str = "doc_id",
 ) -> None:
     """Add documents to an existing index WITHOUT a rebuild: their
-    postings append into the same term buckets, and the stats sidecar
-    updates incrementally (counts and the exact integer-double dl sum).
+    postings append into the same term buckets, and the statistics
+    update incrementally (counts and the exact integer-double dl sum)
+    in the same commit — a failed append leaves the index as it was.
 
     Query results afterwards are bit-identical to a full rebuild over
     the union: df(t) is derived from the postings at query time (so it
     is automatically current), and (n_docs, sum_dl) update exactly.
     Unit-asserted against a rebuild. Deletes/updates still need a
-    rebuild — postings carry no tombstones by design."""
-    spark = docs.sparkSession
-    old = spark.read.parquet(f"{path}/_stats").first()
-    terms = _doc_terms(docs, text_col, id_col)
-    dlen = docs.select(
-        F.col(id_col), F.size(tokens(text_col)).cast("double").alias("dl")
+    rebuild — postings carry no tombstones by design. One writer at a
+    time: two racing appends would each commit statistics that miss
+    the other's documents."""
+    [table] = open_index(docs.sparkSession, path, "bm25", _TEXT_TABLES)
+    p = table.snapshot().params
+    postings, n_docs, sum_dl = _postings(
+        docs.withColumnRenamed(id_col, p["id_col"]), text_col, p["id_col"], p["n_buckets"]
     )
-    postings = (
-        terms.join(dlen, id_col)
-        .withColumn("__tb", F.pmod(F.xxhash64("term"), F.lit(old.n_buckets)))
+    table.append(
+        postings,
+        params=dict(p, n_docs=p["n_docs"] + n_docs, sum_dl=p["sum_dl"] + sum_dl),
     )
-    (
-        postings.repartition(F.col("__tb"))
-        .sortWithinPartitions("term", id_col)
-        .write.mode("append")
-        .partitionBy("__tb")
-        .parquet(path)
-    )
-    add = dlen.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
-    ).first()
-    stats = spark.createDataFrame(
-        [(old.n_docs + add.n, float(old.sum_dl) + float(add.s or 0.0), old.n_buckets)],
-        "n_docs long, sum_dl double, n_buckets int",
-    )
-    stats.coalesce(1).write.mode("overwrite").parquet(f"{path}/_stats")
 
 
 def bm25_topk_indexed(
@@ -421,38 +421,36 @@ def bm25_topk_indexed(
     the touched buckets). Everything downstream — df(t), idf, score,
     top-k — runs on the hit postings only; identical math to
     :func:`bm25_score` (unit-asserted)."""
-    stats = spark.read.parquet(f"{path}/_stats").first()
-    avgdl = float(stats.sum_dl) / stats.n_docs
+    [table] = open_index(spark, path, "bm25", _TEXT_TABLES)
+    snap = table.snapshot()
+    p = snap.params
+    id_col, n_docs = p["id_col"], p["n_docs"]
+    avgdl = float(p["sum_dl"]) / n_docs
     tdf = spark.createDataFrame([(t,) for t in query_terms], "term string")
-    tb = [
-        r[0]
-        for r in tdf.select(
-            F.pmod(F.xxhash64("term"), F.lit(stats.n_buckets))
-        ).collect()
-    ]
-    idx = spark.read.parquet(path).where(
-        F.col("__tb").isin(sorted(set(tb))) & F.col("term").isin(query_terms)
+    tb = [r[0] for r in tdf.select(_term_bucket(p["n_buckets"])).collect()]
+    idx = table.read_partitions(sorted(set(tb)), version=snap.version).where(
+        F.col("term").isin(query_terms)
     )
     dfreq = idx.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     idf = dfreq.select(
         "term",
         F.log(
-            1 + (F.lit(stats.n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5)
+            1 + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5)
         ).alias("idf"),
     )
     return (
         idx.join(F.broadcast(idf), "term")
         .select(
-            "doc_id",
+            id_col,
             (
                 F.col("idf")
                 * F.col("tf")
                 / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.lit(avgdl)))
             ).alias("__s"),
         )
-        .groupBy("doc_id")
+        .groupBy(id_col)
         .agg(F.round(F.sum("__s"), 6).alias("score"))
-        .orderBy(F.col("score").desc(), "doc_id")
+        .orderBy(F.col("score").desc(), id_col)
         .limit(k)
     )
 

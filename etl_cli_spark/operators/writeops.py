@@ -542,13 +542,31 @@ class ParquetTable:
             self.stream_commit_abort()
         return True
 
-    def snapshot(self) -> Snapshot:
-        """The newest committed :class:`Snapshot`. Raises before the
-        first commit, and always for a legacy table."""
-        latest = self._latest_manifest()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version of {self.path}")
-        ver, doc = latest
+    def version_before(self, stream_id: str, batch_id: int) -> int:
+        """The newest retained version whose commit does not yet record
+        ``batch_id`` of ``stream_id``: the table as that batch first saw
+        it, which a replay of the batch reads. Raises the time-travel
+        error when that version was vacuumed."""
+        vers = self.versions()
+        for v in reversed(vers):
+            if self._raw_manifest_at(v).get("streams", {}).get(str(stream_id), -1) < batch_id:
+                return v
+        raise FileNotFoundError(
+            f"the version of {self.path} before batch {batch_id} of stream "
+            f"{stream_id!r} is not in the log (retained: {vers or 'none'} — vacuumed)"
+        )
+
+    def snapshot(self, version: int | None = None) -> Snapshot:
+        """The :class:`Snapshot` of manifest ``version`` (default the
+        newest). Raises before the first commit, and always for a legacy
+        table."""
+        if version is None:
+            latest = self._latest_manifest()
+            if latest is None:
+                raise FileNotFoundError(f"no committed version of {self.path}")
+            ver, doc = latest
+        else:
+            ver, doc = int(version), self._manifest_at(version)
         stats = doc.get("stats", {})
         rows = [stats.get(f, {}).get("_rows") for f in doc["files"]]
         return Snapshot(
@@ -1301,35 +1319,51 @@ class ParquetTable:
         crowded = sorted(d for d, fs in by_dir.items() if len(fs) >= min_files)
         if not crowded:
             return []
-        crowded_set = set(crowded)
         victims = [f for d in crowded for f in by_dir[d]]
-        df = self._scan(victims, schema)
-        # rewrite through the normal layout writers: rows land back in
-        # the same partition dirs (their partition values are unchanged),
-        # one file per partition unless maxRecordsPerFile splits it
+        # rows land back in the same partition dirs (their partition
+        # values are unchanged), one file per partition unless
+        # maxRecordsPerFile splits it
+        self._replace(victims, self._scan(victims, schema), data_change=False)
+        return crowded
+
+    def rewrite(self, transform: Callable[[DataFrame], DataFrame]) -> None:
+        """Commit ``transform`` of the newest snapshot's rows in place of
+        exactly the files it read (a fold that keeps the table's
+        meaning, e.g. summing partial counts). Appends racing it survive;
+        a concurrent rewrite of the same files aborts it. Raises before
+        the first commit, and always for a legacy table."""
+        latest = self._latest_manifest()
+        if latest is None:
+            raise FileNotFoundError(f"no committed version of {self.path}")
+        files = latest[1]["files"]
+        if files:
+            self._replace(files, transform(self._scan(files, latest[1].get("schema"))))
+
+    def _replace(self, files: list[str], df: DataFrame, data_change: bool = True) -> None:
+        """Write ``df``, computed from the committed ``files``, through
+        the layout writers and commit it in place of exactly those
+        files."""
         new_files, _ns = self._stage_write(df)
-        gone = set(victims)
+        gone = set(files)
 
         def make(prev, ps):
-            # a racing append to a compacted dir survives (its files
-            # stay), but if any victim VANISHED from the tip — another
-            # compaction or a partition rewrite replaced the rows we
-            # read — committing our copies would resurrect/duplicate
-            # them. Abort like Delta/Iceberg do on a conflicting
-            # OPTIMIZE; the staged files stay invisible and vacuum()
-            # reclaims them.
+            # a racing append survives (its files stay), but if any file
+            # read VANISHED from the tip — another compaction or a
+            # partition rewrite replaced the rows we read — committing
+            # our copies would resurrect/duplicate them. Abort like
+            # Delta/Iceberg do on a conflicting OPTIMIZE; the staged
+            # files stay invisible and vacuum() reclaims them.
             missing = gone - set(prev)
             if missing:
                 raise RuntimeError(
-                    f"concurrent modification during compact_partitions: "
-                    f"{len(missing)} compacted file(s) no longer in the "
-                    f"manifest tip (another rewrite won); rerun compaction"
+                    f"concurrent modification during a rewrite of {self.path}: "
+                    f"{len(missing)} rewritten file(s) no longer in the "
+                    f"manifest tip (another rewrite won); rerun it"
                 )
             return [f for f in prev if f not in gone] + new_files, ps
 
-        self._commit(make, data_change=False)
+        self._commit(make, data_change=data_change)
         self._touch()
-        return crowded
 
     def zorder(
         self,
@@ -1489,22 +1523,30 @@ _INDEX_SIDECARS = {
 }
 
 
-def open_index(spark: SparkSession, path: str, kind: str, parts) -> list[ParquetTable]:
+def open_index(
+    spark: SparkSession, path: str, kind: str, parts, sort_by: tuple[str, ...] | None = None
+) -> list[ParquetTable]:
     """The manifest tables of the ``kind`` index at ``path``, one per
-    ``(sub-directory, directory columns)`` of ``parts``, in commit
-    order. The last holds the frozen parameters, which name the version
-    of each other table (``versions``) a probe reads.
+    ``(sub-directory, directory columns)`` of ``parts`` ("" = ``path``
+    itself), in commit order, their files clustered on ``sort_by``. The
+    last holds the frozen parameters, which name the version of each
+    other table (``versions``) a probe reads.
 
-    An index written with a parameter sidecar and no manifest is
-    adopted first (each table's files become version 0, the last with
-    the sidecar's values as parameters) and the sidecar goes. A crash
-    midway leaves the last table uncommitted; the next open adopts again."""
+    An index of a kind that kept a parameter sidecar, written with one
+    and no manifest, is adopted first (each table's files become
+    version 0, the last with the sidecar's values as parameters) and the
+    sidecar goes. A crash midway leaves the last table uncommitted; the
+    next open adopts again."""
     tables = [
-        ParquetTable(spark, os.path.join(path, sub), partition_by=tuple(dirs) or None, manifest=True)
+        ParquetTable(
+            spark, os.path.join(path, sub) if sub else path,
+            partition_by=tuple(dirs) or None, sort_by=sort_by, manifest=True,
+        )
         for sub, dirs in parts
     ]
-    sidecar = os.path.join(path, _INDEX_SIDECARS[kind])
-    if os.path.exists(sidecar) and not tables[-1].versions():
+    name = _INDEX_SIDECARS.get(kind)
+    sidecar = name and os.path.join(path, name)
+    if sidecar and os.path.exists(sidecar) and not tables[-1].versions():
         with open(sidecar) as f:
             params = json.load(f)
         for t in tables[:-1]:
@@ -1540,6 +1582,14 @@ _MAX_TOUCHED_VALUES = 4096
 _BROADCAST_SRC_ROWS = 2_000_000
 
 
+def _as_types(df: DataFrame, types: dict, cols=None) -> DataFrame:
+    """``cols`` of ``df`` (default all), each cast to its type in
+    ``types`` (as :meth:`ParquetTable._column_types` returns them)."""
+    return df.select(*[
+        F.col(c).cast(types[c]).alias(c) if c in types else F.col(c) for c in cols or df.columns
+    ])
+
+
 def _touched(src: DataFrame, table: ParquetTable, keys) -> list | None:
     """Directory values of the source rows — the only partitions the op
     may touch — or None when the op must read and rewrite the whole
@@ -1566,8 +1616,7 @@ def _touched(src: DataFrame, table: ParquetTable, keys) -> list | None:
         or not all(c in keys and c in src.columns for c in layout.keys)
     ):
         return None
-    types = table._column_types()
-    src = src.select(*[F.col(c).cast(types[c]).alias(c) if c in types else F.col(c) for c in layout.keys])
+    src = _as_types(src, table._column_types(), layout.keys)
     vals = layout.with_dirs(src).select(layout.dirs[0]).distinct()
     if layout.n:
         return sorted(r[0] for r in vals.collect())
@@ -1641,7 +1690,9 @@ def _write_op(src: DataFrame, table: ParquetTable, spec: TargetSpec) -> DataFram
                 )
         if spec.dry_run:
             return new_rows
-        table.append(new_rows)
+        # appended rows take the target's column types: a file written
+        # under the source's key type would change the table's
+        table.append(_as_types(new_rows, table._column_types()))
         return table.read()
 
     if not spec.pk:

@@ -368,10 +368,10 @@ def run_corpus_pipeline_streaming(
     riding the same atomic put-if-absent (the ``streaming_merge``
     recipe), so a replayed batch sees ``last_stream_batch == batch_id``
     and skips the output append — duplicate output rows are impossible.
-    The index appends are exactly-once in both modes: the span index
-    overwrites the batch's own delta, and the dedup signature append
-    carries the batch id in its manifest commits, so a replayed batch
-    adds no second copy of its signatures. The default keeps the
+    The index appends are exactly-once in both modes: the span-count
+    append and the dedup signature append carry the batch id in their
+    manifest commits (``ParquetTable.write_batch``), so a replayed
+    batch adds no second copy of its counts or signatures. The default keeps the
     plain-parquet append (at-least-once output) for sinks that want
     rename-swap tables.
 
@@ -392,11 +392,10 @@ def run_corpus_pipeline_streaming(
     spans through the persisted gram-count index BEFORE the stage list
     (pipeline.strip_against_span_index): each drop is stripped against
     all history plus itself, then its counts append. The append is
-    EXACTLY-ONCE (round 8): it is gated on the foreachBatch batchId —
-    each drop's delta lands in a per-batch directory written with
-    overwrite semantics, so a crashed-and-replayed drop overwrites its
-    own counts instead of double-appending them, and the replayed
-    strip EXCLUDES that same delta from history so it sees exactly
+    EXACTLY-ONCE: it commits as batch ``batchId`` of the span stream,
+    so a crashed-and-replayed drop whose counts committed skips the
+    append instead of double-counting them, and the replayed strip
+    reads the index version from before that batch so it sees exactly
     what the original run saw (crash-replay unit-pinned). Same
     lineage scoping as the output: a same-path checkpoint reset is
     detected and refused (backwards batch id), and re-pointing a NEW
@@ -479,8 +478,8 @@ def run_corpus_pipeline_streaming(
             # silently dropped every removed span from history, so
             # later drops could no longer collide with it): counts
             # must reflect what future drops can collide with in the
-            # raw crawl. batchId gating makes a replayed append
-            # overwrite itself — exactly-once for the index
+            # raw crawl. batchId gating skips a replayed append —
+            # exactly-once for the index
             append_to_span_index(
                 raw_df, span_index_path,
                 batch_id=batch_id, stream_id=span_stream_id,

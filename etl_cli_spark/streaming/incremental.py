@@ -103,8 +103,9 @@ def incremental_stream(
 
     A ``process`` that can accept two positional arguments receives
     ``(df, batch_id)`` — the foreachBatch epoch id, the handle an
-    exactly-once sink gates on (see ``streaming_merge`` /
-    ``append_to_span_index``). ``*args`` callbacks count as
+    exactly-once sink gates on (``ParquetTable.write_batch``, which
+    ``streaming_merge`` and ``append_to_span_index`` commit through:
+    a replayed batch id is skipped). ``*args`` callbacks count as
     batch-id-capable (silently downgrading one to at-least-once would
     defeat the sink's idempotence gate), and a non-introspectable
     callable raises rather than being guessed single-arg.

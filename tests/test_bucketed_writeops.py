@@ -423,3 +423,29 @@ def test_upsert_hashes_source_keys_under_target_types(spark, tmp_path, manifest)
     got = {r.k: r.v for r in t.read().collect()}
     assert t.read().count() == 40
     assert {k for k, v in got.items() if v == "new"} == {3, 11, 19, 27, 35}
+
+
+@pytest.mark.parametrize("manifest", [False, True], ids=["legacy", "manifest"])
+def test_insert_appends_rows_under_target_types(spark, tmp_path, manifest):
+    """``int`` keys inserted into a ``bigint``-keyed bucketed target
+    land as ``bigint``: appended under the source's type, legacy mode
+    wrote ``int`` files beside ``bigint`` ones and manifest mode raised
+    on the type change."""
+    t = ParquetTable(
+        spark, str(tmp_path / "t.parquet"), bucket_by=("k",), n_buckets=8, manifest=manifest
+    )
+    t.append(spark.createDataFrame([(i, "old") for i in range(40)], "k bigint, v string"))
+    src = spark.createDataFrame([(i, "new") for i in (3, 40, 41, 77)], "k int, v string")
+    apply_write_op(src, t, TargetSpec(ds="t", op="insert", pk=("k",)))
+    import pyarrow.parquet as pq
+
+    for root, _dirs, fns in os.walk(t.path):
+        for fn in fns:
+            if fn.endswith(".parquet"):
+                assert str(pq.read_schema(os.path.join(root, fn)).field("k").type) == "int64", fn
+    out = t.read()
+    assert dict(out.dtypes)["k"] == "bigint"
+    got = {r.k: r.v for r in out.collect()}
+    assert out.count() == 43
+    assert {k for k, v in got.items() if v == "new"} == {40, 41, 77}
+    assert got[3] == "old"

@@ -482,18 +482,22 @@ def test_streaming_runner_signs_raw_text_not_stripped(spark, tmp_path):
 
 
 def test_span_index_append_is_batch_gated_exactly_once(spark, tmp_path):
-    """Crash-replay contract (r8): re-appending the SAME batch id must
-    overwrite its own delta, not double-count the drop's grams; and a
-    replayed strip excluding its own delta sees exactly the history
-    the original run saw."""
+    """Crash-replay contract: re-appending the SAME batch id must be
+    skipped, not double-count the drop's grams; a replayed strip
+    excluding its own batch sees exactly the history the original run
+    saw; and a backwards batch id raises. Stream ids are manifest
+    keys, so any string works (a space, non-ASCII)."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
+
+    import pytest as _pytest
 
     from etl_cli_spark.operators.pipeline import (
         append_to_span_index,
         build_span_index,
         strip_against_span_index,
     )
+    from etl_cli_spark.operators.writeops import ParquetTable
 
     schema = T.StructType(
         [
@@ -501,65 +505,63 @@ def test_span_index_append_is_batch_gated_exactly_once(spark, tmp_path):
             T.StructField("text", T.StringType()),
         ]
     )
-    idx = str(tmp_path / "span_idx")
-    build_span_index(spark.createDataFrame([], schema).limit(0), idx, n=5)
     b1 = spark.createDataFrame(
         [(1, "shared legal boilerplate span here plus one")], schema
     )
     b2 = spark.createDataFrame(
         [(10, "shared legal boilerplate span here plus ten")], schema
     )
-    append_to_span_index(b1, idx, batch_id=0, stream_id="s")
+    for i, sid in enumerate(["has space", "naïve", "s"]):
+        idx = str(tmp_path / f"span_idx{i}")
+        build_span_index(spark.createDataFrame([], schema).limit(0), idx, n=5)
+        append_to_span_index(b1, idx, batch_id=0, stream_id=sid)
 
-    def hist_counts():
-        return {
-            r.gh: r.n
-            for r in spark.read.option("recursiveFileLookup", "true")
-            .parquet(idx)
-            .groupBy("gh")
-            .agg(F.sum("n_docs").alias("n"))
-            .collect()
+        def hist_counts():
+            return {
+                r.gh: r.n
+                for r in ParquetTable(spark, idx).read()
+                .groupBy("gh")
+                .agg(F.sum("n_docs").alias("n"))
+                .collect()
+            }
+
+        once = hist_counts()
+        # replay batch 0 (crash between append and checkpoint commit)
+        append_to_span_index(b1, idx, batch_id=0, stream_id=sid)
+        assert hist_counts() == once, "replayed append double-counted grams"
+
+        # strip of batch 1 BEFORE its append...
+        before = {
+            r.doc_id: (r.text, r.n_stripped)
+            for r in strip_against_span_index(b2, idx, min_docs=2).collect()
         }
+        # ...must equal the replayed strip AFTER its append landed, when
+        # the replay excludes its own batch
+        append_to_span_index(b2, idx, batch_id=1, stream_id=sid)
+        replay = {
+            r.doc_id: (r.text, r.n_stripped)
+            for r in strip_against_span_index(
+                b2, idx, min_docs=2, exclude_batch=(sid, 1)
+            ).collect()
+        }
+        assert replay == before, "replayed strip saw its own batch"
+        # and WITHOUT the exclusion the self-sighting over-strip is real
+        # (the failure mode the gate exists to prevent)
+        with_self = {
+            r.doc_id: r.n_stripped
+            for r in strip_against_span_index(b2, idx, min_docs=2).collect()
+        }
+        assert with_self[10] >= before[10][1]
 
-    once = hist_counts()
-    # replay batch 0 (crash between append and checkpoint commit)
-    append_to_span_index(b1, idx, batch_id=0, stream_id="s")
-    assert hist_counts() == once, "replayed append double-counted grams"
-
-    # strip of batch 1 BEFORE its append...
-    before = {
-        r.doc_id: (r.text, r.n_stripped)
-        for r in strip_against_span_index(b2, idx, min_docs=2).collect()
-    }
-    # ...must equal the replayed strip AFTER its append landed, when the
-    # replay excludes its own delta
-    append_to_span_index(b2, idx, batch_id=1, stream_id="s")
-    replay = {
-        r.doc_id: (r.text, r.n_stripped)
-        for r in strip_against_span_index(
-            b2, idx, min_docs=2, exclude_batch=("s", 1)
-        ).collect()
-    }
-    assert replay == before, "replayed strip saw its own delta"
-    # and WITHOUT the exclusion the self-sighting over-strip is real
-    # (the failure mode the gate exists to prevent)
-    with_self = {
-        r.doc_id: r.n_stripped
-        for r in strip_against_span_index(b2, idx, min_docs=2).collect()
-    }
-    assert with_self[10] >= before[10][1]
-
-    # lineage guard: a batch id BELOW the stream's largest indexed
-    # delta means the checkpoint was reset — re-signing history would
-    # double-count grams, so the append must refuse
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="checkpoint was reset"):
-        append_to_span_index(b1, idx, batch_id=0, stream_id="s")
-    # equal (crash replay) and forward batch ids still append fine
-    append_to_span_index(b2, idx, batch_id=1, stream_id="s")
-    append_to_span_index(b2, idx, batch_id=2, stream_id="s")
-
+        # lineage guard: a batch id BELOW the stream's committed one
+        # means the checkpoint was reset — re-signing history would
+        # double-count grams, so the append must refuse
+        with _pytest.raises(RuntimeError, match="checkpoint was reset"):
+            append_to_span_index(b1, idx, batch_id=0, stream_id=sid)
+        # equal (crash replay) and forward batch ids still append fine
+        append_to_span_index(b2, idx, batch_id=1, stream_id=sid)
+        append_to_span_index(b1.limit(0), idx, batch_id=2, stream_id=sid)
+        assert ParquetTable(spark, idx).last_stream_batch(sid) == 2
 
 def test_streaming_runner_exactly_once_output(spark, tmp_path):
     """exactly_once=True semantics, lineage-scoped (the Delta txnAppId
@@ -734,7 +736,7 @@ def test_streaming_runner_crash_replay_property(spark, tmp_path, monkeypatch, se
         )
         grams = {
             (r.gh, r.n)
-            for r in pl._span_history(spark, idx)
+            for r in ParquetTable(spark, idx).read()
             .groupBy("gh").agg(F.sum("n_docs").alias("n")).collect()
         }
         return {

@@ -892,13 +892,24 @@ def test_pack_token_ids_reference(spark):
     assert got == want
 
 
-def test_compact_span_index_preserves_probes_and_lineage(spark, tmp_path):
-    """Compaction folds root appends + per-batch stream deltas into one
-    summed base: probe results (strip output) are IDENTICAL before and
-    after, delta directories are gone, and the checkpoint-reset guard
-    still refuses backwards batch ids via the watermark sidecar."""
+def _span_files_on_disk(path):
     import os
 
+    n = 0
+    for _r, dirs, fns in os.walk(path):
+        dirs[:] = [d for d in dirs if d != "_log"]
+        n += sum(1 for fn in fns if not fn.startswith(("_", ".")))
+    return n
+
+
+def test_compact_span_index_preserves_probes_and_lineage(spark, tmp_path):
+    """Compaction folds the build, plain appends and per-batch stream
+    appends into one summed count per gram: probe results (strip
+    output) are IDENTICAL before and after, only the compacted version
+    and its files are left, and the stream watermark rides the fold —
+    a replay of a folded batch is skipped, a backwards batch id raises,
+    and a replayed strip of a folded batch (whose pre-batch version is
+    gone) raises instead of self-sighting."""
     import pytest as _pytest
 
     from etl_cli_spark.operators.pipeline import (
@@ -907,20 +918,20 @@ def test_compact_span_index_preserves_probes_and_lineage(spark, tmp_path):
         compact_span_index,
         strip_against_span_index,
     )
+    from etl_cli_spark.operators.writeops import ParquetTable
 
     mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
     idx = str(tmp_path / "span_idx")
     build_span_index(
         mk([(1, "shared legal boilerplate span here plus one")]), idx, n=5
     )
+    append_to_span_index(mk([(5, "an unstreamed manual append of words")]), idx)
     append_to_span_index(
         mk([(10, "shared legal boilerplate span here plus ten")]), idx,
         batch_id=0, stream_id="s",
     )
-    append_to_span_index(
-        mk([(20, "another common footer block appears here twice over")]),
-        idx, batch_id=3, stream_id="s",
-    )
+    b3 = mk([(20, "another common footer block appears here twice over")])
+    append_to_span_index(b3, idx, batch_id=3, stream_id="s")
     probe = mk([(99, "shared legal boilerplate span here plus probe")])
     before = {
         r.doc_id: (r.text, r.n_stripped)
@@ -932,22 +943,21 @@ def test_compact_span_index_preserves_probes_and_lineage(spark, tmp_path):
         for r in strip_against_span_index(probe, idx, min_docs=2).collect()
     }
     assert after == before and before[99][1] > 0
-    # all per-batch dirs folded away; base files at the root
-    assert not [d for d in os.listdir(idx) if d.startswith("delta_")]
-    # lineage survives the fold: anything at or below the compacted
-    # mark is refused — including an exact replay of a folded batch,
-    # which can no longer be applied idempotently (its delta is gone)
-    with _pytest.raises(RuntimeError, match="folded into the compacted base"):
+    table = ParquetTable(spark, idx)
+    assert len(table.versions()) == 1
+    assert _span_files_on_disk(idx) == table.snapshot().files
+    assert table.last_stream_batch("s") == 3
+    # a replay of the folded tip batch is skipped...
+    version = table.snapshot().version
+    append_to_span_index(b3, idx, batch_id=3, stream_id="s")
+    assert table.snapshot().version == version
+    # ...a backwards batch id means a reset checkpoint...
+    with _pytest.raises(RuntimeError, match="checkpoint was reset"):
         append_to_span_index(
             mk([(30, "x y z w v u t")]), idx, batch_id=1, stream_id="s"
         )
-    with _pytest.raises(RuntimeError, match="folded into the compacted base"):
-        append_to_span_index(
-            mk([(20, "another common footer block appears here twice over")]),
-            idx, batch_id=3, stream_id="s",
-        )
-    # ...and the replayed STRIP refuses too, before any output commits
-    with _pytest.raises(RuntimeError, match="folded into the compacted base"):
+    # ...and the replayed STRIP raises before any output commits
+    with _pytest.raises(FileNotFoundError):
         strip_against_span_index(probe, idx, min_docs=2,
                                  exclude_batch=("s", 3))
     # forward batches append normally and probes keep summing
@@ -968,90 +978,45 @@ def test_compact_span_index_preserves_probes_and_lineage(spark, tmp_path):
     }[99] == (after[99][0], again[99])
 
 
-def test_span_compaction_crash_recovery(spark, tmp_path, monkeypatch):
-    """Compaction is write-ahead crash-safe: a crash right AFTER the
-    marker commit (base summed in the hidden tmp, no visible change
-    yet) leaves probes reading the OLD state correctly... actually the
-    marker IS the commit point — the next index operation finishes the
-    recorded swap idempotently and probes see exactly the compacted
-    counts; a crash BEFORE the marker leaves the old state fully
-    intact (hidden tmp is invisible to readers)."""
-    import json
-    import os
+def test_span_index_in_older_format_fails_loudly(spark, tmp_path):
+    """A span index written as bare parquet plus a parameter sidecar is
+    not adopted: a rebuild into it, a probe and a compaction all raise
+    (rebuild the index into a fresh path)."""
+    import pytest as _pytest
 
-    import etl_cli_spark.operators.pipeline as pl
     from etl_cli_spark.operators.pipeline import (
-        append_to_span_index,
         build_span_index,
         compact_span_index,
         strip_against_span_index,
     )
 
     mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
-    idx = str(tmp_path / "span_idx")
-    build_span_index(
-        mk([(1, "shared legal boilerplate span here plus one")]), idx, n=5
-    )
-    append_to_span_index(
-        mk([(10, "shared legal boilerplate span here plus ten")]), idx,
-        batch_id=0, stream_id="s",
-    )
-    probe = mk([(99, "shared legal boilerplate span here plus probe")])
-    want = {
-        r.doc_id: (r.text, r.n_stripped)
-        for r in strip_against_span_index(probe, idx, min_docs=2).collect()
-    }
-
-    # simulate a crash at the commit point: run compaction but make the
-    # post-marker recovery a no-op ONCE, leaving marker + tmp on disk
-    real_recover = pl._recover_span_compaction
-    calls = {"n": 0}
-
-    def crashy(path):
-        calls["n"] += 1
-        if calls["n"] >= 2:  # the pre-flight call runs; the finish "crashes"
-            return
-        real_recover(path)
-
-    monkeypatch.setattr(pl, "_recover_span_compaction", crashy)
-    compact_span_index(spark, idx)
-    monkeypatch.setattr(pl, "_recover_span_compaction", real_recover)
-    assert os.path.exists(os.path.join(idx, pl._SPAN_COMPACT_MARKER))
-    with open(os.path.join(idx, pl._SPAN_COMPACT_MARKER)) as f:
-        assert json.load(f)["moves"], "marker must record the swap"
-
-    # the next probe finishes the swap and returns the exact counts
-    got = {
-        r.doc_id: (r.text, r.n_stripped)
-        for r in strip_against_span_index(probe, idx, min_docs=2).collect()
-    }
-    assert got == want
-    assert not os.path.exists(os.path.join(idx, pl._SPAN_COMPACT_MARKER))
-    assert not [d for d in os.listdir(idx) if d.startswith("delta_")]
+    idx = str(tmp_path / "old_idx")
+    spark.createDataFrame([(7, 1)], "gh long, n_docs long").write.parquet(idx)
+    with open(f"{idx}/_span_meta.json", "w") as f:
+        f.write('{"n": 5, "id_col": "doc_id", "text_col": "text"}')
+    with _pytest.raises(ValueError, match="need a manifest table"):
+        build_span_index(mk([(1, "a b c d e f")]), idx, n=5)
+    with _pytest.raises(FileNotFoundError):
+        strip_against_span_index(mk([(2, "a b c d e f")]), idx)
+    with _pytest.raises(FileNotFoundError):
+        compact_span_index(spark, idx)
 
 
-def test_span_compaction_premarker_crash_allows_tip_replay(
-    spark, tmp_path, monkeypatch
-):
-    """Round-9 fix for the judge's round-8 finding: a crash BETWEEN the
-    summed-base write and the marker commit must leave the old state
-    FULLY intact — in particular the lineage watermarks must NOT have
-    advanced, so a legitimate crash-replay of the live-max batch (which
-    the live-max guard deliberately allows, < not <=) still succeeds.
-    Pre-fix, _span_watermarks.json was written before the marker and a
-    crash in that window falsely refused the replay with a misleading
-    'already folded' diagnosis."""
-    import os
-
+def test_span_compaction_crash_recovery(spark, tmp_path, monkeypatch):
+    """A compaction that fails at its commit changes nothing a reader
+    or a writer sees: the probe answer and the stream watermark stay,
+    a replay of the tip batch is still skipped, and the next compaction
+    succeeds (and sweeps the failed one's uncommitted files)."""
     import pytest as _pytest
 
-    import etl_cli_spark.operators.pipeline as pl
     from etl_cli_spark.operators.pipeline import (
         append_to_span_index,
         build_span_index,
         compact_span_index,
         strip_against_span_index,
     )
+    from etl_cli_spark.operators.writeops import ParquetTable
 
     mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
     idx = str(tmp_path / "span_idx")
@@ -1065,59 +1030,104 @@ def test_span_compaction_premarker_crash_allows_tip_replay(
     tip = mk([(20, "another common footer block appears here twice over")])
     append_to_span_index(tip, idx, batch_id=3, stream_id="s")
     probe = mk([(99, "shared legal boilerplate span here plus probe")])
-    want = {
+    strip = lambda: {
         r.doc_id: (r.text, r.n_stripped)
         for r in strip_against_span_index(probe, idx, min_docs=2).collect()
     }
+    want = strip()
+    table = ParquetTable(spark, idx)
+    version = table.snapshot().version
 
-    # inject a crash at the marker commit: base tmp is written, nothing
-    # visible has changed, and (post-fix) no watermark has been touched
-    real_replace = os.replace
+    def dying_commit(self, make, **kw):
+        raise RuntimeError("injected crash at the compaction commit")
 
-    def boom(src, dst, *a, **kw):
-        if str(dst).endswith(pl._SPAN_COMPACT_MARKER):
-            raise RuntimeError("injected crash before marker commit")
-        return real_replace(src, dst, *a, **kw)
-
-    monkeypatch.setattr(os, "replace", boom)
-    with _pytest.raises(RuntimeError, match="injected crash"):
-        compact_span_index(spark, idx)
-    monkeypatch.setattr(os, "replace", real_replace)
-
-    # old state intact: no marker, no advanced lineage marks
-    assert not os.path.exists(os.path.join(idx, pl._SPAN_COMPACT_MARKER))
-    assert pl._span_compacted_mark(idx, "s") is None
-    assert pl._span_live_max(idx, "s") == 3
-
-    # the exact scenario from the finding: a replayed micro-batch at the
-    # live max (checkpoint committed append, crashed before checkpoint
-    # advance) must be accepted as an idempotent overwrite...
-    strip_against_span_index(probe, idx, min_docs=2,
-                             exclude_batch=("s", 3)).collect()
+    with monkeypatch.context() as m:
+        m.setattr(ParquetTable, "_commit", dying_commit)
+        with _pytest.raises(RuntimeError, match="injected crash"):
+            compact_span_index(spark, idx)
+    assert table.snapshot().version == version
+    assert table.last_stream_batch("s") == 3
+    assert strip() == want
+    # a crash-replay of the tip batch is still recognised and skipped
     append_to_span_index(tip, idx, batch_id=3, stream_id="s")
-    got = {
+    assert table.snapshot().version == version
+    compact_span_index(spark, idx)
+    assert strip() == want
+    assert table.last_stream_batch("s") == 3
+    assert _span_files_on_disk(idx) == table.snapshot().files
+
+
+def test_span_compaction_premarker_crash_allows_tip_replay(
+    spark, tmp_path, monkeypatch
+):
+    """A compaction that fails at its commit leaves the stream's
+    watermark where it was, so the crash-replay of the tip batch still
+    works end to end: its strip (excluding itself) sees exactly the
+    history the original run saw, and its append is skipped. A later
+    compaction then completes, and the tip replay is still skipped."""
+    import pytest as _pytest
+
+    from etl_cli_spark.operators.pipeline import (
+        append_to_span_index,
+        build_span_index,
+        compact_span_index,
+        strip_against_span_index,
+    )
+    from etl_cli_spark.operators.writeops import ParquetTable
+
+    mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
+    idx = str(tmp_path / "span_idx")
+    build_span_index(
+        mk([(1, "shared legal boilerplate span here plus one")]), idx, n=5
+    )
+    append_to_span_index(
+        mk([(10, "shared legal boilerplate span here plus ten")]), idx,
+        batch_id=0, stream_id="s",
+    )
+    tip = mk([(20, "shared legal boilerplate span here plus twenty")])
+    strip_tip = lambda **kw: {
+        r.doc_id: (r.text, r.n_stripped)
+        for r in strip_against_span_index(tip, idx, min_docs=3, **kw).collect()
+    }
+    tip_first_run = strip_tip()
+    append_to_span_index(tip, idx, batch_id=3, stream_id="s")
+    probe = mk([(99, "shared legal boilerplate span here plus probe")])
+    strip = lambda: {
         r.doc_id: (r.text, r.n_stripped)
         for r in strip_against_span_index(probe, idx, min_docs=2).collect()
     }
-    assert got == want
+    want = strip()
+    table = ParquetTable(spark, idx)
+    version = table.snapshot().version
 
-    # ...and a later compaction completes cleanly from the stale tmp,
-    # advancing the marks at ITS commit point
+    def dying_commit(self, make, **kw):
+        raise RuntimeError("injected crash at the compaction commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(ParquetTable, "_commit", dying_commit)
+        with _pytest.raises(RuntimeError, match="injected crash"):
+            compact_span_index(spark, idx)
+    assert table.last_stream_batch("s") == 3
+    # the replayed micro-batch: its strip excludes itself, its append
+    # is recognised as committed and skipped
+    assert strip_tip(exclude_batch=("s", 3)) == tip_first_run
+    append_to_span_index(tip, idx, batch_id=3, stream_id="s")
+    assert table.snapshot().version == version
+    assert strip() == want
+
     compact_span_index(spark, idx)
-    assert pl._span_compacted_mark(idx, "s") == 3
-    assert {
-        r.doc_id: (r.text, r.n_stripped)
-        for r in strip_against_span_index(probe, idx, min_docs=2).collect()
-    } == want
-    with _pytest.raises(RuntimeError, match="folded into the compacted base"):
-        append_to_span_index(tip, idx, batch_id=3, stream_id="s")
+    assert table.last_stream_batch("s") == 3
+    assert strip() == want
+    append_to_span_index(tip, idx, batch_id=3, stream_id="s")
+    assert table.last_stream_batch("s") == 3
+    assert strip() == want
 
 
 def test_span_stream_id_charset_validated(spark, tmp_path):
-    """stream_id becomes a path component matched against URI-encoded
-    input_file_name output — ids that would encode differently (space,
-    %, /, non-ASCII) are refused up front instead of silently breaking
-    the replayed-batch self-exclusion (round-9 ADVICE fix)."""
+    """Stream ids are manifest keys, not path components, so ids with a
+    space, a percent escape, a slash or non-ASCII text all work, and
+    each keeps its own watermark and its own replayed-strip
+    self-exclusion on one shared index."""
     import pytest as _pytest
 
     from etl_cli_spark.operators.pipeline import (
@@ -1125,49 +1135,115 @@ def test_span_stream_id_charset_validated(spark, tmp_path):
         build_span_index,
         strip_against_span_index,
     )
+    from etl_cli_spark.operators.writeops import ParquetTable
 
     mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
     idx = str(tmp_path / "span_idx")
     build_span_index(mk([(1, "a b c d e f g")]), idx, n=5)
-    for bad in ["has space", "pct%20enc", "sub/dir", "naïve", ""]:
-        with _pytest.raises(ValueError, match="stream_id"):
-            append_to_span_index(
-                mk([(2, "h i j k l m n")]), idx, batch_id=0, stream_id=bad
-            )
-        with _pytest.raises(ValueError, match="stream_id"):
-            strip_against_span_index(
-                mk([(3, "o p q r s t u")]), idx, exclude_batch=(bad, 0)
-            )
-    # safe charset (letters, digits, underscore, dash) passes
-    append_to_span_index(
-        mk([(2, "h i j k l m n")]), idx, batch_id=0, stream_id="Crawl_2026-a"
-    )
+    table = ParquetTable(spark, idx)
+    odd = ["has space", "pct%20enc", "sub/dir", "naïve"]
+    for i, sid in enumerate(odd):
+        batch = mk([(10 + i, "shared legal boilerplate span here plus x")])
+        first = {
+            r.doc_id: r.n_stripped
+            for r in strip_against_span_index(batch, idx, min_docs=2).collect()
+        }
+        append_to_span_index(batch, idx, batch_id=i, stream_id=sid)
+        version = table.snapshot().version
+        # a replay of the batch is skipped, and its strip excludes itself
+        append_to_span_index(batch, idx, batch_id=i, stream_id=sid)
+        assert table.snapshot().version == version
+        assert {
+            r.doc_id: r.n_stripped
+            for r in strip_against_span_index(
+                batch, idx, min_docs=2, exclude_batch=(sid, i)
+            ).collect()
+        } == first
+    # every id kept its own watermark; a backwards id still raises
+    assert [table.last_stream_batch(s) for s in odd] == [0, 1, 2, 3]
+    with _pytest.raises(RuntimeError, match="checkpoint was reset"):
+        append_to_span_index(
+            mk([(50, "h i j k l m n")]), idx, batch_id=0, stream_id="naïve"
+        )
 
 
-def test_span_compact_vs_concurrent_append_no_double_count(
+def test_span_append_while_marker_pending_first_finishes_swap(
     spark, tmp_path, monkeypatch
 ):
-    """Round-10 interleaving (r9 'next round' #6, compact-vs-append):
-    a delta landing AFTER compaction captured its file listing but
-    BEFORE the fold executes must be neither folded nor deleted — it
-    stays live and probes sum it exactly once. Pre-fix,
-    compact_span_index re-scanned the whole directory for the fold
-    (while to_delete came from the earlier listing), so the late delta
-    was summed into the base AND left on disk: every gram in it
-    double-counted forever. The fold now reads exactly the listed
-    files. The span index's sidecar/marker protocol is driver-local
-    filesystem by design (the object-store commit-backend seam governs
-    the manifest _log), so the interleaving is injected at the
-    listdir boundary rather than parametrized over commit backends."""
-    import os as _os
+    """A compaction whose commit landed but whose cleanup (``vacuum``)
+    died leaves a consistent index: the commit alone is the swap. A
+    forward append lands normally, probes equal the sequential run, a
+    replay of the folded batch is skipped and an older id raises; the
+    next compaction sweeps the files the dead one left behind."""
+    import pytest as _pytest
 
-    import etl_cli_spark.operators.pipeline as pl
     from etl_cli_spark.operators.pipeline import (
         append_to_span_index,
         build_span_index,
         compact_span_index,
         strip_against_span_index,
     )
+    from etl_cli_spark.operators.writeops import ParquetTable
+
+    mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
+    base = mk([(1, "shared legal boilerplate span here plus one")])
+    b3 = mk([(20, "another common footer block appears here twice over")])
+    b4 = mk([(40, "shared legal boilerplate span here plus forty")])
+    probe = mk([(99, "shared legal boilerplate span here plus probe")])
+    strip = lambda p: {
+        r.doc_id: (r.text, r.n_stripped)
+        for r in strip_against_span_index(probe, p, min_docs=2).collect()
+    }
+
+    twin = str(tmp_path / "twin")
+    build_span_index(base, twin, n=5)
+    append_to_span_index(b3, twin, batch_id=3, stream_id="s")
+    append_to_span_index(b4, twin, batch_id=4, stream_id="s")
+    want = strip(twin)
+
+    idx = str(tmp_path / "idx")
+    build_span_index(base, idx, n=5)
+    append_to_span_index(b3, idx, batch_id=3, stream_id="s")
+    table = ParquetTable(spark, idx)
+
+    def dying_vacuum(self, *a, **kw):
+        raise RuntimeError("injected crash after the compaction commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(ParquetTable, "vacuum", dying_vacuum)
+        with _pytest.raises(RuntimeError, match="injected crash"):
+            compact_span_index(spark, idx)
+    assert table.snapshot().files == 1
+    assert _span_files_on_disk(idx) > table.snapshot().files
+
+    # a replay of the folded batch is skipped; the forward batch lands
+    append_to_span_index(b3, idx, batch_id=3, stream_id="s")
+    append_to_span_index(b4, idx, batch_id=4, stream_id="s")
+    assert table.last_stream_batch("s") == 4
+    assert strip(idx) == want
+    with _pytest.raises(RuntimeError, match="checkpoint was reset"):
+        append_to_span_index(b3, idx, batch_id=3, stream_id="s")
+
+    compact_span_index(spark, idx)
+    assert strip(idx) == want
+    assert _span_files_on_disk(idx) == table.snapshot().files
+
+
+def test_span_compact_vs_concurrent_append_no_double_count(
+    spark, tmp_path, monkeypatch
+):
+    """An append committing AFTER compaction read the index but BEFORE
+    its commit must be neither folded nor lost: the compaction commits
+    its summed rows in place of exactly the files it read, so the late
+    append's files stay live and probes sum them exactly once. The
+    next compaction folds the straggler."""
+    from etl_cli_spark.operators.pipeline import (
+        append_to_span_index,
+        build_span_index,
+        compact_span_index,
+        strip_against_span_index,
+    )
+    from etl_cli_spark.operators.writeops import ParquetTable
 
     mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
     batches = {
@@ -1194,7 +1270,7 @@ def test_span_compact_vs_concurrent_append_no_double_count(
     def gram_counts(path):
         return {
             int(r.gh): int(r.n)
-            for r in pl._span_history(spark, path)
+            for r in ParquetTable(spark, path).read()
             .groupBy("gh").agg(F.sum("n_docs").alias("n"))
             .collect()
         }
@@ -1206,112 +1282,41 @@ def test_span_compact_vs_concurrent_append_no_double_count(
     for b in (0, 3):
         append_to_span_index(batches[b], idx, batch_id=b, stream_id="s")
 
-    # inject: batch 7 lands immediately after compaction lists the dir
-    real_listdir = _os.listdir
+    # inject: batch 7 commits after compaction staged its summed rows,
+    # just before the compaction's own commit
+    real_commit = ParquetTable._commit
     state = {"fired": False}
 
-    def sneaky(p="."):
-        out = real_listdir(p)
-        if not state["fired"] and _os.path.abspath(str(p)) == _os.path.abspath(idx):
+    def racing_commit(self, make, **kw):
+        if not state["fired"]:
             state["fired"] = True
             append_to_span_index(batches[7], idx, batch_id=7, stream_id="s")
-        return out
+        return real_commit(self, make, **kw)
 
-    monkeypatch.setattr(_os, "listdir", sneaky)
-    compact_span_index(spark, idx)
-    monkeypatch.setattr(_os, "listdir", real_listdir)
-    assert state["fired"], "injection did not run — listing path changed?"
+    with monkeypatch.context() as m:
+        m.setattr(ParquetTable, "_commit", racing_commit)
+        compact_span_index(spark, idx)
+    assert state["fired"], "injection did not run — commit path changed?"
 
-    # late delta survived (not folded, not deleted), counts exact-once
-    assert [d for d in real_listdir(idx) if d.startswith("delta_")] == [
-        pl._span_delta_name("s", 7)
-    ]
-    assert pl._span_compacted_mark(idx, "s") == 3  # 7 NOT marked folded
+    table = ParquetTable(spark, idx)
+    assert table.last_stream_batch("s") == 7
     got = {
         r.doc_id: (r.text, r.n_stripped)
         for r in strip_against_span_index(probe, idx, min_docs=2).collect()
     }
     assert got == want
     assert gram_counts(idx) == want_counts  # exact-once, not just thresholds
+    # the straggler's rows are still a separate batch of gram counts
+    assert table.read().count() > table.read().select("gh").distinct().count()
 
-    # the next offline compaction folds the straggler and advances marks
+    # the next offline compaction folds the straggler
     compact_span_index(spark, idx)
-    assert not [d for d in real_listdir(idx) if d.startswith("delta_")]
-    assert pl._span_compacted_mark(idx, "s") == 7
+    assert table.read().count() == table.read().select("gh").distinct().count()
     assert {
         r.doc_id: (r.text, r.n_stripped)
         for r in strip_against_span_index(probe, idx, min_docs=2).collect()
     } == want
     assert gram_counts(idx) == want_counts
-
-
-def test_span_append_while_marker_pending_first_finishes_swap(
-    spark, tmp_path, monkeypatch
-):
-    """compact-vs-append, the committed-but-unfinished window: an append
-    arriving while a compaction MARKER is pending (commit point crossed,
-    swap not executed — e.g. the compacting process died) must first
-    finish the recorded swap, then apply its own guard against the NOW
-    current marks: a forward batch id appends normally, a folded batch
-    id is refused. Probes afterwards equal the fully sequential run."""
-    import os
-
-    import pytest as _pytest
-
-    import etl_cli_spark.operators.pipeline as pl
-    from etl_cli_spark.operators.pipeline import (
-        append_to_span_index,
-        build_span_index,
-        compact_span_index,
-        strip_against_span_index,
-    )
-
-    mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
-    b3 = mk([(20, "another common footer block appears here twice over")])
-    b4 = mk([(40, "shared legal boilerplate span here plus forty")])
-    probe = mk([(99, "shared legal boilerplate span here plus probe")])
-
-    twin = str(tmp_path / "twin")
-    build_span_index(mk([(1, "shared legal boilerplate span here plus one")]), twin, n=5)
-    append_to_span_index(b3, twin, batch_id=3, stream_id="s")
-    append_to_span_index(b4, twin, batch_id=4, stream_id="s")
-    want = {
-        r.doc_id: (r.text, r.n_stripped)
-        for r in strip_against_span_index(probe, twin, min_docs=2).collect()
-    }
-
-    idx = str(tmp_path / "idx")
-    build_span_index(mk([(1, "shared legal boilerplate span here plus one")]), idx, n=5)
-    append_to_span_index(b3, idx, batch_id=3, stream_id="s")
-
-    # leave a committed-but-unrecovered marker (marks fold batch 3)
-    real_recover = pl._recover_span_compaction
-    calls = {"n": 0}
-
-    def crashy(path):
-        calls["n"] += 1
-        if calls["n"] >= 2:
-            return
-        real_recover(path)
-
-    monkeypatch.setattr(pl, "_recover_span_compaction", crashy)
-    compact_span_index(spark, idx)
-    monkeypatch.setattr(pl, "_recover_span_compaction", real_recover)
-    assert os.path.exists(os.path.join(idx, pl._SPAN_COMPACT_MARKER))
-
-    # forward append: finishes the swap, then lands batch 4
-    append_to_span_index(b4, idx, batch_id=4, stream_id="s")
-    assert not os.path.exists(os.path.join(idx, pl._SPAN_COMPACT_MARKER))
-    assert pl._span_compacted_mark(idx, "s") == 3
-    got = {
-        r.doc_id: (r.text, r.n_stripped)
-        for r in strip_against_span_index(probe, idx, min_docs=2).collect()
-    }
-    assert got == want
-
-    # a replay of the folded batch is refused AFTER the swap completed
-    with _pytest.raises(RuntimeError, match="folded into the compacted base"):
-        append_to_span_index(b3, idx, batch_id=3, stream_id="s")
 
 
 def test_span_stale_reader_across_compaction_fails_loud_or_right(

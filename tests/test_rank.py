@@ -308,3 +308,52 @@ def test_perplexity_buckets_equal_count_tiers_and_tie_safety(spark):
     assert all(out[20 + i] == ("en", 3, "tail") for i in range(3))
     # languages bucket independently
     assert {out[30 + i][0] for i in range(3)} == {"xx"}
+
+
+def test_text_index_probe_reads_id_col_from_index(spark, engine, tmp_path):
+    """An index built with another id column answers under that column:
+    the probe takes ``id_col`` from the index's commit."""
+    from etl_cli_spark.operators.rank import bm25_topk_indexed, build_text_index
+
+    docs = engine.read("documents")
+    path = str(tmp_path / "tidx_id")
+    build_text_index(docs.withColumnRenamed("doc_id", "id"), path, id_col="id", n_buckets=8)
+    build_text_index(docs, str(tmp_path / "tidx_doc"), n_buckets=8)
+    q = ["spark", "join", "window"]
+    got = bm25_topk_indexed(spark, path, q, k=10)
+    assert got.columns == ["id", "score"]
+    want = bm25_topk_indexed(spark, str(tmp_path / "tidx_doc"), q, k=10).collect()
+    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want]
+
+
+def test_text_index_failed_append_keeps_answer(spark, engine, tmp_path, monkeypatch):
+    """An append that fails at its commit leaves the index answering as
+    before (postings and statistics are one commit), and the retried
+    append answers like a rebuild over the union."""
+    from etl_cli_spark.operators.rank import (
+        append_to_text_index,
+        bm25_topk_indexed,
+        build_text_index,
+    )
+    from etl_cli_spark.operators.writeops import ParquetTable
+
+    docs = engine.read("documents").filter("doc_id < 40")
+    even, odd = docs.filter("doc_id % 2 = 0"), docs.filter("doc_id % 2 = 1")
+    inc, full = str(tmp_path / "inc"), str(tmp_path / "full")
+    build_text_index(even, inc, n_buckets=8)
+    build_text_index(docs, full, n_buckets=8)
+    q = ["spark", "join", "window"]
+    probe = lambda p: [tuple(r) for r in bm25_topk_indexed(spark, p, q, k=5).collect()]
+    before = probe(inc)
+
+    def dying_commit(self, make, **kw):
+        raise RuntimeError("injected crash at the append commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(ParquetTable, "_commit", dying_commit)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            append_to_text_index(odd, inc)
+    assert probe(inc) == before
+    append_to_text_index(odd, inc)
+    assert probe(inc) == probe(full)
+    assert ParquetTable(spark, inc).read().count() == ParquetTable(spark, full).read().count()
