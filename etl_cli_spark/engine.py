@@ -201,9 +201,12 @@ class Engine:
         return profile_columns(self.read(uri, query), exact=exact)
 
     def sql(self, query: str) -> DataFrame:
-        """SQL over the root's datasets: every dataset in every namespace is
+        """SQL over the root's datasets: every dataset in every namespace (a
+        manifest table once it has committed a version) is
         registered as a temp view named after the dataset (namespace views
-        as ``ns_name``). The full Spark SQL surface — multi-way joins,
+        as ``ns_name``), and the root's job log, if it holds one, as
+        ``logs_job`` (read through :meth:`JobLog.frame`, so the log's
+        fixed schema). The full Spark SQL surface — multi-way joins,
         CTEs, windows — over the same catalog the job API uses.
 
         Temp views are global to the SparkSession, so a register-once cache
@@ -231,12 +234,22 @@ class Engine:
             self._catalog_dirty = False
         state = (self.root, self._fp_cache[1])
         if getattr(self.spark, "_etl_sql_state", None) != state:
-            for name in ls_ns(self.root):
-                try:
-                    self.read(name).createOrReplaceTempView(name)
-                except Exception:
-                    for sub in ls_ns(self.root, name):
-                        self.read(f"{name}/{sub}").createOrReplaceTempView(f"{name}_{sub}")
+            namespaces = [n for n in ls_ns(self.root) if os.path.isdir(os.path.join(self.root, n))]
+            for ns in ["", *namespaces]:
+                for name in ls_ns(self.root, ns):
+                    uri = f"{ns}/{name}" if ns else name
+                    path = resolve_path(parse_ds(uri), self.root)
+                    # a sub-namespace (or the job log) is no dataset, and a
+                    # manifest table before its first commit is invisible
+                    if ParquetTable(self.spark, path).exists():
+                        self.read(uri).createOrReplaceTempView(f"{ns}_{name}" if ns else name)
+            from .metrics import JobLog
+
+            # not self.job_log: that would switch logging on for an
+            # engine built with job_log=False
+            log = self._job_log or JobLog(self.spark, self.root)
+            if os.path.isdir(log.path):
+                log.frame().createOrReplaceTempView("logs_job")
             self.spark._etl_sql_state = state
         return self.spark.sql(query)
 
@@ -295,7 +308,7 @@ class Engine:
             try:
                 with scope():
                     res = self._run(spec, merge_rules_fn, observe_rows=True)
-                    rows_out = res.df.count()
+                    rows_out = self._rows_out(spec, res)
                 obs = res.metrics.pop("_rows_in_obs", None)
                 self.job_log.record(
                     JobRecord(
@@ -331,11 +344,13 @@ class Engine:
           source plan — populated as a side effect of whatever action the
           job runs, zero extra passes (the reference's ``sprogress``
           poll counter, base.py:376-381).
-        - ``rows_out`` for written parquet targets is a count on the
-          fresh target read — a metadata-only scan (parquet row-group
-          counts), not a recompute of the job plan. For lazy results
-          (no target / dry-run) one ``count()`` is the job's single
-          execution, which also resolves the observation.
+        - ``rows_out`` (:meth:`_rows_out`) for a written manifest
+          target is its committed snapshot's row count, which the commit
+          took from the file footers: no Spark job. Any other written
+          target is counted by a Spark job over the fresh target read,
+          not a recompute of the job plan. For lazy results (no target /
+          dry-run) one ``count()`` is the job's single execution, which
+          also resolves the observation.
 
         The job owns what it shares: a scope around the build and the
         count releases it before the record lands.
@@ -348,7 +363,7 @@ class Engine:
         try:
             with scope():
                 res = self._run(spec, merge_rules_fn, observe_rows=True)
-                rows_out = res.df.count()
+                rows_out = self._rows_out(spec, res)
             obs = res.metrics.pop("_rows_in_obs", None)
             rows_in = observed_value(obs, "rows_in")
         except Exception as e:
@@ -377,6 +392,24 @@ class Engine:
         res.metrics["rows_in"] = rows_in
         res.metrics["rows_out"] = rows_out
         return res
+
+    def _rows_out(self, spec: JobSpec, res: JobResult) -> int:
+        """Rows in a run's result. A written manifest parquet target
+        answers from its committed snapshot, whose commit recorded each
+        file's footer row count; a legacy target, a dry run, a lazy
+        result, or a snapshot missing some file's count runs
+        ``count()``."""
+        t = spec.target
+        if t is not None and not t.dry_run and not t.url:
+            ds = parse_ds(res.target)
+            if ds.backend == "parquet":
+                try:
+                    rows = ParquetTable(self.spark, resolve_path(ds, self.root)).snapshot().rows
+                except FileNotFoundError:  # a legacy table: no manifest
+                    rows = None
+                if rows is not None:
+                    return rows
+        return res.df.count()
 
     def _run(self, spec: JobSpec, merge_rules_fn=None, observe_rows: bool = False) -> JobResult:
         src_ds = parse_ds(spec.source.ds)

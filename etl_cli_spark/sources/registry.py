@@ -80,9 +80,44 @@ def write_dataset(
         raise ValueError(f"unknown backend {ds.backend!r}")
 
 
-def _ns_timestamp_cols(path: str) -> list[str]:
-    """Columns stored as parquet INT64 TIMESTAMP(NANOS) — Spark can't read
-    them natively (PARQUET_TYPE_ILLEGAL); found by inspecting the footer.
+def _data_files(path: str) -> list[tuple[str, int, int]] | None:
+    """(relative name, size, mtime_ns) of every data file a parquet read
+    of the local ``path`` (a file or a directory) scans, sorted; None
+    for a path that is missing or a glob."""
+    from ..operators.writeops import data_files
+
+    if any(c in path for c in "*?[{") or not os.path.exists(path):
+        return None
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return [("", st.st_size, st.st_mtime_ns)]
+    out = []
+    for rel in data_files(path):
+        st = os.stat(os.path.join(path, rel))
+        out.append((rel, st.st_size, st.st_mtime_ns))
+    return sorted(out)
+
+
+# Spark session settings its parquet schema inference reads: a schema
+# inferred under other values is not reused
+_INFER_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.caseSensitive",
+    "spark.sql.session.timeZone",
+    "spark.sql.files.ignoreCorruptFiles",
+)
+
+
+def _ns_timestamp_cols(target: str) -> list[str]:
+    """Columns the parquet file ``target`` stores as INT64
+    TIMESTAMP(NANOS) — Spark can't read them natively
+    (PARQUET_TYPE_ILLEGAL); found by inspecting the footer.
 
     The check must be on the *parquet* schema, not the Arrow view: Arrow
     also reports Spark's INT96 timestamps as ``ns``, but those Spark reads
@@ -90,12 +125,6 @@ def _ns_timestamp_cols(path: str) -> list[str]:
     """
     import pyarrow.parquet as pq
 
-    target = path
-    if os.path.isdir(path):
-        parts = [f for f in os.listdir(path) if f.endswith(".parquet")]
-        if not parts:
-            return []
-        target = os.path.join(path, parts[0])
     try:
         schema = pq.ParquetFile(target).schema
     except Exception:
@@ -115,13 +144,25 @@ def _ns_timestamp_cols(path: str) -> list[str]:
 
 
 def read_parquet(spark: SparkSession, path: str, options: dict[str, Any] | None = None) -> DataFrame:
-    """Parquet read with nanosecond-timestamp compatibility.
+    """Parquet read with nanosecond-timestamp compatibility and a
+    per-session schema cache.
 
     ns-timestamps (pandas default) are read as raw longs
     (``spark.sql.legacy.parquet.nanosAsLong``) and converted to
     microsecond timestamps in the plan — same truncation DuckDB applies,
-    so oracle comparisons line up.
+    so oracle comparisons line up. The columns are found in the footer
+    of the first data file, in a hive-partitioned directory too.
+
+    Spark infers a plain source's schema with a job that reads footers.
+    The schema inferred on a path's first read is kept on the session
+    and passed to later reads of the path, which then run no job. It is
+    inferred again when the path's key changes: the options, the
+    session settings inference reads (:data:`_INFER_CONFS`), or the
+    (name, size, mtime) of any data file, so a rewritten source is
+    re-inferred. A missing path or a glob goes straight to Spark.
     """
+    from pyspark.sql import functions as F
+
     from ..operators.writeops import ParquetTable
 
     if ParquetTable.manages(path):
@@ -131,12 +172,29 @@ def read_parquet(spark: SparkSession, path: str, options: dict[str, Any] | None 
         if df is None:
             raise FileNotFoundError(f"{path}: manifest log present but no committed version")
         return df
-    ns_cols = _ns_timestamp_cols(path)
+    reader = spark.read.options(**(options or {}))
+    files = _data_files(path)
+    if not files:
+        return reader.parquet(path)
+    ns_cols = _ns_timestamp_cols(os.path.join(path, files[0][0]) if files[0][0] else path)
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.options(**(options or {})).parquet(path)
-    from pyspark.sql import functions as F
-
+    key = (
+        tuple(sorted((k, str(v)) for k, v in (options or {}).items())),
+        tuple(spark.conf.get(c, None) for c in _INFER_CONFS),
+        tuple(files),
+    )
+    # on the session object, like Engine.sql's view state: it dies with
+    # the session. One entry per path; a changed key replaces it
+    cache = getattr(spark, "_etl_parquet_schemas", None)
+    if cache is None:
+        cache = spark._etl_parquet_schemas = {}
+    hit = cache.get(path)
+    if hit is not None and hit[0] == key:
+        df = reader.schema(hit[1]).parquet(path)
+    else:
+        df = reader.parquet(path)
+        cache[path] = (key, df.schema)
     for c in ns_cols:
         df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
     return df

@@ -1,10 +1,23 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
+
+
+def jobs_submitted(spark, fn):
+    """(fn(), number of Spark jobs fn submitted), counted under a fresh
+    job group."""
+    sc, group = spark.sparkContext, uuid.uuid4().hex
+    sc.setJobGroup(group, "job count probe")
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

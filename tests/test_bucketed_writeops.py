@@ -179,7 +179,7 @@ def test_bool_partition_value_falls_back_to_full_rewrite(spark, engine, tmp_path
     t.append(orders)
 
     src = orders.filter("o_orderkey < 30").withColumn("o_orderpriority", F.lit("X"))
-    assert _touched(src, t, ("o_orderkey", "flag")) is None
+    assert _touched(src, t, ("o_orderkey", "flag"))[0] is None
 
     out = apply_write_op(src, t, TargetSpec(ds="t", op="upsert", pk=("o_orderkey", "flag")))
     got = {r.o_orderkey: r.o_orderpriority for r in out.collect()}
@@ -309,7 +309,8 @@ def test_bucket_touched_set_never_declines(spark, tmp_path):
     t = ParquetTable(
         spark, str(tmp_path / "wide.parquet"), bucket_by=("id",), n_buckets=8192
     )
-    touched = _touched(spark.range(50_000), t, ("id",))
+    touched, n = _touched(spark.range(50_000), t, ("id",))
+    assert n == 50_000
     assert touched is not None and 4096 < len(touched) <= 8192
     assert touched == sorted(set(touched))
     assert not os.path.exists(t.path)

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import pytest
+from conftest import jobs_submitted
 from pyspark.sql import functions as F
 
 from etl_cli_spark.dsl import coerce_value, compile_query, split_key
@@ -97,20 +98,6 @@ def test_flatten_roundtrip(spark):
     assert back.select("s.b.c").collect()[0][0] == 3
 
 
-def _jobs_submitted(spark, fn):
-    """(fn(), number of Spark jobs fn submitted), counted under a fresh
-    job group."""
-    import uuid
-
-    sc, group = spark.sparkContext, uuid.uuid4().hex
-    sc.setJobGroup(group, "job count probe")
-    try:
-        out = fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 # single-split (under-fanned) inputs the gate must recognise as scan-rooted;
 # a newline inside a string literal once split the plan's rendered line and
 # silently turned the gate off
@@ -167,11 +154,11 @@ class TestComputeFanOut:
         else:
             cust = engine.read("customer")
             df = orders.join(cust, orders.o_custkey == cust.c_custkey)
-        out, jobs = _jobs_submitted(spark, lambda: fan_out_for_compute(df))
+        out, jobs = jobs_submitted(spark, lambda: fan_out_for_compute(df))
         assert out is df
         assert jobs == 0
         # the counter does see the probe the gate avoids
-        assert _jobs_submitted(spark, lambda: df.rdd.getNumPartitions())[1] > 0
+        assert jobs_submitted(spark, lambda: df.rdd.getNumPartitions())[1] > 0
 
     def test_cpu_heavy_operator_fans_out(self, spark, engine):
         from etl_cli_spark.operators.text import gopher_quality

@@ -7,23 +7,11 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
 import pytest
+from conftest import jobs_submitted
 
 from etl_cli_spark.operators.writeops import ParquetTable
-
-
-def _jobs_submitted(spark, fn):
-    """(fn(), number of Spark jobs fn submitted), counted under a fresh
-    job group."""
-    sc, group = spark.sparkContext, uuid.uuid4().hex
-    sc.setJobGroup(group, "job count probe")
-    try:
-        out = fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _rows(df):
@@ -281,7 +269,7 @@ def test_similarity_probe_builds_without_jobs(spark, engine, tmp_path, kind):
     path = str(tmp_path / kind)
     case["build"](path)
     case["append"](path)
-    out, jobs = _jobs_submitted(spark, lambda: case["probe"](path))
+    out, jobs = jobs_submitted(spark, lambda: case["probe"](path))
     assert jobs == 0
     assert out.count() == 10
 
