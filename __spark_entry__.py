@@ -874,8 +874,8 @@ def _q_write_upsert_manifest(spark, sf):
     (round-4 judge item #1): the bucketed target is transaction-log
     committed — writes land invisibly and become visible via an atomic
     put-if-absent ``_log/<version>.json`` manifest, so readers always
-    resolve one consistent snapshot (the object-store-safe posture;
-    writeops.ParquetTable manifest mode). Same oracle as write_upsert:
+    resolve one consistent snapshot (the object-store-safe protocol
+    every writeops.ParquetTable commits through). Same oracle as write_upsert:
     the protocol must not change a single row."""
     from etl_cli_spark.spec import TargetSpec
     from etl_cli_spark.operators.writeops import ParquetTable, apply_write_op
@@ -885,7 +885,7 @@ def _q_write_upsert_manifest(spark, sf):
     tmp = tempfile.mkdtemp(prefix="etl_writeop_m_")
     t = ParquetTable(
         spark, f"{tmp}/orders_m.parquet",
-        bucket_by=("o_orderkey",), n_buckets=32, manifest=True,
+        bucket_by=("o_orderkey",), n_buckets=32,
     )
     t.append(orders)
     changed = orders.filter("o_orderkey < 100").withColumn(
@@ -913,7 +913,7 @@ def _setup_manifest_time_travel(spark, sf):
     tmp = tempfile.mkdtemp(prefix="etl_tt_")
     t = ParquetTable(
         spark, f"{tmp}/orders_tt.parquet",
-        bucket_by=("o_orderkey",), n_buckets=32, manifest=True,
+        bucket_by=("o_orderkey",), n_buckets=32,
     )
     t.append(orders)  # v0
     changed = orders.filter("o_orderkey < 100").withColumn(
@@ -2550,9 +2550,8 @@ def _setup_manifest_changefeed(spark, sf):
     tmp = tempfile.mkdtemp(prefix="etl_cdf_")
     up = ParquetTable(
         spark, f"{tmp}/up.parquet", bucket_by=("doc_id",), n_buckets=8,
-        manifest=True,
     )
-    down = ParquetTable(spark, f"{tmp}/down.parquet", manifest=True)
+    down = ParquetTable(spark, f"{tmp}/down.parquet")
     up.append(d.filter("doc_id % 3 != 2"))  # v0
     changefeed_merge(spark, up, down, pk=("doc_id",), transform=_cdf_transform)
     src = d.filter("doc_id % 5 = 0").withColumn("lang", F.lit("xx"))
@@ -2598,7 +2597,7 @@ def _q_manifest_read_asof(spark, sf):
 
     orders = _engine(spark, sf).read("orders")
     tmp = tempfile.mkdtemp(prefix="etl_asof_")
-    t = ParquetTable(spark, f"{tmp}/t.parquet", manifest=True)
+    t = ParquetTable(spark, f"{tmp}/t.parquet")
     t.append(orders)  # v0
     src = orders.filter("o_orderkey < 30").withColumn("o_orderstatus", F.lit("X"))
     apply_write_op(src, t, TargetSpec(ds="t", op="upsert", pk=("o_orderkey",)))  # v1
@@ -2625,7 +2624,7 @@ def _q_manifest_stats_prune(spark, sf):
     hi = orders.agg(F.max("o_orderkey")).first()[0] + 1
     step = (hi + 3) // 4
     tmp = tempfile.mkdtemp(prefix="etl_skip_")
-    t = ParquetTable(spark, f"{tmp}/t.parquet", manifest=True)
+    t = ParquetTable(spark, f"{tmp}/t.parquet")
     for lo in range(0, hi, step):
         t.append(orders.filter(
             f"o_orderkey >= {lo} AND o_orderkey < {lo + step}"

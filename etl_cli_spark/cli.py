@@ -73,9 +73,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--sort-by", dest="sort_by",
                    help="cluster rows within files on column(s) for parquet "
                         "min/max data skipping, comma-separated")
-    p.add_argument("--manifest", action="store_true",
-                   help="commit writes through a _log manifest (snapshot-"
-                        "isolated reads, atomic object-store-safe commits)")
     p.add_argument("--log-ds", dest="log_ds",
                    help="namespace for the per-target write log (logs written batches)")
     p.add_argument("--log", dest="log_fields",
@@ -84,19 +81,20 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--compact", action="store_true",
                    help="compact the source table's small files and exit")
     p.add_argument("--vacuum", action="store_true",
-                   help="remove leftover staged/backup dirs of the source table and exit")
+                   help="remove the source table's leftover staged dirs, the files "
+                        "replaced writes left, and older log versions, and exit")
     p.add_argument("--zorder-by", metavar="COLS",
                    help="OPTIMIZE ZORDER the source table on these comma-"
                         "separated columns and exit (multi-column data skipping)")
     p.add_argument("--retain", type=int, default=1, metavar="N",
-                   help="with --vacuum on a manifest table: keep the newest N "
+                   help="with --vacuum: keep the newest N "
                         "versions time-travel-readable (default 1 = tip only)")
     p.add_argument("--versions", action="store_true",
-                   help="list the source manifest table's committed versions and exit")
+                   help="list the source table's committed versions and exit")
     p.add_argument("--as-of", type=int, metavar="V", dest="as_of",
-                   help="time travel: preview the source AT manifest version V and exit")
+                   help="time travel: preview the source AT version V and exit")
     p.add_argument("--changes", metavar="FROM[,TO]",
-                   help="change data feed of the source manifest table between "
+                   help="change data feed of the source table between "
                         "two versions (TO defaults to the tip); --pk classifies "
                         "insert/update_postimage/delete, else insert/delete multiset")
     p.add_argument("--get-setting", metavar="NAME", help="print an engine setting and exit")
@@ -223,7 +221,6 @@ def main(argv: Sequence[str] | None = None) -> int:
         overwrite=args.overwrite, drop=args.drop, dry=args.dry,
         tmap=args.tmap, turl=args.turl, n_buckets=args.n_buckets,
         partition_by=args.partition_by, sort_by=args.sort_by,
-        manifest=args.manifest,
         log_ds=args.log_ds, log=args.log_fields,
         workers=args.workers, batch_size=args.batch_size, msg=args.msg,
     )

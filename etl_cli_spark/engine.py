@@ -28,7 +28,7 @@ from .operators.merger import merge
 from .operators.writeops import ParquetTable, apply_write_op
 from .share import scope
 from .sources.registry import read_dataset, write_dataset
-from .spec import JobSpec, make_spec
+from .spec import JobSpec, make_spec, manifest_only
 from .uri import DatasetURI, expand_wildcard, parse_ds, resolve_path, template_target
 
 
@@ -170,21 +170,39 @@ class Engine:
         n_buckets: int | None = None,
         partition_by: tuple[str, ...] | None = None,
         sort_by: tuple[str, ...] | None = None,
-        manifest: bool = False,
+        manifest: bool = True,
     ) -> ParquetTable:
+        """The table at ``ds``; ``manifest`` as :func:`manifest_only`."""
+        manifest_only(manifest)
         return ParquetTable(
             self.spark, resolve_path(ds, self.root), max_records_per_file,
             bucket_by=bucket_by, n_buckets=n_buckets or 32,
-            partition_by=partition_by, sort_by=sort_by, manifest=manifest,
+            partition_by=partition_by, sort_by=sort_by,
         )
 
     def count(self, uri: str, query: Sequence[str] | None = None) -> int:
-        """get_source_total (base.py:481-499) incl. the min(count,_limit) rule."""
+        """get_source_total (base.py:481-499) incl. the min(count,_limit)
+        rule. With no filtering query item, a parquet table's committed
+        snapshot answers (:meth:`_committed_rows`), with no Spark job."""
         q = compile_query(query)
         q.count = False
         limit, q.limit = q.limit, None
-        n = q.apply(self.read(uri)).count()
+        n = None if q.predicates or q.url else self._committed_rows(uri)
+        if n is None:
+            n = q.apply(self.read(uri)).count()
         return min(n, limit) if limit is not None else n
+
+    def _committed_rows(self, uri: str) -> int | None:
+        """Rows in the newest commit of the parquet table ``uri``, which
+        the commit took from the file footers; None when it has no
+        commit or some file's count was not recorded."""
+        ds = parse_ds(uri)
+        if ds.backend != "parquet":
+            return None
+        try:
+            return ParquetTable(self.spark, resolve_path(ds, self.root)).snapshot().rows
+        except FileNotFoundError:  # nothing committed
+            return None
 
     def preview(self, uri: str, query: Sequence[str] | None = None, n: int = 1) -> list[dict]:
         """No-target preview (base.py:640-644): fetch a sample, as dicts."""
@@ -344,11 +362,11 @@ class Engine:
           source plan — populated as a side effect of whatever action the
           job runs, zero extra passes (the reference's ``sprogress``
           poll counter, base.py:376-381).
-        - ``rows_out`` (:meth:`_rows_out`) for a written manifest
-          target is its committed snapshot's row count, which the commit
-          took from the file footers: no Spark job. Any other written
-          target is counted by a Spark job over the fresh target read,
-          not a recompute of the job plan. For lazy results (no target /
+        - ``rows_out`` (:meth:`_rows_out`) for a written parquet target
+          is its committed snapshot's row count, which the commit took
+          from the file footers: no Spark job. Any other written target
+          is counted by a Spark job over the fresh target read, not a
+          recompute of the job plan. For lazy results (no target /
           dry-run) one ``count()`` is the job's single execution, which
           also resolves the observation.
 
@@ -394,21 +412,16 @@ class Engine:
         return res
 
     def _rows_out(self, spec: JobSpec, res: JobResult) -> int:
-        """Rows in a run's result. A written manifest parquet target
-        answers from its committed snapshot, whose commit recorded each
-        file's footer row count; a legacy target, a dry run, a lazy
-        result, or a snapshot missing some file's count runs
+        """Rows in a run's result. A written parquet target answers from
+        its committed snapshot (:meth:`_committed_rows`); a dry run, a
+        lazy result, a write that committed nothing (an update of a
+        missing target), or a snapshot missing some file's count runs
         ``count()``."""
         t = spec.target
         if t is not None and not t.dry_run and not t.url:
-            ds = parse_ds(res.target)
-            if ds.backend == "parquet":
-                try:
-                    rows = ParquetTable(self.spark, resolve_path(ds, self.root)).snapshot().rows
-                except FileNotFoundError:  # a legacy table: no manifest
-                    rows = None
-                if rows is not None:
-                    return rows
+            rows = self._committed_rows(res.target)
+            if rows is not None:
+                return rows
         return res.df.count()
 
     def _run(self, spec: JobSpec, merge_rules_fn=None, observe_rows: bool = False) -> JobResult:
@@ -499,7 +512,6 @@ class Engine:
                 n_buckets=spec.target.n_buckets,
                 partition_by=spec.target.partition_by or None,
                 sort_by=spec.target.sort_by or None,
-                manifest=spec.target.manifest,
             )
             final = apply_write_op(df, tbl, spec.target)
         else:

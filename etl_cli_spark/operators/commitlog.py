@@ -32,6 +32,12 @@ The contract a backend must honor (the S3/GCS conditional-PUT shape):
   container. ``ensure`` must happen-before any data file lands in the
   live tree (crash invisibility hinges on it); a no-op + bucket-probe
   on real object stores.
+- ``create_log(log_dir, payload)`` — create the log already holding
+  ``payload`` as version 0, in one step; a log already there (another
+  writer's) is kept. Adopting a directory written without a log uses
+  it, so a log is never seen empty while it adopts (an empty log means
+  an interrupted first write, whose files stay invisible). On an object
+  store the version-0 put-if-absent is that step.
 
 ``log_dir`` is an opaque key prefix (locally: the ``_log`` directory
 path). Data files always live on the Spark-readable filesystem; only
@@ -46,6 +52,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import threading
 import uuid
 
@@ -89,6 +96,21 @@ class LocalFSCommitBackend(_VersionHelpers):
 
     def log_exists(self, log_dir: str) -> bool:
         return os.path.isdir(log_dir)
+
+    def create_log(self, log_dir: str, payload: bytes) -> None:
+        """Prepare the log beside ``log_dir`` holding version 0, then
+        rename it into place. A rename replaces only an empty
+        directory, so it fails if another writer's log is there; any
+        other failure raises."""
+        prepared = f"{log_dir}.tmp-{uuid.uuid4().hex}"
+        os.makedirs(prepared)
+        self.try_commit(prepared, 0, payload)
+        try:
+            os.rename(prepared, log_dir)
+        except OSError:
+            shutil.rmtree(prepared, ignore_errors=True)
+            if not self.list_names(log_dir):
+                raise
 
     def list_names(self, log_dir: str) -> list[str]:
         try:
@@ -163,6 +185,15 @@ class FakeObjectStoreCommitBackend(_VersionHelpers):
             if log_dir in self._ensured:
                 return True
             return any(k[0] == log_dir for k in self._store)
+
+    def create_log(self, log_dir: str, payload: bytes) -> None:
+        with self._lock:
+            if not any(k[0] == log_dir for k in self._store):
+                self._ensured.add(log_dir)
+                self._store[(log_dir, _vkey(0))] = payload
+                self.puts += 1
+                if self.list_lag:
+                    self._hide[(log_dir, _vkey(0))] = self.list_lag
 
     def list_names(self, log_dir: str) -> list[str]:
         with self._lock:

@@ -9,7 +9,8 @@ which target rows an op may touch (etl.py:242-243).
 Physical strategy: Delta-style MERGE without Delta — a staged parquet
 rewrite. The new target state is computed as one Catalyst plan
 (join/anti-join/union of target x source), written to a staging
-directory, then swapped in.
+directory, moved into the table under transaction-unique names, and
+made visible by one manifest commit (:class:`ParquetTable`).
 
 Scale path — one partition layout (:class:`Layout`). A table is
 unpartitioned or hive-partitioned on directory columns. A value layout
@@ -192,7 +193,8 @@ class Snapshot(NamedTuple):
 
 
 class ParquetTable:
-    """A parquet-directory dataset with atomic staged-rewrite semantics.
+    """A parquet-directory dataset whose every write commits through a
+    transaction log.
 
     ``max_records_per_file`` carries the reference's write batch size
     (``batch_size``, base.py:269; 100k for s3, etl.py:133) into Spark's
@@ -205,28 +207,33 @@ class ParquetTable:
     place that hides the derived bucket column, so no other module reads
     a table this class manages (:meth:`manages`) on its own.
 
-    ``manifest=True`` opts into the transaction-log commit protocol:
-    every write lands its files under transaction-unique names (never
-    replacing anything) and becomes visible by committing a
-    ``_log/<version>.json`` manifest listing the table's complete live
-    file set. Readers resolve the newest committed manifest, so they
-    always see one consistent snapshot — no torn table mid-swap, which
-    is exactly what directory renames cannot guarantee on an object
-    store (S3/GCS rename = copy+delete, neither atomic nor isolated).
-    Writers commit with an atomic put-if-absent of the next version
-    (``os.link`` locally; conditional PUT on a real object store) and
-    the loser of a commit race recomputes against the new tip and
-    retries, so concurrent appends/partition-scoped rewrites serialize
-    correctly. Stale files are invisible until :meth:`vacuum` removes
-    them. The on-disk file layout (pk-hash buckets, value partitions,
-    zorder clustering) is unchanged — the manifest only governs
-    visibility. Scale note (r5): the log uses Delta's log + checkpoint
-    shape — between checkpoints a version stores only its add/remove
+    Commit protocol: every write lands its files under
+    transaction-unique names (never replacing anything) and becomes
+    visible by committing a ``_log/<version>.json`` manifest of the
+    table's live file set. Readers resolve the newest committed
+    manifest, so they always see one consistent snapshot, which
+    directory renames cannot give on an object store (S3/GCS rename =
+    copy+delete, neither atomic nor isolated). Writers commit with an
+    atomic put-if-absent of the next version (``os.link`` locally;
+    conditional PUT on a real object store) and the loser of a commit
+    race recomputes against the new tip and retries, so concurrent
+    appends/partition-scoped rewrites serialize correctly. Replaced
+    files stay on disk, readable by time travel, until :meth:`vacuum`
+    removes them. The on-disk file layout (pk-hash buckets, value
+    partitions, zorder clustering) is independent of the log, which
+    only governs visibility. The log has Delta's log + checkpoint
+    shape: between checkpoints a version stores only its add/remove
     delta (commit size O(changed files), never O(table files)); every
     ``checkpoint_interval``-th version stores the complete list, so a
     reader replays at most interval-1 tiny deltas from the nearest
     checkpoint, and ``vacuum`` materializes a checkpoint sidecar for
     the retention floor before dropping the chain below it.
+
+    A directory that holds data files and no ``_log`` (written by plain
+    ``df.write.parquet`` or an earlier version of this class) reads as
+    the whole directory; its first write adopts those files as version
+    0 (:meth:`adopt`). A ``_log`` with no version is an interrupted
+    first write, whose files stay invisible.
     """
 
     def __init__(
@@ -238,7 +245,6 @@ class ParquetTable:
         n_buckets: int = 32,
         partition_by: tuple[str, ...] | None = None,
         sort_by: tuple[str, ...] | None = None,
-        manifest: bool = False,
         commit_backend=None,
         checkpoint_interval: int = 10,
     ):
@@ -269,7 +275,6 @@ class ParquetTable:
         # point/range scans skip whole files (data skipping) — the poor
         # man's Z-order, exact for a single leading column
         self._sort_by = tuple(sort_by) if sort_by else None
-        self._manifest = manifest
         # armed by stream_commit_meta, consumed by the next _commit
         self._pending_stream: tuple[str, int] | None = None
 
@@ -277,19 +282,22 @@ class ParquetTable:
     def _log_dir(self) -> str:
         return os.path.join(self.path, _LOG)
 
-    def _is_manifest(self) -> bool:
-        """On-disk state wins over the constructor flag: a ``_log`` dir
-        means the table is manifest-committed however it is opened, and
-        a table that already holds legacy data without a log stays
-        legacy (so ``manifest=True`` can never misread existing data)."""
+    def _unlogged(self) -> bool:
+        """Whether the path holds data written without a log (one
+        parquet file, or a directory of them), which reads whole until
+        a first write adopts it."""
         if self._backend.log_exists(self._log_dir()):
-            return True
-        if not self._manifest:
             return False
-        if os.path.exists(self.path):
-            entries = [e for e in os.listdir(self.path) if e != _META]
-            return not entries
-        return True
+        return os.path.isfile(self.path) or any(True for _ in data_files(self.path))
+
+    def _open_log(self) -> None:
+        """Make the log exist before a write touches the live tree: a
+        directory of data files written without one is adopted first
+        (:meth:`adopt`), so its files never turn invisible."""
+        if self._unlogged():
+            self.adopt()
+        else:
+            self._backend.ensure(self._log_dir())
 
     def _latest_manifest(self) -> tuple[int, dict] | None:
         """(version, RESOLVED manifest) of the newest committed
@@ -451,58 +459,62 @@ class ParquetTable:
 
         ``params`` become the frozen parameters (:meth:`snapshot`) in the
         same put-if-absent as the files; later commits carry them on."""
-        self._backend.ensure(self._log_dir())
+        self._open_log()
         while True:
-            latest = self._latest_manifest()
-            ver = 0 if latest is None else latest[0] + 1
-            prev_files = [] if latest is None else latest[1]["files"]
-            prev_schema = None if latest is None else latest[1].get("schema")
-            files, schema = make(prev_files, prev_schema)
-            doc = {"version": ver, "schema": schema, "ts": time.time()}
-            if not data_change:
-                doc["dataChange"] = False
-            prev_set, new_set = set(prev_files), set(files)
-            added = sorted(new_set - prev_set)
-            # footer min/max for the files THIS commit introduces; stats
-            # for carried-over files ride the resolution chain
-            new_stats = self._collect_file_stats(added)
-            if ver % self._checkpoint_interval == 0:
-                doc["files"] = sorted(files)
-                prev_stats = {} if latest is None else latest[1].get("stats", {})
-                merged = {
-                    f: prev_stats[f] for f in files if f in prev_stats
-                }
-                merged.update(new_stats)
-                if merged:
-                    doc["stats"] = merged
-            else:
-                doc["add"] = added
-                doc["remove"] = sorted(prev_set - new_set)
-                if new_stats:
-                    doc["stats"] = new_stats
-            # stream watermarks ride IN the manifest so "data visible"
-            # and "batch recorded" are one atomic commit (the foundation
-            # of the exactly-once streaming merge sink)
-            streams = dict() if latest is None else dict(latest[1].get("streams", {}))
-            if self._pending_stream is not None:
-                sid, bid = self._pending_stream
-                streams[sid] = int(bid)
-            if streams:
-                doc["streams"] = streams
-            # frozen parameters: this commit's, else the tip's carried on
-            kept = params
-            if kept is None and latest is not None:
-                kept = latest[1].get("params")
-            if kept is not None:
-                doc["params"] = kept
+            doc = self._next_doc(self._latest_manifest(), make, data_change, params)
             # put-if-absent: atomic; fails iff a concurrent writer took
             # this version first — then rebase onto the new tip
-            if not self._backend.try_commit(
-                self._log_dir(), ver, json.dumps(doc).encode()
+            if self._backend.try_commit(
+                self._log_dir(), doc["version"], json.dumps(doc).encode()
             ):
-                continue
-            self._pending_stream = None
-            return ver
+                self._pending_stream = None
+                return doc["version"]
+
+    def _next_doc(self, latest, make, data_change: bool, params: dict | None) -> dict:
+        """The manifest document that follows ``latest`` (None: the
+        first), as :meth:`_commit` describes it."""
+        ver = 0 if latest is None else latest[0] + 1
+        prev_files = [] if latest is None else latest[1]["files"]
+        prev_schema = None if latest is None else latest[1].get("schema")
+        files, schema = make(prev_files, prev_schema)
+        doc = {"version": ver, "schema": schema, "ts": time.time()}
+        if not data_change:
+            doc["dataChange"] = False
+        prev_set, new_set = set(prev_files), set(files)
+        added = sorted(new_set - prev_set)
+        # footer min/max for the files THIS commit introduces; stats
+        # for carried-over files ride the resolution chain
+        new_stats = self._collect_file_stats(added)
+        if ver % self._checkpoint_interval == 0:
+            doc["files"] = sorted(files)
+            prev_stats = {} if latest is None else latest[1].get("stats", {})
+            merged = {
+                f: prev_stats[f] for f in files if f in prev_stats
+            }
+            merged.update(new_stats)
+            if merged:
+                doc["stats"] = merged
+        else:
+            doc["add"] = added
+            doc["remove"] = sorted(prev_set - new_set)
+            if new_stats:
+                doc["stats"] = new_stats
+        # stream watermarks ride IN the manifest so "data visible"
+        # and "batch recorded" are one atomic commit (the foundation
+        # of the exactly-once streaming merge sink)
+        streams = dict() if latest is None else dict(latest[1].get("streams", {}))
+        if self._pending_stream is not None:
+            sid, bid = self._pending_stream
+            streams[sid] = int(bid)
+        if streams:
+            doc["streams"] = streams
+        # frozen parameters: this commit's, else the tip's carried on
+        kept = params
+        if kept is None and latest is not None:
+            kept = latest[1].get("params")
+        if kept is not None:
+            doc["params"] = kept
+        return doc
 
     def stream_commit_meta(self, stream_id: str, batch_id: int) -> None:
         """Arm the NEXT manifest commit to also record ``batch_id`` as
@@ -511,8 +523,6 @@ class ParquetTable:
         writer that crashes between sink write and checkpoint commit can
         detect the replay (`last_stream_batch`) and skip it — the
         idempotent-sink half of streaming exactly-once."""
-        if not self._is_manifest():
-            raise ValueError("stream watermarks need a manifest table")
         self._pending_stream = (str(stream_id), int(batch_id))
 
     def stream_commit_abort(self) -> None:
@@ -570,8 +580,7 @@ class ParquetTable:
 
     def snapshot(self, version: int | None = None) -> Snapshot:
         """The :class:`Snapshot` of manifest ``version`` (default the
-        newest). Raises before the first commit, and always for a legacy
-        table."""
+        newest). Raises before the first commit."""
         if version is None:
             latest = self._latest_manifest()
             if latest is None:
@@ -600,12 +609,6 @@ class ParquetTable:
         same schema at the cost of a Spark job per write."""
         from pyspark.sql.types import IntegerType, StructField, StructType
 
-        # the _log must exist BEFORE any file lands in the live tree: a
-        # crash mid-ingest on a table's FIRST write would otherwise
-        # leave data files with no _log, and _is_manifest() would
-        # misread the table as legacy — serving uncommitted torn files,
-        # exactly what the protocol exists to prevent
-        self._backend.ensure(self._log_dir())
         staged = f"{self.path}.__staged_{uuid.uuid4().hex[:8]}"
         self._write(df, staged, "overwrite", meta_dir=self.path)
         has_data = any(
@@ -625,6 +628,12 @@ class ParquetTable:
         return self._ingest_staged(staged), schema
 
     def _ingest_staged(self, staged: str) -> list[str]:
+        # the _log must exist BEFORE any file lands in the live tree: a
+        # crash mid-ingest on a table's FIRST write would otherwise
+        # leave data files with no _log, which read as a table written
+        # without one — serving uncommitted torn files, exactly what the
+        # protocol exists to prevent
+        self._open_log()
         txn = uuid.uuid4().hex[:12]
         out: list[str] = []
         for root, _dirs, files in os.walk(staged):
@@ -720,8 +729,6 @@ class ParquetTable:
             cols, bits, ranges = zm
             m.update(zorder=list(cols), zbits=bits,
                      zranges={c: list(v) for c, v in ranges.items()})
-        if self._is_manifest():
-            m["manifest"] = True
         if layout or len(m) > 1:
             self._dump_meta(m, base)
 
@@ -795,11 +802,10 @@ class ParquetTable:
 
     # -- basic io -------------------------------------------------------
     def exists(self) -> bool:
-        if self._is_manifest():
-            # files on disk without a committed manifest are an
-            # interrupted write: invisible, the table does not exist yet
-            return self._latest_manifest() is not None
-        return os.path.exists(self.path)
+        """Whether the table has a committed version or is a directory of
+        data files written without a log; files under a log with no
+        commit are an interrupted first write, invisible."""
+        return self._latest_manifest() is not None or self._unlogged()
 
     @staticmethod
     def manages(path: str) -> bool:
@@ -815,10 +821,10 @@ class ParquetTable:
         self, files: list[str] | None, schema_json: str | None = None, where=None
     ) -> DataFrame | None:
         """Every read of the table's data: the manifest ``files`` under
-        the committed ``schema_json`` (None = the whole legacy
-        directory), filtered by ``where(df)`` while the directory column
-        is still there — a partition filter — and then without the
-        derived bucket column."""
+        the committed ``schema_json`` (None = all of a path written
+        without a log), filtered by ``where(df)`` while the directory
+        column is still there — a partition filter — and then without
+        the derived bucket column."""
         from pyspark.sql.types import StructType
 
         if files is None:
@@ -843,11 +849,11 @@ class ParquetTable:
 
     def _read(self, keep=None, where=None, version: int | None = None) -> DataFrame | None:
         """The table's snapshot (the newest, or manifest ``version``),
-        or None when there is none. Manifest mode reads only the
-        committed files ``keep(file, stats)`` accepts; ``where`` is
-        :meth:`_scan`'s."""
-        if version is None and not self._is_manifest():
-            return self._scan(None, where=where) if os.path.exists(self.path) else None
+        or None when there is none: the committed files ``keep(file,
+        stats)`` accepts, or all of a path written without a log;
+        ``where`` is :meth:`_scan`'s."""
+        if version is None and self._unlogged():
+            return self._scan(None, where=where)
         if version is not None:
             doc = self._manifest_at(version)
         else:
@@ -919,7 +925,7 @@ class ParquetTable:
         THAT retained snapshot prune its file list (every manifest —
         full, delta, or sidecar — carries its stats).
 
-        On a bucketed table, in both commit modes, a query that sets
+        On a bucketed table, a query that sets
         every bucket column with a plain equality is pinned to the one
         bucket those values hash to (a partition filter on the bucket
         directory): a 100 TB table answers ``pk=X`` from 1/n_buckets of
@@ -977,7 +983,7 @@ class ParquetTable:
     # -- time travel -----------------------------------------------------
     def versions(self) -> list[int]:
         """Committed manifest versions still present in the log (oldest
-        first). Empty for legacy (non-manifest) tables."""
+        first). Empty before the first commit."""
         return self._backend.list_versions(self._log_dir())
 
     def version_asof(self, ts: float) -> int:
@@ -1102,8 +1108,8 @@ class ParquetTable:
         ``values`` (as :func:`_touched` returns them; a tuple of one
         value per directory level when the layout has several) are
         scanned. The filter sits on the directory columns, so Spark
-        prunes partitions; manifest mode also prunes the file list
-        before Spark builds a file index. ``version`` reads that
+        prunes partitions, and the manifest file list is pruned before
+        Spark builds a file index. ``version`` reads that
         manifest snapshot."""
         layout = self.layout
         keys = [tuple(v) if len(layout.dirs) > 1 else (v,) for v in values]
@@ -1136,84 +1142,59 @@ class ParquetTable:
 
     def append(self, df: DataFrame, params: dict | None = None) -> None:
         """Add ``df``'s rows; ``params`` as in :meth:`overwrite`."""
-        if self._is_manifest():
-            files, schema = self._stage_write(df)
-            # rebase-safe under concurrency: an append only ADDS its own
-            # files, so on a commit race the retry unions with whatever
-            # the winning snapshot holds; schema evolves union-by-name
-            self._commit(
-                lambda prev, ps: (
-                    list(prev) + files,
-                    self._merge_schema_json(ps, schema),
-                ),
-                params=params,
-            )
-            self._touch()
-            return
-        if params is not None:
-            raise ValueError("frozen parameters need a manifest table")
-        self._write(df, self.path, "append")
+        files, schema = self._stage_write(df)
+        # rebase-safe under concurrency: an append only ADDS its own
+        # files, so on a commit race the retry unions with whatever
+        # the winning snapshot holds; schema evolves union-by-name
+        self._commit(
+            lambda prev, ps: (
+                list(prev) + files,
+                self._merge_schema_json(ps, schema),
+            ),
+            params=params,
+        )
         self._touch()
 
     def overwrite(self, df: DataFrame, params: dict | None = None) -> None:
-        """Full-state replace via stage + atomic swap (safe
-        self-reference). Manifest mode: the new state's files land
-        invisibly, then one manifest commit points the table at them —
-        readers see the old snapshot until the commit, then the new one;
-        never a mix. ``params`` (manifest mode only) become the table's
-        frozen parameters in that same commit (:meth:`snapshot`)."""
-        if self._is_manifest():
-            files, schema = self._stage_write(df)
-            self._commit(lambda prev, ps: (files, schema or ps), params=params)
-            self._touch()
-            return
-        if params is not None:
-            raise ValueError("frozen parameters need a manifest table")
-        staged = f"{self.path}.__staged_{uuid.uuid4().hex[:8]}"
-        self._write(df, staged, "overwrite")
-        backup = f"{self.path}.__old_{uuid.uuid4().hex[:8]}"
-        if os.path.exists(self.path):
-            os.rename(self.path, backup)
-        os.rename(staged, self.path)
-        if os.path.exists(backup):
-            shutil.rmtree(backup)
+        """Full-state replace (safe self-reference): the new state's
+        files land invisibly, then one manifest commit points the table
+        at them — readers see the old snapshot until the commit, then
+        the new one; never a mix. ``params`` become the table's frozen
+        parameters in that same commit (:meth:`snapshot`)."""
+        files, schema = self._stage_write(df)
+        self._commit(lambda prev, ps: (files, schema or ps), params=params)
         self._touch()
 
     def adopt(self, params: dict | None = None) -> None:
         """Commit the data files a directory written without a manifest
-        holds as manifest version 0, with ``params`` as its frozen
-        parameters. Nothing is rewritten; an interrupted adoption leaves
-        no committed version, so running it again completes it."""
-        self._backend.ensure(self._log_dir())
-        self._write_meta(self.layout)
-        files = list(data_files(self.path))
+        log holds as version 0, with ``params`` as its frozen parameters
+        and the schema a Spark read of the directory infers. Nothing is
+        rewritten. The log appears in one step, already holding version
+        0 (the backend's ``create_log``), so an interrupted adoption
+        leaves no log and the next write adopts again; a concurrent
+        adopter that loses keeps the winner's version 0."""
+        files = sorted(data_files(self.path))
         schema = self.spark.read.parquet(self.path).schema.json() if files else None
-        self._commit(lambda prev, ps: (sorted(files), schema), params=params)
+        doc = self._next_doc(None, lambda prev, ps: (files, schema), True, params)
+        # an armed stream watermark belongs to the write that follows
+        doc.pop("streams", None)
+        self._backend.create_log(self._log_dir(), json.dumps(doc).encode())
 
     def _column_types(self) -> dict:
-        """Spark type of each column the table's data files store: the
-        committed schema in manifest mode, else one data file's footer
-        (a driver-side read, no Spark job), which holds no hive
-        directory column. Empty when there is neither."""
-        from pyspark.sql.pandas.types import from_arrow_type
+        """Spark type of each column of the table's schema: the newest
+        commit's, or for a directory written without a log the one its
+        adoption will commit. Empty when there is neither."""
         from pyspark.sql.types import StructType
 
-        latest = self._latest_manifest() if self._is_manifest() else None
+        latest = self._latest_manifest()
         if latest is not None:
             schema = latest[1].get("schema")
             fields = StructType.fromJson(json.loads(schema)).fields if schema else []
-            return {f.name: f.dataType for f in fields}
-        import pyarrow.parquet as pq
-
-        for rel in data_files(self.path):
-            try:
-                return {
-                    f.name: from_arrow_type(f.type)
-                    for f in pq.read_schema(os.path.join(self.path, rel))
-                }
-            except Exception:
-                return {}
-        return {}
+        elif self._unlogged():
+            fields = self.spark.read.parquet(self.path).schema.fields
+        else:
+            fields = []
+        return {f.name: f.dataType for f in fields}
 
     def overwrite_partitions(self, df: DataFrame, values: list) -> None:
         """Replace ONLY the directories holding ``values`` (as
@@ -1223,73 +1204,32 @@ class ParquetTable:
         may lack one entirely — that partition becomes empty, e.g. after
         a delete) and its plan may read the live table: it is staged
         first. Untouched directories are never opened, written or moved —
-        their files stay byte-identical. Manifest mode commits the
-        partition-scoped file swap atomically; legacy mode renames
-        directories, so cross-partition atomicity on a real deployment
-        comes from the table format (Delta/Iceberg commit)."""
+        their files stay byte-identical — and the partition-scoped file
+        replacement is one manifest commit."""
         layout = self.layout
         if layout is None or len(layout.dirs) != 1:
             raise ValueError("overwrite_partitions needs a table partitioned on one directory level")
         held = {str(v) for v in values}
-        if self._is_manifest():
-            files, schema = self._stage_write(df)
-            # replace the touched partitions' files, keep everything else
-            # from whatever snapshot the commit lands on — partition-
-            # disjoint concurrent rewrites compose instead of clobbering
-            self._commit(
-                lambda prev, ps: (
-                    [f for f in prev if layout.partition_values(f)[0] not in held] + files,
-                    # untouched partitions keep their old files: merge
-                    self._merge_schema_json(ps, schema),
-                )
+        files, schema = self._stage_write(df)
+        # replace the touched partitions' files, keep everything else
+        # from whatever snapshot the commit lands on — partition-
+        # disjoint concurrent rewrites compose instead of clobbering
+        self._commit(
+            lambda prev, ps: (
+                [f for f in prev if layout.partition_values(f)[0] not in held] + files,
+                # untouched partitions keep their old files: merge
+                self._merge_schema_json(ps, schema),
             )
-            self._touch()
-            return
-        uid = uuid.uuid4().hex[:8]
-        staged = f"{self.path}.__staged_{uid}"
-        self._write(df, staged, "overwrite")
-        backup = f"{self.path}.__old_{uid}"
-        os.makedirs(backup, exist_ok=True)
-        moved: list[str] = []
-        try:
-            for entry in list(os.listdir(self.path)):
-                if layout.partition_values(entry)[0] in held:
-                    os.rename(os.path.join(self.path, entry), os.path.join(backup, entry))
-                    moved.append(entry)
-            for entry in list(os.listdir(staged)):
-                if layout.partition_values(entry)[0] in held:
-                    os.rename(os.path.join(staged, entry), os.path.join(self.path, entry))
-        except BaseException:
-            self._restore_swap(backup, moved)
-            raise
-        # only after the whole swap succeeded is it safe to discard state
-        shutil.rmtree(backup, ignore_errors=True)
-        shutil.rmtree(staged, ignore_errors=True)
+        )
         self._touch()
-
-    def _restore_swap(self, backup: str, moved: list[str]) -> None:
-        """Roll a failed partition swap back: every directory that was
-        moved into ``backup`` goes back to its live location (evicting a
-        half-installed staged replacement first). If the rollback itself
-        fails, ``backup``/``__staged_*`` stay on disk for ``vacuum()`` /
-        manual recovery — live data is never deleted without a copy."""
-        try:
-            for dname in moved:
-                live = os.path.join(self.path, dname)
-                if os.path.exists(live):
-                    shutil.rmtree(live)
-                os.rename(os.path.join(backup, dname), live)
-            shutil.rmtree(backup, ignore_errors=True)
-        except OSError:
-            pass
 
     def compact(self) -> None:
         """Merge the small files accumulated by appends/incremental ops:
         rewrite the table through the normal layout-preserving path
         (bucket/value partitioning and clustering all come from the
         on-disk meta), which repartitions to ~1 file per partition (or
-        maxRecordsPerFile-sized). Staged + swapped, so reading while
-        compacting is safe. At 100 TB prefer :meth:`compact_partitions`
+        maxRecordsPerFile-sized). One commit, so reading while compacting
+        is safe. At 100 TB prefer :meth:`compact_partitions`
         (incremental, only where needed); this full rewrite is the
         small-table / layout-change form."""
         df = self.read()
@@ -1297,7 +1237,7 @@ class ParquetTable:
             self.overwrite(df)
 
     def compact_partitions(self, min_files: int = 4) -> list[str]:
-        """Incremental OPTIMIZE for a manifest table: rewrite ONLY the
+        """Incremental OPTIMIZE: rewrite ONLY the
         partition directories currently holding >= ``min_files`` data
         files, commit atomically (readers keep the old snapshot until
         the commit; time travel keeps it after). Untouched partitions
@@ -1307,9 +1247,6 @@ class ParquetTable:
         Returns the partition dirs compacted ("" = table root for
         unpartitioned tables). No-op (empty list) when nothing
         qualifies."""
-        if not self._is_manifest():
-            raise ValueError("compact_partitions requires a manifest table "
-                             "(use compact() for legacy tables)")
         latest = self._latest_manifest()
         if latest is None:
             return []
@@ -1333,7 +1270,7 @@ class ParquetTable:
         exactly the files it read (a fold that keeps the table's
         meaning, e.g. summing partial counts). Appends racing it survive;
         a concurrent rewrite of the same files aborts it. Raises before
-        the first commit, and always for a legacy table."""
+        the first commit."""
         latest = self._latest_manifest()
         if latest is None:
             raise FileNotFoundError(f"no committed version of {self.path}")
@@ -1402,38 +1339,25 @@ class ParquetTable:
         out = zorder_frame(df, cols, num_partitions=num_partitions, bits=bits, ranges=ranges)
         zmeta = {"kind": "plain", "zorder": cols, "zbits": bits,
                  "zranges": {c: list(v) for c, v in ranges.items()}}
-        if self._is_manifest():
-            zmeta["manifest"] = True
-            staged = f"{self.path}.__staged_{uuid.uuid4().hex[:8]}"
-            self._writer(out).mode("overwrite").parquet(staged)
-            schema = self.spark.read.parquet(staged).schema.json()
-            files = self._ingest_staged(staged)
-            self._dump_meta(zmeta)
-            # a zorder rewrite reorders rows across files but never
-            # changes the row multiset — change-feed consumers skip it
-            self._commit(lambda prev, ps: (files, schema), data_change=False)
-            self._touch()
-            return
         staged = f"{self.path}.__staged_{uuid.uuid4().hex[:8]}"
         self._writer(out).mode("overwrite").parquet(staged)
-        with open(os.path.join(staged, _META), "w") as f:
-            json.dump(zmeta, f)
-        backup = f"{self.path}.__old_{uuid.uuid4().hex[:8]}"
-        os.rename(self.path, backup)
-        os.rename(staged, self.path)
-        shutil.rmtree(backup, ignore_errors=True)
+        files = self._ingest_staged(staged)
+        self._dump_meta(zmeta)
+        # a zorder rewrite reorders rows across files but never changes
+        # the row multiset — change-feed consumers skip it; the schema is
+        # the frame's (a plain table has no directory column)
+        self._commit(lambda prev, ps: (files, out.schema.json()), data_change=False)
         self._touch()
 
     def vacuum(self, retain_versions: int = 1) -> int:
-        """Remove leftover ``__staged_*`` / ``__old_*`` directories from
-        interrupted swaps, and — on a manifest table — data files no
-        RETAINED manifest references (interrupted ingests, replaced
-        snapshots) plus manifest versions older than the newest
-        ``retain_versions``. The live set is the union of every retained
-        manifest's file list, so all retained versions remain exactly
-        time-travel-readable (``read_version``) after the sweep —
-        ``retain_versions`` is the same knob as Delta's VACUUM retention
-        window, expressed in versions rather than hours. Returns how
+        """Remove leftover ``__staged_*`` directories of interrupted
+        writes, data files no RETAINED manifest references (interrupted
+        ingests, replaced snapshots) and manifest versions older than
+        the newest ``retain_versions``. The live set is the union of
+        every retained manifest's file list, so all retained versions
+        remain exactly time-travel-readable (``read_version``) after the
+        sweep — ``retain_versions`` is the same knob as Delta's VACUUM
+        retention window, expressed in versions rather than hours. Returns how
         many entries were removed. Requires no in-flight writers (an
         uncommitted ingest looks exactly like garbage — the same caveat
         Delta's VACUUM documents).
@@ -1457,56 +1381,55 @@ class ParquetTable:
         except OSError:
             return 0
         for entry in entries:
-            if entry.startswith(f"{name}.__staged_") or entry.startswith(f"{name}.__old_"):
+            if entry.startswith(f"{name}.__staged_"):
                 shutil.rmtree(os.path.join(base_dir, entry), ignore_errors=True)
                 removed += 1
-        if self._is_manifest():
-            vers = self.versions()
-            if vers:
-                keep = set(vers[-retain_versions:])
-                oldest_kept = min(keep)
-                live: set[str] = set()
-                resolved: dict[int, list[str]] = {}
-                for v in keep:
-                    resolved[v] = self._manifest_at(v)["files"]
-                    live |= set(resolved[v])
-                # the oldest kept version must stay resolvable after the
-                # versions below it vanish: if it is a bare delta, write
-                # its materialized file list as a checkpoint sidecar
-                # FIRST (put-if-absent: a concurrent vacuum's identical
-                # sidecar is fine), only then drop the chain below
-                if self._resolve_base(oldest_kept) is None:
-                    floor_doc = self._manifest_at(oldest_kept)
-                    self._backend.try_put(
-                        self._log_dir(),
-                        self._ckpt_name(oldest_kept),
-                        json.dumps(
-                            {
-                                "files": resolved[oldest_kept],
-                                "stats": floor_doc.get("stats", {}),
-                            }
-                        ).encode(),
-                    )
-                for root, dirs, files in os.walk(self.path, topdown=True):
-                    dirs[:] = [d for d in dirs if d != _LOG]
-                    for fn in files:
-                        if fn.startswith(("_", ".")):
-                            continue
-                        rel = os.path.relpath(os.path.join(root, fn), self.path)
-                        if rel not in live:
-                            os.remove(os.path.join(root, fn))
-                            removed += 1
-                for v in vers:
-                    if v not in keep:
-                        self._backend.delete(self._log_dir(), v)
-                        self._backend.delete_name(
-                            self._log_dir(), self._ckpt_name(v)
-                        )
+        vers = self.versions()
+        if vers:
+            keep = set(vers[-retain_versions:])
+            oldest_kept = min(keep)
+            live: set[str] = set()
+            resolved: dict[int, list[str]] = {}
+            for v in keep:
+                resolved[v] = self._manifest_at(v)["files"]
+                live |= set(resolved[v])
+            # the oldest kept version must stay resolvable after the
+            # versions below it vanish: if it is a bare delta, write
+            # its materialized file list as a checkpoint sidecar
+            # FIRST (put-if-absent: a concurrent vacuum's identical
+            # sidecar is fine), only then drop the chain below
+            if self._resolve_base(oldest_kept) is None:
+                floor_doc = self._manifest_at(oldest_kept)
+                self._backend.try_put(
+                    self._log_dir(),
+                    self._ckpt_name(oldest_kept),
+                    json.dumps(
+                        {
+                            "files": resolved[oldest_kept],
+                            "stats": floor_doc.get("stats", {}),
+                        }
+                    ).encode(),
+                )
+            for root, dirs, files in os.walk(self.path, topdown=True):
+                dirs[:] = [d for d in dirs if d != _LOG]
+                for fn in files:
+                    if fn.startswith(("_", ".")):
+                        continue
+                    rel = os.path.relpath(os.path.join(root, fn), self.path)
+                    if rel not in live:
+                        os.remove(os.path.join(root, fn))
                         removed += 1
-                # drop partition dirs drained by the file sweep
-                for root, dirs, files in os.walk(self.path, topdown=False):
-                    if root != self.path and not os.listdir(root):
-                        os.rmdir(root)
+            for v in vers:
+                if v not in keep:
+                    self._backend.delete(self._log_dir(), v)
+                    self._backend.delete_name(
+                        self._log_dir(), self._ckpt_name(v)
+                    )
+                    removed += 1
+            # drop partition dirs drained by the file sweep
+            for root, dirs, files in os.walk(self.path, topdown=False):
+                if root != self.path and not os.listdir(root):
+                    os.rmdir(root)
         return removed
 
     def drop(self) -> None:
@@ -1542,7 +1465,7 @@ def open_index(
     tables = [
         ParquetTable(
             spark, os.path.join(path, sub) if sub else path,
-            partition_by=tuple(dirs) or None, sort_by=sort_by, manifest=True,
+            partition_by=tuple(dirs) or None, sort_by=sort_by,
         )
         for sub, dirs in parts
     ]
@@ -1551,6 +1474,11 @@ def open_index(
     if sidecar and os.path.exists(sidecar) and not tables[-1].versions():
         with open(sidecar) as f:
             params = json.load(f)
+        for t in tables:
+            if not t.versions():
+                # the sidecar format kept no layout file; its directories
+                # are the index's own
+                t._write_meta(t._layout)
         for t in tables[:-1]:
             if not t.versions():
                 t.adopt()

@@ -344,7 +344,6 @@ def run_corpus_pipeline_streaming(
     threshold: float = 0.7,
     span_index_path: str | None = None,
     span_min_docs: int = 2,
-    exactly_once: bool = False,
 ):
     """The corpus-prep pipeline over an APPEND-ONLY crawl drop directory
     (round-4 judge item #8): each invocation drains exactly the files
@@ -362,18 +361,15 @@ def run_corpus_pipeline_streaming(
     drop ids are crawl-monotone — the same contract the dedup index
     documents. Exactly-once: availableNow + the checkpoint give each
     file to exactly one batch across restarts; a crash INSIDE a batch
-    can replay it. ``exactly_once=True`` (round 8) closes that window
-    for the OUTPUT too: the table becomes manifest-mode and each
-    batch's append commits with the ``(stream_id, batch_id)`` watermark
-    riding the same atomic put-if-absent (the ``streaming_merge``
-    recipe), so a replayed batch sees ``last_stream_batch == batch_id``
-    and skips the output append — duplicate output rows are impossible.
-    The index appends are exactly-once in both modes: the span-count
-    append and the dedup signature append carry the batch id in their
-    manifest commits (``ParquetTable.write_batch``), so a replayed
-    batch adds no second copy of its counts or signatures. The default keeps the
-    plain-parquet append (at-least-once output) for sinks that want
-    rename-swap tables.
+    can replay it. The output closes that window: each batch's append
+    commits with the ``(stream_id, batch_id)`` watermark riding the
+    same atomic put-if-absent (``ParquetTable.write_batch``, the
+    ``streaming_merge`` recipe), so a replayed batch sees
+    ``last_stream_batch == batch_id`` and skips the output append —
+    duplicate output rows are impossible. The index appends are
+    exactly-once the same way: the span-count append and the dedup
+    signature append carry the batch id in their manifest commits, so a
+    replayed batch adds no second copy of its counts or signatures.
 
     Scope of the guarantee — the Delta ``txnAppId`` caveat applies:
     batch ids are meaningful only within ONE checkpoint lineage, so the
@@ -412,17 +408,7 @@ def run_corpus_pipeline_streaming(
     import hashlib
     import os
 
-    out = ParquetTable(spark, out_path, manifest=exactly_once)
-    if exactly_once and not out._is_manifest():
-        # the table exists with legacy (rename-swap) data: the watermark
-        # mechanism can't attach to it — fail fast with the cause
-        # instead of an opaque mid-stream ValueError from foreachBatch
-        raise ValueError(
-            f"exactly_once=True needs a manifest-mode output, but "
-            f"{out_path!r} already holds non-manifest data (written by "
-            "a previous at-least-once run?). Use a fresh output path, "
-            "or keep exactly_once=False for this table."
-        )
+    out = ParquetTable(spark, out_path)
     # stream ids scoped to the checkpoint LINEAGE (the Delta txnAppId
     # pattern): batch ids restart at 0 under a new checkpoint, so a
     # lineage-global id would make a fresh checkpoint's batch 0 look
@@ -437,13 +423,10 @@ def run_corpus_pipeline_streaming(
     dedup_stream_id = f"corpus_dedup_{ckpt_tag}"
 
     def commit_output(kept: DataFrame, batch_id: int) -> None:
-        """Append the batch's survivors; exactly_once: as batch
-        ``batch_id`` of the output stream (an empty batch still commits,
-        so the stream advances)."""
-        if exactly_once:
-            out.write_batch(out_stream_id, batch_id, lambda: out.append(kept))
-        else:
-            out.append(kept)
+        """Append the batch's survivors as batch ``batch_id`` of the
+        output stream (an empty batch still commits, so the stream
+        advances)."""
+        out.write_batch(out_stream_id, batch_id, lambda: out.append(kept))
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         raw_df = batch_df  # pre-strip: what the index must sign
@@ -456,8 +439,8 @@ def run_corpus_pipeline_streaming(
         if dedup_index_path is not None:
             # crash-safe ordering: dedup, COMMIT THE OUTPUT, then index
             # the batch. A crash between the two replays the batch
-            # unindexed (with exactly_once=False, duplicate output rows
-            # — at-least-once), never indexed-but-undelivered; and if
+            # unindexed, its output append skipped by the watermark,
+            # never indexed-but-undelivered; and if
             # the index write DID land before a replay,
             # dedup_against_index's self-exclusion keeps the survivor
             # set identical instead of self-dedup-ing the replayed

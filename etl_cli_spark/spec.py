@@ -77,10 +77,6 @@ class TargetSpec:
     # the column is pk-contained) and within-file clustering (--sort-by)
     partition_by: tuple[str, ...] = ()
     sort_by: tuple[str, ...] = ()
-    # transaction-log commit protocol (--manifest): snapshot-isolated
-    # reads + atomic put-if-absent commits instead of directory renames
-    # (the object-store-safe posture; see writeops.ParquetTable)
-    manifest: bool = False
     # per-target write log: namespace to log written batches into
     # (reference --log-ds -> target.log_ds = '<ns>.<target>', etl.py:193-195)
     log_ds: str | None = None
@@ -111,6 +107,15 @@ class JobSpec:
 
     def with_overrides(self, **kw: Any) -> "JobSpec":
         return replace(self, **kw)
+
+
+def manifest_only(flag: bool) -> None:
+    """Every parquet table commits through its manifest log, so the
+    ``manifest`` keyword of :func:`make_spec` and ``Engine.table``
+    accepts only True; it stays for callers written when it chose the
+    commit protocol."""
+    if flag is not True:
+        raise ValueError("manifest=False is gone: every table commits through its manifest log")
 
 
 def make_spec(
@@ -149,7 +154,7 @@ def make_spec(
     n_buckets: int | None = None,
     partition_by: Sequence[str] | str | None = None,
     sort_by: Sequence[str] | str | None = None,
-    manifest: bool = False,
+    manifest: bool = True,
     log_ds: str | None = None,
     log: Sequence[str] | str | None = None,
     workers: int | None = None,
@@ -163,8 +168,11 @@ def make_spec(
     scalar flags not passed explicitly (the reference's args2env_var
     overlay, base.py:158-185): e.g. ``SPARK_ETL__OP=upsert``,
     ``SPARK_ETL__WORKERS=8``, ``SPARK_ETL__BATCH_SIZE=5000``.
+    ``manifest`` as :func:`manifest_only`.
     """
     import os
+
+    manifest_only(manifest)
 
     def env(flag: str, cast=str):
         raw = os.environ.get(f"SPARK_ETL__{flag.upper()}")
@@ -219,7 +227,7 @@ def make_spec(
             overwrite_fields=tup(overwrite), drop=drop, dry_run=dry,
             tmap=tmap, url=turl, n_buckets=n_buckets,
             partition_by=tup(partition_by), sort_by=tup(sort_by),
-            manifest=manifest, log_ds=log_ds,
+            log_ds=log_ds,
             **({"log_fields": tup(log)} if log else {}),
         )
     return JobSpec(

@@ -9,8 +9,9 @@ force loop mode (etl.py:281-295, 345-347).
 
 Spark-first: the "stamp" is a bookmark table of processed ids; each
 pass anti-joins the source against it (no per-record update), processes
-the remainder, and appends the new ids. The staged-rewrite targets make
-self-update safe (read state is snapshotted before the swap). The same
+the remainder, and appends the new ids. The manifest-committed targets
+make self-update safe (a read resolves its snapshot before the commit
+that replaces it). The same
 contract maps onto Structured Streaming (source -> checkpointed sink)
 when the source is a stream; see stream.py.
 """
@@ -181,7 +182,7 @@ def changefeed_merge(
     not retracted (standard incremental-view caveat, documented rather
     than silently wrong). ``transform`` must be deterministic (it is
     row-wise stateless by contract; it may be re-evaluated over the
-    cached change set between the count and the MERGE). ``downstream`` must be manifest-mode.
+    cached change set between the count and the MERGE).
     Upstream versions older than the retention window must already be
     reflected (start the feed before vacuuming upstream).
 
@@ -200,8 +201,6 @@ def changefeed_merge(
     from ..operators.writeops import apply_write_op
     from ..spec import TargetSpec
 
-    if not downstream._is_manifest():
-        raise ValueError("changefeed_merge requires a manifest-mode downstream")
     pk = tuple(pk)
     last = downstream.last_stream_batch(stream_id)
     start = int(starting_version) if last is None else int(last) + 1
@@ -344,15 +343,10 @@ def streaming_merge(
       watermark means the checkpoint was reset and raises.
 
     ``spec`` is the TargetSpec for every batch (op=upsert/update/
-    delete..., pk=...). Requires ``table`` to be manifest-mode (the
-    guarantee is meaningless on a rename-swap table). One
-    ``availableNow`` invocation drains all pending drops and returns;
+    delete..., pk=...). One ``availableNow`` invocation drains all pending drops and returns;
     re-invoke as more land — progress survives restarts.
     """
     from ..operators.writeops import apply_write_op
-
-    if not table._is_manifest():
-        raise ValueError("streaming_merge requires a manifest-mode ParquetTable")
 
     def apply_batch(df: DataFrame, batch_id: int) -> None:
         table.write_batch(stream_id, batch_id, lambda: apply_write_op(df, table, spec))

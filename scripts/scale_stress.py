@@ -191,7 +191,7 @@ def main() -> None:
     tmp = one.rsplit("/", 1)[0]
     times = {}
     for tag, df, copies in (("1x", d1, 1), (f"{factor}x", dn, factor)):
-        t = ParquetTable(spark, f"{tmp}/skip_{tag}.parquet", manifest=True)
+        t = ParquetTable(spark, f"{tmp}/skip_{tag}.parquet")
         n1 = d1.count()
         for i in range(copies * 4):
             lo, hi_ = i * n1 // 4, (i + 1) * n1 // 4

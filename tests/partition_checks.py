@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -111,24 +112,34 @@ def assert_insert_appends(t, dup, fresh, pk):
 
 
 def assert_failed_swap_rolls_back(t, src, pk, monkeypatch):
-    """A rename failure mid-way through a legacy partition swap leaves
-    the live table exactly as it was: backed-up directories are put
-    back, nothing is deleted."""
+    """A rename failure mid-way through moving a write's files into the
+    table leaves the live table exactly as it was: the files already
+    moved belong to no commit."""
     before = t.read().orderBy(*pk).collect()
-    prefix = f"{t.layout.dirs[0]}="
+    versions = t.versions()
     real_rename = os.rename
     calls = {"n": 0}
 
     def flaky_rename(a, b):
-        # let the first two directory moves succeed, then fail mid-swap
-        if os.path.basename(a).startswith(prefix) or os.path.basename(b).startswith(prefix):
+        # let the first two file moves succeed, then fail mid-ingest
+        if a.endswith(".parquet"):
             calls["n"] += 1
             if calls["n"] == 3:
-                raise OSError("injected swap failure")
+                raise OSError("injected ingest failure")
         return real_rename(a, b)
 
     monkeypatch.setattr("etl_cli_spark.operators.writeops.os.rename", flaky_rename)
     with pytest.raises(OSError, match="injected"):
         apply_write_op(src, t, TargetSpec(ds="t", op="update", pk=pk))
     monkeypatch.undo()
+    assert calls["n"] == 3
+    assert t.versions() == versions
     assert t.read().orderBy(*pk).collect() == before
+
+
+def drop_log(t):
+    """Make ``t``'s directory one written without a log, as versions
+    before the log and plain ``df.write.parquet`` leave it: its data
+    and layout files stay. Valid while every write to ``t`` was an
+    append (a rewrite leaves replaced files only the log hides)."""
+    shutil.rmtree(os.path.join(t.path, "_log"))

@@ -18,12 +18,14 @@ from etl_cli_spark.operators.writeops import (
     apply_write_op,
 )
 from etl_cli_spark.spec import TargetSpec
+from etl_cli_spark.uri import parse_ds
 from partition_checks import (
     assert_delete_scoped,
     assert_failed_swap_rolls_back,
     assert_insert_appends,
     assert_pruned_read,
     assert_upsert_scoped,
+    drop_log,
 )
 
 
@@ -161,9 +163,9 @@ def test_engine_read_hides_bucket_and_point_prunes(spark, engine, bucketed_order
 
 
 def test_failed_swap_rolls_back_and_preserves_data(spark, engine, bucketed_orders, monkeypatch):
-    """A mid-swap rename failure must leave the live table intact: backed-up
-    bucket dirs are restored, nothing is deleted (ADVICE r2: the old finally
-    block rmtree'd backup+staged even on failure, losing the moved buckets)."""
+    """A rename failure mid-way through a write's ingest must leave the
+    live table intact: nothing is deleted, and the files already moved
+    into the table belong to no commit."""
     src = engine.read("orders").filter("o_orderkey < 40").withColumn(
         "o_orderstatus", F.lit("Z")
     )
@@ -274,18 +276,21 @@ def test_insert_small_source_broadcast_shape(spark, engine, tmp_path):
     )
 
 
-@pytest.mark.parametrize("manifest", [False, True], ids=["legacy", "manifest"])
-def test_bucket_column_never_leaks(spark, tmp_engine, manifest):
+@pytest.mark.parametrize("legacy", [True, False], ids=["legacy", "manifest"])
+def test_bucket_column_never_leaks(spark, tmp_engine, legacy):
     """``__etl_bucket`` is internal to a bucketed target on every read
     path: a job reading the target as its source, an m2s merger on it,
-    and an ``op=create`` copy of it (whose files must not carry it)."""
+    and an ``op=create`` copy of it (whose files must not carry it),
+    also when the target was written without a log (``legacy``)."""
     import pyarrow.parquet as pq
 
     eng = tmp_engine
     spark.createDataFrame(
         [(i, i * 1.5) for i in range(100)], "k BIGINT, v DOUBLE"
     ).write.parquet(f"{eng.root}/src.parquet")
-    eng.etl("src", target="out/t", op="upsert", pk="k", n_buckets=4, manifest=manifest)
+    eng.etl("src", target="out/t", op="upsert", pk="k", n_buckets=4)
+    if legacy:
+        drop_log(eng.table(parse_ds("out/t")))
 
     assert eng.etl("out/t").df.columns == ["k", "v"]
     merged = eng.etl("src", merger="out/t", mkeys="k:k", mmd="m2s").df
@@ -354,39 +359,43 @@ _LAYOUT_FILES = {
 }
 
 
-@pytest.mark.parametrize("manifest", [False, True], ids=["legacy", "manifest"])
+@pytest.mark.parametrize("legacy", [True, False], ids=["legacy", "manifest"])
 @pytest.mark.parametrize("layout", sorted(_LAYOUT_FILES))
-def test_layout_file_keys_unchanged(spark, engine, tmp_path, layout, manifest):
+def test_layout_file_keys_unchanged(spark, engine, tmp_path, layout, legacy):
     """The layout file keeps its JSON keys and key order for every
     layout, so tables written by older versions open unchanged (a
-    bucket file has no ``kind``), and a fresh handle reads the layout
-    back from it."""
+    bucket file has no ``kind``), also through the adoption of a table
+    written without a log (``legacy``), and a fresh handle reads the
+    layout back from it."""
     import json
 
     kw, want = _LAYOUT_FILES[layout]
-    t = ParquetTable(spark, str(tmp_path / "lf.parquet"), manifest=manifest, **kw)
+    t = ParquetTable(spark, str(tmp_path / "lf.parquet"), **kw)
     t.append(engine.read("orders"))
+    if legacy:
+        drop_log(t)
     t.append(engine.read("orders").limit(5))
     with open(os.path.join(t.path, "_etl_bucket_meta.json")) as f:
         meta = json.load(f)
-    want = {**want, **({"manifest": True} if manifest else {})}
     assert list(meta.items()) == list(want.items())
     assert ParquetTable(spark, t.path).layout == t._layout
 
 
-@pytest.mark.parametrize("manifest", [False, True], ids=["legacy", "manifest"])
-def test_read_where_pins_point_lookup(spark, engine, tmp_path, manifest):
+@pytest.mark.parametrize("legacy", [True, False], ids=["legacy", "manifest"])
+def test_read_where_pins_point_lookup(spark, engine, tmp_path, legacy):
     """``read_where`` pins a query that sets every bucket column with a
-    plain equality to that key's bucket, in both commit modes; a value
-    of another type than the column is not pinned (its equality matches
-    through a cast, across buckets)."""
+    plain equality to that key's bucket, also on a table written without
+    a log (``legacy``); a value of another type than the column is not
+    pinned (its equality matches through a cast, across buckets)."""
     from etl_cli_spark.dsl import compile_query
 
     t = ParquetTable(
         spark, str(tmp_path / "pin.parquet"),
-        bucket_by=("o_orderkey",), n_buckets=8, manifest=manifest,
+        bucket_by=("o_orderkey",), n_buckets=8,
     )
     t.append(engine.read("orders"))
+    if legacy:
+        drop_log(t)
     point = t.read_where(["o_orderkey=42"])
     assert _BUCKET not in point.columns
     assert [r.o_orderkey for r in point.collect()] == [42]
@@ -397,28 +406,33 @@ def test_read_where_pins_point_lookup(spark, engine, tmp_path, manifest):
 
     codes = ParquetTable(
         spark, str(tmp_path / "codes.parquet"),
-        bucket_by=("code",), n_buckets=8, manifest=manifest,
+        bucket_by=("code",), n_buckets=8,
     )
     codes.append(spark.createDataFrame(
         [(f"{i:03d}", i) for i in range(40)] + [(str(i), i) for i in range(40)],
         "code string, i int",
     ))
+    if legacy:
+        drop_log(codes)
     for q in (["code=007"], ["code=abc"], ["code=7"]):
         want = codes.read().filter(compile_query(q).predicate)
         assert sorted(codes.read_where(q).collect()) == sorted(want.collect()), q
 
 
-@pytest.mark.parametrize("manifest", [False, True], ids=["legacy", "manifest"])
-def test_upsert_hashes_source_keys_under_target_types(spark, tmp_path, manifest):
+@pytest.mark.parametrize("legacy", [True, False], ids=["legacy", "manifest"])
+def test_upsert_hashes_source_keys_under_target_types(spark, tmp_path, legacy):
     """An ``int`` source key upserted into a ``bigint``-keyed bucketed
     target must touch the buckets the target hashed those keys into:
     ``xxhash64`` of an int and of the same bigint differ, so hashing
-    under the source's type rewrote the wrong buckets (updates lost in
-    legacy mode, keys kept twice in manifest mode)."""
+    under the source's type rewrote the wrong buckets (keys kept
+    twice). A table written without a log (``legacy``) takes the key
+    types from the schema its adoption commits."""
     t = ParquetTable(
-        spark, str(tmp_path / "t.parquet"), bucket_by=("k",), n_buckets=8, manifest=manifest
+        spark, str(tmp_path / "t.parquet"), bucket_by=("k",), n_buckets=8
     )
     t.append(spark.createDataFrame([(i, "old") for i in range(40)], "k bigint, v string"))
+    if legacy:
+        drop_log(t)
     src = spark.createDataFrame([(i, "new") for i in (3, 11, 19, 27, 35)], "k int, v string")
     apply_write_op(src, t, TargetSpec(ds="t", op="upsert", pk=("k",)))
     got = {r.k: r.v for r in t.read().collect()}
@@ -426,16 +440,18 @@ def test_upsert_hashes_source_keys_under_target_types(spark, tmp_path, manifest)
     assert {k for k, v in got.items() if v == "new"} == {3, 11, 19, 27, 35}
 
 
-@pytest.mark.parametrize("manifest", [False, True], ids=["legacy", "manifest"])
-def test_insert_appends_rows_under_target_types(spark, tmp_path, manifest):
+@pytest.mark.parametrize("legacy", [True, False], ids=["legacy", "manifest"])
+def test_insert_appends_rows_under_target_types(spark, tmp_path, legacy):
     """``int`` keys inserted into a ``bigint``-keyed bucketed target
-    land as ``bigint``: appended under the source's type, legacy mode
-    wrote ``int`` files beside ``bigint`` ones and manifest mode raised
-    on the type change."""
+    land as ``bigint``: appended under the source's type, the commit
+    raised on the type change. Also for a table written without a log
+    (``legacy``), adopted by the insert."""
     t = ParquetTable(
-        spark, str(tmp_path / "t.parquet"), bucket_by=("k",), n_buckets=8, manifest=manifest
+        spark, str(tmp_path / "t.parquet"), bucket_by=("k",), n_buckets=8
     )
     t.append(spark.createDataFrame([(i, "old") for i in range(40)], "k bigint, v string"))
+    if legacy:
+        drop_log(t)
     src = spark.createDataFrame([(i, "new") for i in (3, 40, 41, 77)], "k int, v string")
     apply_write_op(src, t, TargetSpec(ds="t", op="insert", pk=("k",)))
     import pyarrow.parquet as pq

@@ -188,19 +188,19 @@ def test_cli_maintenance_zorder_and_compact(cli_root, capsys):
 
 def test_cli_time_travel_surface(spark, cli_root, capsys):
     """--versions / --as-of / --changes / --vacuum --retain on a
-    manifest table through the CLI."""
+    table through the CLI."""
     import json as _json
 
     from etl_cli_spark.cli import main
 
-    # create a manifest table with two versions via two CLI writes
+    # create a table with two versions via two CLI writes
     rc = main(["--root", cli_root, "-s", "orders", "-t", "tt_orders",
-               "--op", "create", "--manifest", "--drop"])
+               "--op", "create", "--drop"])
     assert rc == 0
     rc = main(["--root", cli_root, "-s", "orders", "-q", "o_orderkey__lt=50",
                "-t", "tt_orders", "--op", "upsert", "--pk", "o_orderkey",
                "--tf", "o_orderkey,o_custkey,o_orderstatus,o_totalprice,"
-               "o_orderdate,o_orderpriority", "--manifest"])
+               "o_orderdate,o_orderpriority"])
     assert rc == 0
     capsys.readouterr()
 

@@ -287,9 +287,9 @@ def test_corpus_changefeed_tracks_upserts_and_deletes(spark, engine, tmp_path):
     docs = engine.read("documents")
     up = ParquetTable(
         spark, str(tmp_path / "up.parquet"),
-        bucket_by=("doc_id",), n_buckets=4, manifest=True,
+        bucket_by=("doc_id",), n_buckets=4,
     )
-    down = ParquetTable(spark, str(tmp_path / "down.parquet"), manifest=True)
+    down = ParquetTable(spark, str(tmp_path / "down.parquet"))
     stages = [
         {"stage": "filter", "expr": "n_chars > 50"},
         {"stage": "transform", "exprs": {"lang_uc": "upper(lang)"}},
@@ -564,8 +564,8 @@ def test_span_index_append_is_batch_gated_exactly_once(spark, tmp_path):
         assert ParquetTable(spark, idx).last_stream_batch(sid) == 2
 
 def test_streaming_runner_exactly_once_output(spark, tmp_path):
-    """exactly_once=True semantics, lineage-scoped (the Delta txnAppId
-    pattern — stream ids derive from the checkpoint path):
+    """Exactly-once output, lineage-scoped (the Delta txnAppId pattern —
+    stream ids derive from the checkpoint path):
 
     1. resuming the SAME checkpoint is a no-op (no duplicates);
     2. a NEW checkpoint is a new lineage: re-delivered history appends
@@ -596,10 +596,10 @@ def test_streaming_runner_exactly_once_output(spark, tmp_path):
     spark.createDataFrame(rows_a, schema).write.mode("append").parquet(src)
 
     run_corpus_pipeline_streaming(
-        spark, src, schema, [], out, ck1, exactly_once=True)
+        spark, src, schema, [], out, ck1)
     # (1) same-checkpoint resume: nothing pending, nothing duplicated
     run_corpus_pipeline_streaming(
-        spark, src, schema, [], out, ck1, exactly_once=True)
+        spark, src, schema, [], out, ck1)
     assert ParquetTable(spark, out).read().count() == len(rows_a)
 
     # (2) new checkpoint + a NEW drop: history duplicates (documented
@@ -608,7 +608,7 @@ def test_streaming_runner_exactly_once_output(spark, tmp_path):
     rows_b = [(100 + i, f"late drop doc {i}") for i in range(3)]
     spark.createDataFrame(rows_b, schema).write.mode("append").parquet(src)
     run_corpus_pipeline_streaming(
-        spark, src, schema, [], out, ck2, exactly_once=True)
+        spark, src, schema, [], out, ck2)
     got = ParquetTable(spark, out).read()
     assert got.count() == 2 * len(rows_a) + len(rows_b)
     assert {r[0] for r in rows_b} <= {r.doc_id for r in got.collect()}
@@ -619,24 +619,16 @@ def test_streaming_runner_exactly_once_output(spark, tmp_path):
     src3 = str(tmp_path / "drops3")
     spark.createDataFrame(rows_a[:3], schema).write.mode("append").parquet(src3)
     run_corpus_pipeline_streaming(
-        spark, src3, schema, [], out3, ck3, exactly_once=True)   # batch 0
+        spark, src3, schema, [], out3, ck3)   # batch 0
     spark.createDataFrame(rows_a[3:], schema).write.mode("append").parquet(src3)
     run_corpus_pipeline_streaming(
-        spark, src3, schema, [], out3, ck3, exactly_once=True)   # batch 1
+        spark, src3, schema, [], out3, ck3)   # batch 1
     shutil.rmtree(ck3)
     spark.createDataFrame(rows_b, schema).write.mode("append").parquet(src3)
     with _pytest.raises(Exception, match="checkpoint.*reset|below the committed"):
         run_corpus_pipeline_streaming(
-            spark, src3, schema, [], out3, ck3, exactly_once=True)
+            spark, src3, schema, [], out3, ck3)
 
-    # default (plain parquet) mode under a new checkpoint: duplicates,
-    # same as before — the at-least-once baseline
-    out_alo = str(tmp_path / "out_alo.parquet")
-    run_corpus_pipeline_streaming(
-        spark, src, schema, [], out_alo, str(tmp_path / "ck4"))
-    run_corpus_pipeline_streaming(
-        spark, src, schema, [], out_alo, str(tmp_path / "ck4_lost"))
-    assert spark.read.parquet(out_alo).count() == 2 * (len(rows_a) + len(rows_b))
 
 
 @pytest.mark.parametrize("seed", [0, 1])
@@ -721,13 +713,13 @@ def test_streaming_runner_crash_replay_property(spark, tmp_path, monkeypatch, se
                 with pytest.raises(Exception, match="injected crash"):
                     run_corpus_pipeline_streaming(
                         spark, src, schema, stages, out, ck,
-                        span_index_path=idx, exactly_once=True,
+                        span_index_path=idx,
                     )
                 assert arm["point"] is None, "crash point never fired"
             # (re-)run to completion — replays the killed batch
             run_corpus_pipeline_streaming(
                 spark, src, schema, stages, out, ck,
-                span_index_path=idx, exactly_once=True,
+                span_index_path=idx,
             )
         t = ParquetTable(spark, out)
         ck_tag = hashlib.sha256(os.path.abspath(ck).encode()).hexdigest()[:12]

@@ -1,9 +1,10 @@
 """Spark jobs the job path does not run, because the driver already
-holds the fact they would compute: a manifest write commits the schema
-of the frame it wrote, a logged run's ``rows_out`` is the committed
-snapshot's row count, the update family counts its source in the
-touched-partition aggregate, and a plain parquet source's schema is
-inferred once per session while its files are unchanged."""
+holds the fact they would compute: a write (a zorder included) commits
+the schema of the frame it wrote, a logged run's ``rows_out`` and an
+unfiltered ``Engine.count`` are the committed snapshot's row count,
+the update family counts its source in the touched-partition
+aggregate, and a plain parquet source's schema is inferred once per
+session while its files are unchanged."""
 
 from __future__ import annotations
 
@@ -50,20 +51,22 @@ def _read_back_schema(spark, t: ParquetTable, df) -> str:
     return StructType([by_name.get(f.name, f) for f in inferred.fields]).json()
 
 
+# the write's own jobs: a partitioned layout's write repartitions first
+_APPEND_JOBS = {"bucket": 2, "value": 2, "plain": 1}
+
+
 @pytest.mark.parametrize("layout", sorted(_LAYOUTS))
 def test_manifest_append_runs_the_legacy_jobs(spark, tmp_path, layout):
-    """A manifest append commits the frame's schema instead of reading
-    its staged files back: as many Spark jobs as a legacy append of the
-    same frame, and the schema such a read would have inferred."""
+    """An append commits the frame's schema instead of reading its
+    staged files back: it runs only the write's jobs, as many as the
+    rename-swap append once did, and commits the schema such a read
+    would have inferred."""
     df = _frame(spark)
-    legacy = ParquetTable(spark, str(tmp_path / "legacy"), **_LAYOUTS[layout])
-    man = ParquetTable(spark, str(tmp_path / "man"), manifest=True, **_LAYOUTS[layout])
-    legacy.append(df)
+    man = ParquetTable(spark, str(tmp_path / "man"), **_LAYOUTS[layout])
     man.append(df)
     assert _committed_schema(man) == _read_back_schema(spark, man, df)
-    _, legacy_jobs = jobs_submitted(spark, lambda: legacy.append(df))
     _, man_jobs = jobs_submitted(spark, lambda: man.append(df))
-    assert man_jobs == legacy_jobs
+    assert man_jobs == _APPEND_JOBS[layout]
     # a schema-evolving append adds the column after the existing ones
     man.append(df.withColumn("extra", F.lit("x")))
     cols = [f["name"] for f in json.loads(_committed_schema(man))["fields"]]
@@ -73,12 +76,11 @@ def test_manifest_append_runs_the_legacy_jobs(spark, tmp_path, layout):
 def test_index_table_commits_the_read_back_schema(spark, tmp_path):
     """An index table partitioned on a column the frame carries (``__bb``)
     commits that column's frame type, last, as a read of its files
-    yields it, in the jobs of a legacy overwrite."""
+    yields it, in the write's own jobs."""
     t = open_index(spark, str(tmp_path / "idx"), "dedup", [("", ("__bb",))])[0]
-    legacy = ParquetTable(spark, str(tmp_path / "legacy"), partition_by=("__bb",))
     df = spark.range(10).selectExpr("id AS doc_id", "cast(id % 4 AS int) AS __bb", "id * 7 AS sig")
     _, jobs = jobs_submitted(spark, lambda: t.overwrite(df))
-    assert jobs == jobs_submitted(spark, lambda: legacy.overwrite(df))[1]
+    assert jobs == _APPEND_JOBS["value"]
     assert _committed_schema(t) == _read_back_schema(spark, t, df)
     assert [f["name"] for f in json.loads(_committed_schema(t))["fields"]] == ["doc_id", "sig", "__bb"]
 
@@ -200,3 +202,54 @@ def test_sql_skips_an_uncommitted_manifest_table(spark, tmp_path):
     eng = Engine(spark, str(tmp_path))
     assert eng.sql("SELECT count(*) AS n FROM t").first().n == 3
     assert not spark.catalog.tableExists("pending")
+
+
+def test_zorder_commits_the_frames_schema(spark, tmp_path):
+    """A zorder commits the schema of the frame it wrote, the same JSON
+    a read of its files infers, without the job that read ran."""
+    df = _frame(spark).drop("p")
+    t = ParquetTable(spark, str(tmp_path / "z"))
+    t.append(df)
+    t.zorder(["id", "v"], num_partitions=4)
+    _, jobs = jobs_submitted(spark, lambda: t.zorder(["id", "v"], num_partitions=4))
+    files = [os.path.join(t.path, f) for f in t._latest_manifest()[1]["files"]]
+    assert _committed_schema(t) == spark.read.parquet(*files).schema.json()
+    assert jobs == 5
+    assert sorted(t.read().collect()) == sorted(df.collect())
+
+
+def test_count_answers_from_the_snapshot(spark, tmp_path):
+    """``Engine.count`` of a table with no filtering query item is its
+    committed row count, under the ``_limit`` rule, with no Spark job; a
+    filter, and a plain parquet file, are counted by Spark."""
+    _upsert_root(str(tmp_path))
+    eng = Engine(spark, str(tmp_path))
+    eng.etl("src", target="out/t", op="create", pk="k", n_buckets=4)
+    for query, want in ((None, 2000), (["_limit=7"], 7), (["_sort=-k", "_fields=k"], 2000)):
+        n, jobs = jobs_submitted(spark, lambda: eng.count("out/t", query))
+        assert (n, jobs) == (want, 0), query
+    n, jobs = jobs_submitted(spark, lambda: eng.count("out/t", ["k__lt=10"]))
+    assert n == 10 and jobs > 0
+    assert eng.count("src") == 2000
+
+
+def test_default_pk_target_work_shape(spark, tmp_path):
+    """A logged ``Engine.run`` into a 4-bucket pk target with no
+    ``manifest`` argument commits through the log: create, upsert and
+    delete submit 2, 10 and 7 Spark jobs (the rename-swap path this
+    replaced ran 5, 14 and 11). Counted after one untimed pass, so every
+    source schema is known to the session."""
+    root = str(tmp_path)
+    _upsert_root(root)
+    pq.write_table(pa.table({"k": np.arange(0, 100)}), f"{root}/dels.parquet")
+    eng = Engine(spark, root, job_log=True)
+    kw = dict(target="out/t", pk="k", n_buckets=4)
+    for _ in range(2):
+        ParquetTable(spark, f"{root}/out/t.parquet").drop()
+        jobs = [
+            jobs_submitted(spark, lambda: eng.etl(src, op=op, **kw))[1]
+            for src, op in (("src", "create"), ("ups", "upsert"), ("dels", "delete"))
+        ]
+    assert jobs == [2, 10, 7]
+    assert os.path.isdir(f"{root}/out/t.parquet/_log")
+    assert eng.count("out/t") == 2300 - 100

@@ -1,6 +1,8 @@
-"""Manifest transaction-log commit protocol (writeops.ParquetTable
-manifest mode): snapshot-isolated reads, atomic put-if-absent commits,
-commit-race retry, crash invisibility, vacuum of unreferenced files.
+"""Manifest transaction-log commit protocol (writeops.ParquetTable, the
+one way every table commits): snapshot-isolated reads, atomic
+put-if-absent commits, commit-race retry, crash invisibility, vacuum of
+unreferenced files, and the adoption of directories written without a
+log.
 
 Round-3 judge item #1: on an object store the rename swap is neither
 atomic nor isolated — a reader listing files mid-swap sees a torn
@@ -17,8 +19,9 @@ import threading
 import pytest
 from pyspark.sql import functions as F
 
-from etl_cli_spark.operators.writeops import _LOG, ParquetTable, apply_write_op
+from etl_cli_spark.operators.writeops import _LOG, Layout, ParquetTable, apply_write_op, data_files
 from etl_cli_spark.spec import TargetSpec
+from etl_cli_spark.uri import parse_ds
 
 
 def _rows(df):
@@ -49,22 +52,21 @@ def orders(engine):
 
 
 def test_manifest_roundtrip_matches_plain(spark, orders, tmp_path):
-    """Same content through manifest and legacy tables, all 3 layouts."""
+    """A table reads back exactly the frame it was written from, in all
+    3 layouts, as one committed version."""
     for tag, kw in [
         ("plain", {}),
         ("bucket", dict(bucket_by=("o_orderkey",), n_buckets=4)),
         ("values", dict(partition_by=("o_orderstatus",))),
     ]:
-        m = ParquetTable(spark, str(tmp_path / f"m_{tag}.parquet"), manifest=True, **kw)
-        p = ParquetTable(spark, str(tmp_path / f"p_{tag}.parquet"), **kw)
+        m = ParquetTable(spark, str(tmp_path / f"m_{tag}.parquet"), **kw)
         m.append(orders)
-        p.append(orders)
-        assert _rows(m.read()) == _rows(p.read()), tag
+        assert _rows(m.read().select(*orders.columns)) == _rows(orders), tag
         assert _versions(m.path) == [0], tag
 
 
 def test_manifest_append_accumulates(spark, orders, tmp_path):
-    t = ParquetTable(spark, str(tmp_path / "a.parquet"), manifest=True)
+    t = ParquetTable(spark, str(tmp_path / "a.parquet"))
     a = orders.filter("o_orderkey < 100")
     b = orders.filter("o_orderkey >= 100 AND o_orderkey < 200")
     t.append(a)
@@ -74,7 +76,7 @@ def test_manifest_append_accumulates(spark, orders, tmp_path):
 
 
 def test_manifest_overwrite_replaces_snapshot(spark, orders, tmp_path):
-    t = ParquetTable(spark, str(tmp_path / "o.parquet"), manifest=True)
+    t = ParquetTable(spark, str(tmp_path / "o.parquet"))
     t.append(orders)
     small = orders.filter("o_orderkey < 10")
     t.overwrite(small)
@@ -84,31 +86,32 @@ def test_manifest_overwrite_replaces_snapshot(spark, orders, tmp_path):
 
 
 def test_manifest_mode_detected_from_disk(spark, orders, tmp_path):
-    """A reopened table (no ctor flag) keeps the manifest behavior —
-    the _log dir on disk wins."""
+    """A reopened table continues the log on disk."""
     path = str(tmp_path / "d.parquet")
-    ParquetTable(spark, path, manifest=True).append(orders.limit(50))
-    t2 = ParquetTable(spark, path)  # no flag
-    assert t2._is_manifest()
+    ParquetTable(spark, path).append(orders.limit(50))
+    t2 = ParquetTable(spark, path)
     t2.append(orders.filter("o_orderkey >= 50").limit(50))
     assert _versions(path) == [0, 1]
     assert t2.read().count() == 100
 
 
 def test_manifest_flag_never_misreads_legacy_table(spark, orders, tmp_path):
-    """manifest=True on an existing legacy table must NOT hide its data
-    behind a nonexistent log."""
+    """A directory written without a log (plain ``df.write.parquet``)
+    reads as the whole directory, and reading it creates no log that
+    would hide its files."""
     path = str(tmp_path / "l.parquet")
-    ParquetTable(spark, path).append(orders.limit(30))
-    t = ParquetTable(spark, path, manifest=True)
-    assert not t._is_manifest()
+    orders.limit(30).write.parquet(path)
+    t = ParquetTable(spark, path)
+    assert t.exists()
     assert t.read().count() == 30
+    assert t.read_where(["o_orderkey__lt=5"]).count() == 5
+    assert not os.path.exists(os.path.join(path, _LOG))
 
 
 def test_manifest_empty_after_delete_keeps_schema(spark, orders, tmp_path):
     t = ParquetTable(
         spark, str(tmp_path / "e.parquet"),
-        bucket_by=("o_orderkey",), n_buckets=4, manifest=True,
+        bucket_by=("o_orderkey",), n_buckets=4,
     )
     sub = orders.filter("o_orderkey < 20")
     t.append(sub)
@@ -122,8 +125,9 @@ def test_manifest_empty_after_delete_keeps_schema(spark, orders, tmp_path):
 
 
 def test_manifest_upsert_matches_legacy(spark, orders, tmp_path):
-    """The whole upsert path (scoped bucket rewrite) produces identical
-    final state on a manifest table and a legacy table."""
+    """The whole upsert path (scoped bucket rewrite) produces the final
+    state the DataFrame oracle computes from the source frame: the
+    target rows the source does not name, plus every source row."""
     src = (
         orders.filter("o_orderkey < 100")
         .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1.0))
@@ -133,16 +137,13 @@ def test_manifest_upsert_matches_legacy(spark, orders, tmp_path):
             )
         )
     )
-    states = {}
-    for tag, manifest in [("legacy", False), ("manifest", True)]:
-        t = ParquetTable(
-            spark, str(tmp_path / f"u_{tag}.parquet"),
-            bucket_by=("o_orderkey",), n_buckets=8, manifest=manifest,
-        )
-        t.append(orders)
-        out = apply_write_op(src, t, TargetSpec(ds="t", op="upsert", pk=("o_orderkey",)))
-        states[tag] = _rows(out)
-    assert states["legacy"] == states["manifest"]
+    t = ParquetTable(
+        spark, str(tmp_path / "u.parquet"), bucket_by=("o_orderkey",), n_buckets=8,
+    )
+    t.append(orders)
+    out = apply_write_op(src, t, TargetSpec(ds="t", op="upsert", pk=("o_orderkey",)))
+    want = orders.join(src, "o_orderkey", "left_anti").unionByName(src)
+    assert _rows(out.select(*orders.columns)) == _rows(want)
 
 
 def test_manifest_scoped_rewrite_keeps_untouched_files(spark, orders, tmp_path):
@@ -150,7 +151,7 @@ def test_manifest_scoped_rewrite_keeps_untouched_files(spark, orders, tmp_path):
     entries verbatim — those files are never rewritten or moved."""
     t = ParquetTable(
         spark, str(tmp_path / "s.parquet"),
-        bucket_by=("o_orderkey",), n_buckets=8, manifest=True,
+        bucket_by=("o_orderkey",), n_buckets=8,
     )
     t.append(orders)
     v0 = t._latest_manifest()[1]["files"]
@@ -171,7 +172,7 @@ def test_manifest_scoped_rewrite_keeps_untouched_files(spark, orders, tmp_path):
 def test_manifest_value_partition_scoped_op(spark, orders, tmp_path):
     t = ParquetTable(
         spark, str(tmp_path / "v.parquet"),
-        partition_by=("o_orderstatus",), manifest=True,
+        partition_by=("o_orderstatus",),
     )
     t.append(orders)
     src = orders.filter("o_orderstatus = 'F' AND o_orderkey < 50").withColumn(
@@ -196,7 +197,7 @@ def test_manifest_value_partition_scoped_op(spark, orders, tmp_path):
 def test_uncommitted_files_are_invisible(spark, orders, tmp_path):
     """An ingest that dies before its commit leaves the table exactly as
     it was — the crash-consistency property the rename swap lacks."""
-    t = ParquetTable(spark, str(tmp_path / "c.parquet"), manifest=True)
+    t = ParquetTable(spark, str(tmp_path / "c.parquet"))
     t.append(orders.limit(40))
     before = _rows(t.read())
     # simulate a crashed write: files land, no commit happens
@@ -206,7 +207,7 @@ def test_uncommitted_files_are_invisible(spark, orders, tmp_path):
 
 
 def test_vacuum_removes_unreferenced_and_old_manifests(spark, orders, tmp_path):
-    t = ParquetTable(spark, str(tmp_path / "g.parquet"), manifest=True)
+    t = ParquetTable(spark, str(tmp_path / "g.parquet"))
     t.append(orders.limit(40))
     t.overwrite(orders.limit(10))        # v0's files now unreferenced
     t._stage_write(orders.limit(5))      # orphaned ingest
@@ -249,7 +250,7 @@ def backend(request):
 def test_commit_race_loser_rebases(spark, orders, tmp_path, backend):
     """Concurrent appends: every commit gets a distinct version and no
     rows are lost — the loser re-reads the tip and retries."""
-    t = ParquetTable(spark, str(tmp_path / "r.parquet"), manifest=True,
+    t = ParquetTable(spark, str(tmp_path / "r.parquet"),
                      commit_backend=backend)
     t.append(orders.limit(10))
     errs = []
@@ -257,7 +258,7 @@ def test_commit_race_loser_rebases(spark, orders, tmp_path, backend):
     def add(lo, hi):
         try:
             ParquetTable(
-                spark, t.path, manifest=True, commit_backend=backend
+                spark, t.path, commit_backend=backend
             ).append(orders.filter(f"o_orderkey >= {lo} AND o_orderkey < {hi}"))
         except Exception as e:  # pragma: no cover
             errs.append(e)
@@ -284,7 +285,7 @@ def test_reader_never_sees_torn_snapshot(spark, orders, tmp_path, backend):
     """While a writer loops full overwrites (value generation k), every
     concurrent read sees exactly ONE generation — all 50 rows, one
     distinct marker value."""
-    t = ParquetTable(spark, str(tmp_path / "iso.parquet"), manifest=True,
+    t = ParquetTable(spark, str(tmp_path / "iso.parquet"),
                      commit_backend=backend)
     base = orders.limit(50).select("o_orderkey").withColumn("gen", F.lit(0))
     t.overwrite(base)
@@ -297,7 +298,7 @@ def test_reader_never_sees_torn_snapshot(spark, orders, tmp_path, backend):
         stop.set()
 
     def reader():
-        r = ParquetTable(spark, t.path, manifest=True, commit_backend=backend)
+        r = ParquetTable(spark, t.path, commit_backend=backend)
         while not stop.is_set():
             df = r.read()
             if df is None:
@@ -327,7 +328,7 @@ def test_injected_races_force_rebase_loop(spark, orders, tmp_path):
     from etl_cli_spark.operators.commitlog import FakeObjectStoreCommitBackend
 
     be = FakeObjectStoreCommitBackend(list_lag=1, inject_races=3)
-    t = ParquetTable(spark, str(tmp_path / "rr.parquet"), manifest=True,
+    t = ParquetTable(spark, str(tmp_path / "rr.parquet"),
                      commit_backend=be)
     a = orders.filter("o_orderkey < 40")
     b = orders.filter("o_orderkey >= 40 AND o_orderkey < 70")
@@ -363,7 +364,7 @@ def test_objstore_commit_stress_8x50(spark, orders, tmp_path):
 
     def committer(cid):
         try:
-            t = ParquetTable(spark, path, manifest=True, commit_backend=be)
+            t = ParquetTable(spark, path, commit_backend=be)
             for seq in range(n_commits):
                 t.append(
                     slice_.withColumn("cid", F.lit(cid)).withColumn("seq", F.lit(seq))
@@ -378,7 +379,7 @@ def test_objstore_commit_stress_8x50(spark, orders, tmp_path):
         th.join()
     assert not errs, errs[:3]
 
-    t = ParquetTable(spark, path, manifest=True, commit_backend=be)
+    t = ParquetTable(spark, path, commit_backend=be)
     vs = t.versions()
     for _ in range(3):
         vs = t.versions()  # drain the bounded listing lag
@@ -403,7 +404,7 @@ def test_engine_reads_manifest_dataset(spark, orders, tmp_path):
     eng = Engine(spark, str(tmp_path))
     t = ParquetTable(
         spark, str(tmp_path / "ds.parquet"),
-        bucket_by=("o_orderkey",), n_buckets=4, manifest=True,
+        bucket_by=("o_orderkey",), n_buckets=4,
     )
     t.append(orders.limit(60))
     t.overwrite(orders.limit(20))  # stale v0 files still on disk
@@ -413,8 +414,11 @@ def test_engine_reads_manifest_dataset(spark, orders, tmp_path):
 
 
 def test_engine_etl_manifest_flag(spark, tmp_path):
-    """manifest=True on the job spec: the CLI-shaped path writes through
-    the commit log end-to-end."""
+    """``manifest=True`` on the job spec, the keyword kept for callers
+    written when it chose the commit protocol, writes through the commit
+    log end-to-end like the default; ``manifest=False`` is refused."""
+    from etl_cli_spark.spec import make_spec
+
     from etl_cli_spark.engine import Engine
 
     eng = Engine(spark, SF_DIR := os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001"))
@@ -424,10 +428,14 @@ def test_engine_etl_manifest_flag(spark, tmp_path):
     eng_w.etl("src", target="out", op="create", manifest=True)
     assert os.path.isdir(str(tmp_path / "out.parquet" / _LOG))
     assert eng_w.read("out").count() == 25
+    with pytest.raises(ValueError, match="manifest=False"):
+        make_spec("src", target="out", manifest=False)
+    with pytest.raises(ValueError, match="manifest=False"):
+        eng_w.table(parse_ds("out"), manifest=False)
 
 
 def test_zorder_on_manifest_table(spark, orders, tmp_path):
-    t = ParquetTable(spark, str(tmp_path / "z.parquet"), manifest=True)
+    t = ParquetTable(spark, str(tmp_path / "z.parquet"))
     t.append(orders)
     before = _rows(t.read())
     t.zorder(["o_custkey", "o_totalprice"], num_partitions=4)
@@ -443,7 +451,7 @@ def test_read_version_time_travel(spark, orders, tmp_path):
     """Every retained version reads back exactly; versions() lists them."""
     t = ParquetTable(
         spark, str(tmp_path / "tt.parquet"),
-        bucket_by=("o_orderkey",), n_buckets=4, manifest=True,
+        bucket_by=("o_orderkey",), n_buckets=4,
     )
     a = orders.filter("o_orderkey < 500")
     b = orders.filter("o_orderkey >= 500 and o_orderkey < 900")
@@ -462,7 +470,7 @@ def test_read_version_time_travel(spark, orders, tmp_path):
 def test_vacuum_retention_window(spark, orders, tmp_path):
     """vacuum(retain_versions=N) keeps the newest N snapshots exactly
     readable and removes everything older; default 1 keeps only the tip."""
-    t = ParquetTable(spark, str(tmp_path / "ret.parquet"), manifest=True)
+    t = ParquetTable(spark, str(tmp_path / "ret.parquet"))
     a = orders.filter("o_orderkey < 300")
     b = orders.filter("o_orderkey < 600")
     c = orders.filter("o_orderkey < 900")
@@ -485,7 +493,7 @@ def test_vacuum_retention_window(spark, orders, tmp_path):
 def test_snapshot_changes_multiset_and_pk(spark, orders, tmp_path):
     """CDF without pk = insert/delete multiset; with pk the key present
     on both sides classifies as update_postimage (new image)."""
-    t = ParquetTable(spark, str(tmp_path / "cdf.parquet"), manifest=True)
+    t = ParquetTable(spark, str(tmp_path / "cdf.parquet"))
     t.overwrite(orders)  # v0
     changed = orders.filter("o_orderkey < 50").withColumn(
         "o_totalprice", F.col("o_totalprice") + F.lit(9.0)
@@ -524,7 +532,7 @@ def test_snapshot_changes_after_write_ops(spark, orders, tmp_path):
     bucketed manifest table yields the classified net change."""
     t = ParquetTable(
         spark, str(tmp_path / "cdfop.parquet"),
-        bucket_by=("o_orderkey",), n_buckets=4, manifest=True,
+        bucket_by=("o_orderkey",), n_buckets=4,
     )
     t.append(orders)  # v0
     upd = orders.filter("o_orderkey < 20").withColumn("o_orderstatus", F.lit("X"))
@@ -549,7 +557,7 @@ def test_snapshot_changes_scans_only_changed_files(spark, orders, tmp_path):
     buckets of a 100 TB table."""
     t = ParquetTable(
         spark, str(tmp_path / "cdfprune.parquet"),
-        bucket_by=("o_orderkey",), n_buckets=8, manifest=True,
+        bucket_by=("o_orderkey",), n_buckets=8,
     )
     t.append(orders)  # v0
     # a small key range hits few buckets: the pk-hash scoped upsert
@@ -582,7 +590,7 @@ def test_snapshot_changes_across_schema_evolution(spark, tmp_path):
     """A CDF spanning a schema-evolution commit reads both sides under
     the merged schema: pre-evolution rows surface with the added column
     null instead of failing the exceptAll on mismatched shapes."""
-    t = ParquetTable(spark, str(tmp_path / "cdfdrift.parquet"), manifest=True)
+    t = ParquetTable(spark, str(tmp_path / "cdfdrift.parquet"))
     t.append(spark.createDataFrame([(1, "a")], "id long, name string"))  # v0
     t.append(spark.createDataFrame(
         [(2, "b", 9.5)], "id long, name string, score double"
@@ -596,7 +604,7 @@ def test_manifest_schema_evolution(spark, tmp_path):
     """Appends with drifted schemas union-by-name: new columns join the
     table schema (older files read null), each retained version keeps
     ITS schema, and a type flip refuses loudly."""
-    t = ParquetTable(spark, str(tmp_path / "drift.parquet"), manifest=True)
+    t = ParquetTable(spark, str(tmp_path / "drift.parquet"))
     t.append(spark.createDataFrame([(1, "a")], "id long, name string"))
     t.append(spark.createDataFrame([(2, "b", 9.5)], "id long, name string, score double"))
     out = t.read()
@@ -616,7 +624,7 @@ def test_manifest_drift_on_partitioned_layouts(spark, tmp_path):
     rewrite that adds a column merges instead of clobbering."""
     t = ParquetTable(
         spark, str(tmp_path / "bdrift.parquet"),
-        bucket_by=("id",), n_buckets=4, manifest=True,
+        bucket_by=("id",), n_buckets=4,
     )
     base = spark.range(40).select(F.col("id"), F.lit("x").alias("name"))
     t.append(base)
@@ -634,11 +642,11 @@ def test_manifest_drift_on_partitioned_layouts(spark, tmp_path):
 
 
 def test_first_write_crash_stays_invisible(spark, orders, tmp_path, backend):
-    """A crash during a manifest table's FIRST ingest (files landed, no
-    manifest committed) must not flip the table to legacy mode and
-    serve the torn files — on either commit backend (readers of an
+    """A crash during a table's FIRST ingest (files landed, no manifest
+    committed) must not make the directory read as one written without
+    a log, serving the torn files — on either commit backend (readers of an
     object-store-logged table open it through the same backend)."""
-    t = ParquetTable(spark, str(tmp_path / "crash.parquet"), manifest=True,
+    t = ParquetTable(spark, str(tmp_path / "crash.parquet"),
                      commit_backend=backend)
 
     real_commit = t._commit
@@ -650,7 +658,7 @@ def test_first_write_crash_stays_invisible(spark, orders, tmp_path, backend):
     with pytest.raises(RuntimeError, match="simulated crash"):
         t.append(orders.limit(50))
     # files are on disk, but the table must read as nonexistent
-    reopened = ParquetTable(spark, t.path, manifest=True, commit_backend=backend)
+    reopened = ParquetTable(spark, t.path, commit_backend=backend)
     assert reopened.exists() is False
     assert reopened.read() is None
     # recovery: a successful append commits and serves ONLY its rows
@@ -664,7 +672,7 @@ def test_compact_partitions_aborts_on_conflict(spark, orders, tmp_path):
     """A racing rewrite that removed the compacted files must abort the
     compaction (Delta/Iceberg OPTIMIZE conflict semantics), not
     resurrect the old rows."""
-    t = ParquetTable(spark, str(tmp_path / "race.parquet"), manifest=True)
+    t = ParquetTable(spark, str(tmp_path / "race.parquet"))
     for i in range(5):
         t.append(orders.filter(f"o_orderkey % 5 = {i}"))
 
@@ -672,7 +680,7 @@ def test_compact_partitions_aborts_on_conflict(spark, orders, tmp_path):
 
     def racing_commit(make, **kw):
         # a concurrent writer replaces the whole table first
-        other = ParquetTable(spark, t.path, manifest=True)
+        other = ParquetTable(spark, t.path)
         other.overwrite(orders.limit(7))
         return orig_commit(make, **kw)
 
@@ -690,7 +698,7 @@ def test_partition_value_types_not_reinferred(spark, tmp_path):
     re-inference must not win over the written frame's types."""
     t = ParquetTable(
         spark, str(tmp_path / "pv.parquet"),
-        partition_by=("code",), manifest=True,
+        partition_by=("code",),
     )
     df = spark.createDataFrame([("007", 1), ("042", 2)], "code string, v int")
     t.append(df)
@@ -706,7 +714,7 @@ def test_vacuum_spares_concurrent_reader_on_retained_version(spark, orders, tmp_
     version N-1 (inside retain_versions=2) survives a vacuum that drops
     version N-2's exclusive files; the dropped version then raises the
     documented time-travel error rather than misreading."""
-    t = ParquetTable(spark, str(tmp_path / "vr.parquet"), manifest=True)
+    t = ParquetTable(spark, str(tmp_path / "vr.parquet"))
     a = orders.filter("o_orderkey < 30")
     t.overwrite(a)                                            # v0
     t.overwrite(orders.filter("o_orderkey < 60"))             # v1
@@ -733,7 +741,7 @@ def test_delta_commits_and_checkpoint_cadence(spark, orders, tmp_path):
     version stores the full list; resolution replays deltas from the
     nearest checkpoint and every historical version reads exactly."""
     t = ParquetTable(
-        spark, str(tmp_path / "dl.parquet"), manifest=True, checkpoint_interval=4
+        spark, str(tmp_path / "dl.parquet"), checkpoint_interval=4
     )
     slices = [orders.filter(f"o_orderkey % 10 = {i}") for i in range(10)]
     for s in slices:
@@ -763,7 +771,7 @@ def test_vacuum_writes_checkpoint_sidecar_for_delta_floor(spark, orders, tmp_pat
     materialize its file list as a checkpoint sidecar before dropping
     the chain below — retained versions stay exactly readable."""
     t = ParquetTable(
-        spark, str(tmp_path / "ds.parquet"), manifest=True, checkpoint_interval=100
+        spark, str(tmp_path / "ds.parquet"), checkpoint_interval=100
     )
     for i in range(6):
         t.append(orders.filter(f"o_orderkey % 6 = {i}"))
@@ -790,7 +798,7 @@ def test_delta_log_on_fake_object_store_with_races(spark, orders, tmp_path):
 
     be = FakeObjectStoreCommitBackend(list_lag=1, inject_races=3)
     t = ParquetTable(
-        spark, str(tmp_path / "df.parquet"), manifest=True,
+        spark, str(tmp_path / "df.parquet"),
         commit_backend=be, checkpoint_interval=3,
     )
     a = orders.filter("o_orderkey < 40")
@@ -811,7 +819,7 @@ def test_read_where_prunes_files_by_stats(spark, orders, tmp_path):
     scan ONLY the intersecting file (manifest min/max data skipping)
     and still return exactly the filtered rows; ops the stats cannot
     prove (ne / regex) keep every file."""
-    t = ParquetTable(spark, str(tmp_path / "sk.parquet"), manifest=True)
+    t = ParquetTable(spark, str(tmp_path / "sk.parquet"))
     for lo in range(0, 1600, 400):
         t.append(orders.filter(f"o_orderkey >= {lo} AND o_orderkey < {lo + 400}"))
     doc = t._latest_manifest()[1]
@@ -842,7 +850,7 @@ def test_stats_survive_deltas_checkpoints_and_vacuum_floor(spark, orders, tmp_pa
     stats), land merged in checkpoints, and survive into the vacuum
     floor sidecar — pruning still works after the chain below is gone."""
     t = ParquetTable(
-        spark, str(tmp_path / "skv.parquet"), manifest=True, checkpoint_interval=100
+        spark, str(tmp_path / "skv.parquet"), checkpoint_interval=100
     )
     for lo in range(0, 1200, 400):
         t.append(orders.filter(f"o_orderkey >= {lo} AND o_orderkey < {lo + 400}"))
@@ -856,8 +864,10 @@ def test_stats_survive_deltas_checkpoints_and_vacuum_floor(spark, orders, tmp_pa
 
 
 def test_read_where_legacy_table_falls_back(spark, orders, tmp_path):
+    """A directory written without a log has no stats to skip with:
+    the query filters the whole directory's rows."""
+    orders.write.parquet(str(tmp_path / "lg.parquet"))
     t = ParquetTable(spark, str(tmp_path / "lg.parquet"))
-    t.append(orders)
     out = t.read_where(["o_orderkey__lt=50"])
     assert out.count() == orders.filter("o_orderkey < 50").count()
 
@@ -872,7 +882,7 @@ def test_engine_dsl_query_file_skips_on_manifest_dataset(spark, engine, orders, 
     from etl_cli_spark.engine import Engine
 
     root = str(tmp_path)
-    t = ParquetTable(spark, _os.path.join(root, "ok.parquet"), manifest=True)
+    t = ParquetTable(spark, _os.path.join(root, "ok.parquet"))
     for lo in range(0, 1600, 400):
         t.append(orders.filter(f"o_orderkey >= {lo} AND o_orderkey < {lo + 400}"))
     eng = Engine(spark, root)
@@ -894,7 +904,7 @@ def test_zorder_layout_composes_with_stats_skipping(spark, orders, tmp_path):
     the stats pruner compose into multi-dimensional data skipping."""
     from etl_cli_spark.operators.zorder import zorder_frame
 
-    t = ParquetTable(spark, str(tmp_path / "z.parquet"), manifest=True)
+    t = ParquetTable(spark, str(tmp_path / "z.parquet"))
     t.append(zorder_frame(orders, ["o_custkey", "o_orderkey"], num_partitions=8))
     n_files = len(t._latest_manifest()[1]["files"])
     assert n_files >= 4
@@ -914,8 +924,8 @@ def test_changefeed_skips_datachange_false_versions(spark, engine, orders, tmp_p
     be called for that version (Delta's CDF-skips-OPTIMIZE posture)."""
     from etl_cli_spark.streaming.incremental import changefeed_merge
 
-    up = ParquetTable(spark, str(tmp_path / "upc.parquet"), manifest=True)
-    down = ParquetTable(spark, str(tmp_path / "dnc.parquet"), manifest=True)
+    up = ParquetTable(spark, str(tmp_path / "upc.parquet"))
+    down = ParquetTable(spark, str(tmp_path / "dnc.parquet"))
     for i in range(5):
         up.append(orders.filter(f"o_orderkey % 5 = {i}"))  # v0..v4: small files
     changefeed_merge(spark, up, down, pk=("o_orderkey",))
@@ -950,7 +960,7 @@ def test_changefeed_skips_datachange_false_versions(spark, engine, orders, tmp_p
 def test_read_where_composes_with_time_travel(spark, orders, tmp_path):
     """read_where(version=v) prunes with THAT snapshot's stats and
     returns that snapshot's rows — skipping and time travel compose."""
-    t = ParquetTable(spark, str(tmp_path / "tv.parquet"), manifest=True)
+    t = ParquetTable(spark, str(tmp_path / "tv.parquet"))
     for lo in range(0, 1200, 400):
         t.append(orders.filter(f"o_orderkey >= {lo} AND o_orderkey < {lo + 400}"))
     old = t.read_where(["o_orderkey__gte=100", "o_orderkey__lt=300"], version=0)
@@ -973,7 +983,7 @@ def test_read_asof_timestamp(spark, engine, tmp_path):
     from etl_cli_spark.operators.writeops import ParquetTable
 
     orders = engine.read("orders").limit(60)
-    t = ParquetTable(spark, str(tmp_path / "t.parquet"), manifest=True)
+    t = ParquetTable(spark, str(tmp_path / "t.parquet"))
     t.append(orders.filter("o_orderkey < 20"))          # v0
     ts_after_v0 = _t.time()
     _t.sleep(0.05)
@@ -1002,7 +1012,7 @@ def test_version_asof_monotonizes_skewed_timestamps(spark, engine, tmp_path, mon
     from etl_cli_spark.operators.writeops import ParquetTable
 
     orders = engine.read("orders").limit(60)
-    t = ParquetTable(spark, str(tmp_path / "t.parquet"), manifest=True)
+    t = ParquetTable(spark, str(tmp_path / "t.parquet"))
     t.append(orders.filter("o_orderkey < 20"))          # v0: ts = T
     ts_after_v0 = _t.time()
     real_time = _t.time
@@ -1016,3 +1026,137 @@ def test_version_asof_monotonizes_skewed_timestamps(spark, engine, tmp_path, mon
     assert t.read_asof(ts_after_v0 + 1).count() == t.read_version(0).count()
     # at/after the skew horizon everything resolves to the tip
     assert t.version_asof(real_time() + 2000) == 2
+
+
+# -- directories written without a log ---------------------------------------
+
+
+def _upsert_oracle(target, src, pk):
+    """An upsert's end state computed on frames: the target rows whose
+    key the source lacks, plus every source row."""
+    return target.join(src.select(*pk), list(pk), "left_anti").unionByName(src)
+
+
+def _legacy_bucketed(spark, df, path, pk, n):
+    """A pk-bucketed table as versions before the log wrote it: hive
+    directories of the derived bucket column plus the layout file, no
+    ``_log``."""
+    Layout(tuple(pk), n).with_dirs(df).write.partitionBy("__etl_bucket").parquet(path)
+    with open(os.path.join(path, "_etl_bucket_meta.json"), "w") as f:
+        json.dump({"cols": list(pk), "n": n}, f)
+
+
+def _files(path):
+    return sorted(data_files(path))
+
+
+def test_plain_parquet_directory_is_adopted_by_engine_upsert(spark, orders, tmp_path):
+    """A directory written by ``df.write.parquet`` is upserted through
+    ``Engine.run``: its files become version 0 unchanged, the upsert is
+    version 1, and the rows are the DataFrame oracle's."""
+    from etl_cli_spark.engine import Engine
+
+    target = orders.filter("o_orderkey < 200")
+    target.write.parquet(str(tmp_path / "t.parquet"))
+    original = _files(str(tmp_path / "t.parquet"))
+    src = orders.filter("o_orderkey < 40 OR o_orderkey >= 190").withColumn(
+        "o_totalprice", F.col("o_totalprice") * 2
+    )
+    src.write.parquet(str(tmp_path / "ups.parquet"))
+    eng = Engine(spark, str(tmp_path))
+    eng.etl("ups", target="t", op="upsert", pk="o_orderkey")
+    t = ParquetTable(spark, str(tmp_path / "t.parquet"))
+    assert t.versions() == [0, 1]
+    assert sorted(t._manifest_at(0)["files"]) == original
+    want = _upsert_oracle(target, src, ["o_orderkey"])
+    assert _rows(eng.read("t").select(*orders.columns)) == _rows(want)
+
+
+def test_legacy_bucketed_table_is_adopted_by_upsert(spark, orders, tmp_path, backend):
+    """A bucketed table with a layout file and no ``_log`` keeps its
+    layout through adoption, on either commit backend: the upsert
+    rewrites only the source keys' buckets and ends at the DataFrame
+    oracle's rows."""
+    from partition_checks import assert_upsert_scoped
+
+    path = str(tmp_path / "b.parquet")
+    _legacy_bucketed(spark, orders, path, ["o_orderkey"], 8)
+    t = ParquetTable(spark, path, commit_backend=backend)
+    assert t.layout == Layout(("o_orderkey",), 8)
+    src = orders.filter("o_orderkey < 6").withColumn("o_orderstatus", F.lit("U"))
+    assert_upsert_scoped(t, src, ("o_orderkey",))
+    t.versions()  # drain the fake store's bounded listing lag
+    assert t.versions() == [0, 1]
+    want = _upsert_oracle(orders, src, ["o_orderkey"])
+    assert _rows(t.read().select(*orders.columns)) == _rows(want)
+
+
+class _Killed(BaseException):
+    """The process dying at this point: no handler below runs."""
+
+
+def test_adoption_killed_before_its_commit_is_completed_by_next_write(
+    spark, orders, tmp_path, monkeypatch
+):
+    """An adoption that dies before its log is in place leaves no
+    ``_log`` (so never a log with no version, which would hide the
+    directory's files): the table still reads as the whole directory,
+    and the next write adopts and commits."""
+    import etl_cli_spark.operators.commitlog as cl
+
+    path = str(tmp_path / "k.parquet")
+    _legacy_bucketed(spark, orders, path, ["o_orderkey"], 4)
+    original = _files(path)
+    src = orders.filter("o_orderkey < 30").withColumn("o_orderstatus", F.lit("K"))
+    spec = TargetSpec(ds="t", op="upsert", pk=("o_orderkey",))
+    real_rename = cl.os.rename
+
+    def dying_rename(a, b):
+        if b.endswith(_LOG):
+            raise _Killed()
+        return real_rename(a, b)
+
+    monkeypatch.setattr(cl.os, "rename", dying_rename)
+    with pytest.raises(_Killed):
+        apply_write_op(src, ParquetTable(spark, path), spec)
+    monkeypatch.undo()
+    assert not os.path.exists(os.path.join(path, _LOG))
+    assert _files(path) == original
+    t = ParquetTable(spark, path)
+    assert _rows(t.read().select(*orders.columns)) == _rows(orders)
+    apply_write_op(src, t, spec)
+    assert t.versions() == [0, 1]
+    assert sorted(t._manifest_at(0)["files"]) == original
+    want = _upsert_oracle(orders, src, ["o_orderkey"])
+    assert _rows(t.read().select(*orders.columns)) == _rows(want)
+    # the prepared log the killed adoption left is garbage vacuum takes
+    t.vacuum()
+    assert [e for e in os.listdir(path) if e.startswith(f"{_LOG}.")] == []
+
+
+def test_first_write_into_empty_directory_killed_after_ingest_stays_invisible(
+    spark, orders, tmp_path
+):
+    """An empty directory holds no files to adopt: its first write opens
+    an empty log before ingesting, so a write killed after the ingest
+    leaves files no read returns."""
+    from etl_cli_spark.engine import Engine
+
+    path = tmp_path / "e.parquet"
+    path.mkdir()
+    t = ParquetTable(spark, str(path))
+
+    def killed(*_a, **_kw):
+        raise _Killed()
+
+    t._commit = killed
+    with pytest.raises(_Killed):
+        t.append(orders.limit(20))
+    assert _files(str(path))
+    assert _versions(str(path)) == []
+    fresh = ParquetTable(spark, str(path))
+    assert not fresh.exists() and fresh.read() is None
+    with pytest.raises(FileNotFoundError):
+        Engine(spark, str(tmp_path)).read("e")
+    fresh.append(orders.limit(5))
+    assert fresh.read().count() == 5

@@ -980,8 +980,9 @@ def test_compact_span_index_preserves_probes_and_lineage(spark, tmp_path):
 
 def test_span_index_in_older_format_fails_loudly(spark, tmp_path):
     """A span index written as bare parquet plus a parameter sidecar is
-    not adopted: a rebuild into it, a probe and a compaction all raise
-    (rebuild the index into a fresh path)."""
+    not adopted as an index: a probe and a compaction raise, as it has
+    no committed parameters. A rebuild into it replaces its rows and
+    commits the parameters, which the probe then uses."""
     import pytest as _pytest
 
     from etl_cli_spark.operators.pipeline import (
@@ -995,12 +996,12 @@ def test_span_index_in_older_format_fails_loudly(spark, tmp_path):
     spark.createDataFrame([(7, 1)], "gh long, n_docs long").write.parquet(idx)
     with open(f"{idx}/_span_meta.json", "w") as f:
         f.write('{"n": 5, "id_col": "doc_id", "text_col": "text"}')
-    with _pytest.raises(ValueError, match="need a manifest table"):
-        build_span_index(mk([(1, "a b c d e f")]), idx, n=5)
     with _pytest.raises(FileNotFoundError):
         strip_against_span_index(mk([(2, "a b c d e f")]), idx)
     with _pytest.raises(FileNotFoundError):
         compact_span_index(spark, idx)
+    build_span_index(mk([(1, "a b c d e f")]), idx, n=5)
+    assert [r.doc_id for r in strip_against_span_index(mk([(2, "a b c d e f")]), idx).collect()] == [2]
 
 
 def test_span_compaction_crash_recovery(spark, tmp_path, monkeypatch):

@@ -83,6 +83,7 @@ def test_sort_preserved_across_rewrites(spark, engine, tmp_path):
     t2 = ParquetTable(spark, t.path)
     assert t2._effective_sort() == ("o_totalprice",)
     t2.compact()
+    t2.vacuum()  # the replaced files stay on disk until vacuum
     meta = json.load(open(os.path.join(t.path, "_etl_bucket_meta.json")))
     assert meta["sort"] == ["o_totalprice"]
     vals = [
@@ -107,6 +108,7 @@ def test_compact_merges_small_files(spark, engine, tmp_path):
     before_files, before_rows = n_files(), t.read().count()
     assert before_files > 4
     t.compact()
+    t.vacuum()  # the replaced files stay on disk until vacuum
     assert n_files() <= 4  # ~1 file per bucket
     assert t.read().count() == before_rows == orders.count()
     assert t.layout == Layout(("o_orderkey",), 4)  # layout preserved
@@ -115,9 +117,9 @@ def test_compact_merges_small_files(spark, engine, tmp_path):
 def test_vacuum_removes_leftovers(spark, engine, tmp_path):
     t = ParquetTable(spark, str(tmp_path / "v.parquet"))
     t.append(engine.read("region"))
-    # simulate interrupted swaps
+    # simulate interrupted writes
     os.makedirs(f"{t.path}.__staged_dead00", exist_ok=True)
-    os.makedirs(f"{t.path}.__old_dead11", exist_ok=True)
+    os.makedirs(f"{t.path}.__staged_dead11", exist_ok=True)
     assert t.vacuum() == 2
     assert t.vacuum() == 0
     assert t.read().count() > 0  # live table untouched
@@ -231,7 +233,7 @@ def test_compact_partitions_only_crowded_dirs(spark, engine, tmp_path):
     orders = engine.read("orders")
     t = ParquetTable(
         spark, str(tmp_path / "c.parquet"),
-        bucket_by=("o_orderkey",), n_buckets=4, manifest=True,
+        bucket_by=("o_orderkey",), n_buckets=4,
     )
     t.append(orders)
     # crowd bucket dirs with 5 tiny appends each touching few keys
@@ -286,13 +288,13 @@ def test_compact_partitions_only_crowded_dirs(spark, engine, tmp_path):
 
 
 def test_compact_partitions_guards(spark, engine, tmp_path):
-    import pytest as _pt
-
     from etl_cli_spark.operators.writeops import ParquetTable
 
-    legacy = ParquetTable(spark, str(tmp_path / "l.parquet"))
-    legacy.append(engine.read("orders").limit(10))
-    with _pt.raises(ValueError, match="manifest"):
-        legacy.compact_partitions()
-    empty = ParquetTable(spark, str(tmp_path / "e.parquet"), manifest=True)
+    # nothing committed to compact: a directory written without a log
+    # (left as it is) and a table never written
+    unlogged = str(tmp_path / "l.parquet")
+    engine.read("orders").limit(10).write.parquet(unlogged)
+    assert ParquetTable(spark, unlogged).compact_partitions() == []
+    assert not os.path.exists(os.path.join(unlogged, "_log"))
+    empty = ParquetTable(spark, str(tmp_path / "e.parquet"))
     assert empty.compact_partitions() == []

@@ -21,6 +21,7 @@ from partition_checks import (
     assert_insert_appends,
     assert_pruned_read,
     assert_upsert_scoped,
+    drop_log,
 )
 
 
@@ -67,7 +68,11 @@ def test_delete_can_empty_a_partition(spark, engine, part_orders):
     assert src.count() > 0
     left = assert_delete_scoped(part_orders, src, PK)
     assert left.filter("o_orderstatus = 'P'").count() == 0
-    # the drained partition directory is gone, not a stale leftover
+    # the drained partition holds no committed file, and the vacuum
+    # that drops the replaced files leaves no stale directory
+    live = part_orders._latest_manifest()[1]["files"]
+    assert not any(part_orders.layout.partition_values(f)[0] == "P" for f in live)
+    part_orders.vacuum()
     assert not any(
         e.startswith("o_orderstatus=P") for e in os.listdir(part_orders.path)
     )
@@ -80,9 +85,9 @@ def test_insert_prunes_and_appends(spark, engine, part_orders):
 
 
 def test_failed_swap_rolls_back_and_preserves_data(spark, engine, part_orders, monkeypatch):
-    """The value-partition swap rolls back like the bucket swap: the
-    update touches all three status partitions, the third directory
-    rename fails, and the live table reads exactly as before."""
+    """A value-partitioned write fails like a bucketed one: the update
+    touches all three status partitions, the third file move into the
+    table fails, and the live table reads exactly as before."""
     src = engine.read("orders").filter("o_orderkey < 40").withColumn(
         "o_orderpriority", F.lit("Z")
     )
@@ -149,23 +154,24 @@ def test_touched_values_guards(spark, engine, tmp_path):
     assert _touched(by_status, t, ("o_orderkey",)) == (None, None)
 
 
-@pytest.mark.parametrize("manifest", [False, True], ids=["legacy", "manifest"])
+@pytest.mark.parametrize("legacy", [True, False], ids=["legacy", "manifest"])
 @pytest.mark.parametrize(
     "value, dirname", [("a:b", "s=a%3Ab"), ("x=y/z%", "s=x%3Dy%2Fz%25")],
     ids=["colon", "eq_slash_pct"],
 )
-def test_upsert_escaped_partition_value(spark, tmp_path, manifest, value, dirname):
+def test_upsert_escaped_partition_value(spark, tmp_path, legacy, value, dirname):
     """Spark URL-escapes special characters in hive directory names
     (``s=a:b`` lands in ``s=a%3Ab``). The scoped upsert must read and
-    replace that directory in both commit modes; matching it by the raw
+    replace that directory, also in a table written without a log
+    (``legacy``, adopted by the upsert); matching it by the raw
     value left its rows out of the target read and kept its old files,
     so every upserted key there held its old and its new row."""
     rows = [(k, "ok" if k % 2 == 0 else value, f"v{k}") for k in range(10)]
     schema = "k long, s string, v string"
-    t = ParquetTable(
-        spark, str(tmp_path / "esc.parquet"), partition_by=("s",), manifest=manifest
-    )
+    t = ParquetTable(spark, str(tmp_path / "esc.parquet"), partition_by=("s",))
     t.append(spark.createDataFrame(rows, schema))
+    if legacy:
+        drop_log(t)
     assert dirname in os.listdir(t.path)
     src = spark.createDataFrame([(k, s, "new") for k, s, _v in rows[:4]], schema)
     out = apply_write_op(src, t, TargetSpec(ds="t", op="upsert", pk=("k", "s")))

@@ -14,8 +14,9 @@ from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from etl_cli_spark.fanout import plan_bytes
-from etl_cli_spark.operators.writeops import ParquetTable, apply_write_op
+from etl_cli_spark.operators.writeops import ParquetTable, apply_write_op, data_files
 from etl_cli_spark.spec import TargetSpec
+from partition_checks import drop_log
 
 _UPSERT = TargetSpec(ds="t", op="upsert", pk=("id",))
 
@@ -44,20 +45,19 @@ def _rows(spark, lo, hi, tag):
 
 
 def _live_files(t: ParquetTable) -> list[str]:
-    if t._is_manifest():
+    if t.versions():
         return [os.path.join(t.path, f) for f in t._latest_manifest()[1]["files"]]
-    return [
-        os.path.join(root, f)
-        for root, _dirs, files in os.walk(t.path)
-        for f in files
-        if not f.startswith(("_", "."))
-    ]
+    return [os.path.join(t.path, f) for f in data_files(t.path)]
 
 
-@pytest.fixture(params=[False, True], ids=["plain", "manifest"])
+@pytest.fixture(params=[True, False], ids=["plain", "manifest"])
 def six_file_table(request, spark, tmp_path):
-    t = ParquetTable(spark, str(tmp_path / "t.parquet"), manifest=request.param)
+    """Six files, committed or (``plain``) a directory written without a
+    log."""
+    t = ParquetTable(spark, str(tmp_path / "t.parquet"))
     t.append(_rows(spark, 0, 600, "a").repartition(6))
+    if request.param:
+        drop_log(t)
     assert len(_live_files(t)) == 6
     return t
 
